@@ -18,11 +18,25 @@ import org.apache.spark.sql.SparkSession
   *  - UTC session timezone: cross-engine-deterministic timestamps.
   *  - `parquet.nanosAsLong`: the events table ships TIMESTAMP(NANOS)
   *    which Spark otherwise refuses to read.
+  *  - `fs.file.impl` / `fs.AbstractFileSystem.file.impl` ([[withLocalFs]]):
+  *    graft's fork-free `file:` filesystem. Without libhadoop, Hadoop
+  *    starts one `chmod` process per local file it creates and 2–4
+  *    `readlink`s per `FileContext` rename (streaming offsets and
+  *    commits). HDFS and object-store paths are untouched.
   */
 object GraftSession {
 
+  /** `b` with the `file:` scheme bound to [[GraftLocalFileSystem]]
+    * (FileSystem API) and [[GraftLocalFs]] (FileContext API, used by
+    * streaming checkpoints). Hadoop caches FileSystem instances by
+    * scheme, not by conf, so these must be set before the first `file:`
+    * access of the JVM — i.e. on the session builder. */
+  def withLocalFs(b: SparkSession.Builder): SparkSession.Builder =
+    b.config("spark.hadoop.fs.file.impl", classOf[GraftLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[GraftLocalFs].getName)
+
   def builder(master: String, cores: Int): SparkSession.Builder =
-    SparkSession.builder()
+    withLocalFs(SparkSession.builder())
       .master(master)
       // graft's Catalyst extensions: SQL functions, opt-in guardrail
       // checks, and the top-k-per-group rewrite + strategy

@@ -1,7 +1,9 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.functions.ZRankExpr
 
 /** Physical table layout for scale: partitioned writes (partition
   * pruning), bucketed tables (shuffle-free co-located joins),
@@ -57,28 +59,35 @@ object Layout {
     * (gold_transformation.py:160) without Delta table services.
     *
     * Each column is rank-quantized to `bits` bits against quantile
-    * boundaries estimated once at plan time (approxQuantile on the
-    * driver — one sampled pass, baked into the plan as literals);
-    * ranks are bit-interleaved into a Z-value; rows are
-    * range-partitioned and sorted by it. Result: every output file
-    * covers a small hyper-rectangle of the key space, so min/max
-    * stats prune files for predicates on ANY of the Z columns — the
-    * property a single-column sort only gives the leading column. */
+    * boundaries estimated once at plan time (one multi-column
+    * approxQuantile job on the driver for ALL Z columns, baked into
+    * the plan; the rank is [[graft.functions.ZRankExpr]], a binary
+    * search with generated code); ranks are bit-interleaved into a
+    * Z-value; rows are range-partitioned and sorted by it. Result:
+    * every output file covers a small hyper-rectangle of the key
+    * space, so min/max stats prune files for predicates on ANY of the
+    * Z columns — the property a single-column sort only gives the
+    * leading column. */
   def zorderBy(df: DataFrame, nFiles: Int, cols: Seq[String],
                bits: Int = 8): DataFrame = {
     require(cols.nonEmpty && bits >= 1 && bits * cols.length <= 62)
     val nb = (1 << bits) - 1
-    val rankCols = cols.map { c =>
-      val qs = df.stat.approxQuantile(c,
-        (1 to nb).map(_.toDouble / (nb + 1)).toArray, 0.01)
-      // rank = #boundaries <= value, in [0, nb]
-      size(filter(array(qs.map(lit): _*), b => col(c).cast("double") >= b))
-        .cast("long")
-    }
+    val bounds = df.stat.approxQuantile(cols.toArray,
+      (1 to nb).map(_.toDouble / (nb + 1)).toArray, 0.01)
+    // rank = #boundaries <= value, in [0, nb]
+    zorderByRanks(df, nFiles,
+      cols.zip(bounds).map { case (c, qs) => ZRankExpr.zrank(col(c), qs.toSeq) }, bits)
+  }
+
+  /** The clustering half of [[zorderBy]]: the low `bits` bits of each
+    * rank column interleave into a Z-value (first column most
+    * significant); rows are range-partitioned and sorted by it. */
+  private[graft] def zorderByRanks(df: DataFrame, nFiles: Int, ranks: Seq[Column],
+                                   bits: Int): DataFrame = {
     val z = (0 until bits).flatMap { i =>
-      rankCols.zipWithIndex.map { case (r, j) =>
+      ranks.zipWithIndex.map { case (r, j) =>
         shiftleft(shiftright(r, i).bitwiseAND(lit(1L)),
-          i * cols.length + (cols.length - 1 - j))
+          i * ranks.length + (ranks.length - 1 - j))
       }
     }.reduce(_ + _)
     df.withColumn("__graft_z", z)

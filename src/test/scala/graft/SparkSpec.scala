@@ -12,7 +12,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
+    // the same fork-free `file:` filesystem as every GraftSession
+    val s = graft.sources.GraftSession.withLocalFs(SparkSession.builder())
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.extensions", "graft.GraftExtensions")
