@@ -6,7 +6,6 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
-import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.hadoop.api.{InitContext, ReadSupport}
 import org.apache.parquet.io.api.RecordMaterializer
 import org.apache.parquet.schema.{GroupType, LogicalTypeAnnotation, MessageType, PrimitiveType, Type}
@@ -157,9 +156,7 @@ private[sources] object DeltaCheckpointIo {
   def readActionNodes(conf: Configuration, mapper: ObjectMapper,
                       paths: Seq[String]): Option[Vector[ObjectNode]] =
     try Some(FooterIo.mapAll(paths) { p =>
-      val reader = ParquetReader
-        .builder(new CheckpointReadSupport, new Path(p))
-        .withConf(conf).build()
+      val reader = FooterIo.reader(conf, new Path(p), new CheckpointReadSupport)
       val buf = Vector.newBuilder[ObjectNode]
       try {
         var g: Group = reader.read()

@@ -2318,9 +2318,7 @@ object DeltaLog {
   private def footerStats(conf: org.apache.hadoop.conf.Configuration,
                           p: Path): Option[String] = try {
     import scala.collection.JavaConverters._
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf)
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try {
+    FooterIo.withFooter(conf, p) { r =>
       val blocks = r.getFooter.getBlocks.asScala.toSeq
       val numRecords = blocks.map(_.getRowCount).sum
       final class Agg {
@@ -2370,7 +2368,7 @@ object DeltaLog {
         s"${jsEscape(n)}:${num(a, a.max.get)}" }
       val nulls = withStats.map { case (n, a) => s"${jsEscape(n)}:${a.nulls}" }
       Some(s"""{"numRecords":$numRecords,"minValues":{${mins.mkString(",")}},"maxValues":{${maxs.mkString(",")}},"nullCount":{${nulls.mkString(",")}}}""")
-    } finally r.close()
+    }
   } catch { case scala.util.control.NonFatal(_) => None } // no stats, never wrong stats
 
   /** How often [[write]] consolidates the log: every Nth commit

@@ -18,25 +18,41 @@ import org.apache.spark.sql.SparkSession
   *  - UTC session timezone: cross-engine-deterministic timestamps.
   *  - `parquet.nanosAsLong`: the events table ships TIMESTAMP(NANOS)
   *    which Spark otherwise refuses to read.
-  *  - `fs.file.impl` / `fs.AbstractFileSystem.file.impl` ([[withLocalFs]]):
-  *    graft's fork-free `file:` filesystem. Without libhadoop, Hadoop
-  *    starts one `chmod` process per local file it creates and 2–4
-  *    `readlink`s per `FileContext` rename (streaming offsets and
-  *    commits). HDFS and object-store paths are untouched.
+  *  - `fs.file.impl` / `fs.AbstractFileSystem.file.impl`
+  *    ([[withStartupSettings]]): graft's fork-free `file:` filesystem.
+  *    Without libhadoop, Hadoop starts one `chmod` process per local
+  *    file it creates and 2–4 `readlink`s per `FileContext` rename
+  *    (streaming offsets and commits). HDFS and object-store paths are
+  *    untouched.
+  *  - `sql.artifact.isolation.enabled` off ([[withStartupSettings]]):
+  *    every streaming query runs in a `cloneSession()` with a new
+  *    session UUID, and with isolation on each UUID gets its own
+  *    isolated executor session and `ExecutorClassLoader`. Generated
+  *    code is cached per (class loader, code), so each stream run
+  *    recompiled all of its executor-side code, and Janino's misses on
+  *    absent class names went through that loader (a scan of every jar,
+  *    then an RPC to the driver's class server). graft adds no session
+  *    artifacts, so isolation buys nothing; turn it back on if graft
+  *    ever adds session artifacts (`addArtifact`).
   */
 object GraftSession {
 
-  /** `b` with the `file:` scheme bound to [[GraftLocalFileSystem]]
-    * (FileSystem API) and [[GraftLocalFs]] (FileContext API, used by
-    * streaming checkpoints). Hadoop caches FileSystem instances by
-    * scheme, not by conf, so these must be set before the first `file:`
-    * access of the JVM — i.e. on the session builder. */
-  def withLocalFs(b: SparkSession.Builder): SparkSession.Builder =
+  /** `b` with the settings that are read only once, when the session
+    * (or the JVM's first `file:` access) is created, so they must be
+    * set on the builder:
+    *  - the `file:` scheme bound to [[GraftLocalFileSystem]]
+    *    (FileSystem API) and [[GraftLocalFs]] (FileContext API, used
+    *    by streaming checkpoints). Hadoop caches FileSystem instances
+    *    by scheme, not by conf;
+    *  - artifact isolation off, so cloned (streaming) sessions share
+    *    the executor's class loader and its generated-code cache. */
+  def withStartupSettings(b: SparkSession.Builder): SparkSession.Builder =
     b.config("spark.hadoop.fs.file.impl", classOf[GraftLocalFileSystem].getName)
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[GraftLocalFs].getName)
+      .config("spark.sql.artifact.isolation.enabled", "false")
 
   def builder(master: String, cores: Int): SparkSession.Builder =
-    withLocalFs(SparkSession.builder())
+    withStartupSettings(SparkSession.builder())
       .master(master)
       // graft's Catalyst extensions: SQL functions, opt-in guardrail
       // checks, and the top-k-per-group rewrite + strategy

@@ -5175,12 +5175,8 @@ object IcebergTable {
     }
     val files: Seq[(String, Long, Long)] = dsnap.files.map { f =>
       val p = fs.makeQualified(new Path(f.path))
-      val nrec = numRecordsOf(f.stats).getOrElse {
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(p, fsConf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getRecordCount finally r.close()
-      }
+      val nrec = numRecordsOf(f.stats).getOrElse(
+        FooterIo.withFooter(fsConf, p)(_.getRecordCount))
       (p.toString, f.size, nrec)
     }
     val fieldInfo: Map[String, (Int, DataType)] =
@@ -5642,12 +5638,9 @@ object IcebergTable {
     * re-scan Spark job of freshly staged data whose only purpose was
     * counting rows (the counts were in the footers all along). */
   private def footerRowCount(conf: org.apache.hadoop.conf.Configuration,
-                             p: Path): Long = {
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf)
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try r.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-    finally r.close()
-  }
+                             p: Path): Long =
+    FooterIo.withFooter(conf, p)(
+      _.getFooter.getBlocks.asScala.map(_.getRowCount).sum)
 
   /** How many staged files the DRIVER footer-reads itself (on the
     * bounded [[FooterIo]] pool); ABOVE the gate the reads run as ONE
@@ -5690,23 +5683,17 @@ object IcebergTable {
     * failed read) plus its best-effort column stats. */
   private def footerCountAndStats(
       conf: org.apache.hadoop.conf.Configuration,
-      s: String): (Long, FileStats) = {
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile
-      .fromPath(new Path(s), conf)
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try {
+      s: String): (Long, FileStats) =
+    FooterIo.withFooter(conf, new Path(s)) { r =>
       val blocks = r.getFooter.getBlocks.asScala.toSeq
       val n = blocks.map(_.getRowCount).sum
       (n, statsFromBlocks(blocks, n))
-    } finally r.close()
-  }
+    }
 
   private def footerFileStats(conf: org.apache.hadoop.conf.Configuration,
                               p: Path, records: Long): FileStats = try {
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf)
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try statsFromBlocks(r.getFooter.getBlocks.asScala.toSeq, records)
-    finally r.close()
+    FooterIo.withFooter(conf, p)(r =>
+      statsFromBlocks(r.getFooter.getBlocks.asScala.toSeq, records))
   } catch { // stats are an optimization: a failed footer read stats nothing
     case scala.util.control.NonFatal(_) =>
       FileStats(Map.empty, Map.empty, Map.empty)

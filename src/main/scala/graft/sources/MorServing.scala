@@ -25,44 +25,41 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * write/readFields envelope) — ships the driver's FS settings to the
   * executors with the reader factory.
   *
-  * The WRITE side memoizes the serialized bytes per Configuration
-  * instance: a session's Hadoop conf is ~100 KB over ~1000 entries
-  * and effectively immutable while queries run, yet every stage whose
-  * task binary carries a factory re-walked and re-wrote all of it ON
+  * The wrapper copies `value` when it is built and serializes THAT
+  * copy, once. A session's Hadoop conf is ~100 KB over ~1000 entries,
+  * and each stage whose task binary carries a factory serializes it ON
   * THE DAG-SCHEDULER EVENT LOOP (driver stack sampling: Configuration
   * write/deflate frames dominating `dag-scheduler-event-loop` during
-  * commit-path queries) — serialization there delays every task-set
-  * launch. Keyed WEAKLY by instance identity: a mutated-then-reused
-  * conf object is the caller's bug (Spark's own broadcast of session
-  * confs makes the same assumption). */
-private[sources] object SerializableHadoopConf {
-  private val cache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[Configuration, Array[Byte]]())
-  private[sources] def bytesOf(c: Configuration): Array[Byte] = {
-    val hit = cache.get(c)
-    if (hit != null) return hit
-    val bos = new java.io.ByteArrayOutputStream(64 << 10)
-    val dos = new java.io.DataOutputStream(bos)
-    c.write(dos)
-    dos.flush()
-    val bytes = bos.toByteArray
-    cache.put(c, bytes)
-    bytes
-  }
-}
-
+  * commit-path queries), where re-writing it would delay every task-set
+  * launch. The copy is private, so no caller can mutate what ships: a
+  * conf changed after one wrapper was built reaches the executors
+  * through the next wrapper built from it. */
 private[sources] class SerializableHadoopConf(@transient var value: Configuration)
   extends Serializable {
+  @transient private[this] var snapshot: Configuration = new Configuration(value)
+  @transient private[this] var bytes: Array[Byte] = _
+
+  private def serialized: Array[Byte] = synchronized {
+    if (bytes == null) {
+      val bos = new java.io.ByteArrayOutputStream(64 << 10)
+      val dos = new java.io.DataOutputStream(bos)
+      snapshot.write(dos)
+      dos.flush()
+      bytes = bos.toByteArray
+      snapshot = null
+    }
+    bytes
+  }
   private def writeObject(out: java.io.ObjectOutputStream): Unit = {
     out.defaultWriteObject()
-    val bytes = SerializableHadoopConf.bytesOf(value)
-    out.writeInt(bytes.length)
-    out.write(bytes)
+    val b = serialized
+    out.writeInt(b.length)
+    out.write(b)
   }
   private def readObject(in: java.io.ObjectInputStream): Unit = {
     in.defaultReadObject()
     val n = in.readInt()
-    val bytes = new Array[Byte](n)
+    bytes = new Array[Byte](n)
     in.readFully(bytes)
     value = new Configuration(false)
     value.readFields(new java.io.DataInputStream(

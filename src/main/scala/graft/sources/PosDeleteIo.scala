@@ -5,7 +5,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
-import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.HadoopOutputFile
@@ -85,8 +84,7 @@ private[sources] object PosDeleteIo {
     * counts BEFORE calling. */
   def readAll(conf: Configuration, paths: Seq[String]): Seq[(String, Long)] =
     FooterIo.mapAll(paths) { p =>
-      val reader = ParquetReader
-        .builder(new PosDeleteReadSupport, new Path(p)).withConf(conf).build()
+      val reader = FooterIo.reader(conf, new Path(p), new PosDeleteReadSupport)
       val buf = Vector.newBuilder[(String, Long)]
       try {
         var g: Group = reader.read()

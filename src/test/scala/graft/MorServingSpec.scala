@@ -20,4 +20,26 @@ class MorServingSpec extends graft.SparkSpec {
     }
     assert(e.getMessage.contains("restart"), e.getMessage)
   }
+
+  test("SerializableHadoopConf ships the conf as of wrapper build: a later change rides the next wrapper") {
+    def roundTrip(w: SerializableHadoopConf): SerializableHadoopConf = {
+      val bos = new java.io.ByteArrayOutputStream()
+      val out = new java.io.ObjectOutputStream(bos)
+      out.writeObject(w)
+      out.close()
+      new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(
+        bos.toByteArray)).readObject().asInstanceOf[SerializableHadoopConf]
+    }
+    val key = "graft.spec.serializable-conf"
+    val c = new org.apache.hadoop.conf.Configuration(
+      spark.sparkContext.hadoopConfiguration)
+    val first = new SerializableHadoopConf(c)
+    assert(roundTrip(first).value.get(key) === null)
+    c.set(key, "v1")
+    assert(roundTrip(new SerializableHadoopConf(c)).value.get(key) === "v1")
+    // the first wrapper keeps its build-time state, and a deserialized
+    // wrapper re-ships what it received
+    assert(roundTrip(first).value.get(key) === null)
+    assert(roundTrip(roundTrip(new SerializableHadoopConf(c))).value.get(key) === "v1")
+  }
 }

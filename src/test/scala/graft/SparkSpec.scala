@@ -12,8 +12,9 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    // the same fork-free `file:` filesystem as every GraftSession
-    val s = graft.sources.GraftSession.withLocalFs(SparkSession.builder())
+    // the same fork-free `file:` filesystem and shared executor class
+    // loader as every GraftSession
+    val s = graft.sources.GraftSession.withStartupSettings(SparkSession.builder())
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.extensions", "graft.GraftExtensions")
