@@ -138,8 +138,8 @@ object QualityChecks {
     * shift, and a drifted flag at `zThreshold`. Both aggs reduce to
     * one row per snapshot — nothing is joined at data size; at
     * 100 TB each side costs one map-side-combinable scan. Pair with
-    * [[graft.sources.VersionedTable.readVersion]] to compare
-    * committed versions. */
+    * Delta time travel ([[graft.sources.DeltaLog.read]] with
+    * `versionAsOf`) to compare committed versions. */
   def driftStats(before: DataFrame, after: DataFrame, cols: Seq[String],
                  zThreshold: Double = 3.0): DataFrame = {
     def moments(df: DataFrame, side: String): DataFrame = {
@@ -227,7 +227,9 @@ object QualityChecks {
     *    (implemented as a runtime assert INSIDE the row pipeline, so
     *    the job fails fast on the first bad row instead of scanning
     *    everything first — batch-atomicity against a committed sink
-    *    comes from pairing with VersionedTable.writeChecked).
+    *    comes from Delta CHECK constraints
+    *    ([[graft.sources.DeltaLog.addCheckConstraint]]), which veto a
+    *    violating write whole before anything commits).
     *
     * Returns the gated frame plus the Observation carrying
     * `warn_<name>` / `drop_<name>` counts for every non-fail

@@ -3,9 +3,8 @@ package graft.sources
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Exclusive-create of a fully-written small file — the COMMIT
-  * primitive behind every graft table format's optimistic CAS
-  * (VersionedTable's `_cN`, Delta's `<v>.json`, Iceberg's
-  * `v<N>.metadata.json`).
+  * primitive behind both graft table formats' optimistic CAS
+  * (Delta's `<v>.json`, Iceberg's `v<N>.metadata.json`).
   *
   * Local filesystems need NIO `CREATE_NEW` (O_EXCL): Hadoop's
   * ChecksumFileSystem.create(path, overwrite = false) is

@@ -16,16 +16,15 @@ import org.apache.spark.sql.types._
   * The reference pipeline stores every bronze/silver/gold table as
   * Delta (reference gold_transformation.py:57-62 — `.format("delta")
   * .saveAsTable`), so a consumer switching to graft needs to POINT
-  * GRAFT AT REAL DELTA TABLES. [[VersionedTable]] is a parquet+CAS
-  * *analog* of the same ideas (snapshot isolation, time travel); this
-  * object is the *interop* leg:
+  * GRAFT AT REAL DELTA TABLES. This object reads and writes them
+  * natively:
   *
   *  - [[snapshot]] / [[read]]: replay a real `_delta_log` into the
   *    live add-file set at a version and read it as a DataFrame,
   *    with `versionAsOf` / `timestampAsOf` time travel.
-  *  - [[exportFromVersioned]]: emit a real `_delta_log` for an
-  *    existing [[VersionedTable]] so any Delta reader can consume
-  *    graft output (one Delta commit per graft version).
+  *  - [[write]], [[merge]] / [[mergeFlexible]], [[update]],
+  *    [[delete]], [[optimize]], [[restore]], [[vacuum]]: commits any
+  *    Delta reader can consume, each one CAS-created `<v>.json`.
   *
   * Scale shape: checkpoint parquet (the bulk of a large table's
   * file list — millions of add actions) is read DISTRIBUTED via
@@ -298,15 +297,14 @@ object DeltaLog {
                            baseRowId: Option[Long] = None,
                            defaultRowCommitVersion: Option[Long] = None)
 
-  /** A resolved table state at one version — the common abstraction
-    * over real Delta tables ([[snapshot]]) and graft
-    * [[VersionedTable]]s ([[snapshotFromVersioned]]). `txns` carries
-    * the highest committed `txn` action version per appId — the
-    * idempotence watermark a streaming sink consults on restart. */
   /** `(minReaderVersion, minWriterVersion, readerFeatures,
     * writerFeatures)` — what the log last declared. */
   type Protocol = (Int, Int, Seq[String], Seq[String])
 
+  /** A resolved Delta table state at one version ([[snapshot]]).
+    * `txns` carries the highest committed `txn` action version per
+    * appId — the idempotence watermark a streaming sink consults on
+    * restart. */
   final case class Snapshot(tablePath: String, version: Long,
                             schema: StructType,
                             partitionColumns: Seq[String],
@@ -1401,10 +1399,9 @@ object DeltaLog {
     snap.files.zipWithIndex.collect { case (f, i) if keep(i) => f }
   }
 
-  /** Materialize any [[Snapshot]] (real-Delta or VersionedTable),
-    * optionally pruning the file list on a partition predicate first
-    * (see [[prunedFiles]] — sound for any predicate; prunes when it
-    * references partition columns). */
+  /** Materialize a [[Snapshot]], optionally pruning the file list
+    * on a partition predicate first (see [[prunedFiles]] — sound for
+    * any predicate; prunes when it references partition columns). */
   def readSnapshot(spark: SparkSession, snap: Snapshot,
                    partitionFilter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
     val pruned = partitionFilter match {
@@ -2096,10 +2093,9 @@ object DeltaLog {
   }
 
   /** Incremental consumption of a real Delta table — the poll-based
-    * analog of `readStream.option("startingVersion", …)`, the SAME
-    * contract [[VersionedTable.syncChanges]] gives for graft tables:
-    * returns the changes committed AFTER `lastVersion` plus the
-    * version the consumer is carried to. A foreachBatch-style loop
+    * analog of `readStream.option("startingVersion", …)`: returns
+    * the changes committed AFTER `lastVersion` plus the version the
+    * consumer is carried to. A foreachBatch-style loop
     * persists the returned version as its offset and applies the
     * tagged rows downstream; exactly-once when apply + offset commit
     * are atomic on the consumer side. */
@@ -2744,9 +2740,9 @@ object DeltaLog {
     * error, never a silently forked log). The commit file is created
     * with exclusive-create semantics, so two racing writers cannot
     * both claim the same version on filesystems honoring atomic
-    * create (the same contract VersionedTable's CAS commit
-    * documents). Every `checkpointInterval`-th commit also authors a
-    * classic single-file checkpoint parquet and `_last_checkpoint`.
+    * create ([[AtomicCas]]). Every `checkpointInterval`-th commit
+    * also authors a classic single-file checkpoint parquet and
+    * `_last_checkpoint`.
     * Returns the committed Delta version. */
   /** `CREATE TABLE dst SHALLOW CLONE src` — the ZERO-COPY Delta →
     * Delta clone (the dev-copy-of-prod shape): one commit at `dst`
@@ -4391,7 +4387,8 @@ object DeltaLog {
                     notMatched: Seq[MergeSpec.NotMatched],
                     bySource: Seq[MergeSpec.NotMatchedBySource] = Seq.empty,
                     checkpointInterval: Int = DefaultCheckpointInterval,
-                    extraOn: Option[org.apache.spark.sql.Column] = None): Long = {
+                    extraOn: Option[org.apache.spark.sql.Column] = None,
+                    txn: Option[(String, Long)] = None): Long = {
     import spark.implicits._
     import MergeSpec.SrcPrefix
     require(keyCols.nonEmpty, "MERGE with no key columns")
@@ -4633,6 +4630,10 @@ object DeltaLog {
     }
     lines ++= rtDomain
     lines ++= cdcLinesOut
+    // the streaming idempotence marker, as in [[write]]
+    txn.foreach { case (appId, tv) =>
+      lines += s"""{"txn":{"appId":${jsEscape(appId)},"version":$tv,"lastUpdated":$now}}"""
+    }
     affected.unpersist(); bsAffected.foreach(_.unpersist()); src.unpersist()
     val vc = commitCas(spark, deltaPath, v, lines.toSeq, ReadTable,
       operation = "MERGE", ictHint = Some(ictOn(snap.configuration)))
@@ -5853,75 +5854,5 @@ object DeltaLog {
     adoptOne(rows, StructType(ActionSchema.fields), new Path(logDir(deltaPath),
       pad20(version) + ".checkpoint.parquet"))
     writeLastCheckpoint(rows.size)
-  }
-
-  // ---------------- VersionedTable interop ----------------
-
-  /** A [[VersionedTable]] version as the SAME [[Snapshot]]
-    * abstraction the real-Delta reader returns — one code path
-    * downstream ([[readSnapshot]]) serves both table formats. */
-  def snapshotFromVersioned(spark: SparkSession, table: String,
-                            versionAsOf: Option[Long] = None): Snapshot = {
-    val v = versionAsOf.getOrElse(VersionedTable.currentVersion(spark, table))
-    val df = VersionedTable.readVersion(spark, table, v)
-    val files = df.inputFiles.toSeq.map(p =>
-      AddFile(new Path(p).toString, Map.empty, 0L, 0L))
-    Snapshot(table, v, df.schema, Seq.empty, files, Map.empty)
-  }
-
-  /** Export a [[VersionedTable]] as a REAL Delta table: copy each
-    * graft version's parquet files and write a `_delta_log` commit
-    * per version (protocol/metaData/add/remove actions per the
-    * public spec) — any Delta reader can then time-travel graft
-    * output. Overwrite semantics per graft version: each commit
-    * removes the previous version's files and adds its own
-    * (VersionedTable versions are full snapshots). */
-  def exportFromVersioned(spark: SparkSession, table: String,
-                          deltaPath: String): Long = {
-    val fsConf = spark.sparkContext.hadoopConfiguration
-    val dst = new Path(deltaPath)
-    val fs = dst.getFileSystem(fsConf)
-    fs.mkdirs(new Path(dst, "_delta_log"))
-    val cur = VersionedTable.currentVersion(spark, table)
-    require(cur >= 1, s"no versions in $table")
-    var prevFiles = Seq.empty[(String, Long)]
-    // graft versions are 1-based; Delta versions 0-based
-    (1L to cur).foreach { v =>
-      val df = VersionedTable.readVersion(spark, table, v)
-      val schemaJson = df.schema.json
-      // copy this version's files under the delta root
-      val copied = df.inputFiles.toSeq.zipWithIndex.map { case (src, i) =>
-        val rel = s"v$v-part-$i.parquet"
-        val srcP = new Path(new java.net.URI(src))
-        org.apache.hadoop.fs.FileUtil.copy(
-          srcP.getFileSystem(fsConf), srcP, fs, new Path(dst, rel),
-          false, fsConf)
-        (rel, fs.getFileStatus(new Path(dst, rel)).getLen)
-      }
-      val now = System.currentTimeMillis()
-      val lines = scala.collection.mutable.ArrayBuffer[String]()
-      if (v == 1L) {
-        lines += """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}"""
-        lines += metaDataLine(
-          java.util.UUID.nameUUIDFromBytes(table.getBytes("UTF-8")).toString,
-          schemaJson, Seq.empty, now)
-      }
-      prevFiles.foreach { case (rel, _) =>
-        lines += s"""{"remove":{"path":${jsEscape(rel)},"deletionTimestamp":$now,"dataChange":true}}"""
-      }
-      copied.foreach { case (rel, sz) =>
-        lines += s"""{"add":{"path":${jsEscape(rel)},"partitionValues":{},"size":$sz,"modificationTime":$now,"dataChange":true}}"""
-      }
-      val commit = new Path(new Path(dst, "_delta_log"), pad20(v - 1) + ".json")
-      // same exclusive-create primitive as commitCas — a raced
-      // migration must fail loudly, not truncate the winner's commit
-      if (!AtomicCas.createExclusive(fs, commit,
-        (lines.mkString("\n") + "\n").getBytes("UTF-8")))
-        throw new IllegalStateException(
-          s"$dst: commit ${v - 1} already exists — a concurrent export " +
-            "to the same destination won the race")
-      prevFiles = copied
-    }
-    cur - 1 // top Delta version
   }
 }

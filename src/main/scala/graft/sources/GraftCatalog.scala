@@ -25,7 +25,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * then `SELECT * FROM graft.gold.dim_customers` resolves
   * `<root>/gold/dim_customers`, `df.write.saveAsTable("graft.gold.t")`
   * creates it, and `VERSION AS OF` / `TIMESTAMP AS OF` time-travel
-  * SQL works on versioned and Delta-format tables.
+  * SQL works on Delta and Iceberg tables.
   *
   * One namespace level = one directory level; a table directory is
   * served by STORAGE FLAVOR, detected per load:
@@ -35,15 +35,13 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *  - `metadata/v*.metadata.json` present → native Iceberg snapshot
   *    resolution ([[IcebergTable.snapshot]]); `VERSION AS OF` carries
   *    the snapshot id, `TIMESTAMP AS OF` the snapshot timestamp.
-  *  - graft [[VersionedTable]] marker → the current (or requested)
-  *    version's snapshot directory.
   *  - otherwise → plain parquet directory.
   *
-  * The returned table is Spark's own parquet `FileTable` pointed at
-  * the resolved file list, so scans get the full native read path —
-  * pushed filters, column pruning, vectorized reader, file-index
-  * partition pruning — and writes (`saveAsTable`, `INSERT INTO`) get
-  * the native parquet writer. (`ParquetTable` lives under
+  * A plain parquet directory is served as Spark's own parquet
+  * `FileTable` over the directory, so scans get the full native read
+  * path — pushed filters, column pruning, vectorized reader,
+  * file-index partition pruning — and writes (`saveAsTable`, `INSERT
+  * INTO`) get the native parquet writer. (`ParquetTable` lives under
   * `o.a.s.sql.execution` — Spark's internal-but-public layer; the
   * public-API alternative is reimplementing a parquet
   * reader/writer, which buys nothing here.)
@@ -97,49 +95,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   private def dirFor(ns: Array[String]): Path =
     new Path((root +: ns.toSeq).mkString("/"))
 
-  private def isVersioned(dir: Path): Boolean =
-    fs.exists(new Path(dir, "_LATEST")) || // VersionedTable pointer
-      fs.globStatus(new Path(dir, "_c0*")).nonEmpty // or commit files
-
-  private def isDelta(dir: Path): Boolean =
-    fs.exists(new Path(dir, "_delta_log"))
-
-  private def isIceberg(dir: Path): Boolean =
-    fs.globStatus(new Path(new Path(dir, "metadata"), "v*.metadata.json")).nonEmpty
-
-  /** Resolve a table to (file list or directory, optional schema). */
-  private def resolve(ident: Identifier,
-                      versionAsOf: Option[Long],
-                      timestampAsOf: Option[Long]): (Seq[String], Option[StructType]) = {
-    val dir = dirFor(ident)
-    // the DSv2 contract type — Spark catches it to decide CTAS vs load
-    if (!fs.exists(dir))
-      throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(ident)
-    if (isIceberg(dir)) {
-      // VERSION AS OF carries the Iceberg snapshot id
-      val snap = IcebergTable.snapshot(spark, dir.toString, versionAsOf, timestampAsOf)
-      if (snap.deletes.nonEmpty)
-        throw new UnsupportedOperationException(
-          s"$ident carries v2 delete files — the raw file-list scan " +
-            "would resurrect deleted rows; read it with " +
-            "graft.sources.IcebergTable.read, which applies them")
-      (snap.files.map(_.path), Some(snap.schema))
-    } else if (isVersioned(dir)) {
-      val v = versionAsOf.getOrElse(
-        timestampAsOf.fold(VersionedTable.currentVersion(spark, dir.toString)) {
-          ts =>
-            // reuse VersionedTable's commit-mtime rule
-            val df = VersionedTable.readAsOfTimestamp(spark, dir.toString, ts)
-            return (df.inputFiles.toSeq, Some(df.schema))
-        })
-      val df = VersionedTable.readVersion(spark, dir.toString, v)
-      (df.inputFiles.toSeq, Some(df.schema))
-    } else {
-      require(versionAsOf.isEmpty && timestampAsOf.isEmpty,
-        s"plain parquet table $ident has no version history")
-      (Seq(dir.toString), sidecarSchema(dir))
-    }
-  }
+  private def flavorOf(dir: Path): Option[Flavor] = Flavor.of(fs, dir)
 
   /** Plain-parquet tables have no transaction log to carry DDL, so
     * `ALTER TABLE ADD COLUMNS` records the widened schema in an
@@ -161,16 +117,12 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     }
   }
 
-  private def parquetTable(ident: Identifier, paths: Seq[String],
+  private def parquetTable(ident: Identifier, dir: Path,
                            schema: Option[StructType]): Table =
     org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable(
       catalogName + "." + ident.toString, spark,
-      CaseInsensitiveStringMap.empty(), paths, schema,
+      CaseInsensitiveStringMap.empty(), Seq(dir.toString), schema,
       classOf[org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat])
-
-  // (the committing wrapper for versioned-flavor tables moved to the
-  // top-level [[GraftCommittingTable]], so the SQL DML resolution
-  // rule can recognize and route it)
 
   /** Iceberg METADATA TABLES (`graft.ns.t.files` / `.snapshots` /
     * `.history` / `.partitions`) — the operational debugging surface
@@ -239,7 +191,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       if (ident.namespace().nonEmpty &&
         MetadataTableNames.contains(ident.name().toLowerCase)) {
         val base = dirFor(ident.namespace())
-        if (fs.exists(base) && isIceberg(base)) {
+        if (fs.exists(base) && flavorOf(base).contains(IcebergFlavor)) {
           require(versionAsOf.isEmpty && timestampAsOf.isEmpty,
             "metadata tables do not time-travel — query the base table")
           return metadataTable(base, ident)
@@ -247,27 +199,26 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       }
       throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(ident)
     }
-    if (isDelta(dir))
-      // native DSv2 Delta table: batch + micro-batch streaming reads
-      // (spark.readStream.table), committing INSERTs, partitioned
-      // tables fully served with log-side pruning
-      return new GraftDeltaTable(spark, dir.toString, versionAsOf,
-        timestampAsOf, cdf = false,
-        nameOverride = catalogName + "." + ident.toString)
-    if (isIceberg(dir))
-      // native DSv2 Iceberg table: batch + micro-batch streaming
-      // reads (snapshot-id offsets), committing INSERTs, real
-      // manifest statistics; VERSION AS OF carries the snapshot id
-      return new GraftIcebergTable(spark, dir.toString, versionAsOf,
-        timestampAsOf, cdf = false,
-        nameOverride = catalogName + "." + ident.toString)
-    val (paths, schema) = resolve(ident, versionAsOf, timestampAsOf)
-    val t = parquetTable(ident, paths, schema)
-    if (isVersioned(dir))
-      new GraftCommittingTable(t, "versioned", dir.toString,
-        (df, ov) => { VersionedTable.write(df, dir.toString, overwrite = ov); () },
-        Some(pred => { VersionedTable.deleteWhere(spark, dir.toString, pred); () }))
-    else t
+    flavorOf(dir) match {
+      case Some(DeltaFlavor) =>
+        // native DSv2 Delta table: batch + micro-batch streaming reads
+        // (spark.readStream.table), committing INSERTs, partitioned
+        // tables fully served with log-side pruning
+        new GraftDeltaTable(spark, dir.toString, versionAsOf,
+          timestampAsOf, cdf = false,
+          nameOverride = catalogName + "." + ident.toString)
+      case Some(IcebergFlavor) =>
+        // native DSv2 Iceberg table: batch + micro-batch streaming
+        // reads (snapshot-id offsets), committing INSERTs, real
+        // manifest statistics; VERSION AS OF carries the snapshot id
+        new GraftIcebergTable(spark, dir.toString, versionAsOf,
+          timestampAsOf, cdf = false,
+          nameOverride = catalogName + "." + ident.toString)
+      case None =>
+        require(versionAsOf.isEmpty && timestampAsOf.isEmpty,
+          s"plain parquet table $ident has no version history")
+        parquetTable(ident, dir, sidecarSchema(dir))
+    }
   }
 
   override def loadTable(ident: Identifier): Table = serve(ident, None, None)
@@ -281,7 +232,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     if (v.nonEmpty && v.forall(_.isDigit)) serve(ident, Some(v.toLong), None)
     else {
       val dir = dirFor(ident)
-      require(fs.exists(dir) && isIceberg(dir),
+      require(fs.exists(dir) && flavorOf(dir).contains(IcebergFlavor),
         s"VERSION AS OF '$version': named refs resolve on Iceberg-flavor " +
           "tables only")
       serve(ident,
@@ -306,8 +257,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
                            partitions: Array[Transform],
                            properties: util.Map[String, String]): Table = {
     require(partitions.isEmpty,
-      "graft catalog tables are unpartitioned directories; use " +
-        "VersionedTable.writeLayout for partition layouts")
+      "graft catalog tables are unpartitioned directories; create a " +
+        "partitioned table with CREATE TABLE '<path>' … USING delta " +
+        "PARTITIONED BY (…)")
     val dir = dirFor(ident)
     if (fs.exists(dir)) throw new org.apache.spark.sql.catalyst.analysis
       .TableAlreadyExistsException(ident)
@@ -316,14 +268,11 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     // loads (and can be ALTERed) before its first INSERT
     val out = fs.create(sidecarPath(dir), true)
     try out.write(schema.json.getBytes("UTF-8")) finally out.close()
-    parquetTable(ident, Seq(dir.toString), Some(schema))
+    parquetTable(ident, dir, Some(schema))
   }
 
   /** `ALTER TABLE … ADD COLUMN(S)`, mapped per storage flavor to the
     * format's own evolution machinery:
-    *  - versioned → one schema-evolving overwrite commit (the §2
-    *    writeEvolve machinery): a NEW version with the columns
-    *    null-filled; older versions still read with their own schema.
     *  - delta → a metaData-only commit via [[DeltaLog.addColumns]];
     *    existing files read the columns as null, appends are gated on
     *    the widened schema, time travel unaffected.
@@ -347,27 +296,17 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       case other => throw new UnsupportedOperationException(
         s"unsupported ALTER TABLE change on graft catalog: $other")
     }
-    if (isDelta(dir)) {
-      DeltaLog.addColumns(spark, dir.toString, adds)
-    } else if (isIceberg(dir)) {
-      IcebergTable.addColumns(spark, dir.toString, adds)
-    } else if (isVersioned(dir)) {
-      val cur = VersionedTable.read(spark, dir.toString)
-      val widened = adds.foldLeft(cur) { (df, f) =>
-        require(!df.columns.contains(f.name),
-          s"column ${f.name} already exists on $ident")
-        df.withColumn(f.name,
-          org.apache.spark.sql.functions.lit(null).cast(f.dataType))
-      }
-      VersionedTable.write(widened, dir.toString, overwrite = true)
-    } else {
-      val cur = sidecarSchema(dir).getOrElse(
-        spark.read.parquet(dir.toString).schema)
-      adds.foreach(f => require(!cur.fieldNames.contains(f.name),
-        s"column ${f.name} already exists on $ident"))
-      val widened = StructType(cur.fields ++ adds)
-      val out = fs.create(sidecarPath(dir), true)
-      try out.write(widened.json.getBytes("UTF-8")) finally out.close()
+    flavorOf(dir) match {
+      case Some(DeltaFlavor) => DeltaLog.addColumns(spark, dir.toString, adds)
+      case Some(IcebergFlavor) => IcebergTable.addColumns(spark, dir.toString, adds)
+      case None =>
+        val cur = sidecarSchema(dir).getOrElse(
+          spark.read.parquet(dir.toString).schema)
+        adds.foreach(f => require(!cur.fieldNames.contains(f.name),
+          s"column ${f.name} already exists on $ident"))
+        val widened = StructType(cur.fields ++ adds)
+        val out = fs.create(sidecarPath(dir), true)
+        try out.write(widened.json.getBytes("UTF-8")) finally out.close()
     }
     loadTable(ident)
   }
@@ -478,74 +417,6 @@ private[sources] class GraftMetadataTable(tblName: String,
             }
         }
       }
-    }
-}
-
-/** Log-backed flavors whose reads serve through a plain parquet scan
-  * (currently the graft-versioned flavor) — but a raw DSv2 write
-  * would dump files the transaction log never references (or clobber
-  * files it does): silent corruption. So `INSERT INTO` / `INSERT
-  * OVERWRITE` route through the flavor's COMMITTING writer as a V1
-  * write, and SQL `DELETE FROM` through its committing row-level
-  * delete (strict filter translation — a partial translation refuses
-  * rather than deleting a superset). `flavor`/`dir` let the SQL DML
-  * resolution rule ([[GraftRowLevelSql]]) route UPDATE / MERGE INTO
-  * to the flavor's library calls. */
-private[sources] class GraftCommittingTable(
-    inner: Table, val flavor: String, val dir: String,
-    insertFn: (org.apache.spark.sql.DataFrame, Boolean) => Unit,
-    deleteFn: Option[org.apache.spark.sql.Column => Unit])
-  extends Table
-    with org.apache.spark.sql.connector.catalog.SupportsRead
-    with org.apache.spark.sql.connector.catalog.SupportsWrite
-    with org.apache.spark.sql.connector.catalog.SupportsDelete {
-  override def name(): String = inner.name()
-  override def schema(): StructType = inner.schema()
-  override def capabilities(): util.Set[TableCapability] = {
-    val caps = new util.HashSet[TableCapability]()
-    caps.add(TableCapability.BATCH_READ)
-    caps.add(TableCapability.V1_BATCH_WRITE)
-    caps.add(TableCapability.TRUNCATE)
-    caps
-  }
-  override def newScanBuilder(options: CaseInsensitiveStringMap)
-  : org.apache.spark.sql.connector.read.ScanBuilder =
-    inner.asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsRead]
-      .newScanBuilder(options)
-
-  override def canDeleteWhere(
-      filters: Array[org.apache.spark.sql.sources.Filter]): Boolean =
-    deleteFn.isDefined &&
-      filters.forall(f => GraftDelta.filterToColumn(f, strict = true).isDefined)
-
-  override def deleteWhere(
-      filters: Array[org.apache.spark.sql.sources.Filter]): Unit = {
-    val pred = filters.flatMap(f => GraftDelta.filterToColumn(f, strict = true))
-      .reduceOption(_ && _)
-      .getOrElse(org.apache.spark.sql.functions.lit(true))
-    deleteFn.getOrElse(throw new UnsupportedOperationException(
-      s"DELETE is not supported on flavor $flavor"))(pred)
-  }
-
-  override def newWriteBuilder(
-      info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-  : org.apache.spark.sql.connector.write.WriteBuilder =
-    new org.apache.spark.sql.connector.write.WriteBuilder
-      with org.apache.spark.sql.connector.write.SupportsTruncate {
-      private var overwrite = false
-      override def truncate(): org.apache.spark.sql.connector.write.WriteBuilder = {
-        overwrite = true; this
-      }
-      override def build(): org.apache.spark.sql.connector.write.Write =
-        new org.apache.spark.sql.connector.write.V1Write {
-          override def toInsertableRelation
-          : org.apache.spark.sql.sources.InsertableRelation =
-            new org.apache.spark.sql.sources.InsertableRelation {
-              override def insert(data: org.apache.spark.sql.DataFrame,
-                                  ov: Boolean): Unit =
-                insertFn(data, overwrite || ov)
-            }
-        }
     }
 }
 

@@ -22,23 +22,27 @@ import org.apache.spark.sql.types.{LongType, StringType}
   *
   *  - `OPTIMIZE <t> [ZORDER BY (c, ...)]` — compaction /
   *    Z-clustering as a dataChange=false commit ([[DeltaLog.optimize]]
-  *    for Delta-flavor tables, [[VersionedTable.optimize]] /
-  *    [[VersionedTable.optimizeZorder]] for graft-versioned ones).
+  *    for Delta-flavor tables, [[IcebergTable.rewriteDataFiles]] for
+  *    Iceberg ones).
   *  - `VACUUM <t> [RETAIN n VERSIONS] [DRY RUN]` — physical cleanup
   *    past the retention horizon ([[DeltaLog.vacuum]] /
-  *    [[VersionedTable.vacuum]]).
+  *    [[IcebergTable.expireSnapshots]]).
   *  - `UPDATE <t> SET c = expr, ... [WHERE pred]` — Spark's own
   *    parser produces the [[UpdateTable]] plan; [[GraftRowLevelSql]]
-  *    routes it to the copy-on-write [[DeltaLog.update]].
+  *    routes it to the flavor's copy-on-write update
+  *    ([[DeltaLog.update]] / [[IcebergTable.update]]).
   *  - `MERGE INTO <t> USING <src> ON t.k = s.k WHEN MATCHED THEN
   *    UPDATE SET * WHEN NOT MATCHED THEN INSERT *` — the keyed-upsert
-  *    shape, routed to [[DeltaLog.merge]]. Any other merge shape is
-  *    refused loudly (never silently half-applied).
+  *    shape, routed to [[DeltaLog.merge]] / [[IcebergTable.merge]];
+  *    conditional, partial and BY SOURCE clauses route to the
+  *    flavor's `mergeFlexible`. A shape neither covers is refused
+  *    loudly (never silently half-applied).
   *
   * `<t>` is either a catalog-qualified name whose catalog is a
   * configured [[GraftCatalog]] (`OPTIMIZE graft.gold.sales`) or a
   * quoted filesystem path (`OPTIMIZE '/lake/t'`); the storage flavor
-  * is detected from the directory exactly like the catalog does.
+  * is detected from the directory by [[Flavor.of]], as the catalog
+  * does.
   *
   * OPTIMIZE/VACUUM are not in Spark's grammar, so [[GraftSqlParser]]
   * recognizes them BEFORE delegating everything else to Spark's
@@ -490,38 +494,15 @@ object GraftSqlStatements {
       (root +: parts.tail).mkString("/")
     }
 
-  sealed trait Flavor
-  case object DeltaFlavor extends Flavor
-  case object IcebergFlavor extends Flavor
-  case object VersionedFlavor extends Flavor
-
-  /** Same flavor detection as [[GraftCatalog]]. */
+  /** The [[Flavor]] of the table at `dir`; a plain parquet directory
+    * refuses — the statements need a transaction log. */
   private[sources] def flavorOf(spark: SparkSession, dir: String): Flavor = {
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(p), s"no table directory at $dir")
-    if (fs.exists(new org.apache.hadoop.fs.Path(p, "_delta_log"))) DeltaFlavor
-    else if (fs.globStatus(new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(p, "metadata"), "v*.metadata.json")).nonEmpty)
-      IcebergFlavor
-    else if (fs.exists(new org.apache.hadoop.fs.Path(p, "_LATEST")) ||
-      fs.globStatus(new org.apache.hadoop.fs.Path(p, "_c0*")).nonEmpty)
-      VersionedFlavor
-    else throw new IllegalArgumentException(
+    Flavor.of(fs, p).getOrElse(throw new IllegalArgumentException(
       s"$dir is a plain parquet directory — OPTIMIZE/VACUUM need a " +
-        "transaction log (Delta, Iceberg, or graft-versioned)")
-  }
-
-  /** Total data bytes of the versioned table's current snapshot, for
-    * sizing compaction output like Delta's target-file-size rule. */
-  private[sources] def versionedTargetFiles(spark: SparkSession, dir: String,
-                                            targetFileBytes: Long): Int = {
-    val files = VersionedTable.read(spark, dir).inputFiles
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bytes = files.map(f =>
-      fs.getFileStatus(new org.apache.hadoop.fs.Path(f)).getLen).sum
-    math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
+        "transaction log (Delta or Iceberg)"))
   }
 }
 
@@ -561,10 +542,6 @@ case class GraftOptimizeCommand(path: Option[String], parts: Seq[String],
     val dir = resolveDir(spark, path, parts)
     val v = flavorOf(spark, dir) match {
       case DeltaFlavor => DeltaLog.optimize(spark, dir, zorderBy = zorder)
-      case VersionedFlavor =>
-        val n = versionedTargetFiles(spark, dir, 128L << 20)
-        if (zorder.isEmpty) VersionedTable.optimize(spark, dir, n)
-        else VersionedTable.optimizeZorder(spark, dir, n, zorder)
       case IcebergFlavor =>
         require(zorder.isEmpty,
           "ZORDER BY is not supported for Iceberg-flavor tables")
@@ -582,10 +559,9 @@ case class GraftOptimizeCommand(path: Option[String], parts: Seq[String],
   * the file-set-diff restore commit ([[DeltaLog.restore]] — history
   * preserved, one new version), Iceberg the `rollback_to_snapshot`
   * pointer move ([[IcebergTable.rollbackTo]] — version = snapshot id,
-  * matching `VERSION AS OF` reads on this flavor), versioned tables
-  * their CAS re-commit ([[VersionedTable.restore]]). Timestamp
-  * targets accept epoch millis or `yyyy-MM-dd HH:mm:ss[.f]`. All
-  * three are metadata-only — no data file moves. */
+  * matching `VERSION AS OF` reads on this flavor). Timestamp
+  * targets accept epoch millis or `yyyy-MM-dd HH:mm:ss[.f]`. Both
+  * are metadata-only — no data file moves. */
 case class GraftRestoreCommand(path: Option[String], parts: Seq[String],
                                isVersion: Boolean, target: String)
   extends LeafRunnableCommand {
@@ -613,10 +589,6 @@ case class GraftRestoreCommand(path: Option[String], parts: Seq[String],
           else IcebergTable.snapshot(spark, dir,
             timestampAsOf = Some(tsMillis)).snapshotId
         IcebergTable.rollbackTo(spark, dir, snapId)
-      case VersionedFlavor =>
-        require(isVersion, "RESTORE … TIMESTAMP AS OF is not supported " +
-          "for versioned tables — pass the version as VERSION AS OF")
-        VersionedTable.restore(spark, dir, target.toLong)
     }
     Seq(Row(dir, v))
   }
@@ -628,7 +600,7 @@ case class GraftRestoreCommand(path: Option[String], parts: Seq[String],
   * `delta.enableChangeDataFeed=true` carries the changeDataFeed
   * protocol bump and turns on `_change_data` CDF writes for every
   * subsequent DML. Delta-flavor only (table configuration is a Delta
-  * log concept; other flavors refuse rather than pretend). */
+  * log concept) and Iceberg table properties. */
 case class GraftTablePropertiesCommand(path: Option[String],
                                        parts: Seq[String],
                                        set: Option[Seq[(String, String)]],
@@ -650,9 +622,6 @@ case class GraftTablePropertiesCommand(path: Option[String],
         case Some(kvs) => IcebergTable.setProperties(spark, dir, kvs.toMap)
         case None => IcebergTable.unsetProperties(spark, dir, unset)
       }
-      case VersionedFlavor => throw new UnsupportedOperationException(
-        "versioned tables have no properties store — TBLPROPERTIES " +
-          "apply to Delta and Iceberg flavors")
     }
     Seq(Row(dir, v))
   }
@@ -671,7 +640,6 @@ case class GraftTablePropertiesCommand(path: Option[String],
   *    (hidden transforms accepted: `PARTITIONED BY (days(ts),
   *    bucket(4, id))`) and properties, NO snapshot — appends must
   *    match both.
-  *  - `versioned` → an empty version 1 carrying the declared schema.
   * `IF NOT EXISTS` on an existing table is a no-op returning its
   * current version/snapshot. */
 case class GraftCreateTableCommand(dir: String, ifNotExists: Boolean,
@@ -730,24 +698,9 @@ case class GraftCreateTableCommand(dir: String, ifNotExists: Boolean,
           org.apache.spark.sql.types.StructType(fields), partitionBy,
           props.toMap)
         -1L // no snapshot yet — the spec's explicit "none" sentinel
-      case "versioned" =>
-        requireNoGenerated()
-        requireNoDefaults()
-        require(partitionBy.isEmpty,
-          "USING versioned does not take PARTITIONED BY")
-        require(props.isEmpty,
-          "USING versioned has no property store — TBLPROPERTIES refuse")
-        if (new java.io.File(dir).exists() &&
-          VersionedTable.currentVersion(spark, dir) > 0) {
-          require(ifNotExists, s"versioned table already exists at $dir")
-          return Seq(Row(dir, VersionedTable.currentVersion(spark, dir)))
-        }
-        VersionedTable.write(spark.createDataFrame(
-          spark.sparkContext.emptyRDD[Row],
-          org.apache.spark.sql.types.StructType(fields)), dir)
       case other => throw new UnsupportedOperationException(
         s"CREATE TABLE USING $other is not supported " +
-          "(delta / iceberg / versioned)")
+          "(delta / iceberg)")
     }
     Seq(Row(dir, v))
   }
@@ -793,7 +746,6 @@ case class GraftShowPropsCommand(dir: String) extends LeafRunnableCommand {
     val props = flavorOf(spark, dir) match {
       case DeltaFlavor => DeltaLog.snapshot(spark, dir).configuration
       case IcebergFlavor => IcebergTable.properties(spark, dir)
-      case VersionedFlavor => Map.empty[String, String]
     }
     props.toSeq.sortBy(_._1).map { case (k, v) => Row(k, v) }
   }
@@ -801,10 +753,8 @@ case class GraftShowPropsCommand(dir: String) extends LeafRunnableCommand {
 
 /** `DESCRIBE HISTORY <t>` — the flavor's commit history, unified as
   * (version, timestamp_ms, detail): Delta commit versions, Iceberg
-  * snapshots (version = snapshot id, detail = operation), versioned
-  * tables their retained snapshots (detail = file/byte counts).
-  * Bounded by the log length — a metadata listing, never a data
-  * scan. */
+  * snapshots (version = snapshot id, detail = operation). Bounded
+  * by the log length — a metadata listing, never a data scan. */
 case class GraftDescribeHistoryCommand(path: Option[String],
                                        parts: Seq[String])
   extends LeafRunnableCommand {
@@ -823,17 +773,13 @@ case class GraftDescribeHistoryCommand(path: Option[String],
       case IcebergFlavor =>
         IcebergTable.history(spark, dir).collect().toSeq.map(r =>
           Row(r.getLong(0), r.getLong(1), r.getString(2)))
-      case VersionedFlavor =>
-        VersionedTable.history(spark, dir).collect().toSeq.map(r =>
-          Row(r.getLong(0), 0L,
-            s"n_files=${r.getLong(1)} bytes=${r.getLong(2)}"))
     }
   }
 }
 
 /** `DESCRIBE DETAIL <t>` — the one-row table summary Delta users
   * lean on (format, location, current version, file/byte/row counts,
-  * partition layout, properties), served for all three flavors from
+  * partition layout, properties), served for both flavors from
   * METADATA alone — no data scan. Row counts come from the log's
   * per-file stats (Delta, DV cardinality subtracted) or the
   * manifests' record counts (Iceberg, live position-deletes
@@ -882,19 +828,12 @@ case class GraftDescribeDetailCommand(path: Option[String],
           math.max(snap.files.map(_.records).sum - posDeleted, 0L),
           snap.specFields.map(_.canonical).mkString("[", ", ", "]"),
           propsStr(IcebergTable.properties(spark, dir))))
-      case VersionedFlavor =>
-        val v = VersionedTable.currentVersion(spark, dir)
-        val h = VersionedTable.history(spark, dir).collect()
-        val last = h.lastOption
-        Seq(Row("versioned", dir, v,
-          last.map(_.getLong(1)).getOrElse(0L),
-          last.map(_.getLong(2)).getOrElse(0L), -1L, "[]", "{}"))
     }
   }
 }
 
 /** `SHOW CREATE TABLE '<path>'` — REVERSE DDL from metadata alone,
-  * for all three flavors: the emitted statement ROUND-TRIPS through
+  * for both flavors: the emitted statement ROUND-TRIPS through
   * [[GraftSqlStatements.parse]]'s CREATE TABLE grammar (columns with
   * NOT NULL and GENERATED ALWAYS AS, PARTITIONED BY including hidden
   * transforms, TBLPROPERTIES) — the text users paste into migration
@@ -956,12 +895,6 @@ case class GraftShowCreateTableCommand(dir: String)
           partSql(snap.specFields.map(_.canonical)) +
           propsSql(IcebergTable.properties(spark, d)
             .filterNot(_._1 == "graft.mirror-of"))
-      case VersionedFlavor =>
-        val v = VersionedTable.currentVersion(spark, d)
-        val schema = VersionedTable.readVersion(spark, d, v).schema
-        s"CREATE TABLE '$d' (\n  " +
-          schema.fields.map(colDef).mkString(",\n  ") +
-          "\n)\nUSING versioned"
     }
     Seq(Row(stmt))
   }
@@ -987,8 +920,6 @@ case class GraftDescribeExtendedCommand(dir: String)
       flavorOf(spark, d) match {
         case DeltaFlavor => DeltaLog.snapshot(spark, d).schema
         case IcebergFlavor => IcebergTable.snapshot(spark, d).schema
-        case VersionedFlavor => VersionedTable.readVersion(spark, d,
-          VersionedTable.currentVersion(spark, d)).schema
       }
     val colRows = schema.fields.toSeq.map { f =>
       val comment =
@@ -1244,8 +1175,6 @@ case class GraftAlterColumnTypeCommand(path: Option[String],
       case IcebergFlavor =>
         IcebergTable.updateColumnType(spark, dir, column, to)
         IcebergTable.snapshot(spark, dir).snapshotId
-      case other => throw new UnsupportedOperationException(
-        s"ALTER COLUMN ... TYPE on $dir: unsupported flavor $other")
     }
     Seq(Row(dir, v))
   }
@@ -1272,9 +1201,6 @@ case class GraftColumnDdlCommand(path: Option[String], parts: Seq[String],
           case None => IcebergTable.dropColumn(spark, dir, column)
         }
         IcebergTable.snapshot(spark, dir).snapshotId
-      case other => throw new UnsupportedOperationException(
-        s"RENAME/DROP COLUMN supports Delta and Iceberg tables; $dir is " +
-          s"$other")
     }
     Seq(Row(dir, v))
   }
@@ -1407,13 +1333,6 @@ case class GraftVacuumCommand(path: Option[String], parts: Seq[String],
           else retain.getOrElse(1)
         DeltaLog.vacuum(spark, dir, keepVersions = keep,
           dryRun = dryRun).map(Row(_))
-      case VersionedFlavor =>
-        require(!dryRun, "DRY RUN is not supported for versioned tables")
-        require(!retainHours,
-          "RETAIN n HOURS is not supported for versioned tables — " +
-            "use RETAIN n VERSIONS")
-        VersionedTable.vacuum(spark, dir, keepVersions = retain.getOrElse(2))
-        Seq.empty
       case IcebergFlavor =>
         require(!dryRun, "DRY RUN is not supported for Iceberg tables")
         val keep =
@@ -1426,8 +1345,8 @@ case class GraftVacuumCommand(path: Option[String], parts: Seq[String],
 }
 
 /** Resolution rule routing SQL `UPDATE` / `MERGE INTO` over
-  * [[GraftDeltaTable]] catalog tables to the copy-on-write
-  * [[DeltaLog.update]] / [[DeltaLog.merge]]. Spark parses both
+  * [[GraftDeltaTable]] / [[GraftIcebergTable]] catalog tables to the
+  * flavor's copy-on-write update and merge. Spark parses both
   * statements natively but only executes them for tables implementing
   * the DSv2 row-level-operation APIs; this rule swaps the resolved
   * plan for a runnable command BEFORE that check fires. Unsupported
@@ -1440,18 +1359,13 @@ object GraftRowLevelSql extends Rule[LogicalPlan] {
     throw new org.apache.spark.sql.AnalysisException(
       "USER_RAISED_EXCEPTION", Map("errorMessage" -> msg), None)
 
-  /** (flavor, table directory) for the three routable catalog table
-    * kinds. */
-  private def targetOf(plan: LogicalPlan): Option[(String, String)] =
+  /** (flavor, table directory) of a routable catalog table. */
+  private def targetOf(plan: LogicalPlan): Option[(Flavor, String)] =
     plan.collectFirst {
       case r: DataSourceV2Relation if r.table.isInstanceOf[GraftDeltaTable] =>
-        ("delta", r.table.asInstanceOf[GraftDeltaTable].tablePath)
+        (DeltaFlavor, r.table.asInstanceOf[GraftDeltaTable].tablePath)
       case r: DataSourceV2Relation if r.table.isInstanceOf[GraftIcebergTable] =>
-        ("iceberg", r.table.asInstanceOf[GraftIcebergTable].tablePath)
-      case r: DataSourceV2Relation
-        if r.table.isInstanceOf[GraftCommittingTable] &&
-          r.table.asInstanceOf[GraftCommittingTable].flavor == "versioned" =>
-        ("versioned", r.table.asInstanceOf[GraftCommittingTable].dir)
+        (IcebergFlavor, r.table.asInstanceOf[GraftIcebergTable].tablePath)
     }
 
   /** Resolved → re-resolvable-by-name (DeltaLog re-plans the table
@@ -1662,7 +1576,7 @@ object GraftRowLevelSql extends Rule[LogicalPlan] {
 /** Routed `UPDATE`: assignments/condition carried as BY-NAME Columns
   * (the library call re-resolves them over its own table frame);
   * dispatched to the flavor's committing implementation. */
-case class GraftUpdateCommand(flavor: String, tablePath: String,
+case class GraftUpdateCommand(flavor: Flavor, tablePath: String,
                               assignments: Seq[(String, org.apache.spark.sql.Column)],
                               condition: Option[org.apache.spark.sql.Column])
   extends LeafRunnableCommand {
@@ -1672,12 +1586,10 @@ case class GraftUpdateCommand(flavor: String, tablePath: String,
   override def run(spark: SparkSession): Seq[Row] = {
     val pred = condition.getOrElse(lit(true))
     val v = flavor match {
-      case "delta" =>
+      case DeltaFlavor =>
         DeltaLog.update(spark, tablePath, pred, assignments.toMap)
-      case "iceberg" =>
+      case IcebergFlavor =>
         IcebergTable.update(spark, tablePath, pred, assignments.toMap)
-      case "versioned" =>
-        VersionedTable.updateWhere(spark, tablePath, pred, assignments.toMap)
     }
     Seq(Row(v))
   }
@@ -1686,7 +1598,7 @@ case class GraftUpdateCommand(flavor: String, tablePath: String,
 /** Routed keyed-upsert `MERGE INTO`: the analyzed source plan rides
   * along and becomes the merge source frame at execution; dispatched
   * to the flavor's committing implementation. */
-case class GraftMergeCommand(flavor: String, tablePath: String,
+case class GraftMergeCommand(flavor: Flavor, tablePath: String,
                              source: LogicalPlan,
                              keyCols: Seq[String]) extends LeafRunnableCommand {
   override val output: Seq[Attribute] = Seq(
@@ -1696,9 +1608,8 @@ case class GraftMergeCommand(flavor: String, tablePath: String,
   override def run(spark: SparkSession): Seq[Row] = {
     val src = ColumnBridge.ofRows(spark, source)
     val v = flavor match {
-      case "delta" => DeltaLog.merge(spark, tablePath, src, keyCols)
-      case "iceberg" => IcebergTable.merge(spark, tablePath, src, keyCols)
-      case "versioned" => VersionedTable.mergeReplace(src, tablePath, keyCols)
+      case DeltaFlavor => DeltaLog.merge(spark, tablePath, src, keyCols)
+      case IcebergFlavor => IcebergTable.merge(spark, tablePath, src, keyCols)
     }
     Seq(Row(v))
   }
@@ -1709,7 +1620,7 @@ case class GraftMergeCommand(flavor: String, tablePath: String,
   * clauses) — the clause payload rides as by-name Columns per the
   * [[MergeSpec]] contract (first-match-wins order preserved) and is
   * dispatched to the flavor's one-commit `mergeFlexible`. */
-case class GraftMergeFlexCommand(flavor: String, tablePath: String,
+case class GraftMergeFlexCommand(flavor: Flavor, tablePath: String,
                                  source: LogicalPlan, keyCols: Seq[String],
                                  matchedSpec: Seq[(Option[org.apache.spark.sql.Column], Boolean, Seq[(String, org.apache.spark.sql.Column)])],
                                  insertSpec: Seq[(Option[org.apache.spark.sql.Column], Seq[(String, org.apache.spark.sql.Column)])],
@@ -1729,14 +1640,11 @@ case class GraftMergeFlexCommand(flavor: String, tablePath: String,
     val bySource = bySourceSpec.map { case (cond, del, asg) =>
       MergeSpec.NotMatchedBySource(cond, del, asg) }
     val v = flavor match {
-      case "delta" =>
+      case DeltaFlavor =>
         DeltaLog.mergeFlexible(spark, tablePath, src, keyCols, matched,
           notMatched, bySource, extraOn = extraOn)
-      case "iceberg" =>
+      case IcebergFlavor =>
         IcebergTable.mergeFlexible(spark, tablePath, src, keyCols, matched,
-          notMatched, bySource, extraOn)
-      case "versioned" =>
-        VersionedTable.mergeFlexible(src, tablePath, keyCols, matched,
           notMatched, bySource, extraOn)
     }
     Seq(Row(v))

@@ -27,10 +27,9 @@ import org.apache.spark.sql.types._
   *  - [[snapshot]] / [[read]]: resolve a real Iceberg table at a
   *    snapshot id or timestamp and read it as a DataFrame through
   *    Spark's native parquet path.
-  *  - [[exportFromVersioned]]: emit real Iceberg metadata for an
-  *    existing [[VersionedTable]] (one Iceberg snapshot per graft
-  *    version) so Iceberg-reading engines can time-travel graft
-  *    output.
+  *  - [[write]], [[merge]] / [[mergeFlexible]], [[update]],
+  *    [[rewriteDataFiles]], [[expireSnapshots]]: commits as new
+  *    `v<N>.metadata.json` files any Iceberg reader can time-travel.
   *
   * Scale shape: `metadata.json` and the manifest LIST are one small
   * file each (bounded by snapshot count / manifest count, not data).
@@ -2135,7 +2134,7 @@ object IcebergTable {
     }
     // an EMPTY (DDL-first) table: nothing matches — the merge is the
     // insert clause alone, a plain append under the declared spec
-    // (the Delta and versioned arms handle their empty targets too)
+    // (the Delta arm handles its empty target too)
     if (snap.snapshotId == -1L) {
       return nmc match {
         case Some(_) => write(spark, insertProjection(source),
@@ -5513,7 +5512,7 @@ object IcebergTable {
     }
   }
 
-  // ---------------- VersionedTable → Iceberg export ----------------
+  // ---------------- Avro manifest schemas + writer ----------------
 
   private val ManifestEntrySchema: Schema = new Schema.Parser().parse(
     """{"type":"record","name":"manifest_entry","fields":[
@@ -6736,154 +6735,5 @@ object IcebergTable {
       }
       (root, snapId)
     }
-  }
-
-  /** Export a [[VersionedTable]] as a REAL Iceberg table (HadoopTables
-    * layout): copy each graft version's parquet files and write one
-    * Iceberg snapshot per version — metadata/v<N>.metadata.json +
-    * manifest list + manifest, `version-hint.text` pointing at the
-    * head. Each snapshot is a full overwrite (VersionedTable versions
-    * are full snapshots), so its manifest list references exactly its
-    * own manifest. Returns the head snapshot id. */
-  def exportFromVersioned(spark: SparkSession, table: String,
-                          icebergPath: String): Long = {
-    val fsConf = spark.sparkContext.hadoopConfiguration
-    val dst = new Path(icebergPath)
-    val fs = dst.getFileSystem(fsConf)
-    val mdir = new Path(dst, "metadata")
-    fs.mkdirs(mdir)
-    fs.mkdirs(new Path(dst, "data"))
-    val cur = VersionedTable.currentVersion(spark, table)
-    require(cur >= 1, s"no versions in $table")
-
-    val tableUuid = java.util.UUID.nameUUIDFromBytes(
-      ("iceberg:" + table).getBytes("UTF-8")).toString
-    val snapsArr: ArrayNode = M.createArrayNode()
-    val logArr: ArrayNode = M.createArrayNode()
-    var headSchemaJson: JsonNode = null
-    var lastColumnId = 0
-
-    (1L to cur).foreach { v =>
-      val df = VersionedTable.readVersion(spark, table, v)
-      var idCounter = 0
-      val nextId = () => { idCounter += 1; idCounter }
-      val schemaObj = sparkTypeToIceberg(df.schema, nextId).asInstanceOf[ObjectNode]
-      schemaObj.put("schema-id", 0)
-      headSchemaJson = schemaObj
-      lastColumnId = idCounter
-      val now = System.currentTimeMillis()
-      val snapId = v // deterministic, 1-based like graft versions
-
-      // copy data files under the iceberg root; row counts come from
-      // each copied file's parquet FOOTER (Iceberg readers use
-      // record_count for count(*) pushdown — it must be REAL), not a
-      // Spark re-scan job of data just copied whole
-      val copied = df.inputFiles.toSeq.zipWithIndex.map { case (src, i) =>
-        val rel = new Path(new Path(dst, "data"), s"v$v-part-$i.parquet")
-        val srcP = new Path(new java.net.URI(src))
-        org.apache.hadoop.fs.FileUtil.copy(
-          srcP.getFileSystem(fsConf), srcP, fs, rel, false, fsConf)
-        (fs.makeQualified(rel).toString,
-          fs.getFileStatus(rel).getLen,
-          footerRowCount(fsConf, rel))
-      }
-      val rowCount = copied.map(_._3).sum
-
-      // manifest: every file of this version, status=ADDED
-      val entries = copied.map { case (path, size, nrec) =>
-        val e = new GenericData.Record(ManifestEntrySchema)
-        e.put("status", 1)
-        e.put("snapshot_id", snapId)
-        e.put("sequence_number", v)
-        e.put("file_sequence_number", v)
-        val d = new GenericData.Record(
-          ManifestEntrySchema.getField("data_file").schema())
-        d.put("content", 0)
-        d.put("file_path", path)
-        d.put("file_format", "PARQUET")
-        d.put("partition", new GenericData.Record(
-          d.getSchema.getField("partition").schema()))
-        d.put("record_count", nrec)
-        d.put("file_size_in_bytes", size)
-        e.put("data_file", d)
-        e
-      }
-      val manifestPath = fs.makeQualified(
-        new Path(mdir, s"manifest-$v.avro"))
-      val manifestLen = writeAvro(spark, manifestPath, ManifestEntrySchema,
-        Map("schema" -> M.writeValueAsString(schemaObj),
-          "partition-spec" -> "[]", "partition-spec-id" -> "0",
-          "format-version" -> "2", "content" -> "data"),
-        entries)
-
-      // manifest list: exactly this version's manifest
-      val mf = new GenericData.Record(ManifestFileSchema)
-      mf.put("manifest_path", manifestPath.toString)
-      mf.put("manifest_length", manifestLen)
-      mf.put("partition_spec_id", 0)
-      mf.put("content", 0)
-      mf.put("sequence_number", v)
-      mf.put("min_sequence_number", v)
-      mf.put("added_snapshot_id", snapId)
-      mf.put("added_files_count", copied.size)
-      mf.put("existing_files_count", 0)
-      mf.put("deleted_files_count", 0)
-      mf.put("added_rows_count", rowCount)
-      mf.put("existing_rows_count", 0L)
-      mf.put("deleted_rows_count", 0L)
-      val listPath = fs.makeQualified(
-        new Path(mdir, s"snap-$snapId-manifest-list.avro"))
-      writeAvro(spark, listPath, ManifestFileSchema,
-        Map("format-version" -> "2"), Seq(mf))
-
-      val sn = snapsArr.addObject()
-      sn.put("snapshot-id", snapId)
-      sn.put("sequence-number", v)
-      sn.put("timestamp-ms", now)
-      sn.put("manifest-list", listPath.toString)
-      sn.put("schema-id", 0)
-      sn.putObject("summary").put("operation", "overwrite")
-      val lg = logArr.addObject()
-      lg.put("snapshot-id", snapId)
-      lg.put("timestamp-ms", now)
-
-      // metadata/v<v>.metadata.json with all snapshots so far
-      val root = M.createObjectNode()
-      root.put("format-version", 2)
-      root.put("table-uuid", tableUuid)
-      root.put("location", fs.makeQualified(dst).toString)
-      root.put("last-sequence-number", v)
-      root.put("last-updated-ms", now)
-      root.put("last-column-id", lastColumnId)
-      root.put("current-schema-id", 0)
-      root.putArray("schemas").add(headSchemaJson)
-      val spec = root.putArray("partition-specs").addObject()
-      spec.put("spec-id", 0)
-      spec.putArray("fields")
-      root.put("default-spec-id", 0)
-      root.put("last-partition-id", 999)
-      root.put("default-sort-order-id", 0)
-      val so = root.putArray("sort-orders").addObject()
-      so.put("order-id", 0)
-      so.putArray("fields")
-      root.put("current-snapshot-id", snapId)
-      root.set[JsonNode]("snapshots", snapsArr.deepCopy())
-      root.set[JsonNode]("snapshot-log", logArr.deepCopy())
-      root.putArray("metadata-log")
-      root.putObject("properties")
-      val mp = new Path(mdir, s"v$v.metadata.json")
-      // same exclusive-create primitive as casCommit — a raced
-      // migration must fail loudly, not truncate the winner's bytes
-      if (!AtomicCas.createExclusive(fs, mp,
-        M.writerWithDefaultPrettyPrinter().writeValueAsBytes(root)))
-        throw new IllegalStateException(
-          s"$dst: v$v.metadata.json already exists — a concurrent " +
-            "export to the same destination won the race")
-    }
-    // HadoopTables head pointer
-    val hint = new Path(mdir, "version-hint.text")
-    val out = fs.create(hint, true)
-    try out.write(cur.toString.getBytes("UTF-8")) finally out.close()
-    cur
   }
 }

@@ -2,8 +2,8 @@ package graft.sources
 
 import org.apache.spark.sql.Column
 
-/** The generalized SQL MERGE clause shapes shared by the three
-  * flavors' `mergeFlexible` implementations:
+/** The generalized SQL MERGE clause shapes shared by the Delta and
+  * Iceberg `mergeFlexible` implementations:
   *
   *  - `WHEN MATCHED [AND condition] THEN UPDATE SET a = expr, …` —
   *    partial-column assignments; unassigned columns keep the target

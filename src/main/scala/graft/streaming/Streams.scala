@@ -374,41 +374,71 @@ object Streams {
     q.awaitTermination()
   }
 
-  /** Streaming MERGE into a [[graft.sources.VersionedTable]]: each
-    * micro-batch commits a new table version through the atomic
-    * pointer-swap protocol — the streaming Delta-MERGE analog with
-    * snapshot isolation (readers of any committed version are never
-    * disturbed) and idempotent replays (keepLatest by `versionCol`). */
-  def runVersionedMergeOnce(stream: DataFrame, keys: Seq[String],
-                            versionCol: String, table: String,
-                            checkpoint: String): Unit = {
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.sources.VersionedTable.merge(batch.toDF(), table, keys, versionCol)
-        ()
-      }
-      .start()
-    q.awaitTermination()
+  /** Streaming MERGE into a Delta table: each micro-batch is reduced
+    * to its latest row per key (a merge source must be key-unique),
+    * then one [[graft.sources.DeltaLog.mergeFlexible]] commit updates
+    * matched rows whose `versionCol` is NEWER and inserts the rest.
+    * Readers of any committed version are never disturbed, and a
+    * replayed batch is a no-op (last-writer-wins by `versionCol`, and
+    * the batch's txn mark). */
+  def runMergeOnce(stream: DataFrame, keys: Seq[String],
+                   versionCol: String, table: String,
+                   checkpoint: String): Unit = {
+    import graft.sources.MergeSpec._
+    runDeltaMergeOnce(stream, keys, table, checkpoint)(
+      graft.operators.Dedup.keepLatest(_, keys, versionCol),
+      Seq(Matched(Some(col(SrcPrefix + versionCol) > col(versionCol)),
+        delete = false, assignments = stream.columns.toSeq.map(c =>
+          c -> col(SrcPrefix + c)))))
   }
 
-  /** Streaming incremental aggregation into a versioned table: each
-    * micro-batch's rows are summed into the running per-key totals
-    * and committed as a new version — maintained gold aggregates
-    * without reprocessing history. */
+  /** Streaming incremental aggregation into a Delta table: each
+    * micro-batch is summed per key, then one MERGE adds the batch sums
+    * to the running totals of matched keys and inserts new keys —
+    * maintained gold aggregates without reprocessing history. An
+    * additive merge is not idempotent, so the Delta `txn` mark guards
+    * against a replayed batch. */
   def runIncrementalAggOnce(stream: DataFrame, keys: Seq[String],
                             sumCols: Seq[String], table: String,
                             checkpoint: String): Unit = {
+    import graft.sources.MergeSpec._
+    runDeltaMergeOnce(stream, keys, table, checkpoint)(
+      _.groupBy(keys.map(col): _*)
+        .agg(sum(col(sumCols.head)).as(sumCols.head),
+          sumCols.tail.map(c => sum(col(c)).as(c)): _*),
+      Seq(Matched(None, delete = false, assignments = sumCols.map(c =>
+        c -> (col(c) + col(SrcPrefix + c))))))
+  }
+
+  /** foreachBatch MERGE of each (prepared, key-unique) micro-batch into
+    * the Delta table at `table`, INSERT * when not matched. The first
+    * batch creates the table. Every commit carries the Delta `txn`
+    * action (appId = the checkpoint, version = batch id), and a batch
+    * at or below the table's txn watermark is skipped: foreachBatch is
+    * at-least-once, and a restart replays the last uncommitted batch. */
+  private def runDeltaMergeOnce(stream: DataFrame, keys: Seq[String],
+                                table: String, checkpoint: String)(
+      prepare: DataFrame => DataFrame,
+      matched: Seq[graft.sources.MergeSpec.Matched]): Unit = {
+    import graft.sources.DeltaLog
+    val appId = "graft-delta-merge:" + checkpoint
     val q = stream.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        // batchId tags the commit: foreachBatch is at-least-once, and
-        // an additive merge would double-count a replayed batch
-        graft.sources.VersionedTable.mergeAggregate(
-          batch.toDF(), table, keys, sumCols,
-          commitTag = Some(s"batch-$batchId"))
+        val spark = batch.sparkSession
+        val txn = Some(appId -> batchId)
+        val snap =
+          try Some(DeltaLog.snapshot(spark, table))
+          catch { case _: IllegalArgumentException => None } // not created yet
+        val src = prepare(batch.toDF())
+        snap match {
+          case None => DeltaLog.write(spark, src, table, txn = txn)
+          case Some(s) if s.txns.getOrElse(appId, -1L) >= batchId => // replay
+          case Some(_) =>
+            DeltaLog.mergeFlexible(spark, table, src, keys, matched,
+              Seq(graft.sources.MergeSpec.NotMatched(None)), txn = txn)
+        }
         ()
       }
       .start()

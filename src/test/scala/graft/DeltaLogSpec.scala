@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 
-import graft.sources.{DeltaLog, VersionedTable}
+import graft.sources.DeltaLog
 
 /** Native `_delta_log` reader against HAND-COMMITTED minimal Delta
   * tables (protocol/metaData/add/remove JSON actions written
@@ -199,7 +199,7 @@ class DeltaLogSpec extends SparkSpec {
     DeltaLog.write(spark, Seq((7L, 7L)).toDF("k", "n"), t, overwrite = true)
     assert(DeltaLog.snapshot(spark, t).schema.fieldNames.toSeq === Seq("k", "n"))
     // (concurrent-writer safety rides on fs.create's exclusive-create
-    // semantics — the same contract VersionedTable's CAS documents)
+    // semantics — AtomicCas)
   }
 
   test("direct writer: schema gate message and exclusive commit file") {
@@ -481,8 +481,7 @@ class DeltaLogSpec extends SparkSpec {
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       "k BIGINT, v STRING")
     val delta = s"$dir/delta"
-    // consumer state: CDC offset + replica rows, advanced per batch —
-    // the VersionedTable.syncChanges contract applied to a REAL log
+    // consumer state: CDC offset + replica rows, advanced per batch
     var offset = -1L
     val replica = scala.collection.mutable.Set[(Long, String)]()
     val q = spark.readStream.schema(schema)
@@ -982,25 +981,6 @@ class DeltaLogSpec extends SparkSpec {
       .filterNot(_.endsWith("f1.parquet")).head
     assert(spark.read.parquet(newFile).columns.toSeq
       === Seq("col-17", "col-18"))
-  }
-
-  test("VersionedTable export round-trips through the Delta reader") {
-    val t = Files.createTempDirectory("graft-vt-delta").toString + "/t"
-    VersionedTable.write(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), t)
-    VersionedTable.write(Seq((1L, "a"), (3L, "c")).toDF("k", "v"), t,
-      overwrite = true)
-    val out = Files.createTempDirectory("graft-vt-delta-out").toString + "/d"
-    val top = DeltaLog.exportFromVersioned(spark, t, out)
-    assert(top === 1L)
-    assert(DeltaLog.read(spark, out).as[(Long, String)].collect().toSet
-      === Set((1L, "a"), (3L, "c")))
-    assert(DeltaLog.read(spark, out, versionAsOf = Some(0L))
-      .as[(Long, String)].collect().toSet === Set((1L, "a"), (2L, "b")))
-    // the same Snapshot abstraction serves VersionedTable directly
-    // (graft versions are 1-based, unlike Delta's 0-based)
-    val snap = DeltaLog.snapshotFromVersioned(spark, t, Some(1L))
-    assert(DeltaLog.readSnapshot(spark, snap)
-      .as[(Long, String)].collect().toSet === Set((1L, "a"), (2L, "b")))
   }
 
   test("mirrorFromIceberg: zero-copy Delta shallow clone, diff re-mirrors") {

@@ -4,10 +4,10 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.sources.{DeltaLog, IcebergTable, VersionedTable}
+import graft.sources.{DeltaLog, IcebergTable}
 
 /** Three-level SQL naming over the DSv2 catalog: plain parquet,
-  * VersionedTable and native-Delta table flavors all resolve as
+  * native-Iceberg and native-Delta table flavors all resolve as
   * `graft_t.<schema>.<table>`, with time-travel SQL on the flavors
   * that version. */
 class GraftCatalogSpec extends SparkSpec {
@@ -24,13 +24,13 @@ class GraftCatalogSpec extends SparkSpec {
     // plain parquet directory
     Seq((1L, "ann"), (2L, "bob")).toDF("c_key", "c_name")
       .write.parquet(s"$root/gold/dim_customers")
-    // versioned table
-    VersionedTable.write(Seq((10L, "p1"), (20L, "p2")).toDF("p_key", "p_name"),
+    // Iceberg table
+    IcebergTable.write(spark,
+      Seq((10L, "p1"), (20L, "p2")).toDF("p_key", "p_name"),
       s"$root/gold/dim_parts")
-    // real Delta log (via the export writer)
-    val vt = Files.createTempDirectory("graft-cat-vt").toString + "/t"
-    VersionedTable.write(Seq((100L, 5L)).toDF("o_key", "qty"), vt)
-    DeltaLog.exportFromVersioned(spark, vt, s"$root/gold/fact_sales")
+    // Delta table
+    DeltaLog.write(spark, Seq((100L, 5L)).toDF("o_key", "qty"),
+      s"$root/gold/fact_sales")
 
     assert(spark.sql("SELECT c_name FROM graft_t.gold.dim_customers ORDER BY c_key")
       .as[String].collect().toSeq === Seq("ann", "bob"))
@@ -50,24 +50,27 @@ class GraftCatalogSpec extends SparkSpec {
       .contains("gold"))
   }
 
-  test("VERSION AS OF travels versioned and delta flavors; filters push down") {
-    VersionedTable.write(Seq((1L, "v1")).toDF("k", "v"), s"$root/silver/events")
-    VersionedTable.write(Seq((1L, "v2")).toDF("k", "v"), s"$root/silver/events",
-      overwrite = true)
-    assert(spark.sql("SELECT v FROM graft_t.silver.events").as[String].head()
+  test("VERSION AS OF travels iceberg and delta flavors; filters push down") {
+    // iceberg flavor: VERSION AS OF carries the snapshot id
+    IcebergTable.write(spark, Seq((1L, "v1")).toDF("k", "v"),
+      s"$root/silver/ice_ev")
+    IcebergTable.write(spark, Seq((1L, "v2")).toDF("k", "v"),
+      s"$root/silver/ice_ev", overwrite = true)
+    val first = IcebergTable.snapshotIds(spark, s"$root/silver/ice_ev").head
+    assert(spark.sql("SELECT v FROM graft_t.silver.ice_ev").as[String].head()
       === "v2")
-    assert(spark.sql("SELECT v FROM graft_t.silver.events VERSION AS OF 1")
+    assert(spark.sql(s"SELECT v FROM graft_t.silver.ice_ev VERSION AS OF $first")
       .as[String].head() === "v1")
     // delta flavor time travel (delta versions are 0-based)
-    val vt = Files.createTempDirectory("graft-cat-tt").toString + "/t"
-    VersionedTable.write(Seq(Tuple1("a")).toDF("x"), vt)
-    VersionedTable.write(Seq(Tuple1("b")).toDF("x"), vt, overwrite = true)
-    DeltaLog.exportFromVersioned(spark, vt, s"$root/silver/delta_ev")
+    DeltaLog.write(spark, Seq(Tuple1("a")).toDF("x"), s"$root/silver/delta_ev")
+    DeltaLog.write(spark, Seq(Tuple1("b")).toDF("x"), s"$root/silver/delta_ev",
+      overwrite = true)
     assert(spark.sql("SELECT x FROM graft_t.silver.delta_ev VERSION AS OF 0")
       .as[String].head() === "a")
     assert(spark.sql("SELECT x FROM graft_t.silver.delta_ev").as[String].head()
       === "b")
     // native parquet scan: the filter reaches the file format
+    Seq((1L, "v2")).toDF("k", "v").write.parquet(s"$root/silver/events")
     val plan = spark.sql(
       "SELECT k FROM graft_t.silver.events WHERE k = 1").queryExecution
       .executedPlan.toString
@@ -96,23 +99,7 @@ class GraftCatalogSpec extends SparkSpec {
     assert(!new java.io.File(s"$root/bronze/raw").exists())
   }
 
-  test("ALTER TABLE ADD COLUMN: versioned, delta and plain flavors") {
-    // versioned flavor: DDL commits a schema-evolving version
-    VersionedTable.write(Seq((1L, "a"), (2L, "b")).toDF("k", "v"),
-      s"$root/ddl/vt")
-    spark.sql("ALTER TABLE graft_t.ddl.vt ADD COLUMN score DOUBLE")
-    assert(spark.sql("SELECT k, v, score FROM graft_t.ddl.vt ORDER BY k")
-      .as[(Long, String, Option[Double])].collect().toSeq
-      === Seq((1L, "a", None), (2L, "b", None)))
-    // old snapshot still reads with its own schema
-    assert(spark.sql("SELECT * FROM graft_t.ddl.vt VERSION AS OF 1")
-      .columns.toSeq === Seq("k", "v"))
-    // new writes carry the column (writeEvolve machinery)
-    VersionedTable.writeEvolve(Seq((3L, "c", 0.5)).toDF("k", "v", "score"),
-      s"$root/ddl/vt")
-    assert(spark.sql("SELECT score FROM graft_t.ddl.vt WHERE k = 3")
-      .as[Double].head() === 0.5)
-
+  test("ALTER TABLE ADD COLUMN: delta, iceberg and plain flavors") {
     // delta flavor: DDL commits a metaData-only version
     DeltaLog.write(spark, Seq((1L, "a")).toDF("k", "v"), s"$root/ddl/dt")
     spark.sql("ALTER TABLE graft_t.ddl.dt ADD COLUMN n BIGINT")
@@ -167,16 +154,13 @@ class GraftCatalogSpec extends SparkSpec {
   }
 
   test("log-backed flavors take committing SQL writes, never a bare parquet dump") {
-    // a raw DSv2 write into a Delta/versioned/Iceberg directory would
-    // dump files the log never references — instead INSERT routes
-    // through the flavor's committing writer, and the new rows are
-    // visible to the NATIVE reader (i.e. the log references them)
-    VersionedTable.write(Seq((1L, "a")).toDF("k", "v"), s"$root/ro/vt")
-    val vt2 = java.nio.file.Files.createTempDirectory("cat-ro").toString + "/t"
-    VersionedTable.write(Seq((2L, "b")).toDF("k", "v"), vt2)
-    DeltaLog.exportFromVersioned(spark, vt2, s"$root/ro/dt")
-    IcebergTable.exportFromVersioned(spark, vt2, s"$root/ro/it")
-    for (t <- Seq("vt", "dt", "it")) {
+    // a raw DSv2 write into a Delta/Iceberg directory would dump
+    // files the log never references — instead INSERT routes through
+    // the flavor's committing writer, and the new rows are visible to
+    // the NATIVE reader (i.e. the log references them)
+    DeltaLog.write(spark, Seq((2L, "b")).toDF("k", "v"), s"$root/ro/dt")
+    IcebergTable.write(spark, Seq((2L, "b")).toDF("k", "v"), s"$root/ro/it")
+    for (t <- Seq("dt", "it")) {
       assert(spark.sql(s"SELECT count(*) AS n FROM graft_t.ro.$t")
         .as[Long].head() === 1L)
       spark.sql(s"INSERT INTO graft_t.ro.$t VALUES (9, 'z')")
@@ -184,14 +168,11 @@ class GraftCatalogSpec extends SparkSpec {
         .as[Long].head() === 2L)
     }
     // native readers see the committed rows (the log references them)
-    assert(VersionedTable.read(spark, s"$root/ro/vt")
-      .as[(Long, String)].collect().toSet === Set((1L, "a"), (9L, "z")))
     assert(DeltaLog.read(spark, s"$root/ro/dt")
       .as[(Long, String)].collect().toSet === Set((2L, "b"), (9L, "z")))
     assert(IcebergTable.read(spark, s"$root/ro/it")
       .as[(Long, String)].collect().toSet === Set((2L, "b"), (9L, "z")))
-    // the versioned + delta INSERTs committed a NEW version (history)
-    assert(VersionedTable.currentVersion(spark, s"$root/ro/vt") === 2L)
+    // the delta INSERT committed a NEW version (history)
     assert(DeltaLog.snapshot(spark, s"$root/ro/dt").version === 1L)
   }
 }

@@ -15,7 +15,7 @@ import graft.sources.DeltaLog
   * commits including an overwrite, checkpoint-restart resumption,
   * append-mode semantics with loud remove handling, the exactly-once
   * txn-stamped streaming sink, and committing SQL INSERTs through
-  * the catalog for every log-backed flavor. */
+  * the catalog for both log-backed flavors. */
 class GraftDeltaStreamSpec extends SparkSpec {
   import spark.implicits._
 
@@ -343,11 +343,11 @@ class GraftDeltaStreamSpec extends SparkSpec {
       "replayed micro-batches must not commit duplicate versions")
   }
 
-  test("catalog INSERT INTO routes through committing writers for all three log-backed flavors") {
+  test("catalog INSERT INTO commits through both log-backed flavors' writers") {
     val root = tmp("gd-ins")
     spark.conf.set("spark.sql.catalog.graft_w", "graft.sources.GraftCatalog")
     spark.conf.set("spark.sql.catalog.graft_w.root", root)
-    import graft.sources.{IcebergTable, VersionedTable}
+    import graft.sources.IcebergTable
     // delta flavor
     DeltaLog.write(spark, Seq((1L, "a")).toDF("k", "v"), s"$root/ns/dt")
     spark.sql("INSERT INTO graft_w.ns.dt VALUES (2, 'b')")
@@ -360,12 +360,6 @@ class GraftDeltaStreamSpec extends SparkSpec {
       .collect().toSet === Set((9L, "z")))
     assert(DeltaLog.read(spark, s"$root/ns/dt", versionAsOf = Some(1L))
       .as[(Long, String)].collect().toSet === Set((1L, "a"), (2L, "b")))
-    // versioned flavor
-    VersionedTable.write(Seq((1L, "a")).toDF("k", "v"), s"$root/ns/vt")
-    spark.sql("INSERT INTO graft_w.ns.vt VALUES (2, 'b')")
-    assert(VersionedTable.read(spark, s"$root/ns/vt").as[(Long, String)]
-      .collect().toSet === Set((1L, "a"), (2L, "b")))
-    assert(VersionedTable.currentVersion(spark, s"$root/ns/vt") === 2L)
     // iceberg flavor
     IcebergTable.write(spark, Seq((1L, "a")).toDF("k", "v"), s"$root/ns/it")
     spark.sql("INSERT INTO graft_w.ns.it VALUES (2, 'b')")

@@ -7,12 +7,12 @@ import org.apache.avro.file.DataFileWriter
 import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField}
 
-import graft.sources.{IcebergTable, VersionedTable}
+import graft.sources.IcebergTable
 
 /** Native Iceberg reader against HAND-BUILT minimal tables (v1-style
   * metadata.json + avro manifest list + manifests written directly
   * per the public table-format spec — no Iceberg jars on either
-  * side), plus the VersionedTable → Iceberg export round trip. */
+  * side), plus graft's own Iceberg writer. */
 class IcebergSpec extends SparkSpec {
   import spark.implicits._
 
@@ -544,24 +544,6 @@ class IcebergSpec extends SparkSpec {
       IcebergTable.read(spark, te).collect()
     }
     assert(eu.getMessage.contains("schema era"), eu.getMessage)
-  }
-
-  test("VersionedTable export round-trips through the Iceberg reader") {
-    val t = Files.createTempDirectory("graft-vt-ice").toString + "/t"
-    VersionedTable.write(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), t)
-    VersionedTable.write(Seq((1L, "a"), (3L, "c")).toDF("k", "v"), t,
-      overwrite = true)
-    val out = Files.createTempDirectory("graft-vt-ice-out").toString + "/i"
-    val head = IcebergTable.exportFromVersioned(spark, t, out)
-    assert(head === 2L)
-    assert(IcebergTable.read(spark, out).as[(Long, String)].collect().toSet
-      === Set((1L, "a"), (3L, "c")))
-    assert(IcebergTable.read(spark, out, snapshotIdAsOf = Some(1L))
-      .as[(Long, String)].collect().toSet === Set((1L, "a"), (2L, "b")))
-    // record_count in the manifests is REAL (count(*) pushdown safety)
-    val snap = IcebergTable.snapshot(spark, out)
-    assert(snap.files.map(_.records).sum === 2L)
-    assert(IcebergTable.history(spark, out).count() === 2L)
   }
 
   test("direct writer: create, append, overwrite, schema evolution") {
@@ -1098,11 +1080,10 @@ class IcebergSpec extends SparkSpec {
 
   test("catalog serves the iceberg flavor by name, with time travel") {
     val root = Files.createTempDirectory("graft-cat-ice").toString
-    val t = Files.createTempDirectory("graft-cat-vt").toString + "/t"
-    VersionedTable.write(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), t)
-    VersionedTable.write(Seq((9L, "z")).toDF("k", "v"), t, overwrite = true)
     Files.createDirectories(Paths.get(root, "lake"))
-    IcebergTable.exportFromVersioned(spark, t, s"$root/lake/docs")
+    val t = s"$root/lake/docs"
+    IcebergTable.write(spark, Seq((1L, "a"), (2L, "b")).toDF("k", "v"), t)
+    IcebergTable.write(spark, Seq((9L, "z")).toDF("k", "v"), t, overwrite = true)
     spark.conf.set("spark.sql.catalog.icecat", classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.icecat.root", root)
     try {

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Production-lifecycle SQL surface: `SHOW CREATE TABLE` reverse-DDL
-  * that ROUND-TRIPS through the CREATE TABLE grammar for all three
+  * that ROUND-TRIPS through the CREATE TABLE grammar for both
   * flavors, `DESCRIBE EXTENDED`, and `mergeSchema` appends (the
   * option-driven Delta schema evolution most users actually use). */
 class LifecycleSqlSpec extends graft.SparkSpec {
@@ -70,18 +70,6 @@ class LifecycleSqlSpec extends graft.SparkSpec {
         .toDF("id", "d", "s"), t2,
       partitionBy = IcebergTable.defaultSpecNames(spark, t2))
     assert(IcebergTable.read(spark, t2).count() === 1L)
-  }
-
-  test("SHOW CREATE TABLE round-trips a versioned table") {
-    val t = tmp()
-    VersionedTable.write(Seq((1, "a")).toDF("id", "s"), t)
-    val stmt = showCreate(t)
-    assert(stmt.contains("USING versioned"))
-    val t2 = tmp()
-    spark.sql(stmt.replace(s"'$t'", s"'$t2'")).collect()
-    assert(VersionedTable.readVersion(spark, t2,
-      VersionedTable.currentVersion(spark, t2)).schema.fieldNames.toSeq ===
-      Seq("id", "s"))
   }
 
   test("DESCRIBE EXTENDED lists columns plus the detailed section (constraints visible)") {

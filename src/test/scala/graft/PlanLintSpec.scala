@@ -10,13 +10,18 @@ class PlanLintSpec extends SparkSpec {
     * documented baselines with subquadratic scale-path variants. */
   private val allPairsBaselines = Set("ann_topk", "dedup_embed_cosine")
 
+  /** Every driver query's executed plan, built ONCE and shared by the
+    * lints below — planning the whole query set is this suite's cost. */
+  private lazy val plans: Seq[(String, String)] =
+    SparkEntry.queries.toSeq.map { case (name, fn) =>
+      name -> fn(spark, sf).queryExecution.executedPlan.toString
+    }
+
   test("no query plan contains an accidental Cartesian product") {
-    SparkEntry.queries.foreach { case (name, fn) =>
-      if (!allPairsBaselines(name)) {
-        val plan = fn(spark, sf).queryExecution.executedPlan.toString
+    plans.foreach { case (name, plan) =>
+      if (!allPairsBaselines(name))
         assert(!plan.contains("CartesianProduct"),
           s"$name plan contains CartesianProduct:\n$plan")
-      }
     }
   }
 
@@ -99,12 +104,10 @@ class PlanLintSpec extends SparkSpec {
     "corpus_mix_temperature")
 
   test("no query gathers data to a single partition (except 1-row aggs)") {
-    SparkEntry.queries.foreach { case (name, fn) =>
-      if (!globalAggQueries(name)) {
-        val plan = fn(spark, sf).queryExecution.executedPlan.toString
+    plans.foreach { case (name, plan) =>
+      if (!globalAggQueries(name))
         assert(!plan.contains("SinglePartition"),
           s"$name plan gathers to a single partition:\n$plan")
-      }
     }
   }
 

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.sources.{DeltaLog, IcebergTable, VersionedTable}
+import graft.sources.{DeltaLog, IcebergTable}
 
 /** The SQL statement surface: OPTIMIZE / VACUUM (extension parser)
   * and UPDATE / MERGE INTO (resolution-rule routing) — the
@@ -90,12 +90,6 @@ class SqlStatementsSpec extends SparkSpec {
     assert(i.getString(0) === "iceberg")
     assert(i.getLong(5) === 7L)       // live rows: deletes subtracted
     assert(i.getString(6) === "[bucket(2, k)]")
-
-    val tv = Files.createTempDirectory("graft-sqlstmt-ddv").toString + "/t"
-    VersionedTable.write(Seq((1L, "a")).toDF("k", "v"), tv)
-    val v = spark.sql(s"DESCRIBE DETAIL '$tv'").collect()(0)
-    assert(v.getString(0) === "versioned")
-    assert(v.getLong(2) === 1L)
   }
 
   test("VACUUM RETAIN n HOURS: time-based retention through commit timestamps") {
@@ -123,25 +117,6 @@ class SqlStatementsSpec extends SparkSpec {
     IcebergTable.write(spark, Seq((2L, "b")).toDF("k", "v"), it)
     assert(spark.sql(s"VACUUM '$it' RETAIN 1000 HOURS").collect().isEmpty)
     assert(IcebergTable.snapshotIds(spark, it).size === 2)
-    // versioned flavor refuses HOURS loudly
-    val vt = Files.createTempDirectory("graft-sqlstmt-vhv").toString + "/t"
-    VersionedTable.write(Seq((1L, "a")).toDF("k", "v"), vt)
-    val e = intercept[Exception] {
-      spark.sql(s"VACUUM '$vt' RETAIN 1 HOURS").collect()
-    }
-    assert(e.getMessage.contains("HOURS"), e.getMessage)
-  }
-
-  test("SQL OPTIMIZE ZORDER + VACUUM on a graft-versioned catalog table") {
-    val root = catalogRoot("vt")
-    val t = s"$root/ns/vt"
-    VersionedTable.write((1L to 50L).map(i => (i, i % 5)).toDF("id", "g"), t)
-    val v = spark.sql("OPTIMIZE gsql_vt.ns.vt ZORDER BY (g)").collect()(0).getLong(1)
-    assert(v === 2L)
-    assert(VersionedTable.read(spark, t).count() === 50L)
-    spark.sql("VACUUM gsql_vt.ns.vt RETAIN 1 VERSIONS").collect()
-    assert(VersionedTable.read(spark, t).count() === 50L)
-    intercept[Exception] { VersionedTable.readVersion(spark, t, 1L).count() }
   }
 
   test("SQL OPTIMIZE on Iceberg = manifest compaction; VACUUM = snapshot expiration") {
@@ -298,18 +273,16 @@ class SqlStatementsSpec extends SparkSpec {
     assert(spark.sql("SELECT k FROM gsql_ctab.ns.it2").as[Long]
       .collect().toSeq === Seq(6L))
 
-    // versioned flavor: an empty version 1 with the declared schema
-    val tv = s"$root/ns/vt"
-    spark.sql(s"CREATE TABLE '$tv' (k BIGINT, v STRING) USING versioned")
-    assert(spark.sql("SELECT count(*) FROM gsql_ctab.ns.vt")
-      .as[Long].head() === 0L)
-    spark.sql("INSERT INTO gsql_ctab.ns.vt VALUES (1, 'a')")
-    assert(spark.sql("SELECT k, v FROM gsql_ctab.ns.vt")
-      .as[(Long, String)].collect().toSeq === Seq((1L, "a")))
-    // unknown providers refuse loudly
-    intercept[Exception] {
+    // unknown providers refuse loudly — the retired graft-versioned
+    // format among them — and create nothing
+    intercept[UnsupportedOperationException] {
       spark.sql(s"CREATE TABLE '$root/ns/x' (k INT) USING hudi")
     }
+    val ev = intercept[UnsupportedOperationException] {
+      spark.sql(s"CREATE TABLE '$root/ns/x' (k INT) USING versioned")
+    }
+    assert(ev.getMessage.contains("not supported"), ev.getMessage)
+    assert(!new java.io.File(s"$root/ns/x").exists())
   }
 
   test("MULTI-CLAUSE SQL MERGE: ordered WHEN MATCHED clauses apply first-match-wins; CDC legs split by clause") {
@@ -427,9 +400,9 @@ class SqlStatementsSpec extends SparkSpec {
         (102L, "y", 5),      // condition-false source row inserts
         (109L, "z", 90)))    // new key inserts
 
-    // versioned flavor: non-equi ON with matched DELETE
+    // non-equi ON with matched DELETE
     val tvn = s"$root/ns/tvn"
-    VersionedTable.write(
+    DeltaLog.write(spark,
       Seq((1L, 10), (2L, 20)).toDF("k", "n"), tvn)
     Seq((1L, 100), (2L, 5)).toDF("k", "n")
       .createOrReplaceTempView("mmrg_vnsrc")
@@ -462,9 +435,9 @@ class SqlStatementsSpec extends SparkSpec {
     assert(en.getMessage.contains("join anchor") ||
       en.getMessage.contains("equality"), en.getMessage)
 
-    // versioned flavor: two matched clauses + BY SOURCE delete
+    // two matched clauses + BY SOURCE delete
     val tv = s"$root/ns/vt"
-    VersionedTable.write(
+    DeltaLog.write(spark,
       Seq((1L, "a", 10), (2L, "b", 20), (3L, "c", 30)).toDF("k", "v", "n"), tv)
     Seq((1L, "x", 100), (2L, "y", 5)).toDF("k", "v", "n")
       .createOrReplaceTempView("mmrg_vsrc")
@@ -535,9 +508,9 @@ class SqlStatementsSpec extends SparkSpec {
       === Set((1L, "a", 10), (2L, "GAMMA", 20), (7L, "q", 70)))
     assert(IcebergTable.snapshotIds(spark, ti).size === snapsBefore + 1)
 
-    // VERSIONED flavor: matched DELETE
+    // unconditional matched DELETE
     val tv = s"$root/ns/vt"
-    VersionedTable.write(
+    DeltaLog.write(spark,
       Seq((1L, "a", 10), (2L, "b", 20)).toDF("k", "v", "n"), tv)
     Seq((1L, "x", 0)).toDF("k", "v", "n").createOrReplaceTempView("fmrg_vdel")
     spark.sql(
@@ -607,37 +580,6 @@ class SqlStatementsSpec extends SparkSpec {
     }
     assert(spark.sql("SELECT count(*) FROM gsql_fmrg.ns.t")
       .as[Long].head() === 2L)
-  }
-
-  test("SQL UPDATE / MERGE INTO / DELETE route to the VERSIONED flavor's committing DML") {
-    val root = catalogRoot("vdml")
-    val t = s"$root/ns/t"
-    VersionedTable.write(
-      Seq((1L, "a", 10), (2L, "b", 20)).toDF("k", "v", "n"), t)
-    spark.sql("UPDATE gsql_vdml.ns.t SET n = n + 5 WHERE k = 1")
-    assert(spark.sql("SELECT k, n FROM gsql_vdml.ns.t ORDER BY k")
-      .as[(Long, Int)].collect().toSeq === Seq((1L, 15), (2L, 20)))
-    Seq((2L, "B", 99), (9L, "z", 90)).toDF("k", "v", "n")
-      .createOrReplaceTempView("vdml_src")
-    spark.sql(
-      """MERGE INTO gsql_vdml.ns.t AS t USING vdml_src AS s ON t.k = s.k
-        |WHEN MATCHED THEN UPDATE SET *
-        |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
-    assert(spark.sql("SELECT * FROM gsql_vdml.ns.t").as[(Long, String, Int)]
-      .collect().toSet
-      === Set((1L, "a", 15), (2L, "B", 99), (9L, "z", 90)))
-    spark.sql("DELETE FROM gsql_vdml.ns.t WHERE k = 9")
-    assert(spark.sql("SELECT count(*) FROM gsql_vdml.ns.t")
-      .as[Long].head() === 2L)
-    // swap semantics hold on the versioned flavor too
-    spark.sql("UPDATE gsql_vdml.ns.t SET k = n, n = k WHERE k = 1")
-    assert(spark.sql("SELECT k, n FROM gsql_vdml.ns.t WHERE n = 1")
-      .as[(Long, Int)].collect().toSeq === Seq((15L, 1)))
-    // each statement committed one real version; time travel intact
-    assert(VersionedTable.currentVersion(spark, t) === 5L)
-    assert(VersionedTable.readVersion(spark, t, 1L)
-      .as[(Long, String, Int)].collect().toSet
-      === Set((1L, "a", 10), (2L, "b", 20)))
   }
 
   test("SQL UPDATE / MERGE INTO / DELETE route to the ICEBERG flavor as merge-on-read snapshots") {
@@ -726,7 +668,7 @@ class SqlStatementsSpec extends SparkSpec {
     DeltaLog.write(spark, Seq((6L, Some(-1.0))).toDF("id", "amount"), t)
     assert(DeltaLog.read(spark, t).count() === 5L)
     // non-Delta flavors refuse: CHECK is a Delta protocol feature
-    VersionedTable.write(Seq((1L, "a")).toDF("k", "v"), s"$root/ns/vck")
+    IcebergTable.write(spark, Seq((1L, "a")).toDF("k", "v"), s"$root/ns/vck")
     val e3 = intercept[Exception] {
       spark.sql("ALTER TABLE gsql_ck.ns.vck ADD CONSTRAINT c CHECK (k > 0)")
     }
@@ -780,14 +722,6 @@ class SqlStatementsSpec extends SparkSpec {
       spark.sql(s"RESTORE '$it' TO TIMESTAMP AS OF '2026-01-01 00:00:00'")
         .collect()
     }
-    // versioned: CAS re-commit of the older content
-    val vt = s"$root/ns/vt"
-    VersionedTable.write(Seq((1L, "x")).toDF("k", "v"), vt)
-    VersionedTable.write(Seq((2L, "y")).toDF("k", "v"), vt)
-    assert(spark.sql("RESTORE gsql_rst.ns.vt TO VERSION AS OF 1")
-      .collect()(0).getLong(1) === 3L)
-    assert(VersionedTable.read(spark, vt).as[(Long, String)].collect().toSet
-      === Set((1L, "x")))
   }
 
   test("CHECK constraints bind UPDATE, MERGE and the DV arms — not just appends") {
@@ -938,7 +872,7 @@ class SqlStatementsSpec extends SparkSpec {
       "' (x INT) USING delta").collect()
     assert(again(0).getLong(1) === 1L)
     // plain CREATE over an existing table refuses; unknown providers
-    // refuse (iceberg/versioned have their own creation paths now)
+    // refuse (iceberg has its own creation path)
     intercept[IllegalArgumentException] {
       spark.sql("CREATE TABLE '" + dir + "' (x INT) USING delta").collect()
     }
@@ -1013,15 +947,5 @@ class SqlStatementsSpec extends SparkSpec {
     DeltaLog.delete(spark, dt, col("k") === 1L)
     val dh = spark.sql("DESC HISTORY gsql_hist.ns.dt").collect()
     assert(dh.map(_.getLong(0)).toSeq === Seq(0L, 1L))
-    // versioned = retained snapshots with file counts
-    val vt = s"$root/ns/vt"
-    VersionedTable.write(Seq((1L, "x")).toDF("k", "v"), vt)
-    val vh = spark.sql("DESCRIBE HISTORY gsql_hist.ns.vt").collect()
-    assert(vh.length === 1 && vh(0).getString(2).startsWith("n_files="))
-    // versioned tables have no properties store
-    intercept[UnsupportedOperationException] {
-      spark.sql("ALTER TABLE gsql_hist.ns.vt SET TBLPROPERTIES ('a'='b')")
-        .collect()
-    }
   }
 }

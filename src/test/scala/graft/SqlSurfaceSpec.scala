@@ -77,15 +77,16 @@ class SqlSurfaceSpec extends SparkSpec {
 
   test("graft_delta / graft_iceberg TVFs read interop tables from SQL") {
     import java.nio.file.Files
-    val t = Files.createTempDirectory("graft-sql-vt").toString + "/t"
-    graft.sources.VersionedTable.write(
-      Seq((1L, "a"), (2L, "b")).toDF("k", "v"), t)
-    graft.sources.VersionedTable.write(
-      Seq((9L, "z")).toDF("k", "v"), t, overwrite = true)
     val dOut = Files.createTempDirectory("graft-sql-delta").toString + "/d"
-    graft.sources.DeltaLog.exportFromVersioned(spark, t, dOut)
+    graft.sources.DeltaLog.write(spark,
+      Seq((1L, "a"), (2L, "b")).toDF("k", "v"), dOut)
+    graft.sources.DeltaLog.write(spark,
+      Seq((9L, "z")).toDF("k", "v"), dOut, overwrite = true)
     val iOut = Files.createTempDirectory("graft-sql-ice").toString + "/i"
-    graft.sources.IcebergTable.exportFromVersioned(spark, t, iOut)
+    graft.sources.IcebergTable.write(spark,
+      Seq((1L, "a"), (2L, "b")).toDF("k", "v"), iOut)
+    graft.sources.IcebergTable.write(spark,
+      Seq((9L, "z")).toDF("k", "v"), iOut, overwrite = true)
     assert(spark.sql(s"SELECT k, v FROM graft_delta('$dOut') ORDER BY k")
       .as[(Long, String)].collect().toSeq === Seq((9L, "z")))
     assert(spark.sql(s"SELECT k, v FROM graft_delta('$dOut', 0) ORDER BY k")

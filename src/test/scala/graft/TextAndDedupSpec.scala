@@ -189,27 +189,27 @@ class TextAndDedupSpec extends SparkSpec {
       .json(s"$dir/in")
     // per micro-batch: drop arrivals near-dup to the STANDING corpus
     // (banded new×standing join only), append survivors — the
-    // streaming composition of minHashPairsIncremental +
-    // VersionedTable. Batches arrive in file order (AvailableNow +
+    // streaming composition of minHashPairsIncremental + a Delta
+    // table. Batches arrive in file order (AvailableNow +
     // maxFilesPerTrigger=1).
     val q = stream.writeStream
       .option("checkpointLocation", s"$dir/ckpt")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        val cur = if (graft.sources.VersionedTable.currentVersion(spark, standing) >= 1)
-          graft.sources.VersionedTable.read(spark, standing)
+        val cur = if (new java.io.File(s"$standing/_delta_log").exists())
+          graft.sources.DeltaLog.read(spark, standing)
         else spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema)
         val dupes = NearDup.minHashPairsIncremental(
           batch, cur, "doc_id", "text", threshold = 0.5)
           .select(col("id_a").as("doc_id")).distinct()
         val survivors = batch.join(broadcast(dupes), Seq("doc_id"), "left_anti")
-        graft.sources.VersionedTable.write(survivors, standing)
+        graft.sources.DeltaLog.write(spark, survivors, standing)
         NearDup.unpersistAll()
         ()
       }.start()
     q.awaitTermination(120000)
-    val out = graft.sources.VersionedTable.read(spark, standing)
+    val out = graft.sources.DeltaLog.read(spark, standing)
       .select("doc_id").as[Long].collect().toSet
     // doc 3 (near-dup of standing doc 1) dropped; everything else kept
     assert(out === Set(1L, 2L, 4L))
