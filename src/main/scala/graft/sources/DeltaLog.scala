@@ -1638,44 +1638,45 @@ object DeltaLog {
 
   // ---------------- incremental / CDC reads ----------------
 
-  /** Parsed actions of a polled commit-JSON tail — the one shape both
-    * change-feed arms consume (every consumer was already a driver
-    * collect; this parses the tail ONCE instead of one Spark job per
-    * projection). */
-  private final case class TailMeta(schemaString: String,
-                                    partitionColumns: Seq[String])
-  private final case class TailCdc(path: String, pv: Map[String, String],
-                                   size: Long, v: Long)
-  private final case class TailFile(path: String, isAdd: Boolean,
-                                    pv: Map[String, String], size: Long,
-                                    mtime: Long,
-                                    dv: Option[DeletionVectors.Descriptor],
-                                    dataChange: Boolean, v: Long)
+  /** Parsed actions of a polled commit-JSON tail: what the change-feed
+    * planner ([[GraftDelta.planRange]]) and the streaming source's
+    * admission count consume. A remove carries its path, dataChange
+    * flag and version only (a tombstone records no partition values,
+    * size or vector; `pv`/`size` stay empty and `dv` None). */
+  private[sources] final case class TailMeta(schemaString: String,
+                                             partitionColumns: Seq[String])
+  private[sources] final case class TailCdc(path: String,
+                                            pv: Map[String, String],
+                                            size: Long, v: Long)
+  private[sources] final case class TailFile(path: String, isAdd: Boolean,
+                                             pv: Map[String, String],
+                                             size: Long,
+                                             dv: Option[DeletionVectors.Descriptor],
+                                             dataChange: Boolean, v: Long)
+  private[sources] final case class Tail(metas: Seq[TailMeta],
+                                         cdcs: Seq[TailCdc],
+                                         files: Seq[TailFile])
 
-  /** Parse the polled tail: Jackson ON THE DRIVER when the range's
-    * JSON bytes fit the replay gate
+  /** Parse the commits `versions` once: Jackson ON THE DRIVER when
+    * their JSON bytes fit the replay gate
     * (`spark.sql.graft.delta.driverReplayMaxBytes` — zero Spark jobs),
     * distributed from_json + projected collects above it (the shape an
     * unbounded range needs). Both branches yield identical values —
-    * the same parity contract as the snapshot replay fast path. */
-  private def parsedTail(spark: SparkSession, tablePath: String,
-                         jsonPaths: Seq[String])
-  : (Seq[TailMeta], Seq[TailCdc], Seq[TailFile]) = {
+    * the same parity contract as the snapshot replay fast path; each
+    * commit's actions keep their log order, and callers group by
+    * version. */
+  private[sources] def parsedTail(spark: SparkSession, tablePath: String,
+                                  versions: Seq[Long]): Tail = {
     val dir = logDir(tablePath)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val driverMax = spark.conf.getOption(
       "spark.sql.graft.delta.driverReplayMaxBytes")
       .flatMap(_.toLongOption).getOrElse(4L << 20)
+    val jsonPaths = versions.map(v => new Path(dir, pad20(v) + ".json"))
     val sizeByName = fs.listStatus(dir).toSeq
       .map(s => s.getPath.getName -> s.getLen).toMap
     val tailBytes = jsonPaths.map(p => sizeByName.getOrElse(
-      new Path(p).getName, Long.MaxValue / 1024)).sum
-    val VRe = "(\\d{20})\\.json".r
-    def versionOf(p: String): Long = new Path(p).getName match {
-      case VRe(x) => x.toLong
-      case other => throw new IllegalStateException(
-        s"unexpected file in polled tail: $other")
-    }
+      p.getName, Long.MaxValue / 1024)).sum
     if (driverMax > 0 && tailBytes <= driverMax) {
       val M = new com.fasterxml.jackson.databind.ObjectMapper()
       type J = com.fasterxml.jackson.databind.JsonNode
@@ -1689,10 +1690,9 @@ object DeltaLog {
       val metas = Seq.newBuilder[TailMeta]
       val cdcs = Seq.newBuilder[TailCdc]
       val files = Seq.newBuilder[TailFile]
-      jsonPaths.foreach { p =>
-        val v = versionOf(p)
+      versions.zip(jsonPaths).foreach { case (v, p) =>
         val br = new java.io.BufferedReader(new java.io.InputStreamReader(
-          fs.open(new Path(p)), "UTF-8"))
+          fs.open(p), "UTF-8"))
         try {
           var line = br.readLine()
           while (line != null) {
@@ -1711,28 +1711,22 @@ object DeltaLog {
               }
               val add = opt(n, "add")
               add.orElse(opt(n, "remove")).foreach { a =>
-                val dv = opt(a, "deletionVector").map { d =>
-                  DeletionVectors.Descriptor(
-                    d.get("storageType").asText(),
-                    d.get("pathOrInlineDv").asText(),
-                    opt(d, "offset").map(_.asInt()),
-                    opt(d, "sizeInBytes").map(_.asInt()).getOrElse(0),
-                    opt(d, "cardinality").map(_.asLong()).getOrElse(0L))
-                }
-                // pv/size/mtime come from ADD actions only, mirroring
-                // the distributed projection below (add.partitionValues
-                // etc. are null for removes) — both branches must yield
-                // identical TailFile values for a remove (parity
-                // contract; the delete leg of changesWithDv reads pv)
+                // pv/size/dv come from ADD actions only, mirroring the
+                // distributed projection below (add.* is null for a
+                // remove) — both branches must yield identical values
                 files += TailFile(a.get("path").asText(), add.isDefined,
                   if (add.isDefined) mapOf(opt(a, "partitionValues"))
                   else Map.empty,
                   if (add.isDefined)
                     opt(a, "size").map(_.asLong()).getOrElse(0L) else 0L,
-                  if (add.isDefined)
-                    opt(a, "modificationTime").map(_.asLong()).getOrElse(0L)
-                  else 0L,
-                  dv.filter(_ => add.isDefined),
+                  add.flatMap(opt(_, "deletionVector")).map { d =>
+                    DeletionVectors.Descriptor(
+                      d.get("storageType").asText(),
+                      d.get("pathOrInlineDv").asText(),
+                      opt(d, "offset").map(_.asInt()),
+                      opt(d, "sizeInBytes").map(_.asInt()).getOrElse(0),
+                      opt(d, "cardinality").map(_.asLong()).getOrElse(0L))
+                  },
                   opt(a, "dataChange").forall(_.asBoolean()), v)
               }
             }
@@ -1740,12 +1734,12 @@ object DeltaLog {
           }
         } finally br.close()
       }
-      return (metas.result(), cdcs.result(), files.result())
+      return Tail(metas.result(), cdcs.result(), files.result())
     }
-    // over-gate: distributed parse, the SAME projected collects as
-    // before (each bounded: metaData/cdc are per-commit-scaled, the
-    // file projection is what the legs materialize anyway)
-    val acts = spark.read.text(jsonPaths: _*)
+    // over-gate: distributed parse with projected collects (each
+    // bounded: metaData/cdc are per-commit-scaled, the file
+    // projection is what the planner materializes anyway)
+    val acts = spark.read.text(jsonPaths.map(_.toString): _*)
       .select(from_json(col("value"), ActionSchema).as("a"),
         regexp_extract(input_file_name(), "(\\d{20})\\.json", 1)
           .cast("long").as("__v"))
@@ -1773,7 +1767,6 @@ object DeltaLog {
         col("add.path").isNotNull.as("is_add"),
         col("add.partitionValues").as("pv"),
         col("add.size").as("size"),
-        col("add.modificationTime").as("mtime"),
         col("add.deletionVector").as("dv"),
         coalesce(col("add.dataChange"), col("remove.dataChange"), lit(true))
           .as("data_change"), col("__v"))
@@ -1791,305 +1784,42 @@ object DeltaLog {
           Option(r.getAs[scala.collection.Map[String, String]]("pv"))
             .map(_.toMap).getOrElse(Map.empty),
           Option(r.getAs[java.lang.Long]("size")).map(_.toLong).getOrElse(0L),
-          Option(r.getAs[java.lang.Long]("mtime")).map(_.toLong).getOrElse(0L),
           dv, r.getAs[Boolean]("data_change"), r.getAs[Long]("__v"))
       }
-    (metas, cdcs, files)
+    Tail(metas, cdcs, files)
   }
 
   /** Row-level change feed of a REAL Delta table for the commits in
     * `(fromVersion, toVersion]` — the `startingVersion` incremental
-    * poll the reference's silver/gold layers stream from. Each
-    * commit's file-level diff comes straight from its JSON actions
-    * (never a snapshot diff): added files' rows are tagged `insert`,
-    * removed files' rows `delete`, each with `_commit_version` — an
-    * update written as remove+add in one commit appears as
-    * delete+insert, the same shape real Delta CDF gives without
-    * `_change_data` files. Removed files' content is still readable
-    * because Delta removes are logical (tombstones; data files
-    * survive until VACUUM — a vacuumed-away removed file is a loud
-    * read error, not silent emptiness).
-    *
-    * Scale shape: only the requested JSON tail is parsed (bounded by
-    * the poll cadence, same as any checkpointed streaming source);
-    * data reads are distributed parquet scans of exactly the changed
-    * files. Partition values re-attach per file like [[readSnapshot]].
-    * Schema changes INSIDE the polled range are rejected loudly —
-    * poll up to the metaData boundary, adapt, continue. */
+    * poll the reference's silver/gold layers stream from. This is a
+    * batch read of the `graft-delta` `readChangeFeed` scan, whose
+    * planner ([[GraftDelta.planRange]]) the streaming source shares:
+    * one change feed on every surface. The schema is pinned at the
+    * range's last commit; columns come in log order, then
+    * `_change_type` and `_commit_version`. A commit carrying `cdc`
+    * actions serves from its `_change_data` files alone (the writer
+    * recorded the precise row images); any other commit is rebuilt
+    * from its file actions — added files' rows `insert`, removed
+    * files' rows `delete`, deletion-vector updates as position diffs,
+    * dataChange=false rewrites (OPTIMIZE) skipped. Removed files stay
+    * readable because Delta removes are logical (a vacuumed-away file
+    * is a loud read error, not silent emptiness). Schema changes
+    * INSIDE the range refuse loudly — poll up to the metaData
+    * boundary, adapt, continue. */
   def changes(spark: SparkSession, tablePath: String,
               fromVersion: Long, toVersion: Long): DataFrame = {
     require(toVersion >= fromVersion,
       s"bad change range ($fromVersion, $toVersion]")
-    val versions = listVersions(spark, tablePath)
+    val endV = listVersions(spark, tablePath)
       .filter(j => j > fromVersion && j <= toVersion)
-    val endSnap = snapshot(spark, tablePath,
-      versionAsOf = Some(versions.lastOption.getOrElse(toVersion)))
-    val withVersionCol = StructType(endSnap.schema.fields ++ Seq(
-      StructField("_change_type", StringType),
-      StructField("_commit_version", LongType)))
-    if (versions.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], withVersionCol)
-    val jsonPaths = versions
-      .map(j => new Path(logDir(tablePath), pad20(j) + ".json").toString)
-    // the polled tail, parsed ONCE (driver-side under the replay byte
-    // gate — zero jobs; distributed above it)
-    val (metaActs, cdcActs, allFileActs) =
-      parsedTail(spark, tablePath, jsonPaths)
-    // a metaData action in range is fine iff it declares the SAME
-    // schema/partitioning the range ends with (table creation at
-    // commit 0, a no-op metaData rewrite) — an actual schema change
-    // mid-range is the loud-error case
-    metaActs.foreach { m =>
-      val sch = DataType.fromJson(m.schemaString).asInstanceOf[StructType]
-      if (sch != endSnap.schema ||
-        m.partitionColumns != endSnap.partitionColumns)
-        throw new UnsupportedOperationException(
-          s"schema/metadata change inside polled range ($fromVersion, " +
-            s"$toVersion] of $tablePath — poll up to the boundary, adapt, continue")
-    }
-    // PROTOCOL.md CDF reader rule: a commit WITH `cdc` actions serves
-    // its row-level changes from those `_change_data` files
-    // EXCLUSIVELY (the writer recorded the precise pre/post images);
-    // commits without reconstruct from the file-level diff as before
-    val cdcVersions: Set[Long] = cdcActs.map(_.v).toSet
-    // deletion-vector commits re-add the SAME path with a DV; the
-    // file-level diff cannot express that, so ranges containing DV
-    // adds NOT covered by cdc files take the stateful row-diff
-    // replay below instead
-    val dvInRange = allFileActs
-      .exists(a => a.isAdd && a.dv.isDefined && !cdcVersions(a.v))
-    if (dvInRange)
-      return changesWithDv(spark, tablePath, fromVersion, allFileActs,
-        endSnap, cdcActs)
-    val cdcLegs: Seq[DataFrame] =
-      cdcVersionLegs(spark, tablePath, endSnap, cdcActs)
-        .toSeq.sortBy(_._1).map(_._2)
-    // dataChange=false actions (OPTIMIZE / Z-ORDER rewrites) rearrange
-    // bytes without changing rows — surfacing them as delete+insert
-    // would let a replica consumer drop rows (within-commit apply
-    // order of identical delete/insert rows is unspecified), so the
-    // change feed skips them, exactly like real Delta CDF
-    val fileActs = allFileActs
-      .filter(a => a.dataChange && !cdcVersions(a.v))
-    // removed files carry no partitionValues on the tombstone — they
-    // were added earlier: resolve pv from the fromVersion snapshot,
-    // or from an add WITHIN the polled range (add+remove both inside
-    // the poll window)
-    lazy val priorPv: Map[String, Map[String, String]] = {
-      if (endSnap.partitionColumns.isEmpty) Map.empty
-      else {
-        val baseV = listVersions(spark, tablePath).filter(_ <= fromVersion)
-          .reduceOption(_ max _)
-        val fromSnap = baseV.map(b =>
-          snapshot(spark, tablePath, versionAsOf = Some(b))
-            .files.map(f => f.path -> f.partitionValues).toMap)
-          .getOrElse(Map.empty[String, Map[String, String]])
-        val inRange = fileActs.filter(_.isAdd).map { a =>
-          new Path(tablePath, decodePath(a.path)).toString -> a.pv
-        }.toMap
-        fromSnap ++ inRange
-      }
-    }
-    def group(isAdd: Boolean): Seq[(Long, Seq[AddFile])] =
-      fileActs.filter(_.isAdd == isAdd)
-        .groupBy(_.v).toSeq.sortBy(_._1)
-        .map { case (cv, as) =>
-          cv -> as.map { a =>
-            val abs = new Path(tablePath, decodePath(a.path)).toString
-            val pv =
-              if (isAdd) a.pv
-              else priorPv.getOrElse(abs, Map.empty[String, String])
-            AddFile(abs, pv,
-              if (isAdd) a.size else 0L,
-              if (isAdd) a.mtime else 0L)
-          }
-        }
-    // the polled tail is bounded, so a per-commit union keeps the
-    // plan small while every leg stays a distributed parquet scan
-    val legs: Seq[DataFrame] =
-      group(isAdd = true).map { case (cv, fls) =>
-        readSnapshotAll(spark, endSnap.copy(files = fls))
-          .withColumn("_change_type", lit("insert"))
-          .withColumn("_commit_version", lit(cv))
-      } ++ group(isAdd = false).map { case (cv, fls) =>
-        readSnapshotAll(spark, endSnap.copy(files = fls))
-          .withColumn("_change_type", lit("delete"))
-          .withColumn("_commit_version", lit(cv))
-      }
-    (cdcLegs ++ legs).reduceOption(_.unionByName(_)).getOrElse(
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], withVersionCol))
-  }
-
-  /** One change-feed DataFrame per cdc-bearing version: the commit's
-    * `_change_data` files read EXCLUSIVELY (the writer recorded the
-    * precise pre/post images — PROTOCOL.md CDF reader rule), keyed by
-    * version. Shared by the plain and DV change-feed arms. */
-  private def cdcVersionLegs(spark: SparkSession, tablePath: String,
-                             endSnap: Snapshot,
-                             cdcActs: Seq[TailCdc])
-  : Map[Long, DataFrame] =
-    cdcActs.groupBy(_.v).map { case (cv, as) =>
-      val fls = as.map { a =>
-        AddFile(new Path(tablePath, decodePath(a.path)).toString,
-          a.pv, a.size, 0L)
-      }
-      cv -> readSnapshotAll(spark, endSnap.copy(
-        schema = StructType(endSnap.schema.fields :+
-          StructField("_change_type", StringType)),
-        files = fls))
-        .withColumn("_commit_version", lit(cv))
-    }
-
-  /** The ROW-DIFF change-feed arm for polled ranges containing
-    * deletion-vector commits. A DV delete re-adds the same path with
-    * a (grown) vector; the row-level change is the POSITION DIFF:
-    * newly-covered positions stream as `delete` rows, newly-uncovered
-    * ones (a restore) as `insert`s — never the whole file on both
-    * sides. Stateful per-commit replay: liveness + DV state start at
-    * the fromVersion snapshot; real file drops emit their
-    * PREVIOUSLY-LIVE rows (old DV applied), brand-new files their
-    * live rows (own DV applied). Driver cost is O(polled commits ×
-    * DV bytes) — the bounded poll tail; row reads are distributed
-    * scans of exactly the changed files, position-selected via a
-    * broadcast semi-join on `_metadata.row_index`. */
-  private def changesWithDv(spark: SparkSession, tablePath: String,
-                            fromVersion: Long, allFileActs: Seq[TailFile],
-                            endSnap: Snapshot,
-                            cdcActs: Seq[TailCdc]): DataFrame = {
-    import spark.implicits._
-    val conf = spark.sparkContext.hadoopConfiguration
-    val pc = endSnap.partitionColumns
-    val dataSchema = StructType(endSnap.schema.filterNot(
-      f => pc.contains(f.name)))
-    val withVersionCol = StructType(endSnap.schema.fields ++ Seq(
-      StructField("_change_type", StringType),
-      StructField("_commit_version", LongType)))
-
-    final case class Act(path: String, isAdd: Boolean,
-                         pv: Map[String, String], size: Long, mtime: Long,
-                         dv: Option[DeletionVectors.Descriptor],
-                         dataChange: Boolean)
-    // EVERY file action rides along (liveness must follow a
-    // dataChange=false OPTIMIZE's file moves, or a later DV delete on
-    // the compacted file is misread as a brand-new file and re-emits
-    // its whole contents); EMISSION below covers dataChange=true only
-    val byCommit: Seq[(Long, Seq[Act])] = allFileActs
-      .groupBy(_.v).toSeq.sortBy(_._1)
-      .map { case (cv, as) =>
-        cv -> as.map { a =>
-          Act(new Path(tablePath, decodePath(a.path)).toString,
-            a.isAdd, a.pv, a.size, a.mtime, a.dv, a.dataChange)
-        }
-      }
-
-    // liveness + DV state at the range start
-    val baseV = listVersions(spark, tablePath).filter(_ <= fromVersion)
-      .reduceOption(_ max _)
-    var live: Map[String, AddFile] = baseV
-      .map(b => snapshot(spark, tablePath, versionAsOf = Some(b))
-        .files.map(f => f.path -> f).toMap)
-      .getOrElse(Map.empty)
-
-    def positions(d: Option[DeletionVectors.Descriptor]): Set[Long] =
-      d.filter(_.cardinality != 0L).map(x =>
-        DeletionVectors.deletedRows(
-          DeletionVectors.loadData(conf, tablePath, x)).toSet)
-        .getOrElse(Set.empty)
-
-    /** Rows of `sel`'s files AT the selected physical positions. */
-    def posLeg(sel: Seq[(AddFile, Set[Long])], tag: String,
-               cv: Long): Option[DataFrame] = {
-      val nonEmpty = sel.filter(_._2.nonEmpty)
-      if (nonEmpty.isEmpty) return None
-      val posDf = broadcast(nonEmpty.flatMap { case (f, ps) =>
-        ps.toSeq.sorted.map(p => (fileKeyOf(f.path), p))
-      }.toDF("__path", "__ri"))
-      val raw = spark.read.schema(dataSchema)
-        .parquet(nonEmpty.map(_._1.path): _*)
-        .select(col("*"), col("_metadata.row_index").as("__ri"))
-        .withColumn("__path",
-          regexp_replace(input_file_name(), "^[a-zA-Z0-9]+:(//)?", ""))
-        .join(posDf, Seq("__path", "__ri"), "left_semi")
-      val full =
-        if (pc.isEmpty) raw
-        else {
-          val pvDf = broadcast(nonEmpty.map { case (f, _) =>
-            (fileKeyOf(f.path), pc.map(c => f.partitionValues.getOrElse(c, null)))
-          }.toDF("__path", "__pv"))
-          raw.join(pvDf, Seq("__path"), "left")
-            .select(endSnap.schema.map(f =>
-              if (pc.contains(f.name))
-                element_at(col("__pv"), pc.indexOf(f.name) + 1)
-                  .cast(f.dataType).as(f.name)
-              else col(f.name)): _*)
-        }
-      Some(full.select(endSnap.schema.fieldNames.map(col): _*)
-        .withColumn("_change_type", lit(tag))
-        .withColumn("_commit_version", lit(cv)))
-    }
-
-    // cdc-covered versions in the range serve from their
-    // `_change_data` files EXCLUSIVELY (precise pre/post images —
-    // never reconstructed as whole-file legs); the stateful row-diff
-    // replay below covers only the cdc-less commits, while LIVENESS
-    // still advances over every action of every commit
-    val cdcByVersion = cdcVersionLegs(spark, tablePath, endSnap, cdcActs)
-
-    val legs = Seq.newBuilder[DataFrame]
-    byCommit.foreach { case (cv, as) =>
-      val allAdds = as.filter(_.isAdd)
-      val addPaths = allAdds.map(_.path).toSet
-      val adds = allAdds.filter(_.dataChange)
-      def toAddFile(a: Act): AddFile =
-        AddFile(a.path, a.pv, a.size, a.mtime, None, a.dv)
-      if (cdcByVersion.contains(cv)) {
-        legs += cdcByVersion(cv)
-      } else {
-        // real drops (dataChange, not re-added): previously-live rows
-        // stream as deletes — the OLD vector applies, never resurrecting
-        val dropped = as.filterNot(_.isAdd).filter(_.dataChange)
-          .filterNot(r => addPaths(r.path))
-          .map(r => live.getOrElse(r.path,
-            AddFile(r.path, r.pv, 0L, 0L))) // pre-creation tombstone: raw file
-        if (dropped.nonEmpty)
-          legs += readSnapshotAll(spark, endSnap.copy(files = dropped))
-            .withColumn("_change_type", lit("delete"))
-            .withColumn("_commit_version", lit(cv))
-        val newFiles = Seq.newBuilder[AddFile]
-        val delDelta = Seq.newBuilder[(AddFile, Set[Long])]
-        val resDelta = Seq.newBuilder[(AddFile, Set[Long])]
-        adds.foreach { a =>
-          live.get(a.path) match {
-            case Some(old) => // DV update of a live file: position diff
-              val oldP = positions(old.dv)
-              val newP = positions(a.dv)
-              delDelta += ((toAddFile(a), newP -- oldP))
-              resDelta += ((toAddFile(a), oldP -- newP))
-            case None => newFiles += toAddFile(a)
-          }
-        }
-        val nf = newFiles.result()
-        if (nf.nonEmpty) // own DVs applied: only live rows insert
-          legs += readSnapshotAll(spark, endSnap.copy(files = nf))
-            .withColumn("_change_type", lit("insert"))
-            .withColumn("_commit_version", lit(cv))
-        legs ++= posLeg(delDelta.result(), "delete", cv)
-        legs ++= posLeg(resDelta.result(), "insert", cv)
-      }
-      // advance state over EVERY action, dataChange or not
-      as.filterNot(_.isAdd).filterNot(r => addPaths(r.path))
-        .foreach(r => live -= r.path)
-      allAdds.foreach(a => live += a.path -> toAddFile(a))
-    }
-    // cdc-bearing commits with no file actions still serve their feed
-    val seen = byCommit.map(_._1).toSet
-    cdcByVersion.toSeq.sortBy(_._1)
-      .foreach { case (cv, leg) => if (!seen(cv)) legs += leg }
-    legs.result().reduceOption(_.unionByName(_)).getOrElse(
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], withVersionCol))
+      .lastOption.getOrElse(toVersion)
+    val feed = spark.read.format("graft-delta")
+      .option("readChangeFeed", "true").option("versionAsOf", endV)
+      .option("startingVersion", fromVersion).option("endingVersion", endV)
+      .load(tablePath)
+    feed.select((snapshot(spark, tablePath, versionAsOf = Some(endV))
+      .schema.fieldNames.toSeq ++
+      Seq(GraftDelta.ChangeTypeCol, GraftDelta.CommitVersionCol)).map(col): _*)
   }
 
   /** Incremental consumption of a real Delta table — the poll-based
@@ -2722,28 +2452,6 @@ object DeltaLog {
     -1L // unreachable
   }
 
-  /** Write `df` as ONE new commit of a real Delta table at
-    * `deltaPath` — append by default, full overwrite with
-    * `overwrite = true`; creates the table (commit 0 with
-    * protocol/metaData) when the log doesn't exist yet.
-    *
-    * `partitionBy` lays the data out hive-style (one directory level
-    * per partition column) with REAL `partitionValues` in the add
-    * actions — partition columns are dropped from the data files per
-    * the Delta spec (values live only in the log), and
-    * [[readSnapshot]] prunes on them before the scan. Appends to a
-    * partitioned table inherit its partitioning; passing a DIFFERENT
-    * `partitionBy` on append is a loud error, never a silently
-    * forked layout.
-    *
-    * Appends to an existing table require an identical schema (loud
-    * error, never a silently forked log). The commit file is created
-    * with exclusive-create semantics, so two racing writers cannot
-    * both claim the same version on filesystems honoring atomic
-    * create ([[AtomicCas]]). Every `checkpointInterval`-th commit
-    * also authors a classic single-file checkpoint parquet and
-    * `_last_checkpoint`.
-    * Returns the committed Delta version. */
   /** `CREATE TABLE dst SHALLOW CLONE src` — the ZERO-COPY Delta →
     * Delta clone (the dev-copy-of-prod shape): one commit at `dst`
     * ADOPTS the source's current live files by ABSOLUTE path — no
@@ -2966,6 +2674,28 @@ object DeltaLog {
       operation = "CREATE TABLE")
   }
 
+  /** Write `df` as ONE new commit of a real Delta table at
+    * `deltaPath` — append by default, full overwrite with
+    * `overwrite = true`; creates the table (commit 0 with
+    * protocol/metaData) when the log doesn't exist yet.
+    *
+    * `partitionBy` lays the data out hive-style (one directory level
+    * per partition column) with REAL `partitionValues` in the add
+    * actions — partition columns are dropped from the data files per
+    * the Delta spec (values live only in the log), and
+    * [[readSnapshot]] prunes on them before the scan. Appends to a
+    * partitioned table inherit its partitioning; passing a DIFFERENT
+    * `partitionBy` on append is a loud error, never a silently
+    * forked layout.
+    *
+    * Appends to an existing table require an identical schema (loud
+    * error, never a silently forked log). The commit file is created
+    * with exclusive-create semantics, so two racing writers cannot
+    * both claim the same version on filesystems honoring atomic
+    * create ([[AtomicCas]]). Every `checkpointInterval`-th commit
+    * also authors a classic single-file checkpoint parquet and
+    * `_last_checkpoint`.
+    * Returns the committed Delta version. */
   def write(spark: SparkSession, dfIn: DataFrame, deltaPath: String,
             overwrite: Boolean = false,
             partitionBy: Seq[String] = Seq.empty,

@@ -29,9 +29,12 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *
   * One namespace level = one directory level; a table directory is
   * served by STORAGE FLAVOR, detected per load:
-  *  - `_delta_log/` present → native Delta-log replay
-  *    ([[DeltaLog.snapshot]]): the live add-file list at the
-  *    requested version becomes the scan's file list.
+  *  - `_delta_log/` present → a [[GraftDeltaTable]] over the native
+  *    Delta-log replay ([[DeltaLog.snapshot]]): the live add-file list
+  *    at the requested version becomes the scan's file list.
+  *    Partitioned tables are served too: partition values come from
+  *    the log as per-file constants, and filters on them prune the
+  *    planned file list.
   *  - `metadata/v*.metadata.json` present → native Iceberg snapshot
   *    resolution ([[IcebergTable.snapshot]]); `VERSION AS OF` carries
   *    the snapshot id, `TIMESTAMP AS OF` the snapshot timestamp.
@@ -45,11 +48,6 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * `o.a.s.sql.execution` — Spark's internal-but-public layer; the
   * public-API alternative is reimplementing a parquet
   * reader/writer, which buys nothing here.)
-  *
-  * Delta-flavor tables with non-empty `partitionColumns` are
-  * rejected with a pointer to [[DeltaLog.read]] (their partition
-  * values live in the log, which a plain parquet scan cannot see —
-  * serving them here would silently drop columns).
   */
 class GraftCatalog extends TableCatalog with SupportsNamespaces
     with FunctionCatalog {

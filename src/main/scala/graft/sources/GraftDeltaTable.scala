@@ -2,8 +2,6 @@ package graft.sources
 
 import java.util
 
-import scala.collection.JavaConverters._
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{Column, DataFrame, SQLContext, SparkSession}
@@ -11,7 +9,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Cast, GenericInternalRow, Literal}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportStatistics, Statistics}
+import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportStatistics, Statistics}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxFiles, SupportsAdmissionControl, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, Write, WriteBuilder}
 import org.apache.spark.sql.execution.datasources.{FilePartition, FileStatusCache, InMemoryFileIndex, PartitionedFile}
@@ -44,11 +42,17 @@ import org.apache.spark.unsafe.types.UTF8String
   *    `spark.readStream.table("graft.ns.t")` (append mode) and
   *    `spark.readStream.format("graft-delta").option("readChangeFeed",
   *    "true").load(path)` (CDC mode with `_change_type` /
-  *    `_commit_version` columns) wrap the [[DeltaLog.changes]] offset
-  *    contract in a DSv2 [[MicroBatchStream]]: offsets are Delta
-  *    versions, each micro-batch plans exactly the files the polled
-  *    commits touched, and a checkpoint restart resumes from the
-  *    persisted version offset.
+  *    `_commit_version` columns) run as a DSv2 [[MicroBatchStream]]:
+  *    offsets are Delta versions, each micro-batch plans exactly the
+  *    files the polled commits touched, and a checkpoint restart
+  *    resumes from the persisted version offset.
+  *  - **The change feed** has one reader, [[GraftDelta.planRange]]:
+  *    the streaming source, the batch `readChangeFeed` scan
+  *    (`startingVersion`/`endingVersion` or their timestamp twins) and
+  *    [[DeltaLog.changes]] (a batch read of that scan) all apply the
+  *    protocol's rule — a commit with `cdc` actions serves from its
+  *    `_change_data` files alone, any other commit from its file
+  *    actions.
   *  - **Batch writes** (`INSERT INTO` / `INSERT OVERWRITE` /
   *    `df.writeTo(...).append()`): a V1 write that routes through the
   *    COMMITTING writer [[DeltaLog.write]] — never a bare parquet dump
@@ -90,61 +94,6 @@ object GraftDelta {
   def parseOffset(json: String): DeltaStreamOffset = {
     val n = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
     DeltaStreamOffset(n.get("version").asLong())
-  }
-
-  /** One driver-parsed file action of one commit. `dv` is the add's
-    * deletion-vector descriptor when present. */
-  final case class FileAct(relPath: String, pv: Map[String, String],
-                           size: Long, isAdd: Boolean, dataChange: Boolean,
-                           dv: Option[DeletionVectors.Descriptor] = None)
-
-  final case class Commit(version: Long, acts: Seq[FileAct],
-                          meta: Option[(StructType, Seq[String])])
-
-  /** Parse one commit JSON driver-side (bounded: the poll tail, the
-    * same O(cadence) work every Delta streaming source does). */
-  def readCommit(spark: SparkSession, tablePath: String, v: Long): Commit = {
-    val p = new Path(DeltaLog.logDir(tablePath), DeltaLog.pad20(v) + ".json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val M = new com.fasterxml.jackson.databind.ObjectMapper()
-    var meta: Option[(StructType, Seq[String])] = None
-    val acts = txt.split('\n').toSeq.filter(_.trim.nonEmpty).flatMap { line =>
-      val n = M.readTree(line)
-      val add = n.get("add"); val rem = n.get("remove"); val md = n.get("metaData")
-      if (md != null) {
-        val sch = DataType.fromJson(md.get("schemaString").asText())
-          .asInstanceOf[StructType]
-        val pcs = Option(md.get("partitionColumns"))
-          .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Seq.empty)
-        meta = Some((sch, pcs)); None
-      } else if (add != null) {
-        val dvNode = add.get("deletionVector")
-        val dv = Option(dvNode).filterNot(_.isNull).map { d =>
-          DeletionVectors.Descriptor(
-            d.get("storageType").asText(),
-            d.get("pathOrInlineDv").asText(),
-            Option(d.get("offset")).filterNot(_.isNull).map(_.asInt()),
-            Option(d.get("sizeInBytes")).map(_.asInt()).getOrElse(0),
-            Option(d.get("cardinality")).map(_.asLong()).getOrElse(0L))
-        }
-        val pv = Option(add.get("partitionValues")).map(_.fields().asScala
-          .map(e => e.getKey ->
-            (if (e.getValue.isNull) null else e.getValue.asText())).toMap)
-          .getOrElse(Map.empty[String, String])
-        Some(FileAct(add.get("path").asText(), pv,
-          Option(add.get("size")).map(_.asLong()).getOrElse(0L),
-          isAdd = true,
-          dataChange = Option(add.get("dataChange")).forall(_.asBoolean(true)),
-          dv = dv))
-      } else if (rem != null) {
-        Some(FileAct(rem.get("path").asText(), Map.empty, 0L, isAdd = false,
-          dataChange = Option(rem.get("dataChange")).forall(_.asBoolean(true))))
-      } else None
-    }
-    Commit(v, acts, meta)
   }
 
   /** Delta partitionValues are plain strings; produce the catalyst
@@ -314,14 +263,25 @@ object GraftDelta {
     }
   }
 
-  /** Plan the files changed by commits in `(fromV, toV]` as scan
-    * partitions. CDC mode emits added files tagged `insert` and
-    * removed files tagged `delete` (pv/size for removes resolve from
-    * in-range adds or the pre-range snapshot — tombstones carry
-    * neither); append mode emits only dataChange adds and handles
-    * remove-bearing commits per the `skipChangeCommits` /
+  /** Plan the changes committed in `(fromV, toV]` as scan partitions:
+    * the one change-feed planner behind the batch and streaming
+    * `readChangeFeed` scans (and so [[DeltaLog.changes]]) and behind
+    * append-mode streams. The range is parsed once through
+    * [[DeltaLog.parsedTail]] (driver-side under the replay byte gate,
+    * distributed above it).
+    *
+    * CDC mode follows the protocol's reader rule: a commit carrying
+    * `cdc` actions serves from those `_change_data` files alone, with
+    * `_change_type` read from the file (precise deletes and
+    * update_preimage/update_postimage pairs, never the rewrite's
+    * delete+reinsert of untouched rows). Any other commit emits added
+    * files tagged `insert` and removed files tagged `delete` (pv/size
+    * for removes resolve from in-range adds or the pre-range snapshot
+    * — tombstones carry neither), and deletion-vector updates as
+    * position diffs. Append mode emits only dataChange adds and
+    * handles remove-bearing commits per the `skipChangeCommits` /
     * `ignoreDeletes` options, loudly by default. dataChange=false
-    * commits (OPTIMIZE) are invisible in both modes. */
+    * actions (OPTIMIZE) are invisible in both modes. */
   def planRange(spark: SparkSession, tablePath: String,
                 snapSchema: StructType, snapPartCols: Seq[String],
                 readPartSchema: StructType,
@@ -331,13 +291,17 @@ object GraftDelta {
     val versions = DeltaLog.listVersions(spark, tablePath)
       .filter(v => v > fromV && v <= toV)
     if (versions.isEmpty) return Array.empty
-    val commits = versions.map(v => readCommit(spark, tablePath, v))
-    commits.foreach(_.meta.foreach { case (sch, pcs) =>
-      if (sch != snapSchema || pcs != snapPartCols)
+    val tail = DeltaLog.parsedTail(spark, tablePath, versions)
+    tail.metas.foreach { m =>
+      if (DataType.fromJson(m.schemaString) != snapSchema ||
+        m.partitionColumns != snapPartCols)
         throw new UnsupportedOperationException(
-          s"schema change inside streamed range ($fromV, $toV] of " +
-            s"$tablePath — restart the stream to adopt the new schema")
-    })
+          s"schema change inside the polled range ($fromV, $toV] of " +
+            s"$tablePath — read up to the metaData boundary, then " +
+            "restart the stream (or re-read) to adopt the new schema")
+    }
+    val actsOf = tail.files.groupBy(_.v)
+    val cdcOf = tail.cdcs.groupBy(_.v)
     def abs(rel: String): String =
       new Path(tablePath, DeltaLog.decodePath(rel)).toString
     // removed files' pv/size/dv resolve from the pre-range snapshot ∪
@@ -359,6 +323,10 @@ object GraftDelta {
       d.filter(_.cardinality != 0L)
     val zone = spark.sessionState.conf.sessionLocalTimeZone
     val out = Seq.newBuilder[(String, InternalRow, Long)]
+    // `_change_data` files carry `_change_type` as a column: their
+    // constants row leaves it out
+    val cdcPartSchema = StructType(readPartSchema.filterNot(_.name == ChangeTypeCol))
+    val cdcOut = Seq.newBuilder[(String, InternalRow, Long)]
     // DV-bearing legs plan as whole-file partitions carrying their
     // DESCRIPTORS — positions decode on the executors (SKIP = serve
     // all but the vector; SELECT = exactly dvA \ dvB, the row-diff of
@@ -371,19 +339,23 @@ object GraftDelta {
       PartitionedFile(pv, SparkPath.fromPathString(key), 0L, sz,
         Array.empty[String], 0L, sz, Map.empty)
     }
-    commits.foreach { c =>
+    versions.foreach { version =>
       // LIVENESS follows every file action (a dataChange=false
       // OPTIMIZE moves rows between files without changing them —
       // a later DV delete on the compacted file must see it as live,
       // not brand-new); EMISSION only covers dataChange=true actions
-      val allAdds = c.acts.filter(_.isAdd)
-      val allRemoves = c.acts.filterNot(_.isAdd)
+      val acts = actsOf.getOrElse(version, Nil)
+      val allAdds = acts.filter(_.isAdd)
+      val allRemoves = acts.filterNot(_.isAdd)
       val adds = allAdds.filter(_.dataChange)
       val removes = allRemoves.filter(_.dataChange)
-      val readdKeys = allAdds.map(a => abs(a.relPath)).toSet
-      if (cdf) {
+      val readdKeys = allAdds.map(a => abs(a.path)).toSet
+      if (cdf && cdcOf.contains(version)) {
+        cdcOf(version).foreach(c => cdcOut += ((abs(c.path),
+          pvRow(cdcPartSchema, c.pv, null, version, zone), c.size)))
+      } else if (cdf) {
         adds.foreach { a =>
-          val key = abs(a.relPath)
+          val key = abs(a.path)
           val wasLive = stateOf(key)
           (wasLive, a.dv) match {
             case (Some((pv, size, oldDv)), newDv)
@@ -394,29 +366,29 @@ object GraftDelta {
               // the executor; a side with an empty/absent vector
               // cannot contribute, so its leg never plans.
               if (live(newDv).isDefined) dvOut += ((wholeFile(key,
-                pvRow(readPartSchema, pv, "delete", c.version, zone), size),
+                pvRow(readPartSchema, pv, "delete", version, zone), size),
                 true, newDv, oldDv))
               if (live(oldDv).isDefined) dvOut += ((wholeFile(key,
-                pvRow(readPartSchema, pv, "insert", c.version, zone), size),
+                pvRow(readPartSchema, pv, "insert", version, zone), size),
                 true, oldDv, newDv))
             case (None, Some(dv)) =>
               // brand-new file born with a DV: its LIVE rows insert
               dvOut += ((wholeFile(key,
-                pvRow(readPartSchema, a.pv, "insert", c.version, zone),
+                pvRow(readPartSchema, a.pv, "insert", version, zone),
                 a.size), false, live(Some(dv)), None))
             case _ =>
               out += ((key,
-                pvRow(readPartSchema, a.pv, "insert", c.version, zone), a.size))
+                pvRow(readPartSchema, a.pv, "insert", version, zone), a.size))
           }
         }
         removes.foreach { r =>
-          val key = abs(r.relPath)
+          val key = abs(r.path)
           if (!readdKeys(key)) { // a re-add pair is a DV update, not a drop
             val (pv, size, oldDv) = stateOf(key).getOrElse(
               throw new IllegalStateException(
-                s"removed file ${r.relPath} at version ${c.version} has no " +
+                s"removed file ${r.path} at version $version has no " +
                   s"resolvable add action — corrupt or truncated _delta_log"))
-            val row = pvRow(readPartSchema, pv, "delete", c.version, zone)
+            val row = pvRow(readPartSchema, pv, "delete", version, zone)
             // previously-live rows only: the old DV's positions skip
             if (live(oldDv).isEmpty) out += ((key, row, size))
             else dvOut += ((wholeFile(key, row, size), false, oldDv, None))
@@ -429,28 +401,71 @@ object GraftDelta {
           else if (skipChangeCommits) false // drop the whole commit
           else if (ignoreDeletes && adds.isEmpty) false // delete-only commit
           else throw new UnsupportedOperationException(
-            s"version ${c.version} of $tablePath removes data " +
+            s"version $version of $tablePath removes data " +
               (if (dvAdds.nonEmpty) "rows (deletion vectors)" else "files") +
               " (update/overwrite/delete) — an append-only stream cannot " +
               "represent it. Options: skipChangeCommits=true to drop such " +
               "commits, ignoreDeletes=true for delete-only commits, or " +
               "readChangeFeed=true for the row-level change feed.")
-        if (emitAdds) adds.foreach(a => out += ((abs(a.relPath),
-          pvRow(readPartSchema, a.pv, "insert", c.version, zone), a.size)))
+        if (emitAdds) adds.foreach(a => out += ((abs(a.path),
+          pvRow(readPartSchema, a.pv, "insert", version, zone), a.size)))
       }
       allAdds.foreach(a =>
-        inRange += (abs(a.relPath) -> Some((a.pv, a.size, a.dv))))
-      allRemoves.foreach(r => if (!readdKeys(abs(r.relPath)))
-        inRange += (abs(r.relPath) -> None))
+        inRange += (abs(a.path) -> Some((a.pv, a.size, a.dv))))
+      allRemoves.foreach(r => if (!readdKeys(abs(r.path)))
+        inRange += (abs(r.path) -> None))
     }
     val plain = splitFiles(spark, out.result())
+    val cdcParts: Array[InputPartition] = splitFiles(spark, cdcOut.result())
+      .zipWithIndex.map { case (fp: FilePartition, i) =>
+        DeltaCdcPartition(fp.copy(index = plain.length + i)): InputPartition
+      }
     val dvParts: Array[InputPartition] = dvOut.result().zipWithIndex.map {
       case ((pf, isSelect, a, b), i) =>
-        DeltaDvPartition(FilePartition(plain.length + i, Array(pf)),
+        DeltaDvPartition(
+          FilePartition(plain.length + cdcParts.length + i, Array(pf)),
           tablePath, isSelect, a, b): InputPartition
     }.toArray
-    plain ++ dvParts
+    plain ++ cdcParts ++ dvParts
   }
+}
+
+/** A `_change_data` split of a change-feed scan: its files hold
+  * `_change_type` as a data column, so the constants row carries only
+  * the partition values and `_commit_version`. */
+private[sources] case class DeltaCdcPartition(fp: FilePartition)
+  extends InputPartition {
+  override def preferredLocations(): Array[String] = fp.preferredLocations()
+}
+
+/** Change-feed reader factory: `_change_data` splits read through
+  * `cdcFiles` (whose rows carry `_change_type` right after the data
+  * columns) and are reordered to the scan's layout by `order`
+  * (output ordinal → input ordinal; null = already in place); every
+  * other split goes to `base`, the deletion-vector-aware factory.
+  * Row-based throughout, like [[MorReaderFactory]]. */
+private class DeltaCdfReaderFactory(base: PartitionReaderFactory,
+                                    cdcFiles: PartitionReaderFactory,
+                                    order: Array[Int],
+                                    types: Array[DataType])
+  extends PartitionReaderFactory {
+  override def supportColumnarReads(p: InputPartition): Boolean = false
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
+    p match {
+      case DeltaCdcPartition(fp) =>
+        val in = cdcFiles.createReader(fp)
+        if (order == null) in
+        else new PartitionReader[InternalRow] {
+          override def next(): Boolean = in.next()
+          override def get(): InternalRow = {
+            val row = in.get()
+            new GenericInternalRow(
+              Array.tabulate[Any](order.length)(i => row.get(order(i), types(i))))
+          }
+          override def close(): Unit = in.close()
+        }
+      case other => base.createReader(other)
+    }
 }
 
 /** The DSv2 Table. `cdf = true` appends `_change_type` /
@@ -744,11 +759,10 @@ private class GraftDeltaScan(spark: SparkSession, table: GraftDeltaTable,
         plainParts ++ dvParts
       }
     override def createReaderFactory(): PartitionReaderFactory =
-      // CDC plans may carry DV position partitions regardless of the
-      // current snapshot's state; plain batch scans only when the
+      // plain batch scans need the DV-aware reader only when the
       // snapshot itself has vectors
-      if (table.cdf ||
-        table.snap.files.exists(_.dv.exists(_.cardinality != 0L)))
+      if (table.cdf) cdfFactory
+      else if (table.snap.files.exists(_.dv.exists(_.cardinality != 0L)))
         dvAwareFactory
       else factory
   }
@@ -760,13 +774,37 @@ private class GraftDeltaScan(spark: SparkSession, table: GraftDeltaTable,
       new SerializableHadoopConf(
         spark.sessionState.newHadoopConfWithOptions(Map.empty)))
 
+  /** The change-feed reader: plans may carry DV position partitions
+    * and `_change_data` splits whatever the snapshot's state. A
+    * `_change_data` file reads `_change_type` (when requested) as a
+    * data column after the requested data columns, then reorders it
+    * into the scan's layout. */
+  private def cdfFactory: PartitionReaderFactory = {
+    val ct = StructField(ChangeTypeCol, StringType)
+    val cdcData =
+      if (physReadPart.fieldNames.contains(ChangeTypeCol))
+        StructType(physReadData.fields :+ ct)
+      else physReadData
+    val cdcPart = StructType(physReadPart.filterNot(_.name == ChangeTypeCol))
+    val want = physReadData.fieldNames ++ physReadPart.fieldNames
+    val have = cdcData.fieldNames ++ cdcPart.fieldNames
+    val order = want.map(n => have.indexOf(n))
+    new DeltaCdfReaderFactory(dvAwareFactory,
+      readerFactory(spark, StructType(table.physDataSchema.fields :+ ct),
+        cdcData, cdcPart, dataFilters),
+      if (order.sameElements(want.indices)) null else order,
+      (physReadData.fields ++ physReadPart.fields).map(_.dataType))
+  }
+
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
     new GraftDeltaMicroBatchStream(spark, table, physReadPart,
-      if (table.cdf) dvAwareFactory else factory, options)
+      if (table.cdf) cdfFactory else factory, options)
 }
 
-/** Version-offset micro-batch stream over the commit log: the DSv2
-  * wrapper around the [[DeltaLog.changes]]/`syncChanges` contract.
+/** Version-offset micro-batch stream over the commit log: each
+  * micro-batch is one [[GraftDelta.planRange]] call, the same planner
+  * (and so the same `cdc`-file rule) that serves the batch
+  * `readChangeFeed` scan and [[DeltaLog.changes]].
   * ADMISSION CONTROL (`maxFilesPerTrigger`): a stream catching up on
   * a long backlog — the restart-after-an-outage shape — caps each
   * micro-batch at roughly N added files instead of planning the
@@ -775,7 +813,8 @@ private class GraftDeltaScan(spark: SparkSession, table: GraftDeltaTable,
   * taken in order while the file budget lasts, always at least one
   * per batch (a single commit larger than the cap still processes
   * atomically — a half-applied commit would tear the CDC feed).
-  * Counting reads only the poll tail's commit JSONs, driver-side. */
+  * Counting reads only the poll tail's commit JSONs, through
+  * [[DeltaLog.parsedTail]] like the planner. */
 private class GraftDeltaMicroBatchStream(spark: SparkSession,
                                          table: GraftDeltaTable,
                                          readPart: StructType,
@@ -852,13 +891,21 @@ private class GraftDeltaMicroBatchStream(spark: SparkSession,
     }
     if (fileCap.isEmpty)
       return DeltaStreamOffset(pending.last)
+    // the pending range parses in doubling chunks, so a long backlog
+    // costs about twice the admitted commits, not the whole backlog
+    // per batch
+    val chunks = Iterator.unfold((pending, 1)) { case (rest, n) =>
+      if (rest.isEmpty) None else Some((rest.take(n), (rest.drop(n), n * 2)))
+    }
+    val it = chunks.flatMap { chunk =>
+      val addsOf = DeltaLog.parsedTail(spark, table.tablePath, chunk).files
+        .filter(a => a.isAdd && a.dataChange).groupBy(_.v)
+      chunk.map(v => v -> addsOf.getOrElse(v, Nil))
+    }
     var files = 0L; var bytes = 0L; var last = from
-    val it = pending.iterator
     while (it.hasNext && (last == from ||
       (fileCap.forall(files < _) && maxBytesPerTrigger.forall(bytes < _)))) {
-      val v = it.next()
-      val adds = readCommit(spark, table.tablePath, v).acts
-        .filter(a => a.isAdd && a.dataChange)
+      val (v, adds) = it.next()
       files += adds.size
       bytes += adds.map(_.size).sum
       last = v

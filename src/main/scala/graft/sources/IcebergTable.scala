@@ -387,8 +387,8 @@ object IcebergTable {
           if (n != null && n.isObject) n else null
         } catch {
           case fnf: java.io.FileNotFoundException => throw fnf
+          // Jackson's parse errors are IOExceptions too
           case _: java.io.IOException => null
-          case _: com.fasterxml.jackson.core.JacksonException => null
         }
       if (node != null) return node
       waits += 1
