@@ -319,15 +319,22 @@ object DeltaLog {
   private[sources] def pad20(v: Long): String = f"$v%020d"
 
   /** List available commit versions (from `<v>.json` file names). */
-  def listVersions(spark: SparkSession, tablePath: String): Seq[Long] = {
+  def listVersions(spark: SparkSession, tablePath: String): Seq[Long] =
+    listCommits(spark, tablePath).map(_._1)
+
+  /** List the commit JSONs as `(version, byte size)`, sorted by
+    * version: one directory listing that serves both the range and
+    * the sizes [[parsedTail]]'s replay gate needs. */
+  private[sources] def listCommits(spark: SparkSession,
+                                   tablePath: String): Seq[(Long, Long)] = {
     val dir = logDir(tablePath)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(dir)) throw new IllegalArgumentException(
       s"not a Delta table (no _delta_log): $tablePath")
-    fs.listStatus(dir).toSeq.map(_.getPath.getName)
-      .collect { case n if n.matches("\\d{20}\\.json") =>
-        n.stripSuffix(".json").toLong }
-      .sorted
+    fs.listStatus(dir).toSeq
+      .collect { case s if s.getPath.getName.matches("\\d{20}\\.json") =>
+        s.getPath.getName.stripSuffix(".json").toLong -> s.getLen }
+      .sortBy(_._1)
   }
 
   /** List minor log-compaction files as `(startV, endV, path)`,
@@ -1657,8 +1664,9 @@ object DeltaLog {
                                          cdcs: Seq[TailCdc],
                                          files: Seq[TailFile])
 
-  /** Parse the commits `versions` once: Jackson ON THE DRIVER when
-    * their JSON bytes fit the replay gate
+  /** Parse the commits `commits` (`(version, JSON byte size)` pairs
+    * from the caller's [[listCommits]]) once: Jackson ON THE DRIVER
+    * when their bytes fit the replay gate
     * (`spark.sql.graft.delta.driverReplayMaxBytes` — zero Spark jobs),
     * distributed from_json + projected collects above it (the shape an
     * unbounded range needs). Both branches yield identical values —
@@ -1666,18 +1674,15 @@ object DeltaLog {
     * commit's actions keep their log order, and callers group by
     * version. */
   private[sources] def parsedTail(spark: SparkSession, tablePath: String,
-                                  versions: Seq[Long]): Tail = {
+                                  commits: Seq[(Long, Long)]): Tail = {
     val dir = logDir(tablePath)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val driverMax = spark.conf.getOption(
       "spark.sql.graft.delta.driverReplayMaxBytes")
       .flatMap(_.toLongOption).getOrElse(4L << 20)
+    val versions = commits.map(_._1)
     val jsonPaths = versions.map(v => new Path(dir, pad20(v) + ".json"))
-    val sizeByName = fs.listStatus(dir).toSeq
-      .map(s => s.getPath.getName -> s.getLen).toMap
-    val tailBytes = jsonPaths.map(p => sizeByName.getOrElse(
-      p.getName, Long.MaxValue / 1024)).sum
-    if (driverMax > 0 && tailBytes <= driverMax) {
+    if (driverMax > 0 && commits.map(_._2).sum <= driverMax) {
       val M = new com.fasterxml.jackson.databind.ObjectMapper()
       type J = com.fasterxml.jackson.databind.JsonNode
       def opt(n: J, k: String): Option[J] =
@@ -1805,7 +1810,12 @@ object DeltaLog {
     * readable because Delta removes are logical (a vacuumed-away file
     * is a loud read error, not silent emptiness). Schema changes
     * INSIDE the range refuse loudly — poll up to the metaData
-    * boundary, adapt, continue. */
+    * boundary, adapt, continue.
+    *
+    * The call itself only resolves the range's end (a missing log
+    * fails here); the range is parsed and planned, and a mid-range
+    * schema change refused, at each action on the returned frame, as
+    * for any DSv2 batch read. */
   def changes(spark: SparkSession, tablePath: String,
               fromVersion: Long, toVersion: Long): DataFrame = {
     require(toVersion >= fromVersion,
@@ -1828,7 +1838,9 @@ object DeltaLog {
     * consumer is carried to. A foreachBatch-style loop
     * persists the returned version as its offset and applies the
     * tagged rows downstream; exactly-once when apply + offset commit
-    * are atomic on the consumer side. */
+    * are atomic on the consumer side. The frame plans lazily (see
+    * [[changes]]): a mid-range schema change surfaces at its first
+    * action, before the consumer persists the returned version. */
   def syncChanges(spark: SparkSession, tablePath: String,
                   lastVersion: Long): (Long, Option[DataFrame]) = {
     val cur = listVersions(spark, tablePath).lastOption.getOrElse(-1L)

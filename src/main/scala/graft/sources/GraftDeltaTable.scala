@@ -288,10 +288,11 @@ object GraftDelta {
                 fromV: Long, toV: Long, cdf: Boolean,
                 skipChangeCommits: Boolean,
                 ignoreDeletes: Boolean): Array[InputPartition] = {
-    val versions = DeltaLog.listVersions(spark, tablePath)
-      .filter(v => v > fromV && v <= toV)
-    if (versions.isEmpty) return Array.empty
-    val tail = DeltaLog.parsedTail(spark, tablePath, versions)
+    val listed = DeltaLog.listCommits(spark, tablePath)
+    val commits = listed.filter { case (v, _) => v > fromV && v <= toV }
+    if (commits.isEmpty) return Array.empty
+    val versions = commits.map(_._1)
+    val tail = DeltaLog.parsedTail(spark, tablePath, commits)
     tail.metas.foreach { m =>
       if (DataType.fromJson(m.schemaString) != snapSchema ||
         m.partitionColumns != snapPartCols)
@@ -308,8 +309,7 @@ object GraftDelta {
     // in-range adds (a tombstone carries none of them)
     type FState = (Map[String, String], Long, Option[DeletionVectors.Descriptor])
     lazy val prior: Map[String, FState] = {
-      val baseV = DeltaLog.listVersions(spark, tablePath)
-        .filter(_ <= fromV).reduceOption(_ max _)
+      val baseV = listed.map(_._1).filter(_ <= fromV).lastOption
       baseV.map(b => DeltaLog.snapshot(spark, tablePath, versionAsOf = Some(b))
         .files.map(f => f.path -> ((f.partitionValues, f.size, f.dv))).toMap)
         .getOrElse(Map.empty)
@@ -813,8 +813,8 @@ private class GraftDeltaScan(spark: SparkSession, table: GraftDeltaTable,
   * taken in order while the file budget lasts, always at least one
   * per batch (a single commit larger than the cap still processes
   * atomically — a half-applied commit would tear the CDC feed).
-  * Counting reads only the poll tail's commit JSONs, through
-  * [[DeltaLog.parsedTail]] like the planner. */
+  * Counting reads only the admitted commits' JSONs, one at a time,
+  * through [[DeltaLog.parsedTail]] like the planner. */
 private class GraftDeltaMicroBatchStream(spark: SparkSession,
                                          table: GraftDeltaTable,
                                          readPart: StructType,
@@ -879,8 +879,8 @@ private class GraftDeltaMicroBatchStream(spark: SparkSession,
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val from = start.asInstanceOf[DeltaStreamOffset].version
-    val pending = DeltaLog.listVersions(spark, table.tablePath)
-      .filter(v => v > from && availableNowEnd.forall(v <= _))
+    val pending = DeltaLog.listCommits(spark, table.tablePath)
+      .filter { case (v, _) => v > from && availableNowEnd.forall(v <= _) }
     if (pending.isEmpty) return DeltaStreamOffset(from)
     // an EXPLICIT allAvailable from the engine (Trigger.Once) means
     // process everything — the pacing options must not strand the
@@ -890,21 +890,16 @@ private class GraftDeltaMicroBatchStream(spark: SparkSession,
       case _ => None
     }
     if (fileCap.isEmpty)
-      return DeltaStreamOffset(pending.last)
-    // the pending range parses in doubling chunks, so a long backlog
-    // costs about twice the admitted commits, not the whole backlog
-    // per batch
-    val chunks = Iterator.unfold((pending, 1)) { case (rest, n) =>
-      if (rest.isEmpty) None else Some((rest.take(n), (rest.drop(n), n * 2)))
-    }
-    val it = chunks.flatMap { chunk =>
-      val addsOf = DeltaLog.parsedTail(spark, table.tablePath, chunk).files
-        .filter(a => a.isAdd && a.dataChange).groupBy(_.v)
-      chunk.map(v => v -> addsOf.getOrElse(v, Nil))
+      return DeltaStreamOffset(pending.last._1)
+    // one commit parsed per admitted commit: the budget is checked
+    // before the next one is read
+    val it = pending.iterator.map { c =>
+      c._1 -> DeltaLog.parsedTail(spark, table.tablePath, Seq(c)).files
+        .filter(a => a.isAdd && a.dataChange)
     }
     var files = 0L; var bytes = 0L; var last = from
-    while (it.hasNext && (last == from ||
-      (fileCap.forall(files < _) && maxBytesPerTrigger.forall(bytes < _)))) {
+    while ((last == from || (fileCap.forall(files < _) &&
+      maxBytesPerTrigger.forall(bytes < _))) && it.hasNext) {
       val (v, adds) = it.next()
       files += adds.size
       bytes += adds.map(_.size).sum

@@ -3,10 +3,12 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.connector.read.streaming.{ReadLimit, SupportsAdmissionControl}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.sources.DeltaLog
+import graft.sources.{DeltaLog, GraftDelta, GraftDeltaTable}
 
 /** One Delta change feed on every surface: over a CDF-enabled history
   * (append, copy-on-write DELETE, UPDATE, MERGE, a deletion-vector
@@ -103,6 +105,26 @@ class DeltaChangeFeedParitySpec extends SparkSpec {
     assert(at(5L) === Seq((4L, "d", "delete", 5L)))
     assert(at(1L).isEmpty && at(6L).isEmpty) // config and OPTIMIZE commits
     assert(at(7L) === Seq((9L, "z", "insert", 7L)))
+  }
+
+  test("admission parses only the commits it admits") {
+    val t = Files.createTempDirectory("graft-cdf-admit").toString + "/t"
+    (0 to 3).foreach(i =>
+      DeltaLog.write(spark, Seq((i.toLong, "x")).toDF("k", "v").coalesce(1), t))
+    val stream = new GraftDeltaTable(spark, t, cdf = true)
+      .newScanBuilder(CaseInsensitiveStringMap.empty()).build()
+      .toMicroBatchStream(Files.createTempDirectory("graft-cdf-admit-ck").toString)
+      .asInstanceOf[SupportsAdmissionControl]
+    // a commit past the one-file budget must never be read: make v2
+    // unparseable, so reading it fails the offset call
+    Files.write(new java.io.File(t, "_delta_log/" + "%020d".format(2L) + ".json")
+      .toPath, "{not json\n".getBytes("UTF-8"))
+    def admitted(from: Long): Long = stream.latestOffset(
+      GraftDelta.DeltaStreamOffset(from), ReadLimit.maxFiles(1))
+      .asInstanceOf[GraftDelta.DeltaStreamOffset].version
+    assert(admitted(-1L) === 0L)
+    assert(admitted(0L) === 1L)
+    intercept[Exception](admitted(1L)) // admitting v2 reads it
   }
 
   test("the three readers agree with the commit JSONs parsed distributed") {
