@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -778,6 +778,11 @@ object DeltaLog {
             e: java.util.Map.Entry[String, Snapshot]): Boolean = size() > 16
       })
 
+  /** A `_delta_log` that holds no version yet (no commit, no
+    * checkpoint) — what [[write]] turns into a create at v0. */
+  private final class EmptyLogException(tablePath: String)
+    extends IllegalStateException(s"empty _delta_log at $tablePath")
+
   /** Resolve the snapshot at `versionAsOf` (default: latest), or at
     * the greatest version whose commit time is <= `timestampAsOf`
     * (epoch ms). Exactly one of the two selectors may be set. */
@@ -829,8 +834,7 @@ object DeltaLog {
         // after cleanup)
         headVersion
           .orElse(checkpointAt(spark, tablePath, Long.MaxValue).map(_.version))
-          .getOrElse(throw new IllegalStateException(
-            s"empty _delta_log at $tablePath"))
+          .getOrElse(throw new EmptyLogException(tablePath))
     }
     val cp = checkpointAt(spark, tablePath, v)
     // MINOR LOG COMPACTION (PROTOCOL.md §Log Compaction Files): a
@@ -1223,6 +1227,16 @@ object DeltaLog {
     readSnapshot(spark, snap, Some(predicate)).where(predicate)
   }
 
+  /** The AND-conjuncts of a Catalyst condition, shared by every
+    * pruning and MERGE-condition split of both table stacks. */
+  private[sources] def conjuncts(
+      e: org.apache.spark.sql.catalyst.expressions.Expression)
+  : Seq[org.apache.spark.sql.catalyst.expressions.Expression] = e match {
+    case org.apache.spark.sql.catalyst.expressions.And(l, r) =>
+      conjuncts(l) ++ conjuncts(r)
+    case x => Seq(x)
+  }
+
   /** Files of `snap` that could satisfy `predicate` by their per-file
     * STATS (add.stats min/max/nullCount): only top-level AND
     * conjuncts of the form `<numeric column> <op> <literal>` are
@@ -1242,10 +1256,6 @@ object DeltaLog {
                                      predicate: org.apache.spark.sql.Column)
   : Seq[(String, String, BigDecimal)] = {
     import org.apache.spark.sql.catalyst.expressions.{And => CAnd, _}
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case CAnd(l, r) => conjuncts(l) ++ conjuncts(r)
-      case x => Seq(x)
-    }
     def attrName(e: Expression): Option[String] = e match {
       case a: AttributeReference => Some(a.name)
       case c: Cast => attrName(c.child)
@@ -1366,7 +1376,7 @@ object DeltaLog {
     * never a filter. */
   private def partitionPrunedFiles(spark: SparkSession, snap: Snapshot,
                                    predicate: org.apache.spark.sql.Column): Seq[AddFile] = {
-    import org.apache.spark.sql.catalyst.expressions.{And => CAnd, Expression, SubqueryExpression}
+    import org.apache.spark.sql.catalyst.expressions.{Expression, SubqueryExpression}
     if (snap.partitionColumns.isEmpty || snap.files.isEmpty) return snap.files
     import spark.implicits._
     val pc = snap.partitionColumns
@@ -1376,10 +1386,6 @@ object DeltaLog {
       dummy.where(predicate).queryExecution.analyzed.collectFirst {
         case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
       }.getOrElse(return snap.files)
-    }
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case CAnd(l, r) => conjuncts(l) ++ conjuncts(r)
-      case x => Seq(x)
     }
     val pcSet = pc.toSet
     val partOnly = conjuncts(cond).filter { c =>
@@ -1507,11 +1513,8 @@ object DeltaLog {
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], snap.schema)
     // input_file_name() reports SparkPath's URL-encoded form (space
-    // as %20) — encode the file list the same way, then normalize to
-    // scheme-less absolute path on both sides
-    def norm(p: String) = p.replaceFirst("^[a-zA-Z0-9]+:(//)?", "")
-    def fileKey(p: String) =
-      norm(org.apache.spark.paths.SparkPath.fromPathString(p).urlEncoded)
+    // as %20) — fileKeyOf encodes the file list the same way, then
+    // both sides normalize to the scheme-less absolute path
     def scanWithPath(files: Seq[AddFile]) =
       spark.read.schema(dataSchema).parquet(files.map(_.path): _*)
         .withColumn("__path",
@@ -1527,7 +1530,7 @@ object DeltaLog {
     val dvScan = if (dvFiles.isEmpty) None else {
       val conf = spark.sparkContext.hadoopConfiguration
       val dvData: Seq[(String, Array[Byte])] = dvFiles.map(f =>
-        (fileKey(f.path),
+        (fileKeyOf(f.path),
           DeletionVectors.loadData(conf, snap.tablePath, f.dv.get)))
       val posDf = spark.createDataset(dvData).flatMap { case (p, bytes) =>
         DeletionVectors.deletedRows(bytes).map(r => (p, r))
@@ -1548,7 +1551,7 @@ object DeltaLog {
       base.select(dataSchema.fieldNames.map(col): _*)
     else {
       val pvRows = snap.files.map(f =>
-        (fileKey(f.path),
+        (fileKeyOf(f.path),
           snap.partitionColumns.map(c => f.partitionValues.getOrElse(c, null))))
       val pvDf = broadcast(pvRows.toDF("__path", "__pv"))
       val joined = base.join(pvDf, Seq("__path"), "left")
@@ -1566,10 +1569,10 @@ object DeltaLog {
     }
   }
 
-  private def normPath(p: String): String =
-    p.replaceFirst("^[a-zA-Z0-9]+:(//)?", "")
+  /** The scan key of a snapshot file: `input_file_name()`'s
+    * URL-encoded form, scheme-less. */
   private def fileKeyOf(p: String): String =
-    normPath(org.apache.spark.paths.SparkPath.fromPathString(p).urlEncoded)
+    deScheme(org.apache.spark.paths.SparkPath.fromPathString(p).urlEncoded)
 
   /** Distributed scan of `files` with their deletion vectors APPLIED
     * (rows at DV positions dropped) — the row set a reader must see.
@@ -1911,71 +1914,218 @@ object DeltaLog {
     b.toString
   }
 
-  /** Write `df` hive-partitioned into a scratch dir under `dst`, then
-    * adopt each part under a stable `part-<tag>-<i>.parquet` name in
-    * its final partition directory — the shared staging step of every
-    * committing writer (never leave half-written files at paths the
-    * log references). Returns (relPath, partitionValues, size, stats)
-    * per adopted file. */
-  private def stageData(spark: SparkSession, df: DataFrame, dst: Path,
-                        effParts: Seq[String], tag: String)
-  : Seq[(String, Map[String, String], Long, Option[String])] = {
+  // ---- the commit path every data-changing command shares: stage
+  // (stageData / rewriteGroups) → adopt → encode (addLine, removeLine,
+  // freshAdds) → commit tail (commitTail)
+
+  /** A data file adopted into the table: table-relative path (not yet
+    * percent-encoded), partition values, size and footer stats. */
+  private final case class Adopted(rel: String, pv: Map[String, String],
+                                   size: Long, stats: Option[String])
+
+  /** Parquet files under a scratch tree Spark wrote, in path order
+    * (`_`-prefixed committer files and dirs skipped). */
+  private def stagedParts(fs: FileSystem, tmp: Path): Seq[Path] = {
+    def walk(p: Path): Seq[Path] =
+      fs.listStatus(p).toSeq.filterNot(_.getPath.getName.startsWith("_"))
+        .flatMap(st =>
+          if (st.isDirectory) walk(st.getPath)
+          else if (st.getPath.getName.endsWith(".parquet")) Seq(st.getPath)
+          else Seq.empty)
+    walk(tmp).sortBy(_.toString)
+  }
+
+  /** The one way a staged parquet file joins the table: rename each
+    * `(staged file, rel, partition values)` to `dst/rel`, then read the
+    * footer stats of all of them — concurrently on the DRIVER up to
+    * `footerStatsDriverMaxFiles` files, as ONE Spark job over the
+    * executors above it (O(files) ranged I/O must not serialize on the
+    * driver at a 100 TB append). With `dropEmpty` (rewrites) a 0-row
+    * part is deleted again instead of adopted: a group whose rows all
+    * went commits a pure remove. */
+  private def adopt(spark: SparkSession, dst: Path,
+                    staged: Seq[(Path, String, Map[String, String])],
+                    dropEmpty: Boolean): Seq[Adopted] = {
     val fsConf = spark.sparkContext.hadoopConfiguration
     val fs = dst.getFileSystem(fsConf)
-    val tmp = new Path(dst, s".tmp-$tag-${java.util.UUID.randomUUID()}")
-    if (effParts.isEmpty) df.write.parquet(tmp.toString)
-    else df.write.partitionBy(effParts: _*).parquet(tmp.toString)
-    // walk the staged tree: data files sit under one hive-style dir
-    // level per partition column
-    def walk(p: Path): Seq[Path] = {
-      val sts = fs.listStatus(p).toSeq.filterNot(
-        _.getPath.getName.startsWith("_"))
-      sts.flatMap(st =>
-        if (st.isDirectory) walk(st.getPath)
-        else if (st.getPath.getName.endsWith(".parquet")) Seq(st.getPath)
-        else Seq.empty)
-    }
-    val tmpRoot = fs.makeQualified(tmp).toString
-    val staged = walk(tmp).sortBy(_.toString)
-    // adopted names carry a per-writer uniquifier: two OPTIMISTIC
-    // writers racing for the same version must never adopt to the
-    // same path — the loser would clobber the winner's committed data
-    // file before the CAS even ran
-    val uniq = java.util.UUID.randomUUID().toString.take(8)
-    val renamed = staged.zipWithIndex.map { case (src, i) =>
-      val relStaged = fs.makeQualified(src).toString
-        .stripPrefix(tmpRoot).stripPrefix("/")
-      val dirs = relStaged.split('/').dropRight(1).toSeq
-      val pv = parsePartitionDirs(dirs, effParts)
-      val rel = (dirs :+ s"part-$tag-$uniq-$i.parquet").mkString("/")
+    val renamed = staged.map { case (src, rel, pv) =>
       val fin = new Path(dst, rel)
       fs.mkdirs(fin.getParent)
       if (!fs.rename(src, fin))
         throw new IllegalStateException(s"rename failed for $rel")
       (rel, pv, fs.getFileStatus(fin).getLen, fin)
     }
-    fs.delete(tmp, true)
-    // footer stats: concurrently on the DRIVER below the gate,
-    // as ONE Spark job over executors above it (task-collected write
-    // statistics — O(files) ranged I/O must not serialize on the
-    // driver at a 100 TB append)
     val gate = spark.conf
       .getOption("spark.sql.graft.footerStatsDriverMaxFiles")
       .map(_.toInt).getOrElse(64)
-    if (renamed.size <= gate)
-      FooterIo.mapAll(renamed) { case (rel, pv, len, fin) =>
-        (rel, pv, len, footerStats(fsConf, fin)) }
-    else {
-      val sc = new SerializableHadoopConf(fsConf)
-      val slices = math.max(1, math.min(renamed.size,
-        spark.sparkContext.defaultParallelism))
-      val statsByPath = spark.sparkContext
-        .parallelize(renamed.map(_._4.toString), slices)
-        .map(s => s -> footerStats(sc.value, new Path(s)))
-        .collect().toMap
-      renamed.map { case (rel, pv, len, fin) =>
-        (rel, pv, len, statsByPath(fin.toString)) }
+    val stats: Seq[Option[String]] =
+      if (renamed.size <= gate)
+        FooterIo.mapAll(renamed)(r => footerStats(fsConf, r._4))
+      else {
+        val sc = new SerializableHadoopConf(fsConf)
+        val slices = math.max(1, math.min(renamed.size,
+          spark.sparkContext.defaultParallelism))
+        val statsByPath = spark.sparkContext
+          .parallelize(renamed.map(_._4.toString), slices)
+          .map(s => s -> footerStats(sc.value, new Path(s)))
+          .collect().toMap
+        renamed.map(r => statsByPath(r._4.toString))
+      }
+    renamed.zip(stats).flatMap { case ((rel, pv, len, fin), st) =>
+      if (dropEmpty && numRecordsOf(st).contains(0L)) {
+        fs.delete(fin, false); None
+      } else Some(Adopted(rel, pv, len, st))
     }
+  }
+
+  /** Write `df` hive-partitioned into a scratch dir under `dst` and
+    * adopt each part under a stable `part-<tag>-<uniq>-<i>.parquet`
+    * name in its final partition directory — the staging step of every
+    * committing writer (never leave half-written files at paths the
+    * log references). The per-writer uniquifier keeps two OPTIMISTIC
+    * writers racing for the same version from adopting to the same
+    * path (the loser would clobber the winner's committed file before
+    * the CAS even ran). */
+  private def stageData(spark: SparkSession, df: DataFrame, dst: Path,
+                        effParts: Seq[String], tag: String): Seq[Adopted] = {
+    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val tmp = new Path(dst, s".tmp-$tag-${java.util.UUID.randomUUID()}")
+    if (effParts.isEmpty) df.write.parquet(tmp.toString)
+    else df.write.partitionBy(effParts: _*).parquet(tmp.toString)
+    val tmpRoot = fs.makeQualified(tmp).toString
+    val uniq = java.util.UUID.randomUUID().toString.take(8)
+    val staged = stagedParts(fs, tmp).zipWithIndex.map { case (src, i) =>
+      val dirs = fs.makeQualified(src).toString
+        .stripPrefix(tmpRoot).stripPrefix("/").split('/').dropRight(1).toSeq
+      (src, (dirs :+ s"part-$tag-$uniq-$i.parquet").mkString("/"),
+        parsePartitionDirs(dirs, effParts))
+    }
+    val out = adopt(spark, dst, staged, dropEmpty = false)
+    fs.delete(tmp, true)
+    out
+  }
+
+  /** `files` grouped by partition values, groups in partition-value
+    * order, files in their given order within a group. */
+  private def partitionGroups(files: Seq[AddFile])
+  : Seq[(Map[String, String], Seq[AddFile])] =
+    files.groupBy(_.partitionValues).toSeq
+      .sortBy(_._1.toSeq.sortBy(_._1).mkString(","))
+
+  /** Rewrite `files` one partition group at a time (groups in
+    * partition-value order): `frameOf(pv, groupFiles)` yields the
+    * group's new DATA columns, written flat and adopted under the
+    * group's hive dirs as `part-<tag>-<uniq>-<group>-<i>.parquet`.
+    * One adoption (one footer-stats gate) serves every group. 0-row
+    * parts are not adopted. */
+  private def rewriteGroups(spark: SparkSession, deltaPath: String,
+                            pc: Seq[String], files: Seq[AddFile], tag: String)
+                           (frameOf: (Map[String, String], Seq[AddFile]) => DataFrame)
+  : Seq[Adopted] = {
+    val dst = new Path(deltaPath)
+    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val uniq = java.util.UUID.randomUUID().toString.take(8)
+    val groups = partitionGroups(files)
+    val tmps = groups.indices.map(gi =>
+      new Path(dst, s".tmp-$tag-$gi-${java.util.UUID.randomUUID()}"))
+    val staged = groups.zip(tmps).zipWithIndex.flatMap {
+      case (((pv, fls), tmp), gi) =>
+        frameOf(pv, fls).write.parquet(tmp.toString)
+        val dirs = pc.map(c =>
+          s"${hiveEscape(c)}=${Option(pv.getOrElse(c, null))
+            .map(hiveEscape).getOrElse("__HIVE_DEFAULT_PARTITION__")}")
+        stagedParts(fs, tmp).zipWithIndex.map { case (src, i) =>
+          (src, (dirs :+ s"part-$tag-$uniq-$gi-$i.parquet").mkString("/"), pv)
+        }
+    }
+    val out = adopt(spark, dst, staged, dropEmpty = true)
+    tmps.foreach(fs.delete(_, true))
+    out
+  }
+
+  /** Scheme-less form of a path (`file:/a/b` → `/a/b`): what table
+    * roots, log paths and scan keys compare on. */
+  private def deScheme(p: String): String =
+    p.replaceFirst("^[a-zA-Z0-9]+:(//)?", "")
+
+  /** The scheme-less qualified table root [[relPath]] strips. */
+  private def tableRoot(fs: FileSystem, deltaPath: String): String =
+    deScheme(fs.makeQualified(new Path(deltaPath)).toString)
+
+  /** A snapshot file's log path: table-relative, percent-encoded. */
+  private def relPath(root: String, p: String): String =
+    encodePath(deScheme(new Path(p).toString).stripPrefix(root + "/"))
+
+  private def pvJson(pv: Map[String, String]): String =
+    pv.toSeq.sortBy(_._1).map { case (k, vv) =>
+      s"${jsEscape(k)}:${if (vv == null) "null" else jsEscape(vv)}"
+    }.mkString("{", ",", "}")
+
+  /** The `remove` action for log path `path`. */
+  private def removeLine(path: String, now: Long, dataChange: Boolean): String =
+    s"""{"remove":{"path":${jsEscape(path)},"deletionTimestamp":$now,"dataChange":$dataChange}}"""
+
+  /** The `txn` action: the public Delta idempotence marker a
+    * streaming writer stamps (queryId, batchId) with. */
+  private def txnLine(appId: String, version: Long, now: Long): String =
+    s"""{"txn":{"appId":${jsEscape(appId)},"version":$version,"lastUpdated":$now}}"""
+
+  /** The `add` action for log path `path` (already percent-encoded).
+    * A deletion vector's `offset` is written only when the descriptor
+    * carries one — inline ('i') DVs must omit it per PROTOCOL.md.
+    * `rowIds` is (baseRowId, defaultRowCommitVersion). */
+  private def addLine(path: String, pv: Map[String, String], size: Long,
+                      modificationTime: Long, dataChange: Boolean,
+                      stats: Option[String],
+                      dv: Option[DeletionVectors.Descriptor] = None,
+                      rowIds: Option[(Long, Long)] = None): String = {
+    val statsPart = stats.map(j => s""","stats":${jsEscape(j)}""").getOrElse("")
+    val dvPart = dv.map { d =>
+      val offsetPart = d.offset.map(o => s""","offset":$o""").getOrElse("")
+      s""","deletionVector":{"storageType":${jsEscape(d.storageType)},"pathOrInlineDv":${jsEscape(d.pathOrInlineDv)}$offsetPart,"sizeInBytes":${d.sizeInBytes},"cardinality":${d.cardinality}}"""
+    }.getOrElse("")
+    val rtPart = rowIds.map { case (b, cv) =>
+      s""","baseRowId":$b,"defaultRowCommitVersion":$cv""" }.getOrElse("")
+    s"""{"add":{"path":${jsEscape(path)},"partitionValues":${pvJson(pv)},"size":$size,"modificationTime":$modificationTime,"dataChange":$dataChange$statsPart$dvPart$rtPart}}"""
+  }
+
+  /** Add lines for freshly adopted files, then — on a row-tracked
+    * table — the advanced row-id watermark domain ([[rtFresh]]). */
+  private def freshAdds(table: Option[Snapshot], files: Seq[Adopted],
+                        v: Long, now: Long, dataChange: Boolean): Seq[String] = {
+    val (rowIds, domain) = rtFresh(table, files.map(_.stats), v)
+    files.zip(rowIds).map { case (a, rt) =>
+      addLine(encodePath(a.rel), a.pv, a.size, now, dataChange, a.stats,
+        rowIds = rt)
+    } ++ domain
+  }
+
+  /** A commit's file actions: a remove per dropped snapshot file,
+    * then the adds of the adopted ones ([[freshAdds]]). */
+  private def fileActions(spark: SparkSession, deltaPath: String,
+                          table: Option[Snapshot], removed: Seq[AddFile],
+                          added: Seq[Adopted], v: Long, now: Long,
+                          dataChange: Boolean): Seq[String] = {
+    val root = tableRoot(new Path(deltaPath).getFileSystem(
+      spark.sparkContext.hadoopConfiguration), deltaPath)
+    removed.map(f => removeLine(relPath(root, f.path), now, dataChange)) ++
+      freshAdds(table, added, v, now, dataChange)
+  }
+
+  /** The tail of every data-changing commit: the CAS, then the
+    * checkpoint when due and the UniForm mirror, both keyed on the
+    * post-commit configuration `conf`. `readConf` is the configuration
+    * the command read (its in-commit-timestamp hint). */
+  private def commitTail(spark: SparkSession, deltaPath: String, v: Long,
+                         lines: Seq[String], scope: ReadScope,
+                         operation: String, checkpointInterval: Int,
+                         readConf: Option[Map[String, String]],
+                         conf: Map[String, String]): Long = {
+    val vc = commitCas(spark, deltaPath, v, lines, scope,
+      operation = operation, ictHint = readConf.map(ictOn))
+    maybeCheckpoint(spark, deltaPath, vc, checkpointInterval, conf)
+    maybeUniform(spark, deltaPath, conf)
+    vc
   }
 
   /** True when the table declares `delta.enableChangeDataFeed` — the
@@ -2020,12 +2170,8 @@ object DeltaLog {
       .map(col).toIndexedSeq: _*)
     val adopted = stageData(spark, ordered,
       new Path(deltaPath, "_change_data"), snap.partitionColumns, s"cdc-$v")
-    def pvJson(pv: Map[String, String]): String =
-      pv.toSeq.sortBy(_._1).map { case (k, vv) =>
-        s"${jsEscape(k)}:${if (vv == null) "null" else jsEscape(vv)}"
-      }.mkString("{", ",", "}")
-    adopted.map { case (rel, pv, sz, _) =>
-      s"""{"cdc":{"path":${jsEscape(encodePath(s"_change_data/$rel"))},"partitionValues":${pvJson(pv)},"size":$sz,"dataChange":false}}"""
+    adopted.map { a =>
+      s"""{"cdc":{"path":${jsEscape(encodePath(s"_change_data/${a.rel}"))},"partitionValues":${pvJson(a.pv)},"size":${a.size},"dataChange":false}}"""
     }
   }
 
@@ -2059,47 +2205,10 @@ object DeltaLog {
     FooterIo.withFooter(conf, p) { r =>
       val blocks = r.getFooter.getBlocks.asScala.toSeq
       val numRecords = blocks.map(_.getRowCount).sum
-      final class Agg {
-        var min: Option[BigDecimal] = None
-        var max: Option[BigDecimal] = None
-        var nulls = 0L
-        var isFloating = false
-        var ok = true
-      }
-      val aggs = scala.collection.mutable.LinkedHashMap[String, Agg]()
-      blocks.foreach(_.getColumns.asScala.foreach { cc =>
-        val path = cc.getPath.toArray
-        if (path.length == 1) {
-          val a = aggs.getOrElseUpdate(path(0), new Agg)
-          val st = cc.getStatistics
-          if (st == null || st.isEmpty || st.getNumNulls < 0) a.ok = false
-          else {
-            a.nulls += st.getNumNulls
-            if (st.hasNonNullValue) {
-              import org.apache.parquet.column.statistics._
-              val mnmx: Option[(BigDecimal, BigDecimal)] = st match {
-                case s: IntStatistics => Some((BigDecimal(s.getMin), BigDecimal(s.getMax)))
-                case s: LongStatistics => Some((BigDecimal(s.getMin), BigDecimal(s.getMax)))
-                case s: FloatStatistics =>
-                  a.isFloating = true
-                  Some((BigDecimal(s.getMin.toDouble), BigDecimal(s.getMax.toDouble)))
-                case s: DoubleStatistics =>
-                  a.isFloating = true
-                  Some((BigDecimal(s.getMin), BigDecimal(s.getMax)))
-                case _ => a.ok = false; None
-              }
-              mnmx.foreach { case (mn, mx) =>
-                a.min = Some(a.min.fold(mn)(_.min(mn)))
-                a.max = Some(a.max.fold(mx)(_.max(mx)))
-              }
-            }
-          }
-        }
-      })
-      def num(a: Agg, v: BigDecimal): String =
+      val withStats = FooterIo.columnStats(blocks)
+      def num(a: FooterIo.ColumnStats, v: BigDecimal): String =
         if (a.isFloating) v.toDouble.toString else v.toBigIntExact
           .map(_.toString).getOrElse(v.toDouble.toString)
-      val withStats = aggs.toSeq.filter(_._2.ok)
       val mins = withStats.collect { case (n, a) if a.min.isDefined =>
         s"${jsEscape(n)}:${num(a, a.min.get)}" }
       val maxs = withStats.collect { case (n, a) if a.max.isDefined =>
@@ -2494,7 +2603,6 @@ object DeltaLog {
       fs.listStatus(logDir(dstPath)).isEmpty,
       s"Delta table already exists at $dstPath")
     fs.mkdirs(logDir(dstPath))
-    def deScheme(s: String) = s.replaceFirst("^[a-zA-Z0-9]+:(//)?", "")
     val now = System.currentTimeMillis()
     val tableId = java.util.UUID.nameUUIDFromBytes(
       ("delta-clone:" + dstPath).getBytes("UTF-8")).toString
@@ -2503,10 +2611,6 @@ object DeltaLog {
       if (mwv >= 7 || rf.nonEmpty || wf.nonEmpty)
         s"""{"protocol":{"minReaderVersion":$mrv,"minWriterVersion":$mwv,"readerFeatures":${rf.map(jsEscape).mkString("[", ",", "]")},"writerFeatures":${wf.map(jsEscape).mkString("[", ",", "]")}}}"""
       else s"""{"protocol":{"minReaderVersion":$mrv,"minWriterVersion":$mwv}}"""
-    def pvJson(pv: Map[String, String]): String =
-      pv.toSeq.sortBy(_._1).map { case (k, vv) =>
-        s"${jsEscape(k)}:${if (vv == null) "null" else jsEscape(vv)}"
-      }.mkString("{", ",", "}")
     val lines = scala.collection.mutable.ArrayBuffer[String]()
     lines += protoLine
     lines += metaDataLine(tableId, src.schema.json, src.partitionColumns,
@@ -2520,8 +2624,8 @@ object DeltaLog {
     src.files.foreach { f =>
       val abs = encodePath(deScheme(
         fs.makeQualified(new Path(f.path)).toString))
-      val statsPart = f.stats.map(j => s""","stats":${jsEscape(j)}""").getOrElse("")
-      lines += s"""{"add":{"path":${jsEscape(abs)},"partitionValues":${pvJson(f.partitionValues)},"size":${f.size},"modificationTime":$now,"dataChange":true$statsPart${rtCarry(f)}}}"""
+      lines += addLine(abs, f.partitionValues, f.size, now, dataChange = true,
+        f.stats, rowIds = rtCarry(f))
     }
     commitCas(spark, dstPath, 0L, lines.toSeq, ReadTable,
       operation = "CLONE")
@@ -2569,10 +2673,6 @@ object DeltaLog {
         s"${schema.fieldNames.mkString(", ")} — name hive directory keys"))
     val now = System.currentTimeMillis()
     val rootQ = fs.makeQualified(dst).toString
-    def pvJson(pv: Map[String, String]): String =
-      pv.toSeq.sortBy(_._1).map { case (k, vv) =>
-        s"${jsEscape(k)}:${if (vv == null) "null" else jsEscape(vv)}"
-      }.mkString("{", ",", "}")
     val lines = scala.collection.mutable.ArrayBuffer[String]()
     lines += """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}"""
     lines += metaDataLine(java.util.UUID.nameUUIDFromBytes(
@@ -2586,9 +2686,8 @@ object DeltaLog {
         if (partitionBy.isEmpty) Map.empty[String, String]
         else parsePartitionDirs(dirs, partitionBy)
       val st = fs.getFileStatus(f)
-      val statsPart = footerStats(fsConf, f)
-        .map(j => s""","stats":${jsEscape(j)}""").getOrElse("")
-      lines += s"""{"add":{"path":${jsEscape(encodePath(rel))},"partitionValues":${pvJson(pv)},"size":${st.getLen},"modificationTime":${st.getModificationTime},"dataChange":true$statsPart}}"""
+      lines += addLine(encodePath(rel), pv, st.getLen, st.getModificationTime,
+        dataChange = true, footerStats(fsConf, f))
     }
     commitCas(spark, path, 0L, lines.toSeq, ReadTable,
       operation = "CONVERT")
@@ -2735,17 +2834,13 @@ object DeltaLog {
     val dst = new Path(deltaPath)
     val fs = dst.getFileSystem(fsConf)
     fs.mkdirs(new Path(dst, "_delta_log"))
-    val existing =
-      if (fs.exists(logDir(deltaPath)))
-        fs.listStatus(logDir(deltaPath)).toSeq.map(_.getPath.getName)
-          .collect { case n if n.matches("\\d{20}\\.json") =>
-            n.stripSuffix(".json").toLong }.sorted
-      else Seq.empty
-    val v = existing.lastOption.map(_ + 1).getOrElse(0L)
-    val now = System.currentTimeMillis()
-
+    // ONE log listing serves the next version and the prior state; a
+    // fresh (or empty) log creates the table at v0
     val prior: Option[Snapshot] =
-      if (existing.nonEmpty) Some(snapshot(spark, deltaPath)) else None
+      try Some(snapshot(spark, deltaPath))
+      catch { case _: EmptyLogException => None }
+    val v = prior.map(_.version + 1).getOrElse(0L)
+    val now = System.currentTimeMillis()
     // a declared writer feature we don't implement, or an overwrite
     // of an append-only table, must refuse BEFORE anything stages
     prior.foreach(p => validateWritable(p, removesData = overwrite))
@@ -3067,10 +3162,6 @@ object DeltaLog {
     }
     val adopted = stageData(spark, stageDf, dst, stageParts, s"$v")
 
-    def pvJson(pv: Map[String, String]): String =
-      pv.toSeq.sortBy(_._1).map { case (k, vv) =>
-        s"${jsEscape(k)}:${if (vv == null) "null" else jsEscape(vv)}"
-      }.mkString("{", ",", "}")
     // the log's schemaString keeps ALL columns (partition cols
     // included) in the df's declared order; data files carry the rest
     val tableId = java.util.UUID.nameUUIDFromBytes(
@@ -3122,15 +3213,6 @@ object DeltaLog {
       } else identitySchema.foreach(is =>
         lines += metaDataLine(tableId, is.json, effParts, now,
           p.configuration))
-      // snapshot paths are absolute; the log stores table-relative —
-      // normalize the scheme off both sides before stripping
-      def deScheme(s: String) = s.replaceFirst("^[a-zA-Z0-9]+:(//)?", "")
-      val root = deScheme(fs.makeQualified(dst).toString)
-      p.files.foreach { f =>
-        val rel = encodePath(deScheme(new Path(f.path).toString)
-          .stripPrefix(root + "/"))
-        lines += s"""{"remove":{"path":${jsEscape(rel)},"deletionTimestamp":$now,"dataChange":true}}"""
-      }
     } else {
       // plain append: an identity-watermark advance lands the prior
       // schema (watermark metadata only) in the SAME commit as the
@@ -3139,40 +3221,15 @@ object DeltaLog {
         lines += metaDataLine(tableId, is.json, effParts, now,
           prior.get.configuration))
     }
-    // ROW TRACKING: every add on a row-tracked table carries a fresh
-    // contiguous baseRowId range from the high watermark, plus the
-    // advanced watermark domain. The attempted version stamps
-    // defaultRowCommitVersion; commitCas re-stamps it (and shifts the
-    // ranges past a concurrent winner's watermark) on rebase.
-    val rtEnabled = prior.exists(p => rowTrackingEnabled(p.configuration))
-    val rtBases: Seq[Option[Long]] =
-      if (!rtEnabled) adopted.map(_ => None)
-      else {
-        var nextId = rowIdHighWaterMark(prior.get) + 1
-        adopted.map { case (_, _, _, st) =>
-          val n = numRecordsOf(st).getOrElse(throw new IllegalStateException(
-            "row tracking needs numRecords stats on staged files"))
-          val b = nextId; nextId += n; Some(b)
-        }
-      }
-    adopted.zip(rtBases).foreach { case ((rel, pv, sz, st), base) =>
-      val statsPart = st.map(j => s""","stats":${jsEscape(j)}""").getOrElse("")
-      val rtPart = base.map(b =>
-        s""","baseRowId":$b,"defaultRowCommitVersion":$v""").getOrElse("")
-      lines += s"""{"add":{"path":${jsEscape(encodePath(rel))},"partitionValues":${pvJson(pv)},"size":$sz,"modificationTime":$now,"dataChange":true$statsPart$rtPart}}"""
-    }
-    if (rtEnabled && adopted.nonEmpty) {
-      val hwmNew = rtBases.last.get +
-        numRecordsOf(adopted.last._4).getOrElse(0L) - 1L
-      lines += domainMetadataLine(RowTrackingDomain,
-        s"""{"rowIdHighWaterMark":$hwmNew}""", removed = false)
-    }
+    // an overwrite removes every prior file; on a row-tracked table
+    // every add carries a fresh baseRowId range
+    lines ++= fileActions(spark, deltaPath, prior,
+      if (overwrite) prior.toSeq.flatMap(_.files) else Nil, adopted, v, now,
+      dataChange = true)
     // the txn action (appId, version) is the public Delta idempotence
     // marker: a streaming sink stamps (queryId, batchId) and skips any
     // batch at or below the table's replayed watermark on restart
-    txn.foreach { case (appId, tv) =>
-      lines += s"""{"txn":{"appId":${jsEscape(appId)},"version":$tv,"lastUpdated":$now}}"""
-    }
+    txn.foreach { case (appId, tv) => lines += txnLine(appId, tv, now) }
     // an append reads nothing (rebases over data-only winners); an
     // overwrite of a non-empty table logically read every prior row
     val scope: ReadScope =
@@ -3181,14 +3238,9 @@ object DeltaLog {
       if (txn.isDefined) "STREAMING UPDATE"
       else if (overwrite) "WRITE (overwrite)"
       else "WRITE"
-    val vc = commitCas(spark, deltaPath, v, lines.toSeq, scope,
-      operation = op,
-      ictHint = prior.map(p => ictOn(p.configuration)))
-    maybeCheckpoint(spark, deltaPath, vc, checkpointInterval,
+    commitTail(spark, deltaPath, v, lines.toSeq, scope, op,
+      checkpointInterval, prior.map(_.configuration),
       prior.map(_.configuration).getOrElse(Map.empty))
-    maybeUniform(spark, deltaPath,
-      prior.map(_.configuration).getOrElse(Map.empty))
-    vc
   }
 
   /** Hive-style partition-dir escape — inverse of [[hiveUnescape]]
@@ -3233,27 +3285,20 @@ object DeltaLog {
       require(!snap.partitionColumns.contains(c),
         s"Z-ORDER column $c is a partition column — already file-separated")
     }
-    val fsConf = spark.sparkContext.hadoopConfiguration
-    val dst = new Path(deltaPath)
-    val fs = dst.getFileSystem(fsConf)
     val dataSchema = StructType(snap.schema.filterNot(
       f => snap.partitionColumns.contains(f.name)))
-    val groups = snap.files.groupBy(_.partitionValues).toSeq
-      .sortBy(_._1.toSeq.sortBy(_._1).mkString(","))
     // DV-bearing files ALWAYS rewrite (real OPTIMIZE's purge
     // semantics): compaction drops the covered rows physically and
     // clears the vectors, even for a partition holding a single file —
     // time travel keeps serving older versions through their DVs
     def hasDv(f: AddFile): Boolean = f.dv.exists(_.cardinality > 0L)
-    val rewrite = groups.filter { case (_, fls) =>
-      fls.size > 1 || zBy.nonEmpty || fls.exists(hasDv) }
+    val rewrite = partitionGroups(snap.files)
+      .filter { case (_, fls) => fls.size > 1 || zBy.nonEmpty || fls.exists(hasDv) }
+      .flatMap(_._2)
     if (rewrite.isEmpty) return snap.version
     val v = snap.version + 1
     val now = System.currentTimeMillis()
-    def deScheme(s: String) = s.replaceFirst("^[a-zA-Z0-9]+:(//)?", "")
-    val root = deScheme(fs.makeQualified(dst).toString)
 
-    val adds = scala.collection.mutable.ArrayBuffer[(String, Map[String, String], Long, Option[String])]()
     // ROW TRACKING preservation: compaction MATERIALIZES each row's
     // current row id / commit version into the physical columns named
     // by table configuration — rewritten rows keep their identity
@@ -3261,7 +3306,8 @@ object DeltaLog {
     // over baseRowId+index). The new files still get fresh baseRowIds
     // below, as every add must.
     val rtEnabled = rowTrackingEnabled(snap.configuration)
-    rewrite.zipWithIndex.foreach { case ((pv, fls), gi) =>
+    val adds = rewriteGroups(spark, deltaPath, snap.partitionColumns,
+      rewrite, s"$v") { (_, fls) =>
       // existing deletion vectors APPLY during compaction — reading
       // raw parquet here would resurrect logically-deleted rows in
       // the rewritten files (and dataChange=false would hide it from
@@ -3290,72 +3336,17 @@ object DeltaLog {
         }
       val nFiles = math.max(1L,
         (fls.map(_.size).sum + targetFileBytes - 1) / targetFileBytes).toInt
-      val out =
-        if (zBy.nonEmpty) Layout.zorderBy(df, nFiles, zBy)
-        else df.coalesce(nFiles)
-      val uniq = java.util.UUID.randomUUID().toString.take(8)
-      val tmp = new Path(dst, s".tmp-opt-$v-$gi-${java.util.UUID.randomUUID()}")
-      out.write.parquet(tmp.toString)
-      val dirs = snap.partitionColumns.map(c =>
-        s"${hiveEscape(c)}=${Option(pv.getOrElse(c, null))
-          .map(hiveEscape).getOrElse("__HIVE_DEFAULT_PARTITION__")}")
-      val parts = fs.listStatus(tmp).toSeq
-        .filter(_.getPath.getName.endsWith(".parquet")).sortBy(_.getPath.getName)
-      parts.zipWithIndex.foreach { case (st, i) =>
-        val rel = (dirs :+ s"part-$v-$uniq-$gi-$i.parquet").mkString("/")
-        val fin = new Path(dst, rel)
-        fs.mkdirs(fin.getParent)
-        if (!fs.rename(st.getPath, fin))
-          throw new IllegalStateException(s"rename failed for $rel")
-        adds += ((rel, pv, fs.getFileStatus(fin).getLen,
-          footerStats(fsConf, fin)))
-      }
-      fs.delete(tmp, true)
+      if (zBy.nonEmpty) Layout.zorderBy(df, nFiles, zBy)
+      else df.coalesce(nFiles)
     }
 
-    def pvJson(pv: Map[String, String]): String =
-      pv.toSeq.sortBy(_._1).map { case (k, vv) =>
-        s"${jsEscape(k)}:${if (vv == null) "null" else jsEscape(vv)}"
-      }.mkString("{", ",", "}")
-    val lines = scala.collection.mutable.ArrayBuffer[String]()
-    rewrite.foreach { case (_, fls) =>
-      fls.foreach { f =>
-        val rel = encodePath(deScheme(new Path(f.path).toString)
-          .stripPrefix(root + "/"))
-        lines += s"""{"remove":{"path":${jsEscape(rel)},"deletionTimestamp":$now,"dataChange":false}}"""
-      }
-    }
-    val rtOptBases: Seq[Option[Long]] =
-      if (!rtEnabled) adds.toSeq.map(_ => None)
-      else {
-        var nextId = rowIdHighWaterMark(snap) + 1
-        adds.toSeq.map { case (_, _, _, st) =>
-          val n = numRecordsOf(st).getOrElse(throw new IllegalStateException(
-            "row tracking needs numRecords stats on compacted files"))
-          val b = nextId; nextId += n; Some(b)
-        }
-      }
-    adds.toSeq.zip(rtOptBases).foreach { case ((rel, pv, sz, st), base) =>
-      val statsPart = st.map(j => s""","stats":${jsEscape(j)}""").getOrElse("")
-      val rtPart = base.map(b =>
-        s""","baseRowId":$b,"defaultRowCommitVersion":$v""").getOrElse("")
-      lines += s"""{"add":{"path":${jsEscape(encodePath(rel))},"partitionValues":${pvJson(pv)},"size":$sz,"modificationTime":$now,"dataChange":false$statsPart$rtPart}}"""
-    }
-    if (rtEnabled && adds.nonEmpty) {
-      val hwmNew = rtOptBases.last.get +
-        numRecordsOf(adds.last._4).getOrElse(0L) - 1L
-      lines += domainMetadataLine(RowTrackingDomain,
-        s"""{"rowIdHighWaterMark":$hwmNew}""", removed = false)
-    }
+    val lines = fileActions(spark, deltaPath, Some(snap), rewrite, adds, v,
+      now, dataChange = false)
     // compaction read exactly the files it removes — a concurrent
     // APPEND is disjoint, the commit rebases past it; a winner
     // touching the same files refuses
-    val vc = commitCas(spark, deltaPath, v, lines.toSeq, ReadFiles,
-      operation = "OPTIMIZE", ictHint = Some(ictOn(snap.configuration)))
-    maybeCheckpoint(spark, deltaPath, vc, checkpointInterval,
-      snap.configuration)
-    maybeUniform(spark, deltaPath, snap.configuration)
-    vc
+    commitTail(spark, deltaPath, v, lines, ReadFiles, "OPTIMIZE",
+      checkpointInterval, Some(snap.configuration), snap.configuration)
   }
 
   /** `VACUUM` — physically delete data files referenced by NONE of
@@ -3399,8 +3390,7 @@ object DeltaLog {
           s"$deltaPath is a zero-copy mirror of $src — vacuum the " +
             "owning table, never the mirror")
       }
-    def deScheme(s: String) = s.replaceFirst("^[a-zA-Z0-9]+:(//)?", "")
-    val root = deScheme(fs.makeQualified(dst).toString)
+    val root = tableRoot(fs, deltaPath)
     val versions = listVersions(spark, deltaPath)
     val referenced: Set[String] = versions.takeRight(keepVersions)
       .flatMap(kv => snapshot(spark, deltaPath, versionAsOf = Some(kv)).files
@@ -3567,11 +3557,9 @@ object DeltaLog {
       s"cannot restore $deltaPath forward to version ${tgt.version}")
     if (tgt.version == cur.version) return cur.version
 
-    val fsConf = spark.sparkContext.hadoopConfiguration
-    val dst = new Path(deltaPath)
-    val fs = dst.getFileSystem(fsConf)
-    def deScheme(s: String) = s.replaceFirst("^[a-zA-Z0-9]+:(//)?", "")
-    val root = deScheme(fs.makeQualified(dst).toString)
+    val fs = new Path(deltaPath).getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+    val root = tableRoot(fs, deltaPath)
 
     // vacuum may have physically removed files only the target
     // references — verify BEFORE committing a snapshot full of ghosts
@@ -3597,14 +3585,6 @@ object DeltaLog {
     }
 
     val now = System.currentTimeMillis()
-    def pvJson(pv: Map[String, String]): String =
-      pv.toSeq.sortBy(_._1).map { case (k, vv) =>
-        s"${jsEscape(k)}:${if (vv == null) "null" else jsEscape(vv)}"
-      }.mkString("{", ",", "}")
-    def relOf(p: String): String =
-      encodePath(deScheme(new Path(p).toString)
-        .stripPrefix(root + "/"))
-
     val lines = scala.collection.mutable.ArrayBuffer[String]()
     if (tgt.schema != cur.schema ||
       tgt.partitionColumns != cur.partitionColumns ||
@@ -3614,27 +3594,15 @@ object DeltaLog {
       lines += metaDataLine(tableId, tgt.schema.json, tgt.partitionColumns,
         now, tgt.configuration)
     }
-    (removes ++ dvSwaps).foreach { f =>
-      lines += s"""{"remove":{"path":${jsEscape(relOf(f.path))},"deletionTimestamp":$now,"dataChange":true}}"""
-    }
-    readds.foreach { f =>
-      // offset is serialized ONLY when the descriptor carries one —
-      // inline ('i') DVs must omit it per PROTOCOL.md
-      val dvPart = dvOf(f).map { d =>
-        val offsetPart = d.offset.map(o => s""","offset":$o""").getOrElse("")
-        s""","deletionVector":{"storageType":${jsEscape(d.storageType)},"pathOrInlineDv":${jsEscape(d.pathOrInlineDv)}$offsetPart,"sizeInBytes":${d.sizeInBytes},"cardinality":${d.cardinality}}"""
-      }.getOrElse("")
-      val statsPart = f.stats.map(j => s""","stats":${jsEscape(j)}""").getOrElse("")
-      lines += s"""{"add":{"path":${jsEscape(relOf(f.path))},"partitionValues":${pvJson(f.partitionValues)},"size":${f.size},"modificationTime":$now,"dataChange":true$dvPart$statsPart${rtCarry(f)}}}"""
-    }
+    (removes ++ dvSwaps).foreach(f =>
+      lines += removeLine(relPath(root, f.path), now, dataChange = true))
+    readds.foreach(f =>
+      lines += addLine(relPath(root, f.path), f.partitionValues, f.size, now,
+        dataChange = true, f.stats, dvOf(f), rtCarry(f)))
     if (lines.isEmpty) return cur.version // same file set + metadata
-    val v = cur.version + 1
-    val vc = commitCas(spark, deltaPath, v, lines.toSeq, ReadTable,
-      operation = "RESTORE", ictHint = Some(ictOn(cur.configuration)))
-    maybeCheckpoint(spark, deltaPath, vc, checkpointInterval,
+    commitTail(spark, deltaPath, cur.version + 1, lines.toSeq, ReadTable,
+      "RESTORE", checkpointInterval, Some(cur.configuration),
       tgt.configuration)
-    maybeUniform(spark, deltaPath, tgt.configuration)
-    vc
   }
 
   /** Row-level `DELETE FROM … WHERE predicate` as COPY-ON-WRITE, the
@@ -3746,21 +3714,15 @@ object DeltaLog {
 
     val fsConf = spark.sparkContext.hadoopConfiguration
     val dst = new Path(deltaPath)
-    val fs = dst.getFileSystem(fsConf)
-    def deScheme(s: String) = s.replaceFirst("^[a-zA-Z0-9]+:(//)?", "")
-    val root = deScheme(fs.makeQualified(dst).toString)
+    val root = tableRoot(dst.getFileSystem(fsConf), deltaPath)
     val byFile: Map[String, Seq[Long]] = matchedPos.groupBy(_._1)
       .view.mapValues(_.map(_._2).toSeq).toMap
     val v = snap.version + 1
     val now = System.currentTimeMillis()
 
-    def pvJson(pv: Map[String, String]): String =
-      pv.toSeq.sortBy(_._1).map { case (k, vv) =>
-        s"${jsEscape(k)}:${if (vv == null) "null" else jsEscape(vv)}"
-      }.mkString("{", ",", "}")
     // UPDATE: the transformed matched rows land as fresh files in the
     // table's layout (same hive staging as write/merge)
-    val appendAdds: Seq[(String, Map[String, String], Long, Option[String])] =
+    val appendAdds: Seq[Adopted] =
       makeAppend.map { mk =>
         val rows = mk(matchedFull.get)
           .select(snap.schema.fieldNames.map(col).toIndexedSeq: _*)
@@ -3809,26 +3771,18 @@ object DeltaLog {
         .getOrElse(Seq.empty)
       val merged = (existing ++ byFile(fileKeyOf(f.path))).distinct.sorted
       val desc = DeletionVectors.writeDvFile(fsConf, deltaPath, merged)
-      val rel = encodePath(deScheme(new Path(f.path).toString)
-        .stripPrefix(root + "/"))
-      val dvJson = s""""deletionVector":{"storageType":${jsEscape(desc.storageType)},"pathOrInlineDv":${jsEscape(desc.pathOrInlineDv)},"offset":${desc.offset.getOrElse(1)},"sizeInBytes":${desc.sizeInBytes},"cardinality":${desc.cardinality}}"""
-      val statsPart = f.stats.map(j => s""","stats":${jsEscape(j)}""").getOrElse("")
-      lines += s"""{"remove":{"path":${jsEscape(rel)},"deletionTimestamp":$now,"dataChange":true}}"""
-      lines += s"""{"add":{"path":${jsEscape(rel)},"partitionValues":${pvJson(f.partitionValues)},"size":${f.size},"modificationTime":$now,"dataChange":true,$dvJson$statsPart${rtCarry(f)}}}"""
+      val rel = relPath(root, f.path)
+      lines += removeLine(rel, now, dataChange = true)
+      lines += addLine(rel, f.partitionValues, f.size, now, dataChange = true,
+        f.stats, Some(desc), rtCarry(f))
     }
-    val (rtParts, rtDomain) = rtFresh(snap, appendAdds.map(_._4), v)
-    appendAdds.zip(rtParts).foreach { case ((rel, pv, sz, st), rtPart) =>
-      val statsPart = st.map(j => s""","stats":${jsEscape(j)}""").getOrElse("")
-      lines += s"""{"add":{"path":${jsEscape(encodePath(rel))},"partitionValues":${pvJson(pv)},"size":$sz,"modificationTime":$now,"dataChange":true$statsPart$rtPart}}"""
-    }
-    lines ++= rtDomain
+    lines ++= freshAdds(Some(snap), appendAdds, v, now, dataChange = true)
     lines ++= cdcLinesOut
-    val vc = commitCas(spark, deltaPath, v, lines.toSeq, ReadTable,
-      operation = if (makeAppend.isDefined) "UPDATE" else "DELETE",
-      ictHint = Some(ictOn(snap.configuration)))
-    maybeCheckpoint(spark, deltaPath, vc, checkpointInterval,
-      snap.configuration)
-    Some(vc)
+    // a UniForm table never reaches here (see above): the tail's
+    // mirror step is a no-op
+    Some(commitTail(spark, deltaPath, v, lines.toSeq, ReadTable,
+      if (makeAppend.isDefined) "UPDATE" else "DELETE", checkpointInterval,
+      Some(snap.configuration), snap.configuration))
   }
 
   /** Row-level `UPDATE … SET assignments WHERE predicate`, copy-on-
@@ -3967,12 +3921,7 @@ object DeltaLog {
 
     val dataSchema = StructType(snap.schema.filterNot(
       f => snap.partitionColumns.contains(f.name)))
-    val fsConf = spark.sparkContext.hadoopConfiguration
     val dst = new Path(deltaPath)
-    val fs = dst.getFileSystem(fsConf)
-    def deScheme(s: String) = s.replaceFirst("^[a-zA-Z0-9]+:(//)?", "")
-    def fileKey(p: String) = deScheme(
-      org.apache.spark.paths.SparkPath.fromPathString(p).urlEncoded)
     val pc = snap.partitionColumns
 
     // ONE match-detection job: which target files hold a source key
@@ -3986,7 +3935,7 @@ object DeltaLog {
           if (pc.isEmpty) base
           else {
             val pvDf = broadcast(snap.files.map(f =>
-              (fileKey(f.path), pc.map(c => f.partitionValues.getOrElse(c, null))))
+              (fileKeyOf(f.path), pc.map(c => f.partitionValues.getOrElse(c, null))))
               .toDF("__path", "__pv"))
             base.join(pvDf, Seq("__path"), "left")
               .select(col("__path") +: snap.schema.map(f =>
@@ -3998,47 +3947,24 @@ object DeltaLog {
         withPv.join(srcKeys, keyCols, "left_semi")
           .select("__path").distinct().as[String].collect().toSet
       }
-    val toRewrite = snap.files.filter(f => matched(fileKey(f.path)))
+    val toRewrite = snap.files.filter(f => matched(fileKeyOf(f.path)))
 
     val v = snap.version + 1
     val now = System.currentTimeMillis()
-    val root = deScheme(fs.makeQualified(dst).toString)
-    val adds = scala.collection.mutable.ArrayBuffer[(String, Map[String, String], Long, Option[String])]()
     // rewrite matched files with the matched keys dropped
-    toRewrite.groupBy(_.partitionValues).toSeq
-      .sortBy(_._1.toSeq.sortBy(_._1).mkString(","))
-      .zipWithIndex.foreach { case ((pv, fls), gi) =>
+    val adds = rewriteGroups(spark, deltaPath, pc, toRewrite, s"mrg-$v") {
+      (pv, fls) =>
         val grp = scanLive(spark, deltaPath, dataSchema, fls).drop("__path")
         val full = grp.select(snap.schema.map(f =>
           if (pc.contains(f.name))
             lit(pv.getOrElse(f.name, null)).cast(f.dataType).as(f.name)
           else col(f.name)): _*)
-        val survivors = full.join(srcKeys, keyCols, "left_anti")
+        full.join(srcKeys, keyCols, "left_anti")
           .select(dataSchema.fieldNames.map(col): _*)
-        val uniq = java.util.UUID.randomUUID().toString.take(8)
-        val tmp = new Path(dst, s".tmp-mrg-$v-$gi-${java.util.UUID.randomUUID()}")
-        survivors.write.parquet(tmp.toString)
-        val dirs = pc.map(c =>
-          s"${hiveEscape(c)}=${Option(pv.getOrElse(c, null))
-            .map(hiveEscape).getOrElse("__HIVE_DEFAULT_PARTITION__")}")
-        val parts = fs.listStatus(tmp).toSeq
-          .filter(_.getPath.getName.endsWith(".parquet")).sortBy(_.getPath.getName)
-        parts.zipWithIndex.foreach { case (st, i) =>
-          val stats = footerStats(fsConf, st.getPath)
-          if (!stats.exists(_.contains("\"numRecords\":0"))) {
-            val rel = (dirs :+ s"part-mrg-$v-$uniq-$gi-$i.parquet").mkString("/")
-            val fin = new Path(dst, rel)
-            fs.mkdirs(fin.getParent)
-            if (!fs.rename(st.getPath, fin))
-              throw new IllegalStateException(s"rename failed for $rel")
-            adds += ((rel, pv, fs.getFileStatus(fin).getLen, stats))
-          }
-        }
-        fs.delete(tmp, true)
-      }
-    // the whole source (updates + inserts) lands as fresh files in
-    // the table's layout
-    adds ++= stageData(spark, src, dst, pc, s"mrg-$v")
+    } ++
+      // the whole source (updates + inserts) lands as fresh files in
+      // the table's layout
+      stageData(spark, src, dst, pc, s"mrg-$v")
 
     // CDF legs: matched target rows (update_preimage), the matching
     // source rows replacing them (update_postimage), unmatched source
@@ -4057,7 +3983,7 @@ object DeltaLog {
               if (pc.isEmpty) grp.drop("__path")
               else {
                 val pvDf = broadcast(toRewrite.map(f =>
-                  (fileKey(f.path),
+                  (fileKeyOf(f.path),
                     pc.map(c => f.partitionValues.getOrElse(c, null))))
                   .toDF("__path", "__pv"))
                 grp.join(pvDf, Seq("__path"), "left")
@@ -4083,29 +4009,11 @@ object DeltaLog {
         lines
       }
 
-    def pvJson(pv: Map[String, String]): String =
-      pv.toSeq.sortBy(_._1).map { case (k, vv) =>
-        s"${jsEscape(k)}:${if (vv == null) "null" else jsEscape(vv)}"
-      }.mkString("{", ",", "}")
-    val lines = scala.collection.mutable.ArrayBuffer[String]()
-    toRewrite.foreach { f =>
-      val rel = encodePath(deScheme(new Path(f.path).toString)
-        .stripPrefix(root + "/"))
-      lines += s"""{"remove":{"path":${jsEscape(rel)},"deletionTimestamp":$now,"dataChange":true}}"""
-    }
-    val (rtParts, rtDomain) = rtFresh(snap, adds.toSeq.map(_._4), v)
-    adds.toSeq.zip(rtParts).foreach { case ((rel, pv, sz, st), rtPart) =>
-      val statsPart = st.map(j => s""","stats":${jsEscape(j)}""").getOrElse("")
-      lines += s"""{"add":{"path":${jsEscape(encodePath(rel))},"partitionValues":${pvJson(pv)},"size":$sz,"modificationTime":$now,"dataChange":true$statsPart$rtPart}}"""
-    }
-    lines ++= rtDomain
-    lines ++= cdcLinesOut
-    val vc = commitCas(spark, deltaPath, v, lines.toSeq, ReadTable,
-      operation = "MERGE", ictHint = Some(ictOn(snap.configuration)))
-    maybeCheckpoint(spark, deltaPath, vc, checkpointInterval,
+    commitTail(spark, deltaPath, v,
+      fileActions(spark, deltaPath, Some(snap), toRewrite, adds, v, now,
+        dataChange = true) ++ cdcLinesOut,
+      ReadTable, "MERGE", checkpointInterval, Some(snap.configuration),
       snap.configuration)
-    maybeUniform(spark, deltaPath, snap.configuration)
-    vc
   }
 
   /** GENERALIZED MERGE — the flexible SQL shapes (`WHEN MATCHED [AND
@@ -4171,11 +4079,6 @@ object DeltaLog {
       "merge source has duplicate keys — aggregate it first")
     val pc = snap.partitionColumns
     val dataSchema = StructType(snap.schema.filterNot(f => pc.contains(f.name)))
-    val fsConf = spark.sparkContext.hadoopConfiguration
-    val dst = new Path(deltaPath)
-    val fs = dst.getFileSystem(fsConf)
-    def deScheme(s: String) = s.replaceFirst("^[a-zA-Z0-9]+:(//)?", "")
-    val root = deScheme(fs.makeQualified(dst).toString)
 
     // target live rows (DVs applied) with partition values, __path
     // and the physical row index — the exact row identity the
@@ -4287,43 +4190,19 @@ object DeltaLog {
 
     val v = snap.version + 1
     val now = System.currentTimeMillis()
-    val adds = scala.collection.mutable.ArrayBuffer[(String, Map[String, String], Long, Option[String])]()
     // rewrite affected files dropping exactly the AFFECTED ROWS (by
     // physical position) — condition-false matches survive in content
     val affectedRowIds = bsAffected
       .map(b => affected.select("__path", "__ri")
         .unionByName(b.select("__path", "__ri")))
       .getOrElse(affected.select("__path", "__ri"))
-    toRewrite.groupBy(_.partitionValues).toSeq
-      .sortBy(_._1.toSeq.sortBy(_._1).mkString(","))
-      .zipWithIndex.foreach { case ((pv, fls), gi) =>
-        val grp = scanLive(spark, deltaPath, dataSchema, fls,
-          keepRowIndex = true)
-        val survivors = grp.join(affectedRowIds, Seq("__path", "__ri"),
-          "left_anti")
+    val adds = rewriteGroups(spark, deltaPath, pc, toRewrite, s"mrgf-$v") {
+      (_, fls) =>
+        scanLive(spark, deltaPath, dataSchema, fls, keepRowIndex = true)
+          .join(affectedRowIds, Seq("__path", "__ri"), "left_anti")
           .select(dataSchema.fieldNames.map(col): _*)
-        val uniq = java.util.UUID.randomUUID().toString.take(8)
-        val tmp = new Path(dst, s".tmp-mrgf-$v-$gi-${java.util.UUID.randomUUID()}")
-        survivors.write.parquet(tmp.toString)
-        val dirs = pc.map(c =>
-          s"${hiveEscape(c)}=${Option(pv.getOrElse(c, null))
-            .map(hiveEscape).getOrElse("__HIVE_DEFAULT_PARTITION__")}")
-        val parts = fs.listStatus(tmp).toSeq
-          .filter(_.getPath.getName.endsWith(".parquet")).sortBy(_.getPath.getName)
-        parts.zipWithIndex.foreach { case (st, i) =>
-          val stats = footerStats(fsConf, st.getPath)
-          if (!stats.exists(_.contains("\"numRecords\":0"))) {
-            val rel = (dirs :+ s"part-mrgf-$v-$uniq-$gi-$i.parquet").mkString("/")
-            val fin = new Path(dst, rel)
-            fs.mkdirs(fin.getParent)
-            if (!fs.rename(st.getPath, fin))
-              throw new IllegalStateException(s"rename failed for $rel")
-            adds += ((rel, pv, fs.getFileStatus(fin).getLen, stats))
-          }
-        }
-        fs.delete(tmp, true)
-      }
-    appendFrame.foreach(af => adds ++= stageData(spark, af, dst, pc, s"mrgf-$v"))
+    } ++ appendFrame.toSeq.flatMap(af =>
+      stageData(spark, af, new Path(deltaPath), pc, s"mrgf-$v"))
 
     // CDF legs: the matched clause's pre-images (delete or
     // update_preimage), post-images, and inserts — same commit
@@ -4355,34 +4234,14 @@ object DeltaLog {
           .getOrElse(Seq.empty)
       }
 
-    def pvJson(pv: Map[String, String]): String =
-      pv.toSeq.sortBy(_._1).map { case (k, vv) =>
-        s"${jsEscape(k)}:${if (vv == null) "null" else jsEscape(vv)}"
-      }.mkString("{", ",", "}")
-    val lines = scala.collection.mutable.ArrayBuffer[String]()
-    toRewrite.foreach { f =>
-      val rel = encodePath(deScheme(new Path(f.path).toString)
-        .stripPrefix(root + "/"))
-      lines += s"""{"remove":{"path":${jsEscape(rel)},"deletionTimestamp":$now,"dataChange":true}}"""
-    }
-    val (rtParts, rtDomain) = rtFresh(snap, adds.toSeq.map(_._4), v)
-    adds.toSeq.zip(rtParts).foreach { case ((rel, pv, sz, st), rtPart) =>
-      val statsPart = st.map(j => s""","stats":${jsEscape(j)}""").getOrElse("")
-      lines += s"""{"add":{"path":${jsEscape(encodePath(rel))},"partitionValues":${pvJson(pv)},"size":$sz,"modificationTime":$now,"dataChange":true$statsPart$rtPart}}"""
-    }
-    lines ++= rtDomain
-    lines ++= cdcLinesOut
     // the streaming idempotence marker, as in [[write]]
-    txn.foreach { case (appId, tv) =>
-      lines += s"""{"txn":{"appId":${jsEscape(appId)},"version":$tv,"lastUpdated":$now}}"""
-    }
     affected.unpersist(); bsAffected.foreach(_.unpersist()); src.unpersist()
-    val vc = commitCas(spark, deltaPath, v, lines.toSeq, ReadTable,
-      operation = "MERGE", ictHint = Some(ictOn(snap.configuration)))
-    maybeCheckpoint(spark, deltaPath, vc, checkpointInterval,
+    commitTail(spark, deltaPath, v,
+      fileActions(spark, deltaPath, Some(snap), toRewrite, adds, v, now,
+        dataChange = true) ++ cdcLinesOut ++
+        txn.map { case (appId, tv) => txnLine(appId, tv, now) },
+      ReadTable, "MERGE", checkpointInterval, Some(snap.configuration),
       snap.configuration)
-    maybeUniform(spark, deltaPath, snap.configuration)
-    vc
   }
 
   /** Shared copy-on-write core: locate files with actual matches,
@@ -4409,12 +4268,6 @@ object DeltaLog {
     if (candidates.isEmpty) return snap.version
     val dataSchema = StructType(snap.schema.filterNot(
       f => snap.partitionColumns.contains(f.name)))
-    val fsConf = spark.sparkContext.hadoopConfiguration
-    val dst = new Path(deltaPath)
-    val fs = dst.getFileSystem(fsConf)
-    def deScheme(s: String) = s.replaceFirst("^[a-zA-Z0-9]+:(//)?", "")
-    def fileKey(p: String) = deScheme(
-      org.apache.spark.paths.SparkPath.fromPathString(p).urlEncoded)
 
     // ONE match-detection job over all candidate files: which files
     // hold at least one matching row (existing DVs applied — a row
@@ -4425,7 +4278,7 @@ object DeltaLog {
       if (pc.isEmpty) base
       else {
         val pvDf = broadcast(candidates.map(f =>
-          (fileKey(f.path), pc.map(c => f.partitionValues.getOrElse(c, null))))
+          (fileKeyOf(f.path), pc.map(c => f.partitionValues.getOrElse(c, null))))
           .toDF("__path", "__pv"))
         val joined = base.join(pvDf, Seq("__path"), "left")
         joined.select(col("__path") +: snap.schema.map(f =>
@@ -4437,7 +4290,7 @@ object DeltaLog {
     val matched = withPv.where(predicate)
       .select("__path").distinct().as[String].collect().toSet
     if (matched.isEmpty) return snap.version
-    val toRewrite = candidates.filter(f => matched(fileKey(f.path)))
+    val toRewrite = candidates.filter(f => matched(fileKeyOf(f.path)))
 
     // CHECK constraints + NOT NULL bind EVERY writer, not just the
     // append path: validate the POST-IMAGE of the rewrite before
@@ -4455,72 +4308,28 @@ object DeltaLog {
     // attached as typed literals so the predicate sees the full row)
     val v = snap.version + 1
     val now = System.currentTimeMillis()
-    val root = deScheme(fs.makeQualified(dst).toString)
-    val adds = scala.collection.mutable.ArrayBuffer[(String, Map[String, String], Long, Option[String])]()
     val cdcFrames = scala.collection.mutable.ArrayBuffer[DataFrame]()
     val wantCdc = cdcOf.isDefined && cdfEnabled(snap)
-    toRewrite.groupBy(_.partitionValues).toSeq
-      .sortBy(_._1.toSeq.sortBy(_._1).mkString(","))
-      .zipWithIndex.foreach { case ((pv, fls), gi) =>
+    val adds = rewriteGroups(spark, deltaPath, pc, toRewrite, s"$v") {
+      (pv, fls) =>
         val grp = scanLive(spark, deltaPath, dataSchema, fls).drop("__path")
         val full = grp.select(snap.schema.map(f =>
           if (pc.contains(f.name))
             lit(pv.getOrElse(f.name, null)).cast(f.dataType).as(f.name)
           else col(f.name)): _*)
         if (wantCdc) cdcFrames += cdcOf.get(full, predicate)
-        val out = transform(full, predicate)
-          .select(dataSchema.fieldNames.map(col): _*)
-        val uniq = java.util.UUID.randomUUID().toString.take(8)
-        val tmp = new Path(dst, s".tmp-cow-$v-$gi-${java.util.UUID.randomUUID()}")
-        out.write.parquet(tmp.toString)
-        val dirs = pc.map(c =>
-          s"${hiveEscape(c)}=${Option(pv.getOrElse(c, null))
-            .map(hiveEscape).getOrElse("__HIVE_DEFAULT_PARTITION__")}")
-        val parts = fs.listStatus(tmp).toSeq
-          .filter(_.getPath.getName.endsWith(".parquet")).sortBy(_.getPath.getName)
-        parts.zipWithIndex.foreach { case (st, i) =>
-          // an empty survivor part (all rows of the group deleted)
-          // stays un-adopted: a pure remove, no 0-row add files —
-          // emptiness comes from the footer (no scan job)
-          val stats = footerStats(fsConf, st.getPath)
-          val isEmpty = stats.exists(_.contains("\"numRecords\":0"))
-          if (!isEmpty) {
-            val rel = (dirs :+ s"part-$v-$uniq-$gi-$i.parquet").mkString("/")
-            val fin = new Path(dst, rel)
-            fs.mkdirs(fin.getParent)
-            if (!fs.rename(st.getPath, fin))
-              throw new IllegalStateException(s"rename failed for $rel")
-            adds += ((rel, pv, fs.getFileStatus(fin).getLen, stats))
-          }
-        }
-        fs.delete(tmp, true)
-      }
-
-    def pvJson(pv: Map[String, String]): String =
-      pv.toSeq.sortBy(_._1).map { case (k, vv) =>
-        s"${jsEscape(k)}:${if (vv == null) "null" else jsEscape(vv)}"
-      }.mkString("{", ",", "}")
-    val lines = scala.collection.mutable.ArrayBuffer[String]()
-    toRewrite.foreach { f =>
-      val rel = encodePath(deScheme(new Path(f.path).toString)
-        .stripPrefix(root + "/"))
-      lines += s"""{"remove":{"path":${jsEscape(rel)},"deletionTimestamp":$now,"dataChange":true}}"""
+        transform(full, predicate).select(dataSchema.fieldNames.map(col): _*)
     }
-    val (rtParts, rtDomain) = rtFresh(snap, adds.toSeq.map(_._4), v)
-    adds.toSeq.zip(rtParts).foreach { case ((rel, pv, sz, st), rtPart) =>
-      val statsPart = st.map(j => s""","stats":${jsEscape(j)}""").getOrElse("")
-      lines += s"""{"add":{"path":${jsEscape(encodePath(rel))},"partitionValues":${pvJson(pv)},"size":$sz,"modificationTime":$now,"dataChange":true$statsPart$rtPart}}"""
-    }
-    lines ++= rtDomain
-    if (wantCdc && cdcFrames.nonEmpty)
-      lines ++= stageCdcLines(spark, deltaPath, snap,
-        cdcFrames.reduce(_.unionByName(_)), v)
-    val vc = commitCas(spark, deltaPath, v, lines.toSeq, ReadTable,
-      operation = opName, ictHint = Some(ictOn(snap.configuration)))
-    maybeCheckpoint(spark, deltaPath, vc, checkpointInterval,
+    val cdcLines =
+      if (wantCdc && cdcFrames.nonEmpty)
+        stageCdcLines(spark, deltaPath, snap,
+          cdcFrames.reduce(_.unionByName(_)), v)
+      else Nil
+    commitTail(spark, deltaPath, v,
+      fileActions(spark, deltaPath, Some(snap), toRewrite, adds, v, now,
+        dataChange = true) ++ cdcLines,
+      ReadTable, opName, checkpointInterval, Some(snap.configuration),
       snap.configuration)
-    maybeUniform(spark, deltaPath, snap.configuration)
-    vc
   }
 
   /** `ALTER TABLE … ADD COLUMNS` — commit a metaData-only version
@@ -4977,32 +4786,34 @@ object DeltaLog {
       catch { case _: Exception => None }
     }
 
-  /** `,baseRowId:…,defaultRowCommitVersion:…` carried VERBATIM from an
+  /** (baseRowId, defaultRowCommitVersion) carried VERBATIM from an
     * existing [[AddFile]] — for re-adds whose rows did not move (DV
     * commits, restores, clones): their ids must not move either. */
-  private def rtCarry(f: AddFile): String =
-    f.baseRowId.map(b =>
-      s""","baseRowId":$b,"defaultRowCommitVersion":${f.defaultRowCommitVersion.getOrElse(0L)}""")
-      .getOrElse("")
+  private def rtCarry(f: AddFile): Option[(Long, Long)] =
+    f.baseRowId.map(b => (b, f.defaultRowCommitVersion.getOrElse(0L)))
 
-  /** Fresh contiguous row-id suffixes for a batch of new files (one
-    * per stats entry, sized by its numRecords), plus the advanced
-    * high-watermark domain line. `("", …, None)` when the table is
-    * not row-tracked — callers splice unconditionally. */
-  private def rtFresh(snap: Snapshot, statsList: Seq[Option[String]],
-                      v: Long): (Seq[String], Option[String]) =
-    if (!rowTrackingEnabled(snap.configuration) || statsList.isEmpty)
-      (statsList.map(_ => ""), None)
-    else {
-      var next = rowIdHighWaterMark(snap) + 1
-      val parts = statsList.map { st =>
-        val n = numRecordsOf(st).getOrElse(throw new IllegalStateException(
-          "row tracking needs numRecords stats on rewritten files"))
-        val p = s""","baseRowId":$next,"defaultRowCommitVersion":$v"""
-        next += n; p
-      }
-      (parts, Some(domainMetadataLine(RowTrackingDomain,
-        s"""{"rowIdHighWaterMark":${next - 1}}""", removed = false)))
+  /** Fresh contiguous row ids for a batch of new files (one
+    * (baseRowId, version) per stats entry, sized by its numRecords,
+    * from the table's high watermark), plus the advanced watermark
+    * domain line. All `None` when the table is not row-tracked. The
+    * attempted version stamps defaultRowCommitVersion; [[commitCas]]
+    * re-stamps it (and shifts the ranges past a concurrent winner's
+    * watermark) on rebase. */
+  private def rtFresh(table: Option[Snapshot], statsList: Seq[Option[String]],
+                      v: Long): (Seq[Option[(Long, Long)]], Option[String]) =
+    table.filter(t => rowTrackingEnabled(t.configuration)) match {
+      case Some(snap) if statsList.nonEmpty =>
+        var next = rowIdHighWaterMark(snap) + 1
+        val ids = statsList.map { st =>
+          val n = numRecordsOf(st).getOrElse(throw new IllegalStateException(
+            "row tracking needs numRecords stats on new files"))
+          val b = next
+          next += n
+          Some((b, v))
+        }
+        (ids, Some(domainMetadataLine(RowTrackingDomain,
+          s"""{"rowIdHighWaterMark":${next - 1}}""", removed = false)))
+      case _ => (statsList.map(_ => None), None)
     }
 
   /** Enable ROW TRACKING on an existing table — one commit carrying:
@@ -5027,8 +4838,7 @@ object DeltaLog {
     }
     val fs = new Path(deltaPath).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
-    def deScheme(s: String) = s.replaceFirst("^[a-zA-Z0-9]+:(//)?", "")
-    val root = deScheme(fs.makeQualified(new Path(deltaPath)).toString)
+    val root = tableRoot(fs, deltaPath)
     val now = System.currentTimeMillis()
     val tableId = java.util.UUID.nameUUIDFromBytes(
       deltaPath.getBytes("UTF-8")).toString
@@ -5044,17 +4854,10 @@ object DeltaLog {
       prior.partitionColumns, now, newConf)
     var next = rowIdHighWaterMark(prior) + 1
     val attemptV = prior.version + 1
-    def pvJson(pv: Map[String, String]): String =
-      pv.toSeq.sortBy(_._1).map { case (k, vv) =>
-        s"${jsEscape(k)}:${if (vv == null) "null" else jsEscape(vv)}"
-      }.mkString("{", ",", "}")
     counts.foreach { case (f, n) =>
-      val rel = encodePath(deScheme(new Path(f.path).toString)
-        .stripPrefix(root + "/"))
-      val statsPart = f.stats.map(j => s""","stats":${jsEscape(j)}""").getOrElse("")
-      val dvPart = f.dv.map(d =>
-        s""","deletionVector":{"storageType":${jsEscape(d.storageType)},"pathOrInlineDv":${jsEscape(d.pathOrInlineDv)}${d.offset.map(o => s""","offset":$o""").getOrElse("")},"sizeInBytes":${d.sizeInBytes},"cardinality":${d.cardinality}}""").getOrElse("")
-      lines += s"""{"add":{"path":${jsEscape(rel)},"partitionValues":${pvJson(f.partitionValues)},"size":${f.size},"modificationTime":${f.modificationTime},"dataChange":false$statsPart$dvPart,"baseRowId":$next,"defaultRowCommitVersion":$attemptV}}"""
+      lines += addLine(relPath(root, f.path), f.partitionValues, f.size,
+        f.modificationTime, dataChange = false, f.stats, f.dv,
+        Some((next, attemptV)))
       next += n
     }
     lines += domainMetadataLine(RowTrackingDomain,
@@ -5360,7 +5163,6 @@ object DeltaLog {
     val fsConf = spark.sparkContext.hadoopConfiguration
     val dst = new Path(deltaPath)
     val fs = dst.getFileSystem(fsConf)
-    def deScheme(s: String) = s.replaceFirst("^[a-zA-Z0-9]+:(//)?", "")
     require(deScheme(fs.makeQualified(dst).toString) !=
       deScheme(fs.makeQualified(new Path(icebergPath)).toString),
       "mirrorFromIceberg needs a SEPARATE target directory — an " +
@@ -5375,13 +5177,10 @@ object DeltaLog {
         "first (compaction folds the deletes away)")
 
     fs.mkdirs(logDir(deltaPath))
-    val existing = fs.listStatus(logDir(deltaPath)).toSeq
-      .map(_.getPath.getName)
-      .collect { case n if n.matches("\\d{20}\\.json") =>
-        n.stripSuffix(".json").toLong }.sorted
-    val v = existing.lastOption.map(_ + 1).getOrElse(0L)
     val prior: Option[Snapshot] =
-      if (existing.nonEmpty) Some(snapshot(spark, deltaPath)) else None
+      try Some(snapshot(spark, deltaPath))
+      catch { case _: EmptyLogException => None }
+    val v = prior.map(_.version + 1).getOrElse(0L)
     prior.foreach(p => require(
       p.configuration.contains("graft.mirrorOf"),
       s"$deltaPath exists and is not a mirror — refusing to overwrite " +
@@ -5411,14 +5210,14 @@ object DeltaLog {
         prior.get.configuration)
     }
     priorKeys.diff(currentKeys).toSeq.sorted.foreach { gone =>
-      lines += s"""{"remove":{"path":${jsEscape(encodePath(gone))},"deletionTimestamp":$now,"dataChange":true}}"""
+      lines += removeLine(encodePath(gone), now, dataChange = true)
     }
     current.filterNot(c => priorKeys(c._1)).foreach { case (key, f) =>
-      val stats = "{\"numRecords\":" + f.records + "}"
-      lines += s"""{"add":{"path":${jsEscape(encodePath(key))},"partitionValues":{},"size":${f.sizeBytes},"modificationTime":$now,"dataChange":true,"stats":${jsEscape(stats)}}}"""
+      lines += addLine(encodePath(key), Map.empty, f.sizeBytes, now,
+        dataChange = true, Some(s"""{"numRecords":${f.records}}"""))
     }
     // nothing changed since the last mirror: no empty commit
-    if (lines.isEmpty) return existing.last
+    if (lines.isEmpty) return v - 1
     commitCas(spark, deltaPath, v, lines.toSeq, ReadTable,
       operation = "MIRROR",
       ictHint = prior.map(p => ictOn(p.configuration)))
@@ -5496,8 +5295,7 @@ object DeltaLog {
     val fsConf = spark.sparkContext.hadoopConfiguration
     val dst = new Path(deltaPath)
     val fs = dst.getFileSystem(fsConf)
-    def deScheme(s: String) = s.replaceFirst("^[a-zA-Z0-9]+:(//)?", "")
-    val root = deScheme(fs.makeQualified(dst).toString)
+    val root = tableRoot(fs, deltaPath)
     val tableId = java.util.UUID.nameUUIDFromBytes(
       deltaPath.getBytes("UTF-8")).toString
     // the table's REAL protocol — a checkpoint that downgraded a
@@ -5509,8 +5307,7 @@ object DeltaLog {
     val metaRow = Row(tableId, null, snap.schema.json,
       snap.partitionColumns, snap.configuration, Row("parquet"))
     val addRows = snap.files.map { f =>
-      val rel = encodePath(deScheme(new Path(f.path).toString)
-        .stripPrefix(root + "/"))
+      val rel = relPath(root, f.path)
       // deletion vectors MUST survive consolidation — a checkpoint
       // that dropped them would resurrect merge-on-read-deleted rows
       val dvRow = f.dv.map(d => Row(d.storageType, d.pathOrInlineDv,

@@ -1468,15 +1468,11 @@ object GraftRowLevelSql extends Rule[LogicalPlan] {
               s"target table (there is no matched target row): ${ar.name}")
         }
       }
-      def conjuncts(e: Expression): Seq[Expression] = e match {
-        case EAnd(l, r) => conjuncts(l) ++ conjuncts(r)
-        case other => Seq(other)
-      }
       // the ON condition splits into same-named EQUALITY conjuncts
       // (the scalable join anchor) and residual NON-EQUI conjuncts
       // (evaluated over the joined match frame — `ON t.k = s.k AND
       // t.ts < s.ts`); at least one equality key is required
-      val (keyConjs, extraConjs) = conjuncts(m.mergeCondition)
+      val (keyConjs, extraConjs) = DeltaLog.conjuncts(m.mergeCondition)
         .partitionMap { c =>
           c match {
             case EqualTo(l, r) =>

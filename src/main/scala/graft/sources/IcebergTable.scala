@@ -1422,6 +1422,12 @@ object IcebergTable {
       .select(snap.schema.fieldNames.map(col): _*)
   }
 
+  /** The scan key of a data file: `input_file_name()`'s URL-encoded
+    * form, scheme-less — what a scan's `__path` column holds. */
+  private def fileKey(p: String): String =
+    org.apache.spark.paths.SparkPath.fromPathString(p).urlEncoded
+      .replaceFirst("^[a-zA-Z0-9]+:(//)?", "")
+
   /** Read with the v3 ROW-LINEAGE `_row_id` column materialized
     * (spec v3 §Row Lineage: implicit id = the file's `first_row_id` +
     * the row's physical position; null for files written before
@@ -1437,8 +1443,6 @@ object IcebergTable {
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         snap.schema.add("_row_id", org.apache.spark.sql.types.LongType))
-    def fileKey(p: String) = org.apache.spark.paths.SparkPath
-      .fromPathString(p).urlEncoded.replaceFirst("^[a-zA-Z0-9]+:(//)?", "")
     import spark.implicits._
     val frMap = broadcast(snap.files
       .map(f => (fileKey(f.path), f.firstRowId.getOrElse(-1L),
@@ -1541,8 +1545,6 @@ object IcebergTable {
     if (toIdx == fromIdx) return empty
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    def fileKey(p: String) = org.apache.spark.paths.SparkPath
-      .fromPathString(p).urlEncoded.replaceFirst("^[a-zA-Z0-9]+:(//)?", "")
     // all DEAD (file_path, pos) pairs of a snapshot — v3 deletion
     // vectors decoded ON EXECUTORS + v2 position-delete parquet, each
     // seq-scoped against its data file exactly like the batch read
@@ -1828,7 +1830,7 @@ object IcebergTable {
 
   private def partitionPrunedFiles(spark: SparkSession, snap: Snapshot,
                                    pred: org.apache.spark.sql.Column): Seq[DataFile] = {
-    import org.apache.spark.sql.catalyst.expressions.{And => CAnd, Expression, SubqueryExpression}
+    import org.apache.spark.sql.catalyst.expressions.{Expression, SubqueryExpression}
     import org.apache.spark.sql.functions.{col, expr}
     // prune ONLY on fields declared IDENTITY by the DEFAULT spec and
     // present in every file's tuple; files written under an
@@ -1849,12 +1851,8 @@ object IcebergTable {
         case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
       }.getOrElse(return snap.files)
     }
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case CAnd(l, r) => conjuncts(l) ++ conjuncts(r)
-      case x => Seq(x)
-    }
     val pcSet = pcs.toSet
-    val partOnly = conjuncts(cond).filter { c =>
+    val partOnly = DeltaLog.conjuncts(cond).filter { c =>
       val refs = c.references.toSeq.map(_.name)
       refs.nonEmpty && refs.forall(pcSet.contains) && c.deterministic &&
         !c.exists(_.isInstanceOf[SubqueryExpression])
@@ -1898,7 +1896,7 @@ object IcebergTable {
   private def transformPrunedFiles(spark: SparkSession, snap: Snapshot,
                                    files: Seq[DataFile],
                                    pred: org.apache.spark.sql.Column): Seq[DataFile] = {
-    import org.apache.spark.sql.catalyst.expressions.{And => CAnd, Attribute, BinaryComparison, EqualNullSafe => CEns, EqualTo => CEq, Expression, GreaterThan => CGt, GreaterThanOrEqual => CGe, In => CIn, LessThan => CLt, LessThanOrEqual => CLe, Literal => CLit}
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, BinaryComparison, EqualNullSafe => CEns, EqualTo => CEq, Expression, GreaterThan => CGt, GreaterThanOrEqual => CGe, In => CIn, LessThan => CLt, LessThanOrEqual => CLe, Literal => CLit}
     import IcebergPartitioning._
     val tfs = snap.specFields.filter(pf => !pf.isIdentity && isKnown(pf) &&
       snap.schema.fieldNames.contains(pf.source))
@@ -1910,13 +1908,9 @@ object IcebergTable {
         case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
       }.getOrElse(return files)
     }
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case CAnd(l, r) => conjuncts(l) ++ conjuncts(r)
-      case x => Seq(x)
-    }
     // (spec field, tuple-space check) pairs; a check sees the file's
     // recorded tuple value (null = the file's rows have null source)
-    val checks: Seq[(PartField, Any => Boolean)] = conjuncts(cond).flatMap {
+    val checks: Seq[(PartField, Any => Boolean)] = DeltaLog.conjuncts(cond).flatMap {
       case c @ (_: BinaryComparison | _: CIn) =>
         // normalize to (attr, op-tag, literal values)
         val norm: Option[(String, String, Seq[Any])] = c match {
@@ -2441,8 +2435,6 @@ object IcebergTable {
                               files: Seq[DataFile]): DataFrame = {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    def fileKey(p: String) = org.apache.spark.paths.SparkPath
-      .fromPathString(p).urlEncoded.replaceFirst("^[a-zA-Z0-9]+:(//)?", "")
     val seqMap = broadcast(files.map(f => (fileKey(f.path), f.seq))
       .toDF("__path", "__dataseq"))
     var cur = rawFrame(spark, snap, files, withPos = true)
@@ -2525,8 +2517,6 @@ object IcebergTable {
     val matched = sel.as[(String, Long)].take(cap + 1)
     if (matched.isEmpty) return Right(Seq.empty)
     if (matched.length > cap) return Left(graft.Caches.tracked(sel))
-    def fileKey(p: String) = org.apache.spark.paths.SparkPath
-      .fromPathString(p).urlEncoded.replaceFirst("^[a-zA-Z0-9]+:(//)?", "")
     // scan keys back to the MANIFEST's exact file_path strings (the
     // spec's position-delete matching rule)
     val keyToManifestPath = files.map(f => fileKey(f.path) -> f.path).toMap
@@ -2559,8 +2549,6 @@ object IcebergTable {
     // the next rewrite via the materialized column.
     val lineage = snap.rowLineage
     try {
-      def fileKey(p: String) = org.apache.spark.paths.SparkPath
-        .fromPathString(p).urlEncoded.replaceFirst("^[a-zA-Z0-9]+:(//)?", "")
       val keys = matchedPos.select(col("__path")).distinct()
         .as[String].collect().toSet // bounded by the file count
       val affected = files.filter(f => keys(fileKey(f.path)))
@@ -3543,8 +3531,6 @@ object IcebergTable {
         else liveRowsWithPos(spark, snap, snap.files))
           .select(snap.schema.fieldNames.map(col).toIndexedSeq: _*)
       } else {
-        def fileKey(p: String) = org.apache.spark.paths.SparkPath
-          .fromPathString(p).urlEncoded.replaceFirst("^[a-zA-Z0-9]+:(//)?", "")
         val frMap = broadcast(snap.files
           .map(f => (fileKey(f.path), f.firstRowId.getOrElse(-1L),
             f.firstRowId.isDefined))
@@ -5703,50 +5689,12 @@ object IcebergTable {
   private def statsFromBlocks(
       blocks: Seq[org.apache.parquet.hadoop.metadata.BlockMetaData],
       records: Long): FileStats = try {
-    {
-      final class Agg {
-        var min: Option[BigDecimal] = None
-        var max: Option[BigDecimal] = None
-        var nulls = 0L
-        var ok = true
-      }
-      val aggs = scala.collection.mutable.LinkedHashMap[String, Agg]()
-      blocks.foreach(_.getColumns.asScala.foreach { cc =>
-        val path = cc.getPath.toArray
-        if (path.length == 1) {
-          val a = aggs.getOrElseUpdate(path(0), new Agg)
-          val st = cc.getStatistics
-          if (st == null || st.isEmpty || st.getNumNulls < 0) a.ok = false
-          else {
-            a.nulls += st.getNumNulls
-            if (st.hasNonNullValue) {
-              import org.apache.parquet.column.statistics._
-              val mnmx: Option[(BigDecimal, BigDecimal)] = st match {
-                case s: IntStatistics =>
-                  Some((BigDecimal(s.getMin), BigDecimal(s.getMax)))
-                case s: LongStatistics =>
-                  Some((BigDecimal(s.getMin), BigDecimal(s.getMax)))
-                case s: FloatStatistics =>
-                  Some((BigDecimal(s.getMin.toDouble), BigDecimal(s.getMax.toDouble)))
-                case s: DoubleStatistics =>
-                  Some((BigDecimal(s.getMin), BigDecimal(s.getMax)))
-                case _ => a.ok = false; None
-              }
-              mnmx.foreach { case (mn, mx) =>
-                a.min = Some(a.min.fold(mn)(_.min(mn)))
-                a.max = Some(a.max.fold(mx)(_.max(mx)))
-              }
-            }
-          }
-        }
-      })
-      val good = aggs.toSeq.filter(_._2.ok)
-      FileStats(
-        good.map { case (n, _) => n -> records }.toMap,
-        good.map { case (n, a) => n -> a.nulls }.toMap,
-        good.collect { case (n, a) if a.min.isDefined && a.max.isDefined =>
-          n -> ((a.min.get, a.max.get)) }.toMap)
-    }
+    val good = FooterIo.columnStats(blocks)
+    FileStats(
+      good.map { case (n, _) => n -> records }.toMap,
+      good.map { case (n, a) => n -> a.nulls }.toMap,
+      good.collect { case (n, a) if a.min.isDefined && a.max.isDefined =>
+        n -> ((a.min.get, a.max.get)) }.toMap)
   } catch { // stats are an optimization: failed stats stat nothing
     case scala.util.control.NonFatal(_) =>
       FileStats(Map.empty, Map.empty, Map.empty)
