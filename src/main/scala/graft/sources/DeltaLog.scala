@@ -780,8 +780,28 @@ object DeltaLog {
 
   /** A `_delta_log` that holds no version yet (no commit, no
     * checkpoint) — what [[write]] turns into a create at v0. */
-  private final class EmptyLogException(tablePath: String)
+  private[sources] final class EmptyLogException(tablePath: String)
     extends IllegalStateException(s"empty _delta_log at $tablePath")
+
+  /** The latest snapshot, or None for a missing or empty `_delta_log`
+    * (no commit yet) — the table a writer creates at v0. */
+  private[graft] def latestSnapshot(spark: SparkSession,
+                                    tablePath: String): Option[Snapshot] = {
+    val dir = logDir(tablePath)
+    if (!dir.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(dir))
+      None
+    else try Some(snapshot(spark, tablePath))
+    catch { case _: EmptyLogException => None }
+  }
+
+  /** The highest micro-batch id `appId` has durably committed to
+    * `tablePath` (its `txn` watermark; -1 = none, or a missing or empty
+    * `_delta_log`) — the exactly-once watermark of the `graft-delta`
+    * streaming sink, with the contract of
+    * [[IcebergTable.lastCommittedBatch]]. */
+  def lastCommittedBatch(spark: SparkSession, tablePath: String,
+                         appId: String): Long =
+    latestSnapshot(spark, tablePath).flatMap(_.txns.get(appId)).getOrElse(-1L)
 
   /** Resolve the snapshot at `versionAsOf` (default: latest), or at
     * the greatest version whose commit time is <= `timestampAsOf`
@@ -1940,9 +1960,9 @@ object DeltaLog {
     * footer stats of all of them — concurrently on the DRIVER up to
     * `footerStatsDriverMaxFiles` files, as ONE Spark job over the
     * executors above it (O(files) ranged I/O must not serialize on the
-    * driver at a 100 TB append). With `dropEmpty` (rewrites) a 0-row
-    * part is deleted again instead of adopted: a group whose rows all
-    * went commits a pure remove. */
+    * driver at a 100 TB append). With `dropEmpty` (rewrites and DML
+    * appends) a 0-row part is deleted again instead of adopted: a group
+    * whose rows all went commits a pure remove. */
   private def adopt(spark: SparkSession, dst: Path,
                     staged: Seq[(Path, String, Map[String, String])],
                     dropEmpty: Boolean): Seq[Adopted] = {
@@ -1985,9 +2005,11 @@ object DeltaLog {
     * log references). The per-writer uniquifier keeps two OPTIMISTIC
     * writers racing for the same version from adopting to the same
     * path (the loser would clobber the winner's committed file before
-    * the CAS even ran). */
+    * the CAS even ran). `dropEmpty`: the DML append legs adopt no
+    * 0-row part; [[write]] keeps one (an empty write still commits). */
   private def stageData(spark: SparkSession, df: DataFrame, dst: Path,
-                        effParts: Seq[String], tag: String): Seq[Adopted] = {
+                        effParts: Seq[String], tag: String,
+                        dropEmpty: Boolean = false): Seq[Adopted] = {
     val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmp = new Path(dst, s".tmp-$tag-${java.util.UUID.randomUUID()}")
     if (effParts.isEmpty) df.write.parquet(tmp.toString)
@@ -2000,7 +2022,7 @@ object DeltaLog {
       (src, (dirs :+ s"part-$tag-$uniq-$i.parquet").mkString("/"),
         parsePartitionDirs(dirs, effParts))
     }
-    val out = adopt(spark, dst, staged, dropEmpty = false)
+    val out = adopt(spark, dst, staged, dropEmpty)
     fs.delete(tmp, true)
     out
   }
@@ -2836,9 +2858,7 @@ object DeltaLog {
     fs.mkdirs(new Path(dst, "_delta_log"))
     // ONE log listing serves the next version and the prior state; a
     // fresh (or empty) log creates the table at v0
-    val prior: Option[Snapshot] =
-      try Some(snapshot(spark, deltaPath))
-      catch { case _: EmptyLogException => None }
+    val prior: Option[Snapshot] = latestSnapshot(spark, deltaPath)
     val v = prior.map(_.version + 1).getOrElse(0L)
     val now = System.currentTimeMillis()
     // a declared writer feature we don't implement, or an overwrite
@@ -3730,7 +3750,8 @@ object DeltaLog {
         // like every other writer — veto before the DV files land
         enforceInvariants(spark, rows, snap, deltaPath,
           enforceNotNull = true)
-        stageData(spark, rows, dst, snap.partitionColumns, s"dvu-$v")
+        stageData(spark, rows, dst, snap.partitionColumns, s"dvu-$v",
+          dropEmpty = true)
       }.getOrElse(Seq.empty)
     // CDF legs: the DV arm knows the matched rows exactly — a delete
     // streams them as `delete`, an update as pre/postimage
@@ -3964,7 +3985,7 @@ object DeltaLog {
     } ++
       // the whole source (updates + inserts) lands as fresh files in
       // the table's layout
-      stageData(spark, src, dst, pc, s"mrg-$v")
+      stageData(spark, src, dst, pc, s"mrg-$v", dropEmpty = true)
 
     // CDF legs: matched target rows (update_preimage), the matching
     // source rows replacing them (update_postimage), unmatched source
@@ -4202,7 +4223,8 @@ object DeltaLog {
           .join(affectedRowIds, Seq("__path", "__ri"), "left_anti")
           .select(dataSchema.fieldNames.map(col): _*)
     } ++ appendFrame.toSeq.flatMap(af =>
-      stageData(spark, af, new Path(deltaPath), pc, s"mrgf-$v"))
+      stageData(spark, af, new Path(deltaPath), pc, s"mrgf-$v",
+        dropEmpty = true))
 
     // CDF legs: the matched clause's pre-images (delete or
     // update_preimage), post-images, and inserts — same commit
@@ -5177,9 +5199,7 @@ object DeltaLog {
         "first (compaction folds the deletes away)")
 
     fs.mkdirs(logDir(deltaPath))
-    val prior: Option[Snapshot] =
-      try Some(snapshot(spark, deltaPath))
-      catch { case _: EmptyLogException => None }
+    val prior: Option[Snapshot] = latestSnapshot(spark, deltaPath)
     val v = prior.map(_.version + 1).getOrElse(0L)
     prior.foreach(p => require(
       p.configuration.contains("graft.mirrorOf"),

@@ -944,13 +944,16 @@ class GraftDeltaDataSource extends TableProvider with DataSourceRegister
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     // the WRITE path (writeStream sink) infers before the target
-    // exists — return an empty schema so resolution proceeds to the
-    // V1 sink fallback; a batch READ of a missing table still fails
-    // loudly when the scan forces the snapshot
+    // exists, or over a `_delta_log` that holds no commit yet — return
+    // an empty schema so resolution proceeds to the V1 sink fallback;
+    // a batch READ of a missing table still fails loudly when the
+    // scan forces the snapshot
     try tableFor(options).schema()
-    catch { case e: IllegalArgumentException
-      if e.getMessage != null && e.getMessage.contains("no _delta_log") =>
-      new StructType()
+    catch {
+      case e: IllegalArgumentException
+        if e.getMessage != null && e.getMessage.contains("no _delta_log") =>
+        new StructType()
+      case _: DeltaLog.EmptyLogException => new StructType()
     }
   }
 
@@ -979,10 +982,8 @@ private class GraftDeltaSink(spark: SparkSession, path: String,
                              partitionBy: Seq[String], outputMode: OutputMode,
                              appId: String) extends Sink {
   override def addBatch(batchId: Long, data: DataFrame): Unit = {
-    val committed =
-      try DeltaLog.snapshot(spark, path).txns.getOrElse(appId, -1L)
-      catch { case _: IllegalArgumentException => -1L } // table not created yet
-    if (batchId <= committed) return // replayed micro-batch: already durable
+    // replayed micro-batch: already durable
+    if (batchId <= DeltaLog.lastCommittedBatch(spark, path, appId)) return
     // the incoming frame is streaming-flagged; re-wrap its executed
     // RDD as a batch plan (the same move Spark's ForeachBatchSink
     // makes) so the committing writer can run a batch write over it

@@ -88,16 +88,13 @@ object GraftIceberg {
       }
     }.asInstanceOf[Array[Any]])
 
-  private def shape(s: StructType): Seq[(String, DataType)] =
-    s.fields.toSeq.map(f => (f.name, f.dataType))
-
   /** Resolve one snapshot, loud on schema drift (the stream cannot
     * express it). Delete files are allowed — the planner serves them
     * as row-level legs in CDC mode and gates them in append mode. */
   private def snapAt(spark: SparkSession, tablePath: String, id: Long,
                      expect: StructType): IcebergTable.Snapshot = {
     val s = IcebergTable.snapshot(spark, tablePath, snapshotIdAsOf = Some(id))
-    if (shape(s.schema) != shape(expect))
+    if (IcebergTable.shape(s.schema) != IcebergTable.shape(expect))
       throw new UnsupportedOperationException(
         s"schema change at snapshot $id of $tablePath inside the " +
           "streamed range — restart the stream to adopt the new schema")

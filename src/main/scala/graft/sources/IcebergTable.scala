@@ -2294,136 +2294,48 @@ object IcebergTable {
     val nKeys = footerRowCount(
       spark.sparkContext.hadoopConfiguration, eqPath)
 
-    val specFields = specFieldsOf(snap)
-    val adoptedFull = stageDataFiles(spark,
+    val staged = stageDataFiles(spark,
       appendDf.select(snap.schema.fieldNames
         .map(org.apache.spark.sql.functions.col).toIndexedSeq: _*),
       tablePath, snap.specFields, s"d$tok-ups")
-    val adopted = adoptedFull.map(a => (a._1, a._2, a._3))
-    val tuples: Map[String, Seq[Any]] =
-      if (snap.specFields.isEmpty) Map.empty
-      else adoptedFull.map(a => a._1 -> a._4).toMap
-    // stats came along with the staging footer pass (one open/file)
-    val fileStats = adoptedFull.map(a => a._1 -> a._5).toMap
-    def shapeOf(s: StructType): Seq[(String, DataType)] =
-      s.fields.toSeq.map(f => (f.name, f.dataType))
 
     casCommit(spark, tablePath) { (baseMeta, _) =>
       val meta = baseMeta.getOrElse(throw new IllegalStateException(
         s"no metadata for $tablePath"))
-      val snaps = Option(meta.get("snapshots")).toSeq
-        .flatMap(_.elements().asScala).toSeq
-      val snapId = snaps.map(_.get("snapshot-id").asLong()).max + 1
-      val atok = java.util.UUID.randomUUID().toString.take(8)
-      val seq = Option(meta.get("last-sequence-number"))
-        .map(_.asLong()).getOrElse(0L) + 1
-      val now = System.currentTimeMillis()
-      val curId = Option(meta.get("current-snapshot-id"))
-        .filterNot(_.isNull).map(_.asLong()).getOrElse(-1L)
+      val ns = nextSnapshot(baseMeta)
+      val curId = currentSnapshotId(meta).getOrElse(-1L)
       // REBASE over a concurrent winner: equality deletes match by
       // VALUE with sequence-number scoping, so a winner's appended
       // rows are upserted-over exactly as Flink's committer would —
       // only schema/spec changes are true conflicts
       val curSnap: Snapshot =
         if (curId == snap.snapshotId) snap
-        else {
-          val fresh = {
-            var f = snapshot(spark, tablePath)
-            var w = 0
-            while (f.snapshotId != curId && w < 100) {
-              Thread.sleep(20); f = snapshot(spark, tablePath); w += 1
-            }
-            if (f.snapshotId != curId) throw RetryCommit
-            f
-          }
-          if (shapeOf(fresh.schema) != shapeOf(snap.schema))
-            throw new CommitConflictException("MetadataChanged",
-              s"$tablePath: the schema changed under this upsert")
-          if (fresh.defaultSpecId != snap.defaultSpecId)
-            throw new CommitConflictException("MetadataChanged",
-              s"$tablePath: the default partition spec changed under " +
-                "this upsert")
-          fresh
-        }
-      val curNode = snaps.find(
+        else rebaseSnapshot(spark, tablePath, snap, curId, "upsert")
+      val curNode = snapshotNodes(meta).find(
         _.get("snapshot-id").asLong() == curSnap.snapshotId).get
       // mutation commits operate on (and their outputs match) the
       // table's CURRENT schema — post-ALTER DML writes the evolved shape
-      val schemaNode: JsonNode =
-        if (meta.has("schemas")) {
-          val sid = meta.get("current-schema-id").asInt()
-          meta.get("schemas").elements().asScala
-            .find(n => n.get("schema-id").asInt() == sid).get
-        } else meta.get("schema")
+      val schemaNode = currentSchemaNode(meta)
       val schemaJson = M.writeValueAsString(schemaNode)
 
       // GLOBAL equality deletes: on a partitioned table the manifest
       // declares an UNPARTITIONED spec (value matching ignores layout)
-      val eqManifest = writeDeleteManifest(spark, mdir, s"eq-$atok-$snapId",
+      val eqManifest = writeDeleteManifest(spark, mdir, s"eq-${ns.tok}-${ns.id}",
         schemaJson, Seq((eqPath.toString, fs.getFileStatus(eqPath).getLen,
-          nKeys, 2, keyIds)), snapId, seq,
+          nKeys, 2, keyIds)), ns.id, ns.seq,
         specId = unpartitionedSpecId(meta, curSnap.defaultSpecId,
           curSnap.specFields.nonEmpty))
-      val fieldInfo: Map[String, (Int, DataType)] =
-        Option(schemaNode.get("fields")).toSeq
-          .flatMap(_.elements().asScala).flatMap { fn =>
-            val n = fn.get("name").asText()
-            snap.schema.find(_.name == n)
-              .map(f => n -> ((fn.get("id").asInt(), f.dataType)))
-          }.toMap
       // v3 ROW LINEAGE: the upserted rows claim fresh id ranges
-      val fv3 = Option(meta.get("format-version"))
-        .map(_.asInt()).getOrElse(2) >= 3
-      val rowIdBase: Long =
-        if (!fv3) -1L
-        else Option(meta.get("next-row-id")).map(_.asLong()).getOrElse(0L)
-      val firstRowIds: Map[String, Long] =
-        if (!fv3) Map.empty
-        else {
-          var next = rowIdBase
-          adopted.map { case (pth, _, nrec) =>
-            val b = next; next += nrec; pth -> b }.toMap
-        }
-      val dataManifest = writeManifest(spark, mdir, s"ups-$atok-$snapId",
-        schemaJson, adopted, snapId, seq, spec = specFields,
-        tuples = tuples, specId = curSnap.defaultSpecId, stats = fileStats,
-        fieldInfo = fieldInfo, firstRowIds = firstRowIds)
-
-      val carried: Seq[GenericRecord] =
-        if (curNode.has("manifest-list"))
-          readManifestList(spark, new Path(curNode.get("manifest-list").asText()))
-        else Seq.empty
-      val listPath = fs.makeQualified(
-        new Path(mdir, s"snap-$atok-$snapId-manifest-list.avro"))
-      writeAvro(spark, listPath, ManifestFileSchema,
-        Map("format-version" -> "2"), carried ++ Seq(eqManifest, dataManifest))
-
-      val snapsArr = M.createArrayNode()
-      snaps.foreach(snapsArr.add)
-      val sn = snapsArr.addObject()
-      sn.put("snapshot-id", snapId)
-      sn.put("sequence-number", seq)
-      sn.put("timestamp-ms", now)
-      sn.put("manifest-list", listPath.toString)
-      if (meta.has("current-schema-id"))
-        sn.put("schema-id", meta.get("current-schema-id").asInt())
-      else if (curNode.has("schema-id"))
-        sn.put("schema-id", curNode.get("schema-id").asInt())
-      if (fv3) {
-        sn.put("first-row-id", rowIdBase)
-        meta.put("next-row-id", rowIdBase + adopted.map(_._3).sum)
-      }
-      sn.putObject("summary").put("operation", "overwrite")
-      meta.set[JsonNode]("snapshots", snapsArr)
-      Option(meta.get("snapshot-log")).foreach { log =>
-        val lg = log.asInstanceOf[ArrayNode].addObject()
-        lg.put("snapshot-id", snapId)
-        lg.put("timestamp-ms", now)
-      }
-      meta.put("last-sequence-number", seq)
-      meta.put("last-updated-ms", now)
-      meta.put("current-snapshot-id", snapId)
-      (meta, snapId)
+      val dataManifest = writeManifest(spark, mdir, s"ups-${ns.tok}-${ns.id}",
+        schemaJson, staged.files, ns.id, ns.seq, spec = specFieldsOf(snap),
+        tuples = staged.tuples, specId = curSnap.defaultSpecId,
+        stats = staged.stats, fieldInfo = fieldInfoOf(schemaNode, snap.schema),
+        firstRowIds = ns.claim(staged.files))
+      putSnapshot(spark, tablePath, meta, baseMeta, ns,
+        carriedManifests(spark, curNode) ++ Seq(eqManifest, dataManifest),
+        Seq("operation" -> "overwrite"),
+        claimed = Some(staged.files.map(_._3).sum))
+      (meta, ns.id)
     }
   }
 
@@ -2616,19 +2528,35 @@ object IcebergTable {
     } finally matchedPos.unpersist()
   }
 
-  /** Stage `df` into `data/` under the table's partition layout
-    * (transform-derived `gp_` staging columns shape the directory
-    * tree, like [[write]]) and ADOPT the files under stable names.
-    * Returns one `(absolute path, size, records, partition tuple)`
-    * per adopted file — the tuple in the spec's field order, empty
-    * for unpartitioned tables. Shared by [[write]]-shaped appends and
-    * the MOR commit's update/merge/upsert data files. */
+  /** Data files a commit staged: `(absolute path, size, records)` per
+    * file, each file's partition tuple (in the spec's field order; empty
+    * for unpartitioned tables) and its footer stats. */
+  private final case class Staged(files: Seq[(String, Long, Long)],
+                                  tuples: Map[String, Seq[Any]],
+                                  stats: Map[String, FileStats]) {
+    def ++(o: Staged): Staged =
+      Staged(files ++ o.files, tuples ++ o.tuples, stats ++ o.stats)
+  }
+
+  /** Stage `df` into `data/` under the partition layout `pfs` and ADOPT
+    * the files under stable `<tag>-part-<i>.parquet` names (a racing
+    * writer must never clobber another's adopted files; manifests bind
+    * paths, not names) — the one staging step of every committing
+    * writer. Source columns STAY in the data files (the Iceberg
+    * layout, unlike Hive's): partitioned stages write through DERIVED
+    * `gp_` columns holding the TRANSFORMED partition values (identity
+    * included), so hidden partitioning is `day(ts)`/`bucket(16, id)`
+    * values in the tree and the manifests, the raw column in the data.
+    * `sortWithin` sorts each task's rows by the partition tuple, then
+    * these columns (a table's write order). */
   private def stageDataFiles(spark: SparkSession, df: DataFrame,
                              tablePath: String,
                              pfs: Seq[IcebergPartitioning.PartField],
                              tag: String,
-                             cluster: Boolean = true)
-  : Seq[(String, Long, Long, Seq[Any], FileStats)] = {
+                             cluster: Boolean = true,
+                             sortWithin: Seq[org.apache.spark.sql.Column] = Nil)
+  : Staged = {
+    import org.apache.spark.sql.functions.col
     val fsConf = spark.sparkContext.hadoopConfiguration
     val dst = new Path(tablePath)
     val fs = dst.getFileSystem(fsConf)
@@ -2639,10 +2567,12 @@ object IcebergTable {
         s"column gp_${pf.name} collides with the staging alias for " +
           s"partition field ${pf.name}")
       IcebergPartitioning.requireSupported(pf, df.schema(pf.source).dataType)
+      // loud on field types the manifests cannot record
       partitionAvroType(IcebergPartitioning.resultType(
         pf, df.schema(pf.source).dataType))
     }
     val tmp = new Path(dst, s".tmp-$tag-${java.util.UUID.randomUUID()}")
+    val gpCols = pfs.map("gp_" + _.name)
     val withGp = pfs.foldLeft(df)((d, pf) =>
       d.withColumn("gp_" + pf.name, IcebergPartitioning.stagingColumn(
         pf, df.schema(pf.source).dataType)))
@@ -2656,14 +2586,21 @@ object IcebergTable {
     // one file per tuple here, skewed tuples SPLIT into several
     // right-sized files at scale (guide §6 small-files / §2.5).
     // `cluster = false` for callers that SHAPED the frame already
-    // (rewriteDataFiles' per-partition bin-packing / range splits).
-    val shaped =
+    // (rewriteDataFiles' per-partition bin-packing / range splits,
+    // write's sort order).
+    val clustered =
       if (pfs.isEmpty || !cluster) withGp
-      else withGp.hint("rebalance", pfs.map("gp_" + _.name): _*)
+      else withGp.hint("rebalance", gpCols: _*)
+    val shaped =
+      if (sortWithin.isEmpty) clustered
+      else clustered.sortWithinPartitions(
+        (gpCols.map(col(_).asc) ++ sortWithin): _*)
     if (pfs.isEmpty) shaped.write.parquet(tmp.toString)
-    else shaped.write.partitionBy(pfs.map("gp_" + _.name): _*)
-      .parquet(tmp.toString)
+    else shaped.write.partitionBy(gpCols: _*).parquet(tmp.toString)
     val tmpQ = fs.makeQualified(tmp).toString
+    // keyed by the tmp-RELATIVE path, not the basename: one task
+    // writing rows of several partition dirs reuses the same
+    // part-XXXXX basename in each of them
     def walkStaged(p: Path): Seq[Path] =
       fs.listStatus(p).toSeq.filterNot(_.getPath.getName.startsWith("_"))
         .flatMap(st =>
@@ -2695,19 +2632,217 @@ object IcebergTable {
         fs.mkdirs(rel.getParent)
         if (!fs.rename(src, rel))
           throw new IllegalStateException(s"rename failed for $rel")
-        (rel, fs.getFileStatus(rel).getLen, tupleVals)
+        (fs.makeQualified(rel).toString, fs.getFileStatus(rel).getLen,
+          tupleVals)
       }
     fs.delete(tmp, true)
     // row counts AND column stats from the FOOTERS in one open per
     // file (read concurrently / as one executor job above the gate),
-    // not a Spark re-scan job of the data that was just written
-    val cs = footerCountsAndStats(spark,
-      adopted.map(a => fs.makeQualified(a._1).toString))
-    adopted.map { case (rel, len, tupleVals) =>
-      val q = fs.makeQualified(rel).toString
-      val (n, st) = cs(q)
-      (q, len, n, tupleVals, st)
+    // not a Spark re-scan job of the data that was just written —
+    // external engines and the DSv2 scan prune on them
+    val cs = footerCountsAndStats(spark, adopted.map(_._1))
+    Staged(adopted.map { case (q, len, _) => (q, len, cs(q)._1) },
+      if (pfs.isEmpty) Map.empty
+      else adopted.map { case (q, _, tuple) => q -> tuple }.toMap,
+      cs.map { case (q, (_, st)) => q -> st })
+  }
+
+  /** The base snapshot node's manifests as `manifest_file` records —
+    * the one carry every commit that keeps prior files uses. Early-v1
+    * inline `manifests` paths (which [[replaySnapshot]] reads) wrap
+    * into records the way real writers upgrade them: silently carrying
+    * NOTHING here would drop every prior file from the table. */
+  private def carriedManifests(spark: SparkSession,
+                               sn: JsonNode): Seq[GenericRecord] =
+    if (sn.has("manifest-list"))
+      readManifestList(spark, new Path(sn.get("manifest-list").asText()))
+    else Option(sn.get("manifests")).toSeq.flatMap(_.elements().asScala)
+      .map { pn =>
+        val p = new Path(pn.asText())
+        val mf = new GenericData.Record(ManifestFileSchema)
+        mf.put("manifest_path", p.toString)
+        mf.put("manifest_length", fsFor(spark, p).getFileStatus(p).getLen)
+        mf.put("partition_spec_id", 0)
+        mf.put("content", 0)
+        mf.put("sequence_number", 0L)
+        mf.put("min_sequence_number", 0L)
+        mf.put("added_snapshot_id", sn.get("snapshot-id").asLong())
+        mf.put("added_files_count", 0)
+        mf.put("existing_files_count", 0)
+        mf.put("deleted_files_count", 0)
+        mf.put("added_rows_count", 0L)
+        mf.put("existing_rows_count", 0L)
+        mf.put("deleted_rows_count", 0L)
+        mf: GenericRecord
+      }.toSeq
+
+  /** `meta`'s snapshot entries, in commit order. */
+  private def snapshotNodes(meta: JsonNode): Seq[JsonNode] =
+    Option(meta.get("snapshots")).toSeq.flatMap(_.elements().asScala).toSeq
+
+  /** `meta`'s current snapshot id, if it has one (-1 and null are the
+    * spec's "none"). */
+  private def currentSnapshotId(meta: JsonNode): Option[Long] =
+    Option(meta.get("current-snapshot-id")).filterNot(_.isNull)
+      .map(_.asLong()).filter(_ != -1L)
+
+  /** The table's CURRENT schema node (v1: the single `schema`) — what
+    * commits write and mutations operate on. */
+  private def currentSchemaNode(meta: JsonNode): JsonNode = {
+    val id = Option(meta.get("current-schema-id")).map(_.asInt()).getOrElse(0)
+    Option(meta.get("schemas")).flatMap(_.elements().asScala
+      .find(n => Option(n.get("schema-id")).exists(_.asInt() == id)))
+      .getOrElse(meta.get("schema"))
+  }
+
+  /** `name -> (field id, type)` for the columns of `schema` that
+    * `schemaNode` declares — what a manifest keys column stats by. */
+  private def fieldInfoOf(schemaNode: JsonNode, schema: StructType)
+  : Map[String, (Int, DataType)] =
+    Option(schemaNode.get("fields")).toSeq.flatMap(_.elements().asScala)
+      .flatMap { fn =>
+        val n = fn.get("name").asText()
+        schema.find(_.name == n)
+          .map(f => n -> ((fn.get("id").asInt(), f.dataType)))
+      }.toMap
+
+  /** The snapshot a commit attempt creates: id and sequence number one
+    * past the base's, an attempt token that keeps this attempt's
+    * manifest names unique (a lost race may recompute the same id when
+    * the winner was a metadata-only commit), the commit time, and on a
+    * v3 table the first row id the snapshot may claim (spec v3 §Row
+    * Lineage). */
+  private final case class NextSnapshot(id: Long, seq: Long, tok: String,
+                                        now: Long, rowIdBase: Option[Long]) {
+    /** First row ids for `files` (path, size, records): contiguous
+      * ranges from `rowIdBase` in the given order; none below v3. */
+    def claim(files: Seq[(String, Long, Long)]): Map[String, Long] =
+      rowIdBase.toSeq.flatMap(b =>
+        files.map(_._1).zip(files.scanLeft(b)(_ + _._3))).toMap
+  }
+
+  /** The next snapshot on `base` (None: a create, at `createFv`). The
+    * commit time is taken here, inside the attempt, so snapshot
+    * timestamps follow commit order. */
+  private def nextSnapshot(base: Option[JsonNode],
+                           createFv: Int = 2): NextSnapshot = {
+    def field(k: String): Option[JsonNode] = base.flatMap(m => Option(m.get(k)))
+    NextSnapshot(
+      base.toSeq.flatMap(snapshotNodes).map(_.get("snapshot-id").asLong())
+        .foldLeft(0L)(math.max) + 1,
+      field("last-sequence-number").map(_.asLong()).getOrElse(0L) + 1,
+      java.util.UUID.randomUUID().toString.take(8),
+      System.currentTimeMillis(),
+      if (field("format-version").map(_.asInt()).getOrElse(createFv) < 3) None
+      else Some(field("next-row-id").map(_.asLong()).getOrElse(0L)))
+  }
+
+  /** The one snapshot encoder every commit shares. Writes the manifest
+    * list of `manifests`, then puts snapshot `ns` on `root` — the
+    * metadata the commit writes; `base` is the metadata it rebases on
+    * (None on create), the same node for commits that edit the base in
+    * place. The entry records id, sequence number, timestamp, manifest
+    * list, schema id (`schemaId`, else the root's current schema),
+    * `parent-snapshot-id` (the branch head for branch writes, else the
+    * base's current snapshot, when there is one), `first-row-id` when
+    * the commit claims row ids on a v3 table, and `summary`. Unless
+    * `current` is false (a branch or WAP-staged write) the table points
+    * at it and the snapshot-log gains it. `claimed`: the rows that took
+    * fresh ids from `next-row-id`; None for commits that assign no row
+    * ids (maintenance, mirrors), which carry the counter unchanged. */
+  private def putSnapshot(spark: SparkSession, tablePath: String,
+                          root: ObjectNode, base: Option[JsonNode],
+                          ns: NextSnapshot, manifests: Seq[GenericRecord],
+                          summary: Seq[(String, String)],
+                          claimed: Option[Long],
+                          schemaId: Option[Int] = None,
+                          branchHead: Option[Long] = None,
+                          current: Boolean = true): Unit = {
+    val mdir = metaDir(tablePath)
+    val listPath = fsFor(spark, mdir).makeQualified(
+      new Path(mdir, s"snap-${ns.tok}-${ns.id}-manifest-list.avro"))
+    writeAvro(spark, listPath, ManifestFileSchema,
+      Map("format-version" -> "2"), manifests)
+    val prior = base.toSeq.flatMap(snapshotNodes)
+    val baseCur = base.flatMap(currentSnapshotId)
+    val parent = branchHead.orElse(baseCur)
+    val snaps = M.createArrayNode()
+    prior.foreach(snaps.add)
+    val sn = snaps.addObject()
+    sn.put("snapshot-id", ns.id)
+    sn.put("sequence-number", ns.seq)
+    sn.put("timestamp-ms", ns.now)
+    sn.put("manifest-list", listPath.toString)
+    schemaId.orElse(Option(root.get("current-schema-id")).map(_.asInt()))
+      .orElse(prior.find(n => parent.contains(n.get("snapshot-id").asLong()))
+        .flatMap(n => Option(n.get("schema-id"))).map(_.asInt()))
+      .foreach(sn.put("schema-id", _))
+    parent.foreach(sn.put("parent-snapshot-id", _))
+    val rowIdBase = ns.rowIdBase.filter(_ => claimed.isDefined)
+    rowIdBase.foreach(sn.put("first-row-id", _))
+    val su = sn.putObject("summary")
+    summary.foreach { case (k, v) => su.put(k, v) }
+    val log = M.createArrayNode()
+    base.foreach(m => Option(m.get("snapshot-log"))
+      .foreach(_.elements().asScala.foreach(log.add)))
+    if (current) {
+      val e = log.addObject()
+      e.put("snapshot-id", ns.id)
+      e.put("timestamp-ms", ns.now)
     }
+    root.set[JsonNode]("snapshots", snaps)
+    root.set[JsonNode]("snapshot-log", log)
+    root.put("last-sequence-number", ns.seq)
+    root.put("last-updated-ms", ns.now)
+    root.put("current-snapshot-id",
+      if (current) ns.id else baseCur.getOrElse(-1L))
+    rowIdBase match {
+      case Some(b) => root.put("next-row-id", b + claimed.get)
+      case None => base.flatMap(m => Option(m.get("next-row-id")))
+        .foreach(n => root.put("next-row-id", n.asLong()))
+    }
+  }
+
+  /** A DML's base advanced from `snap` to the head `curId` under a lost
+    * race: the head's snapshot, refusing a rebase across a schema or
+    * default-spec change. [[snapshot]] resolves through the version
+    * hint, which the winner updates only after its CAS — poll until it
+    * has caught up with the scanned head, else rescan. */
+  private def rebaseSnapshot(spark: SparkSession, tablePath: String,
+                             snap: Snapshot, curId: Long,
+                             what: String): Snapshot = {
+    var fresh = snapshot(spark, tablePath)
+    var w = 0
+    while (fresh.snapshotId != curId && w < 100) {
+      Thread.sleep(20); fresh = snapshot(spark, tablePath); w += 1
+    }
+    if (fresh.snapshotId != curId) throw RetryCommit
+    if (shape(fresh.schema) != shape(snap.schema))
+      throw new CommitConflictException("MetadataChanged",
+        s"$tablePath: the schema changed under this $what")
+    if (fresh.defaultSpecId != snap.defaultSpecId)
+      throw new CommitConflictException("MetadataChanged",
+        s"$tablePath: the default partition spec changed under this $what")
+    fresh
+  }
+
+  /** Column names and exact types, nested nullability included — what
+    * a rebase or a stream's schema check compares. */
+  private[sources] def shape(s: StructType): Seq[(String, DataType)] =
+    s.fields.toSeq.map(f => (f.name, f.dataType))
+
+  /** `dt` with every nested nullability relaxed: names and types must
+    * match, but nullability is a presentation detail parquet does not
+    * enforce (a struct built from non-null columns is tighter, not
+    * wrong) — the append gate's and schema registry's rule. */
+  private def looseType(dt: DataType): DataType = dt match {
+    case s: StructType => StructType(s.fields.map(f =>
+      StructField(f.name, looseType(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(looseType(a.elementType), containsNull = true)
+    case m: MapType =>
+      MapType(looseType(m.keyType), looseType(m.valueType),
+        valueContainsNull = true)
+    case o => o
   }
 
   /** The default spec as manifest [[SpecField]]s (result types from
@@ -2872,28 +3007,17 @@ object IcebergTable {
 
     // appended rows (update transforms / merge source) as fresh data
     // files with footer stats — staged under the table's PARTITION
-    // LAYOUT (hidden transforms included)
-    def stageLeg(df: DataFrame, withLineage: Boolean, tag: String)
-    : (Seq[(String, Long, Long)], Map[String, Seq[Any]],
-      Map[String, FileStats]) = {
-      // an id-preserving rewrite (compaction or COW on a v3
-      // row-lineage table) MATERIALIZES each row's current _row_id
-      // into the rewritten parquet (spec v3 §Row Lineage) — the extra
-      // column rides along; ordinary commits project it away
-      val outCols = snap.schema.fieldNames.toSeq ++
-        (if (withLineage) LineageCols else Nil)
-      val adoptedFull = stageDataFiles(spark,
-        df.select(outCols.map(org.apache.spark.sql.functions.col)
-          .toIndexedSeq: _*),
+    // LAYOUT (hidden transforms included). An id-preserving rewrite
+    // (compaction or COW on a v3 row-lineage table) MATERIALIZES each
+    // row's current _row_id into the rewritten parquet (spec v3 §Row
+    // Lineage) — the extra column rides along; ordinary commits
+    // project it away
+    def stageLeg(df: DataFrame, withLineage: Boolean, tag: String): Staged =
+      stageDataFiles(spark,
+        df.select((snap.schema.fieldNames.toSeq ++
+          (if (withLineage) LineageCols else Nil))
+          .map(org.apache.spark.sql.functions.col).toIndexedSeq: _*),
         tablePath, snap.specFields, tag, cluster = clusterStaging)
-      val adopted = adoptedFull.map(a => (a._1, a._2, a._3))
-      val tuples: Map[String, Seq[Any]] =
-        if (snap.specFields.isEmpty) Map.empty
-        else adoptedFull.map(a => a._1 -> a._4).toMap
-      // stats came along with the staging footer pass (one open/file)
-      val fileStats = adoptedFull.map(a => a._1 -> a._5).toMap
-      (adopted, tuples, fileStats)
-    }
     // the PRESERVED leg (COW survivors): every row's lineage is
     // already materialized — nulls included (pre-lineage rows keep
     // their null forever, spec v3 §Row Lineage) — so these files
@@ -2901,42 +3025,26 @@ object IcebergTable {
     // inheritance rule re-key exactly the null-id rows. The appendDf
     // leg (post-images / inserts) stages separately and DOES claim
     // ranges — its nulls are what inheritance is for.
-    val stagedPreserved: Option[(Seq[(String, Long, Long)],
-      Map[String, Seq[Any]], Map[String, FileStats])] =
+    val stagedPreserved: Option[Staged] =
       appendPreserved.map(df => stageLeg(df, withLineage = true,
         s"d$tok-keep"))
-    val stagedAppend: Option[(Seq[(String, Long, Long)],
-      Map[String, Seq[Any]], Map[String, FileStats])] =
+    val stagedAppend: Option[Staged] =
       appendDf.map(df => stageLeg(df,
         withLineage = preserveRowIds || carryRowIdColumn, s"d$tok-upd"))
-    val stagedData: Option[(Seq[(String, Long, Long)], Map[String, Seq[Any]],
-      Map[String, FileStats])] = (stagedAppend, stagedPreserved) match {
-      case (None, None) => None
-      case (a, p) =>
-        val legs = a.toSeq ++ p.toSeq
-        Some((legs.flatMap(_._1), legs.flatMap(_._2).toMap,
-          legs.flatMap(_._3).toMap))
-    }
-    // only the append leg's files may be assigned fresh id ranges
-    val claimablePaths: Set[String] =
-      stagedAppend.toSeq.flatMap(_._1.map(_._1)).toSet
-    def shapeOf(s: StructType): Seq[(String, DataType)] =
-      s.fields.toSeq.map(f => (f.name, f.dataType))
+    val stagedData: Option[Staged] =
+      (stagedAppend.toSeq ++ stagedPreserved.toSeq).reduceOption(_ ++ _)
+    // only the append leg's files may be assigned fresh id ranges;
+    // id-preserving rewrites claim none: their rows carry materialized
+    // _row_id values, and a file entry without first_row_id makes
+    // readers use the column
+    val claimable: Seq[(String, Long, Long)] =
+      if (preserveRowIds) Nil else stagedAppend.toSeq.flatMap(_.files)
 
     casCommit(spark, tablePath) { (baseMeta, _) =>
       val meta = baseMeta.getOrElse(throw new IllegalStateException(
         s"no metadata for $tablePath"))
-      val snaps = Option(meta.get("snapshots")).toSeq
-        .flatMap(_.elements().asScala).toSeq
-      val snapId = snaps.map(_.get("snapshot-id").asLong()).max + 1
-      // attempt-unique artifact names (the winner may have been a
-      // metadata-only commit that minted no snapshot id)
-      val atok = java.util.UUID.randomUUID().toString.take(8)
-      val seq = Option(meta.get("last-sequence-number"))
-        .map(_.asLong()).getOrElse(0L) + 1
-      val now = System.currentTimeMillis()
-      val curId = Option(meta.get("current-snapshot-id"))
-        .filterNot(_.isNull).map(_.asLong()).getOrElse(-1L)
+      val ns = nextSnapshot(baseMeta)
+      val curId = currentSnapshotId(meta).getOrElse(-1L)
 
       // REBASE: a concurrent winner advanced the table since `snap`
       // was read — classify the conflict, then re-apply this mutation
@@ -2948,25 +3056,7 @@ object IcebergTable {
             "ConcurrentWrite",
             s"$tablePath: a concurrent commit advanced the table under " +
               "a full REPLACE — re-run the rewrite against the new state")
-          // snapshot() resolves through the version HINT, which the
-          // winner updates only after its CAS — poll until it has
-          // caught up with the scanned head, else rescan
-          val fresh = {
-            var f = snapshot(spark, tablePath)
-            var w = 0
-            while (f.snapshotId != curId && w < 100) {
-              Thread.sleep(20); f = snapshot(spark, tablePath); w += 1
-            }
-            if (f.snapshotId != curId) throw RetryCommit
-            f
-          }
-          if (shapeOf(fresh.schema) != shapeOf(snap.schema))
-            throw new CommitConflictException("MetadataChanged",
-              s"$tablePath: the schema changed under this mutation")
-          if (fresh.defaultSpecId != snap.defaultSpecId)
-            throw new CommitConflictException("MetadataChanged",
-              s"$tablePath: the default partition spec changed under " +
-                "this mutation")
+          val fresh = rebaseSnapshot(spark, tablePath, snap, curId, "mutation")
           val live = fresh.files.map(_.path).toSet
           val goneRef = rows.map(_._1).distinct.filterNot(live)
           if (goneRef.nonEmpty) throw new CommitConflictException(
@@ -3021,70 +3111,38 @@ object IcebergTable {
           }
           fresh
         }
-      val curNode = snaps.find(
+      val curNode = snapshotNodes(meta).find(
         _.get("snapshot-id").asLong() == curSnap.snapshotId).get
       // mutation commits operate on (and their outputs match) the
       // table's CURRENT schema — post-ALTER DML writes the evolved shape
-      val schemaNode: JsonNode =
-        if (meta.has("schemas")) {
-          val sid = meta.get("current-schema-id").asInt()
-          meta.get("schemas").elements().asScala
-            .find(n => n.get("schema-id").asInt() == sid).get
-        } else meta.get("schema")
+      val schemaNode = currentSchemaNode(meta)
       val schemaJson = M.writeValueAsString(schemaNode)
+      def unpartSpec: Int = unpartitionedSpecId(meta, curSnap.defaultSpecId,
+        curSnap.specFields.nonEmpty)
 
       val delManifest: Option[GenericRecord] = dvStaged match {
         case Some((pPath, pSize, blobs)) =>
-          Some(writeDeleteManifest(spark, mdir, s"del-$atok-$snapId",
+          Some(writeDeleteManifest(spark, mdir, s"del-${ns.tok}-${ns.id}",
             schemaJson,
             blobs.map(b => (pPath, pSize, b._4, 1, Seq.empty[Int])),
-            snapId, seq,
-            specId = unpartitionedSpecId(meta, curSnap.defaultSpecId,
-              curSnap.specFields.nonEmpty),
+            ns.id, ns.seq, specId = unpartSpec,
             dvRefs = blobs.map(b => Some((b._1, b._2, b._3)))))
         case None => delFile.map { case (p, len, n, bounds) =>
-          writeDeleteManifest(spark, mdir, s"del-$atok-$snapId", schemaJson,
-            Seq((p, len, n, 1, Seq.empty)), snapId, seq,
-            specId = unpartitionedSpecId(meta, curSnap.defaultSpecId,
-              curSnap.specFields.nonEmpty),
-            pathBounds = Map(p -> bounds))
+          writeDeleteManifest(spark, mdir, s"del-${ns.tok}-${ns.id}",
+            schemaJson, Seq((p, len, n, 1, Seq.empty)), ns.id, ns.seq,
+            specId = unpartSpec, pathBounds = Map(p -> bounds))
         }
       }
       // v3 ROW LINEAGE: post-image/merge-source files claim fresh
       // id ranges from next-row-id (deleted rows' ids simply vanish;
       // surviving files keep their ranges via the carried manifests)
-      val fv3 = Option(meta.get("format-version"))
-        .map(_.asInt()).getOrElse(2) >= 3
-      val rowIdBase: Long =
-        if (!fv3) -1L
-        else Option(meta.get("next-row-id")).map(_.asLong()).getOrElse(0L)
-      val dataManifest: Option[GenericRecord] =
-        stagedData.map { case (adopted, tuples, fileStats) =>
-          val specFields = specFieldsOf(curSnap)
-          val fieldInfo: Map[String, (Int, DataType)] =
-            Option(schemaNode.get("fields")).toSeq
-              .flatMap(_.elements().asScala).flatMap { fn =>
-                val n = fn.get("name").asText()
-                snap.schema.find(_.name == n)
-                  .map(f => n -> ((fn.get("id").asInt(), f.dataType)))
-              }.toMap
-          // id-preserving rewrites claim NO fresh ranges: their rows
-          // carry materialized _row_id values, and a file entry
-          // without first_row_id makes readers use the column. The
-          // preserved leg's files (COW survivors) never claim either.
-          val firstRowIds: Map[String, Long] =
-            if (!fv3 || preserveRowIds) Map.empty
-            else {
-              var next = rowIdBase
-              adopted.filter(a => claimablePaths(a._1))
-                .map { case (pth, _, nrec) =>
-                  val b = next; next += nrec; pth -> b }.toMap
-            }
-          writeManifest(spark, mdir, s"upd-$atok-$snapId", schemaJson, adopted,
-            snapId, seq, spec = specFields, tuples = tuples,
-            specId = curSnap.defaultSpecId, stats = fileStats,
-            fieldInfo = fieldInfo, firstRowIds = firstRowIds)
-        }
+      val dataManifest: Option[GenericRecord] = stagedData.map { st =>
+        writeManifest(spark, mdir, s"upd-${ns.tok}-${ns.id}", schemaJson,
+          st.files, ns.id, ns.seq, spec = specFieldsOf(curSnap),
+          tuples = st.tuples, specId = curSnap.defaultSpecId,
+          stats = st.stats, fieldInfo = fieldInfoOf(schemaNode, snap.schema),
+          firstRowIds = ns.claim(claimable))
+      }
 
       // carry the current snapshot's manifests (data + prior deletes) —
       // unless this is a full REPLACE (compaction), whose fresh data
@@ -3095,47 +3153,34 @@ object IcebergTable {
       // and prior DELETE manifests carry — their seq scoping still
       // applies to the survivors, while the rewritten files commit at a
       // strictly newer seq no old delete can touch
+      val dvFolded: Set[String] = dvStaged.toSeq.flatMap(_._3.map(_._1)).toSet
       val carried: Seq[GenericRecord] =
         if (removePaths.nonEmpty) {
-          val prior =
-            if (curNode.has("manifest-list"))
-              readManifestList(spark,
-                new Path(curNode.get("manifest-list").asText()))
-            else Seq.empty
           val survivors = curSnap.files.filterNot(f => removePaths(f.path))
           // no survivors = a full rewrite: prior delete files have
           // nothing left to apply to, so nothing carries
           if (survivors.isEmpty) Seq.empty
-          else {
-            val deleteManifests =
-              prior.filter(m => longOf(m.get("content")) == 1L)
-            deleteManifests :+ existingFilesManifest(spark, mdir,
-              s"cow-$atok-$snapId", schemaJson, curSnap, survivors, snapId, seq,
+          else carriedManifests(spark, curNode)
+            .filter(m => longOf(m.get("content")) == 1L) :+
+            existingFilesManifest(spark, mdir, s"cow-${ns.tok}-${ns.id}",
+              schemaJson, curSnap, survivors, ns.id, ns.seq,
               Option(meta.get("default-spec-id")).map(_.asInt()).getOrElse(0),
               "copy-on-write rewrite")
-          }
-        } else if (dvStaged.isDefined && curNode.has("manifest-list") &&
-          curSnap.deletes.exists(d => d.isDv &&
-            d.referencedDataFile.exists(dvStaged.get._3.map(_._1).toSet))) {
+        } else if (curSnap.deletes.exists(d => d.isDv &&
+          d.referencedDataFile.exists(dvFolded))) {
           // the new DVs FOLDED the affected files' old DVs — those
           // entries must not carry (at most one DV per data file);
           // every other delete entry carries as EXISTING with its
           // ORIGINAL sequence number, data manifests carry whole
-          val aff = dvStaged.get._3.map(_._1).toSet
-          val prior = readManifestList(spark,
-            new Path(curNode.get("manifest-list").asText()))
-          val priorData = prior.filter(m => longOf(m.get("content")) == 0L)
           val keep = curSnap.deletes.filterNot(d =>
-            d.isDv && d.referencedDataFile.exists(aff))
+            d.isDv && d.referencedDataFile.exists(dvFolded))
           val keepManifest =
             if (keep.isEmpty) None
-            else Some(writeDeleteManifest(spark, mdir, s"keep-$atok-$snapId",
-              schemaJson,
+            else Some(writeDeleteManifest(spark, mdir,
+              s"keep-${ns.tok}-${ns.id}", schemaJson,
               keep.map(d => (d.path, d.sizeBytes, d.records, d.content,
                 d.equalityIds)),
-              snapId, seq,
-              specId = unpartitionedSpecId(meta, curSnap.defaultSpecId,
-                curSnap.specFields.nonEmpty),
+              ns.id, ns.seq, specId = unpartSpec,
               pathBounds = keep.flatMap(d =>
                 d.pathBounds.map(d.path -> _)).toMap,
               existingSeqs = keep.map(d => d.path -> d.seq).toMap,
@@ -3143,45 +3188,15 @@ object IcebergTable {
                 r <- d.referencedDataFile; o <- d.contentOffset
                 s2 <- d.contentSize
               } yield (r, o, s2))))
-          priorData ++ keepManifest.toSeq
-        } else if (carryExisting && curNode.has("manifest-list"))
-          readManifestList(spark, new Path(curNode.get("manifest-list").asText()))
+          carriedManifests(spark, curNode)
+            .filter(m => longOf(m.get("content")) == 0L) ++ keepManifest.toSeq
+        } else if (carryExisting) carriedManifests(spark, curNode)
         else Seq.empty
-      val listPath = fs.makeQualified(
-        new Path(mdir, s"snap-$atok-$snapId-manifest-list.avro"))
-      writeAvro(spark, listPath, ManifestFileSchema,
-        Map("format-version" -> "2"),
-        carried ++ delManifest.toSeq ++ dataManifest.toSeq)
-
-      val snapsArr = M.createArrayNode()
-      snaps.foreach(snapsArr.add)
-      val sn = snapsArr.addObject()
-      sn.put("snapshot-id", snapId)
-      sn.put("sequence-number", seq)
-      sn.put("timestamp-ms", now)
-      sn.put("manifest-list", listPath.toString)
-      if (meta.has("current-schema-id"))
-        sn.put("schema-id", meta.get("current-schema-id").asInt())
-      else if (curNode.has("schema-id"))
-        sn.put("schema-id", curNode.get("schema-id").asInt())
-      if (fv3) {
-        sn.put("first-row-id", rowIdBase)
-        meta.put("next-row-id",
-          rowIdBase + (if (preserveRowIds) 0L
-          else stagedData.map(_._1.filter(a => claimablePaths(a._1))
-            .map(_._3).sum).getOrElse(0L)))
-      }
-      sn.putObject("summary").put("operation", operation)
-      meta.set[JsonNode]("snapshots", snapsArr)
-      Option(meta.get("snapshot-log")).foreach { log =>
-        val lg = log.asInstanceOf[ArrayNode].addObject()
-        lg.put("snapshot-id", snapId)
-        lg.put("timestamp-ms", now)
-      }
-      meta.put("last-sequence-number", seq)
-      meta.put("last-updated-ms", now)
-      meta.put("current-snapshot-id", snapId)
-      (meta, snapId)
+      putSnapshot(spark, tablePath, meta, baseMeta, ns,
+        carried ++ delManifest.toSeq ++ dataManifest.toSeq,
+        Seq("operation" -> operation),
+        claimed = Some(claimable.map(_._3).sum))
+      (meta, ns.id)
     }
   }
 
@@ -3272,16 +3287,10 @@ object IcebergTable {
       }
       buf.toSet
     }
-    if (sn.has("manifest-list")) {
-      val ml = sn.get("manifest-list").asText()
-      val manifests = readManifestList(spark, new Path(ml))
-        .map(_.get("manifest_path").toString)
-      (Set(ml), manifests.toSet, filesOf(manifests))
-    } else {
-      val manifests = Option(sn.get("manifests")).toSeq
-        .flatMap(_.elements().asScala).map(_.asText()).toSeq
-      (Set.empty, manifests.toSet, filesOf(manifests))
-    }
+    val manifests = carriedManifests(spark, sn)
+      .map(_.get("manifest_path").toString)
+    (Option(sn.get("manifest-list")).map(_.asText()).toSet,
+      manifests.toSet, filesOf(manifests))
   }
 
   /** Snapshot EXPIRATION — the Iceberg-flavor VACUUM: keep the most
@@ -3409,79 +3418,30 @@ object IcebergTable {
     * copy-on-write first). Returns the new snapshot id, or the
     * current one when the table is already compact. */
   def rewriteManifests(spark: SparkSession, tablePath: String): Long = {
-    casCommit(spark, tablePath) { (baseMeta, metaVersion) =>
-    val meta = baseMeta.getOrElse(throw new IllegalArgumentException(
-      s"not an Iceberg table: $tablePath"))
-    val snap = snapshot(spark, tablePath)
-    require(snap.snapshotId != -1L,
-      s"cannot rewrite manifests of empty table $tablePath")
-    require(snap.deletes.isEmpty,
-      s"$tablePath carries v2 delete files — compact the data " +
-        "(copy-on-write) before rewriting manifests")
-    val snaps = Option(meta.get("snapshots")).toSeq
-      .flatMap(_.elements().asScala).toSeq
-    val curNode = snaps.find(
-      _.get("snapshot-id").asLong() == snap.snapshotId).get
-    val nManifests =
-      if (curNode.has("manifest-list"))
-        readManifestList(spark,
-          new Path(curNode.get("manifest-list").asText())).size
-      else Option(curNode.get("manifests")).map(_.size()).getOrElse(0)
-    if (nManifests <= 1) return snap.snapshotId
-
-    val mdir = metaDir(tablePath)
-    val fs = fsFor(spark, mdir)
-    val snapId = snaps.map(_.get("snapshot-id").asLong()).max + 1
-    // attempt-unique artifact names: a lost CAS race may recompute the
-    // same snapshot id when the winner was a metadata-only commit
-    val atok = java.util.UUID.randomUUID().toString.take(8)
-    val seq = Option(meta.get("last-sequence-number"))
-      .map(_.asLong()).getOrElse(0L) + 1
-    val now = System.currentTimeMillis()
-    // mutation commits operate on (and their outputs match) the
-    // table's CURRENT schema — post-ALTER DML writes the evolved shape
-    val schemaNode: JsonNode =
-      if (meta.has("schemas")) {
-        val sid = meta.get("current-schema-id").asInt()
-        meta.get("schemas").elements().asScala
-          .find(n => n.get("schema-id").asInt() == sid).get
-      } else meta.get("schema")
-    val schemaJson = M.writeValueAsString(schemaNode)
-
-    // ONE manifest holding every live data file as an EXISTING entry
-    // with its original sequence number; column stats AND partition
-    // tuples carry forward (compaction must lose neither pruning leg)
-    val dsid = Option(meta.get("default-spec-id")).map(_.asInt()).getOrElse(0)
-    val mf = existingFilesManifest(spark, mdir, s"rw-$atok-$snapId", schemaJson,
-      snap, snap.files, snapId, seq, dsid, "rewrite manifests of")
-    val listPath = fs.makeQualified(
-      new Path(mdir, s"snap-$atok-$snapId-manifest-list.avro"))
-    writeAvro(spark, listPath, ManifestFileSchema,
-      Map("format-version" -> "2"), Seq(mf))
-
-    val snapsArr = M.createArrayNode()
-    snaps.foreach(snapsArr.add)
-    val sn = snapsArr.addObject()
-    sn.put("snapshot-id", snapId)
-    sn.put("sequence-number", seq)
-    sn.put("timestamp-ms", now)
-    sn.put("manifest-list", listPath.toString)
-    if (meta.has("current-schema-id"))
-      sn.put("schema-id", meta.get("current-schema-id").asInt())
-    else if (curNode.has("schema-id"))
-      sn.put("schema-id", curNode.get("schema-id").asInt())
-    sn.putObject("summary").put("operation", "replace")
-    meta.set[JsonNode]("snapshots", snapsArr)
-    Option(meta.get("snapshot-log")).foreach { log =>
-      val lg = log.asInstanceOf[com.fasterxml.jackson.databind.node.ArrayNode]
-        .addObject()
-      lg.put("snapshot-id", snapId)
-      lg.put("timestamp-ms", now)
-    }
-    meta.put("last-sequence-number", seq)
-    meta.put("last-updated-ms", now)
-    meta.put("current-snapshot-id", snapId)
-    (meta, snapId)
+    casCommit(spark, tablePath) { (baseMeta, _) =>
+      val meta = baseMeta.getOrElse(throw new IllegalArgumentException(
+        s"not an Iceberg table: $tablePath"))
+      val snap = snapshot(spark, tablePath)
+      require(snap.snapshotId != -1L,
+        s"cannot rewrite manifests of empty table $tablePath")
+      require(snap.deletes.isEmpty,
+        s"$tablePath carries v2 delete files — compact the data " +
+          "(copy-on-write) before rewriting manifests")
+      val curNode = snapshotNodes(meta).find(
+        _.get("snapshot-id").asLong() == snap.snapshotId).get
+      if (carriedManifests(spark, curNode).size <= 1) return snap.snapshotId
+      val ns = nextSnapshot(baseMeta)
+      // ONE manifest holding every live data file as an EXISTING entry
+      // with its original sequence number; column stats AND partition
+      // tuples carry forward (compaction must lose neither pruning leg)
+      val mf = existingFilesManifest(spark, metaDir(tablePath),
+        s"rw-${ns.tok}-${ns.id}", M.writeValueAsString(currentSchemaNode(meta)),
+        snap, snap.files, ns.id, ns.seq,
+        Option(meta.get("default-spec-id")).map(_.asInt()).getOrElse(0),
+        "rewrite manifests of")
+      putSnapshot(spark, tablePath, meta, baseMeta, ns, Seq(mf),
+        Seq("operation" -> "replace"), claimed = None)
+      (meta, ns.id)
     }
   }
 
@@ -3792,99 +3752,55 @@ object IcebergTable {
     casCommit(spark, tablePath) { (baseMeta, _) =>
       val meta = baseMeta.getOrElse(throw new IllegalStateException(
         s"no metadata for $tablePath"))
-      val curId = Option(meta.get("current-snapshot-id"))
-        .filterNot(_.isNull).map(_.asLong()).getOrElse(-1L)
       // the merged content was computed against `snap` — like a data
       // compaction, any concurrent advance invalidates it (a new MOR
       // DELETE's rows would be silently dropped from the merge)
-      if (curId != snap.snapshotId) throw new CommitConflictException(
+      if (!currentSnapshotId(meta).contains(snap.snapshotId)) throw new CommitConflictException(
         "ConcurrentWrite",
         s"$tablePath: a concurrent commit advanced the table under " +
           "rewrite_position_delete_files — re-run against the new state")
-      val snaps = Option(meta.get("snapshots")).toSeq
-        .flatMap(_.elements().asScala).toSeq
-      val snapId = snaps.map(_.get("snapshot-id").asLong()).max + 1
-      val seq = Option(meta.get("last-sequence-number"))
-        .map(_.asLong()).getOrElse(0L) + 1
-      val now = System.currentTimeMillis()
-      val atok = java.util.UUID.randomUUID().toString.take(8)
-      val curNode = snaps.find(
+      val ns = nextSnapshot(baseMeta)
+      val curNode = snapshotNodes(meta).find(
         _.get("snapshot-id").asLong() == snap.snapshotId).get
-      val schemaNode: JsonNode =
-        if (meta.has("schemas")) {
-          val sid = meta.get("current-schema-id").asInt()
-          meta.get("schemas").elements().asScala
-            .find(n => n.get("schema-id").asInt() == sid).get
-        } else meta.get("schema")
-      val schemaJson = M.writeValueAsString(schemaNode)
-
-      // DATA manifests carry verbatim; the delete side is rebuilt
-      val carriedData: Seq[GenericRecord] =
-        (if (curNode.has("manifest-list"))
-          readManifestList(spark,
-            new Path(curNode.get("manifest-list").asText()))
-        else Seq.empty).filter(m => longOf(m.get("content")) == 0L)
+      val schemaJson = M.writeValueAsString(currentSchemaNode(meta))
       val unpartSpec = unpartitionedSpecId(meta, snap.defaultSpecId,
         snap.specFields.nonEmpty)
       val posManifest: Option[GenericRecord] =
         if (staged.isEmpty) None
-        else Some(writeDeleteManifest(spark, mdir, s"dc-$atok-$snapId",
+        else Some(writeDeleteManifest(spark, mdir, s"dc-${ns.tok}-${ns.id}",
           schemaJson,
           staged.map { case (pth, len, n, _) => (pth, len, n, 1, Seq.empty) },
-          snapId, seq, specId = unpartSpec,
+          ns.id, ns.seq, specId = unpartSpec,
           pathBounds = staged.map { case (pth, _, _, b) => pth -> b }.toMap))
       val eqManifest: Option[GenericRecord] =
         if (eqFiles.isEmpty) None
-        else Some(writeDeleteManifest(spark, mdir, s"dceq-$atok-$snapId",
+        else Some(writeDeleteManifest(spark, mdir, s"dceq-${ns.tok}-${ns.id}",
           schemaJson,
           eqFiles.map(f => (f.path, f.sizeBytes, f.records, 2, f.equalityIds)),
-          snapId, seq, specId = unpartSpec,
+          ns.id, ns.seq, specId = unpartSpec,
           existingSeqs = eqFiles.map(f => f.path -> f.seq).toMap))
       // live DVs carry as EXISTING with original seqs; dangling ones
       // simply do not re-appear (their Puffin bytes become orphans
       // for remove_orphan_files once no snapshot references them)
       val dvManifest: Option[GenericRecord] =
         if (liveDvs.isEmpty) None
-        else Some(writeDeleteManifest(spark, mdir, s"dcdv-$atok-$snapId",
+        else Some(writeDeleteManifest(spark, mdir, s"dcdv-${ns.tok}-${ns.id}",
           schemaJson,
           liveDvs.map(d => (d.path, d.sizeBytes, d.records, 1,
             Seq.empty[Int])),
-          snapId, seq, specId = unpartSpec,
+          ns.id, ns.seq, specId = unpartSpec,
           existingSeqs = liveDvs.map(d => d.path -> d.seq).toMap,
           dvRefs = liveDvs.map(d => for {
             r <- d.referencedDataFile; o <- d.contentOffset
             s2 <- d.contentSize
           } yield (r, o, s2))))
-
-      val listPath = fs.makeQualified(
-        new Path(mdir, s"snap-$atok-$snapId-manifest-list.avro"))
-      writeAvro(spark, listPath, ManifestFileSchema,
-        Map("format-version" -> "2"),
-        carriedData ++ posManifest.toSeq ++ eqManifest.toSeq ++
-          dvManifest.toSeq)
-
-      val snapsArr = M.createArrayNode()
-      snaps.foreach(snapsArr.add)
-      val sn = snapsArr.addObject()
-      sn.put("snapshot-id", snapId)
-      sn.put("sequence-number", seq)
-      sn.put("timestamp-ms", now)
-      sn.put("manifest-list", listPath.toString)
-      if (meta.has("current-schema-id"))
-        sn.put("schema-id", meta.get("current-schema-id").asInt())
-      else if (curNode.has("schema-id"))
-        sn.put("schema-id", curNode.get("schema-id").asInt())
-      sn.putObject("summary").put("operation", "replace")
-      meta.set[JsonNode]("snapshots", snapsArr)
-      Option(meta.get("snapshot-log")).foreach { log =>
-        val lg = log.asInstanceOf[ArrayNode].addObject()
-        lg.put("snapshot-id", snapId)
-        lg.put("timestamp-ms", now)
-      }
-      meta.put("last-sequence-number", seq)
-      meta.put("last-updated-ms", now)
-      meta.put("current-snapshot-id", snapId)
-      (meta, snapId)
+      // DATA manifests carry verbatim; the delete side is rebuilt
+      putSnapshot(spark, tablePath, meta, baseMeta, ns,
+        carriedManifests(spark, curNode)
+          .filter(m => longOf(m.get("content")) == 0L) ++
+          posManifest.toSeq ++ eqManifest.toSeq ++ dvManifest.toSeq,
+        Seq("operation" -> "replace"), claimed = None)
+      (meta, ns.id)
     }
   }
 
@@ -5109,31 +5025,15 @@ object IcebergTable {
         s"$icebergPath holds a real Iceberg table, not a mirror — " +
           "refusing to overwrite its snapshots with adopted Delta files")
     }
-    val priorSnaps: Seq[JsonNode] = prior.toSeq
-      .flatMap(m => Option(m.get("snapshots")).toSeq
-        .flatMap(_.elements().asScala))
-    val snapId = priorSnaps.map(_.get("snapshot-id").asLong())
-      .foldLeft(0L)(math.max) + 1
-    val seq = prior.flatMap(m => Option(m.get("last-sequence-number")))
-      .map(_.asLong()).getOrElse(0L) + 1
-    val atok = java.util.UUID.randomUUID().toString.take(8)
-    val now = System.currentTimeMillis()
+    val ns = nextSnapshot(prior)
 
     // schema registry: shape-based reuse, same rule as [[write]]
     val priorSchemas: Seq[JsonNode] = prior.toSeq.flatMap { m =>
       if (m.has("schemas")) m.get("schemas").elements().asScala.toSeq
       else Option(m.get("schema")).toSeq
     }
-    def normShape(dt: DataType): DataType = dt match {
-      case s: StructType => StructType(s.fields.map(f =>
-        StructField(f.name, normShape(f.dataType), nullable = true)))
-      case a: ArrayType => ArrayType(normShape(a.elementType), containsNull = true)
-      case mp: MapType => MapType(normShape(mp.keyType),
-        normShape(mp.valueType), valueContainsNull = true)
-      case other => other
-    }
     val matching = priorSchemas.find(n => n.has("schema-id") &&
-      normShape(icebergTypeToSpark(n)) == normShape(dsnap.schema))
+      looseType(icebergTypeToSpark(n)) == looseType(dsnap.schema))
     var idCounter = 0
     val nextId = () => { idCounter += 1; idCounter }
     val schemaObj = matching match {
@@ -5150,7 +5050,6 @@ object IcebergTable {
     schemaObj.put("schema-id", schemaId)
     val schemasOut: Seq[JsonNode] =
       if (matching.isDefined) priorSchemas else priorSchemas :+ schemaObj
-    val schemaJson = M.writeValueAsString(schemaObj)
 
     // adopt the live Delta files: record counts from the stats JSON
     // the Delta writer recorded, footer read only as fallback
@@ -5164,12 +5063,6 @@ object IcebergTable {
         FooterIo.withFooter(fsConf, p)(_.getRecordCount))
       (p.toString, f.size, nrec)
     }
-    val fieldInfo: Map[String, (Int, DataType)] =
-      dsnap.schema.fields.map { f =>
-        val fid = schemaObj.get("fields").elements().asScala
-          .find(_.get("name").asText() == f.name).get.get("id").asInt()
-        f.name -> ((fid, f.dataType))
-      }.toMap
     // INCREMENTAL stats: files already in the prior mirror snapshot
     // reuse their manifest-recorded column stats — only genuinely new
     // files open parquet footers. Without this every UniForm commit
@@ -5184,42 +5077,17 @@ object IcebergTable {
         .map(pf => FileStats(pf.valueCounts, pf.nullCounts, pf.bounds))
         .getOrElse(footerFileStats(fsConf, new Path(p), n))
     }.toMap
-    val newManifest = writeManifest(spark, mdir, s"mirror-$atok-$snapId",
-      schemaJson, files, snapId, seq, stats = fileStats,
-      fieldInfo = fieldInfo)
-    val listPath = fs.makeQualified(
-      new Path(mdir, s"snap-$atok-$snapId-manifest-list.avro"))
-    writeAvro(spark, listPath, ManifestFileSchema,
-      Map("format-version" -> "2"), Seq(newManifest))
-
-    val snapsArr = M.createArrayNode()
-    priorSnaps.foreach(snapsArr.add)
-    val sn = snapsArr.addObject()
-    sn.put("snapshot-id", snapId)
-    sn.put("sequence-number", seq)
-    sn.put("timestamp-ms", now)
-    sn.put("manifest-list", listPath.toString)
-    sn.put("schema-id", schemaId)
-    sn.putObject("summary").put("operation", "overwrite")
-    val logArr = M.createArrayNode()
-    prior.foreach(m => Option(m.get("snapshot-log")).foreach(
-      _.elements().asScala.foreach(logArr.add)))
-    val lg = logArr.addObject()
-    lg.put("snapshot-id", snapId)
-    lg.put("timestamp-ms", now)
+    val newManifest = writeManifest(spark, mdir, s"mirror-${ns.tok}-${ns.id}",
+      M.writeValueAsString(schemaObj), files, ns.id, ns.seq,
+      stats = fileStats, fieldInfo = fieldInfoOf(schemaObj, dsnap.schema))
 
     val root = M.createObjectNode()
     root.put("format-version", prior.flatMap(m =>
       Option(m.get("format-version"))).map(_.asInt()).getOrElse(2))
-    // row lineage: a mirror advance must not reset the row-id counter
-    prior.flatMap(m => Option(m.get("next-row-id")))
-      .foreach(n => root.put("next-row-id", n.asLong()))
     root.put("table-uuid", prior.flatMap(m => Option(m.get("table-uuid")))
       .map(_.asText()).getOrElse(java.util.UUID.nameUUIDFromBytes(
         ("iceberg-mirror:" + icebergPath).getBytes("UTF-8")).toString))
     root.put("location", fs.makeQualified(dst).toString)
-    root.put("last-sequence-number", seq)
-    root.put("last-updated-ms", now)
     root.put("last-column-id", math.max(idCounter,
       prior.flatMap(m => Option(m.get("last-column-id")))
         .map(_.asInt()).getOrElse(0)))
@@ -5249,11 +5117,11 @@ object IcebergTable {
       _.fields().asScala.foreach(e =>
         props.put(e.getKey, e.getValue.asText())))
     props.put("graft.mirror-of", deltaPath)
-    root.put("current-snapshot-id", snapId)
-    root.set[JsonNode]("snapshots", snapsArr)
-    root.set[JsonNode]("snapshot-log", logArr)
     root.putArray("metadata-log")
-    (root, snapId)
+    // a mirror advance carries the row-id counter, never resets it
+    putSnapshot(spark, icebergPath, root, prior, ns, Seq(newManifest),
+      Seq("operation" -> "overwrite"), claimed = None)
+    (root, ns.id)
     }
   }
 
@@ -5392,12 +5260,7 @@ object IcebergTable {
       val schemaObj = sparkTypeToIceberg(schema, nextId)
         .asInstanceOf[ObjectNode]
       schemaObj.put("schema-id", 0)
-      val fieldInfo: Map[String, (Int, DataType)] =
-        schema.fields.map { f =>
-          val fid = schemaObj.get("fields").elements().asScala
-            .find(_.get("name").asText() == f.name).get.get("id").asInt()
-          f.name -> ((fid, f.dataType))
-        }.toMap
+      val fieldInfo = fieldInfoOf(schemaObj, schema)
       // HIVE layout: the FILE era (schema 0) holds only the DATA
       // columns — the era machinery then knows the partition columns
       // never lived in the files and serves them from the directory
@@ -5421,10 +5284,7 @@ object IcebergTable {
         case ((k, dt), i) =>
           SpecField(k, dt, fieldInfo(k)._1, "identity", 1000 + i)
       }
-      val snapId = 1L
-      val seq = 1L
-      val atok = java.util.UUID.randomUUID().toString.take(8)
-      val now = System.currentTimeMillis()
+      val ns = nextSnapshot(None)
       val cs = footerCountsAndStats(spark,
         dataFiles.map(p => fs.makeQualified(p).toString))
       val triples: Seq[(String, Long, Long)] = dataFiles.map(p =>
@@ -5444,21 +5304,15 @@ object IcebergTable {
           }
       }.toMap
       val stats = cs.map { case (p, (_, st)) => p -> st }
-      val manifest = writeManifest(spark, mdir, s"adopt-$atok-$snapId",
-        fileSchemaJson, triples, snapId, seq, spec = specFields,
+      val manifest = writeManifest(spark, mdir, s"adopt-${ns.tok}-${ns.id}",
+        fileSchemaJson, triples, ns.id, ns.seq, spec = specFields,
         tuples = tuples, stats = stats, fieldInfo = fieldInfo)
-      val listPath = fs.makeQualified(
-        new Path(mdir, s"snap-$atok-$snapId-manifest-list.avro"))
-      writeAvro(spark, listPath, ManifestFileSchema,
-        Map("format-version" -> "2"), Seq(manifest))
 
       val root = M.createObjectNode()
       root.put("format-version", 2)
       root.put("table-uuid", java.util.UUID.nameUUIDFromBytes(
         ("iceberg-convert:" + path).getBytes("UTF-8")).toString)
       root.put("location", fs.makeQualified(dst).toString)
-      root.put("last-sequence-number", seq)
-      root.put("last-updated-ms", now)
       root.put("last-column-id", idCounter)
       root.put("current-schema-id", if (hive) 1 else 0)
       val schemasArr = root.putArray("schemas")
@@ -5480,21 +5334,11 @@ object IcebergTable {
       // columns never lived in the parquet
       root.putObject("properties").put("schema.name-mapping.default",
         nameMappingJson(dataOnlyObj))
-      root.put("current-snapshot-id", snapId)
-      val snapsArr = root.putArray("snapshots")
-      val sn = snapsArr.addObject()
-      sn.put("snapshot-id", snapId)
-      sn.put("sequence-number", seq)
-      sn.put("timestamp-ms", now)
-      sn.put("manifest-list", listPath.toString)
-      sn.put("schema-id", 0)
-      sn.putObject("summary").put("operation", "append")
-      val logArr = root.putArray("snapshot-log")
-      val lg = logArr.addObject()
-      lg.put("snapshot-id", snapId)
-      lg.put("timestamp-ms", now)
       root.putArray("metadata-log")
-      (root, snapId)
+      // the adopted files were written under the FILE era (schema 0)
+      putSnapshot(spark, path, root, None, ns, Seq(manifest),
+        Seq("operation" -> "append"), claimed = None, schemaId = Some(0))
+      (root, ns.id)
     }
   }
 
@@ -6027,15 +5871,17 @@ object IcebergTable {
     mf
   }
 
-  /** Copy a manifest-list avro's records (for append snapshots: prior
-    * manifests stay valid — avro manifest files are immutable). */
-  /** v1 manifest lists (Java writer) use `*_data_files_count` names
-    * for the fields v2 calls `*_files_count`. */
   private val ManifestFieldAliases = Map(
     "added_files_count" -> "added_data_files_count",
     "existing_files_count" -> "existing_data_files_count",
     "deleted_files_count" -> "deleted_data_files_count")
 
+  /** Copy a manifest-list avro's records into this writer's
+    * `manifest_file` schema, so a new snapshot's list can carry them
+    * (prior manifests stay valid — avro manifest files are immutable).
+    * v1 lists (Java writer) use `*_data_files_count` names for the
+    * fields v2 calls `*_files_count` ([[ManifestFieldAliases]]); absent
+    * counts default to 0. */
   private def readManifestList(spark: SparkSession, p: Path): Seq[GenericRecord] = {
     val buf = scala.collection.mutable.ArrayBuffer[GenericRecord]()
     foreachAvro(spark, p) { r =>
@@ -6145,14 +5991,17 @@ object IcebergTable {
     * schema (loud error). Mirrors [[DeltaLog.write]]; a streaming
     * Iceberg sink is `foreachBatch((b, _) => IcebergTable.write(...))`.
     *
-    * `partitionBy` declares an IDENTITY-transform partition spec:
-    * data lands in per-partition files (the partition columns stay IN
-    * the parquet, per the Iceberg layout), manifests record the real
-    * partition tuple per file, and the table metadata carries the
-    * spec — so external engines (and [[GraftIcebergTable]]'s scan)
-    * prune partition-filtered reads from the manifests alone.
-    * Appends must keep the existing spec; an overwrite may redefine
-    * it under a fresh spec-id. Returns the committed snapshot id. */
+    * `partitionBy` declares the partition spec: plain column names are
+    * IDENTITY fields, and the transforms `day(ts)` (also `year`,
+    * `month`, `hour`), `bucket(n, col)` and `truncate(w, col)` declare
+    * hidden partitioning (see [[IcebergPartitioning]]). Data lands in
+    * per-partition files (the source columns stay IN the parquet, per
+    * the Iceberg layout), manifests record the real partition tuple per
+    * file, and the table metadata carries the spec — so external
+    * engines (and [[GraftIcebergTable]]'s scan) prune
+    * partition-filtered reads from the manifests alone. Appends must
+    * keep the existing spec; an overwrite may redefine it under a
+    * fresh spec-id. Returns the committed snapshot id. */
   def write(spark: SparkSession, df0: DataFrame, tablePath: String,
             overwrite: Boolean = false,
             partitionBy: Seq[String] = Nil,
@@ -6172,16 +6021,7 @@ object IcebergTable {
       fs.globStatus(new Path(mdir, "v*.metadata.json")).isEmpty) df0
     else {
       val meta = readJson(spark, latestMetadataFile(spark, tablePath))
-      val schemaNode = {
-        val curId = if (meta.has("current-schema-id"))
-          meta.get("current-schema-id").asInt() else 0
-        if (meta.has("schemas"))
-          meta.get("schemas").elements().asScala
-            .find(n => Option(n.get("schema-id")).exists(_.asInt() == curId))
-            .getOrElse(meta.get("schema"))
-        else meta.get("schema")
-      }
-      val fields = Option(schemaNode.get("fields")).toSeq
+      val fields = Option(currentSchemaNode(meta).get("fields")).toSeq
         .flatMap(_.elements().asScala).toSeq
       val missing = fields.filterNot(f =>
         df0.columns.contains(f.get("name").asText()))
@@ -6208,19 +6048,8 @@ object IcebergTable {
       val cur = snapshot(spark, tablePath)
       // names + types must match; nullability and metadata are
       // presentation details parquet does not enforce (same rule as
-      // DeltaLog.write's append gate) — NESTED nullability included
-      // (a struct built from non-null columns is tighter, not wrong)
-      def norm(dt: DataType): DataType = dt match {
-        case s: StructType => StructType(s.fields.map(f =>
-          StructField(f.name, norm(f.dataType), nullable = true)))
-        case a: ArrayType => ArrayType(norm(a.elementType), containsNull = true)
-        case m: MapType =>
-          MapType(norm(m.keyType), norm(m.valueType), valueContainsNull = true)
-        case o => o
-      }
-      def shape(s: StructType): Seq[(String, DataType)] =
-        s.fields.toSeq.map(f => (f.name, norm(f.dataType)))
-      require(shape(cur.schema) == shape(df.schema),
+      // DeltaLog.write's append gate)
+      require(looseType(cur.schema) == looseType(df.schema),
         s"append schema ${df.schema.simpleString} does not match table " +
           s"schema ${cur.schema.simpleString}; use overwrite to replace")
       // appends must keep the table's partition spec — transforms
@@ -6239,38 +6068,15 @@ object IcebergTable {
         .map(_.stripPrefix("v").stripSuffix(".metadata.json").toLong)
         .foldLeft(0L)(math.max)
     checkGates()
-    val now = System.currentTimeMillis()
 
-    // ---- attempt-invariant staging (once): stage data through a
-    // scratch dir, adopt under stable TOKEN names (a racing writer
-    // must never clobber another's adopted files; manifests bind
-    // paths, not names). Source columns STAY in the data files (the
-    // Iceberg layout, unlike Hive's): partitioned stages write
-    // through DERIVED gp_ columns — the TRANSFORMED partition values
-    // (identity included) — so partitionBy shapes the directory tree
-    // without dropping the real columns from the parquet. Hidden
-    // partitioning is exactly this: `day(ts)`/`bucket(16, id)` values
-    // in the tree and the manifests, the raw column in the data.
-    pfs.foreach { pf =>
-      require(df.schema.fieldNames.contains(pf.source),
-        s"unknown partition source column ${pf.source}")
-      require(!df.schema.fieldNames.contains("gp_" + pf.name),
-        s"column gp_${pf.name} collides with the staging alias for " +
-          s"partition field ${pf.name}")
-      IcebergPartitioning.requireSupported(pf, df.schema(pf.source).dataType)
-      // loud on field types the manifests cannot record
-      partitionAvroType(IcebergPartitioning.resultType(
-        pf, df.schema(pf.source).dataType))
-    }
-    val tok = java.util.UUID.randomUUID().toString.take(8)
-    val tmp = new Path(dst, s".tmp-$tok-${java.util.UUID.randomUUID()}")
-    // honor the table's DEFAULT SORT ORDER (spec §Sorting, set via
-    // setWriteOrder): unpartitioned writes range-partition + locally
-    // sort on the order columns, so per-file bounds on the sort key
-    // are tight and NON-OVERLAPPING — the layout metadata skipping
-    // needs at scale; partitioned writes sort locally within each
-    // partition directory (rows are already split by the tree).
-    // Advisory by spec: an order naming absent columns is skipped.
+    // ---- attempt-invariant staging (once), under the table's DEFAULT
+    // SORT ORDER (spec §Sorting, set via setWriteOrder): unpartitioned
+    // writes range-partition + locally sort on the order columns, so
+    // per-file bounds on the sort key are tight and NON-OVERLAPPING —
+    // the layout metadata skipping needs at scale; partitioned writes
+    // sort locally within each partition directory (rows are already
+    // split by the tree). Advisory by spec: an order naming absent
+    // columns is skipped.
     val writeOrder: Seq[(String, Boolean)] =
       if (fs.globStatus(new Path(mdir, "v*.metadata.json")).isEmpty) Seq.empty
       else defaultSortOrder(spark, tablePath)
@@ -6278,87 +6084,15 @@ object IcebergTable {
     import org.apache.spark.sql.functions.col
     val orderCols = writeOrder.map { case (c, asc) =>
       if (asc) col(c).asc else col(c).desc }
-    if (pfs.isEmpty) {
-      val staged =
-        if (writeOrder.isEmpty) df
-        else df.repartitionByRange(
-          math.max(df.rdd.getNumPartitions, 1), orderCols: _*)
-          .sortWithinPartitions(orderCols: _*)
-      staged.write.parquet(tmp.toString)
-    } else {
-      val withGp = pfs.foldLeft(df)((d, pf) =>
-        d.withColumn("gp_" + pf.name, IcebergPartitioning.stagingColumn(
-          pf, df.schema(pf.source).dataType)))
-      val staged =
-        if (writeOrder.isEmpty) withGp
-        else withGp.sortWithinPartitions(
-          (pfs.map(pf => col("gp_" + pf.name).asc) ++ orderCols): _*)
-      staged.write.partitionBy(pfs.map("gp_" + _.name): _*)
-        .parquet(tmp.toString)
-    }
-    val tmpQ = fs.makeQualified(tmp).toString
-    // keyed by the tmp-RELATIVE path, not the basename: one task
-    // writing rows of several partition dirs reuses the same
-    // part-XXXXX basename in each of them
-    def walkStaged(p: Path): Seq[Path] =
-      fs.listStatus(p).toSeq.filterNot(_.getPath.getName.startsWith("_"))
-        .flatMap(st =>
-          if (st.isDirectory) walkStaged(st.getPath)
-          else if (st.getPath.getName.endsWith(".parquet")) Seq(st.getPath)
-          else Seq.empty)
-    val adoptedFull = walkStaged(tmp).sortBy(_.toString).zipWithIndex
-      .map { case (src, i) =>
-        val relStaged = fs.makeQualified(src).toString
-          .stripPrefix(tmpQ).stripPrefix("/")
-        val dirs = relStaged.split('/').dropRight(1).toSeq
-          .map(_.replaceFirst("^gp_", ""))
-        val kv = DeltaLog.parsePartitionDirs(dirs, pfs.map(_.name))
-        val tupleVals: Seq[Any] = pfs.map { pf =>
-          val raw = kv(pf.name)
-          if (raw == null) null
-          else IcebergPartitioning.resultType(
-            pf, df.schema(pf.source).dataType) match {
-            case IntegerType | ShortType | ByteType => Int.box(raw.toInt)
-            case LongType => Long.box(raw.toLong)
-            case BooleanType => Boolean.box(raw.toBoolean)
-            case FloatType => Float.box(raw.toFloat)
-            case DoubleType => Double.box(raw.toDouble)
-            case _ => raw
-          }
-        }
-        val rel = new Path(dst,
-          (Seq("data") ++ dirs :+ s"w$tok-part-$i.parquet").mkString("/"))
-        fs.mkdirs(rel.getParent)
-        if (!fs.rename(src, rel))
-          throw new IllegalStateException(s"rename failed for $rel")
-        (rel, fs.getFileStatus(rel).getLen, tupleVals)
-      }
-    // row counts AND per-file column bounds from the FOOTERS in one
-    // open per file (read concurrently / as one executor job above
-    // the gate), not a Spark re-scan of the data that was just
-    // written — external engines and the DSv2 scan prune on them
-    val stagedCs = footerCountsAndStats(spark,
-      adoptedFull.map(a => fs.makeQualified(a._1).toString))
-    val adoptedQ = adoptedFull.map { case (rel, len, tupleVals) =>
-      val q = fs.makeQualified(rel).toString
-      (q, len, stagedCs(q)._1, tupleVals) }
-    val adopted = adoptedQ.map(a => (a._1, a._2, a._3))
-    val tuples: Map[String, Seq[Any]] =
-      if (partitionBy.isEmpty) Map.empty
-      else adoptedQ.map(a => a._1 -> a._4).toMap
-    fs.delete(tmp, true)
-    val fileStats: Map[String, FileStats] =
-      stagedCs.map { case (p, (_, st)) => p -> st }
+    val staged = stageDataFiles(spark,
+      if (pfs.nonEmpty || orderCols.isEmpty) df
+      else df.repartitionByRange(
+        math.max(df.rdd.getNumPartitions, 1), orderCols: _*),
+      tablePath, pfs, "w" + java.util.UUID.randomUUID().toString.take(8),
+      cluster = false, sortWithin = orderCols)
 
     casCommit(spark, tablePath) { (prior, metaVersion) =>
-      val priorSnaps: Seq[JsonNode] = prior.toSeq
-        .flatMap(m => Option(m.get("snapshots")).toSeq.flatMap(_.elements().asScala))
-      val snapId = priorSnaps.map(_.get("snapshot-id").asLong()).foldLeft(0L)(math.max) + 1
-      val seq = prior.flatMap(m => Option(m.get("last-sequence-number")))
-        .map(_.asLong()).getOrElse(0L) + 1
-      // attempt-unique artifact names (the winner may have been a
-      // metadata-only commit that minted no snapshot id)
-      val atok = java.util.UUID.randomUUID().toString.take(8)
+      val priorSnaps: Seq[JsonNode] = prior.toSeq.flatMap(snapshotNodes)
       // the idempotent-writer race: the SAME streaming app replaying
       // the same (or an older) batch must refuse, exactly like
       // Delta's ConcurrentTransaction — the sink rechecks watermarks
@@ -6397,27 +6131,14 @@ object IcebergTable {
         if (m.has("schemas")) m.get("schemas").elements().asScala.toSeq
         else Option(m.get("schema")).toSeq
       }
-      def normShape(dt: DataType): DataType = dt match {
-        case s: StructType => StructType(s.fields.map(f =>
-          StructField(f.name, normShape(f.dataType), nullable = true)))
-        case a: ArrayType => ArrayType(normShape(a.elementType), containsNull = true)
-        case mp: MapType =>
-          MapType(normShape(mp.keyType), normShape(mp.valueType),
-            valueContainsNull = true)
-        case other => other
-      }
       val curSchemaId: Option[Int] = prior.flatMap(m =>
         Option(m.get("current-schema-id")).map(_.asInt()))
       // rebase re-gate: a concurrent ALTER must refuse, a concurrent
       // append must not — checked against the SCANNED base, never the
       // version hint (which the winner updates only after its CAS)
       if (metaVersion != gateVersion && !overwrite && prior.nonEmpty) {
-        val curNode: Option[JsonNode] =
-          priorSchemas.find(n => n.has("schema-id") &&
-            curSchemaId.contains(n.get("schema-id").asInt()))
-            .orElse(prior.flatMap(m => Option(m.get("schema"))))
-        curNode.foreach { n =>
-          if (normShape(icebergTypeToSpark(n)) != normShape(df.schema))
+        prior.flatMap(m => Option(currentSchemaNode(m))).foreach { n =>
+          if (looseType(icebergTypeToSpark(n)) != looseType(df.schema))
             throw new CommitConflictException("MetadataChanged",
               s"$tablePath: the schema changed under this append")
         }
@@ -6435,7 +6156,7 @@ object IcebergTable {
             s"$tablePath: the partition spec changed under this append")
       }
       def shapeEq(n: JsonNode): Boolean =
-        normShape(icebergTypeToSpark(n)) == normShape(df.schema)
+        looseType(icebergTypeToSpark(n)) == looseType(df.schema)
       val matching: Option[JsonNode] =
         priorSchemas.find(n => n.has("schema-id") &&
             curSchemaId.contains(n.get("schema-id").asInt()) && shapeEq(n))
@@ -6493,11 +6214,6 @@ object IcebergTable {
         case None => baseSpecFields
       }
 
-      val fieldInfo: Map[String, (Int, DataType)] = df.schema.fields.map { f =>
-        val fid = schemaObj.get("fields").elements().asScala
-          .find(_.get("name").asText() == f.name).get.get("id").asInt()
-        f.name -> ((fid, f.dataType))
-      }.toMap
       // v3 ROW LINEAGE: the snapshot claims [next-row-id, +records)
       // and each added file carries its first_row_id (spec field 142);
       // existing files keep their ranges via the carried manifests.
@@ -6506,84 +6222,19 @@ object IcebergTable {
       // with row lineage active from the first snapshot as v3 mandates
       val createFv = if (df.schema.fields.exists(f =>
         containsVariant(f.dataType))) 3 else 2
-      val fv3 = prior.flatMap(m => Option(m.get("format-version")))
-        .map(_.asInt()).getOrElse(createFv) >= 3
-      val rowIdBase: Long =
-        if (!fv3) -1L
-        else prior.flatMap(m => Option(m.get("next-row-id")))
-          .map(_.asLong()).getOrElse(0L)
-      val firstRowIds: Map[String, Long] =
-        if (!fv3) Map.empty
-        else {
-          var next = rowIdBase
-          adopted.map { case (pth, _, nrec) =>
-            val b = next; next += nrec; pth -> b }.toMap
-        }
-      val newManifest = writeManifest(spark, mdir, s"$atok-$snapId", schemaJson,
-        adopted, snapId, seq, specFields, tuples, specId, fileStats, fieldInfo,
-        firstRowIds = firstRowIds)
-      val listEntries =
-        if (overwrite || prior.isEmpty) Seq(newManifest)
-        else {
-          // append: the BASE snapshot's manifests carry over (the
-          // branch head for branch writes, else main's current)
-          val curId = branchHead.getOrElse(
-            prior.flatMap(m => Option(m.get("current-snapshot-id")))
-              .filterNot(_.isNull).map(_.asLong()).getOrElse(-1L))
-          val curSnap = priorSnaps.find(_.get("snapshot-id").asLong() == curId)
-          val carried = curSnap.toSeq.flatMap { sn =>
-            if (sn.has("manifest-list"))
-              readManifestList(spark, new Path(sn.get("manifest-list").asText()))
-            else if (sn.has("manifests")) {
-              // early-v1 inline manifest paths: wrap each into a
-              // manifest_file record so the append's manifest list
-              // still references them — silently carrying NOTHING
-              // here would drop every pre-append file from the table
-              // (the 'loud error, never silent wrong results' contract)
-              sn.get("manifests").elements().asScala.toSeq.map { pn =>
-                val p = new Path(pn.asText())
-                val mf = new GenericData.Record(ManifestFileSchema)
-                mf.put("manifest_path", p.toString)
-                mf.put("manifest_length", fsFor(spark, p).getFileStatus(p).getLen)
-                mf.put("partition_spec_id", 0)
-                mf.put("content", 0)
-                mf.put("sequence_number", 0L)
-                mf.put("min_sequence_number", 0L)
-                mf.put("added_snapshot_id", curId)
-                mf.put("added_files_count", 0)
-                mf.put("existing_files_count", 0)
-                mf.put("deleted_files_count", 0)
-                mf.put("added_rows_count", 0L)
-                mf.put("existing_rows_count", 0L)
-                mf.put("deleted_rows_count", 0L)
-                mf: GenericRecord
-              }
-            } else Seq.empty
-          }
-          carried :+ newManifest
-        }
-      val listPath = fs.makeQualified(
-        new Path(mdir, s"snap-$atok-$snapId-manifest-list.avro"))
-      writeAvro(spark, listPath, ManifestFileSchema,
-        Map("format-version" -> "2"), listEntries)
+      val ns = nextSnapshot(prior, createFv)
+      val newManifest = writeManifest(spark, mdir, s"${ns.tok}-${ns.id}",
+        schemaJson, staged.files, ns.id, ns.seq, specFields, staged.tuples,
+        specId, staged.stats, fieldInfoOf(schemaObj, df.schema),
+        firstRowIds = ns.claim(staged.files))
+      // append: the BASE snapshot's manifests carry over (the branch
+      // head for branch writes, else main's current)
+      val carried: Seq[GenericRecord] =
+        if (overwrite) Nil
+        else branchHead.orElse(prior.flatMap(currentSnapshotId))
+          .flatMap(id => priorSnaps.find(_.get("snapshot-id").asLong() == id))
+          .toSeq.flatMap(carriedManifests(spark, _))
 
-      // metadata: copy prior snapshots, add the new one
-      val snapsArr = M.createArrayNode()
-      priorSnaps.foreach(snapsArr.add)
-      val sn = snapsArr.addObject()
-      sn.put("snapshot-id", snapId)
-      sn.put("sequence-number", seq)
-      sn.put("timestamp-ms", now)
-      sn.put("manifest-list", listPath.toString)
-      sn.put("schema-id", schemaId)
-      if (fv3) sn.put("first-row-id", rowIdBase)
-      val priorCur: Option[Long] = prior
-        .flatMap(m => Option(m.get("current-snapshot-id")))
-        .filterNot(_.isNull).map(_.asLong()).filter(_ != -1L)
-      branchHead.orElse(priorCur)
-        .foreach(c => sn.put("parent-snapshot-id", c))
-      val summ = sn.putObject("summary")
-      summ.put("operation", if (overwrite) "overwrite" else "append")
       // WRITE-AUDIT-PUBLISH staging (the spec's wap.id convention): on
       // a write.wap.enabled table with spark.wap.id set, the snapshot
       // lands STAGED — present in `snapshots` for auditors to read by
@@ -6595,37 +6246,23 @@ object IcebergTable {
           prior.exists(m => Option(m.get("properties")).exists(pr =>
             Option(pr.get("write.wap.enabled")).exists(_.asText() == "true")))
         }
-      wapId.foreach(w => summ.put("wap.id", w))
       // streaming idempotence marker (the `txn` twin of the Delta sink,
       // carried as snapshot summary properties like real engines'
       // checkpoint ids): a replayed micro-batch at or below the
       // replayed watermark is a no-op
-      txn.foreach { case (appId, batchId) =>
-        summ.put("graft.txn.app-id", appId)
-        summ.put("graft.txn.batch-id", batchId.toString)
-      }
-      val logArr = M.createArrayNode()
-      prior.foreach(m => Option(m.get("snapshot-log")).foreach(
-        _.elements().asScala.foreach(logArr.add)))
-      if (wapId.isEmpty && toBranch.isEmpty) {
-        val lg = logArr.addObject()
-        lg.put("snapshot-id", snapId)
-        lg.put("timestamp-ms", now)
-      }
+      val summary = Seq("operation" -> (if (overwrite) "overwrite" else "append")) ++
+        wapId.map("wap.id" -> _) ++
+        txn.toSeq.flatMap { case (appId, batchId) =>
+          Seq("graft.txn.app-id" -> appId, "graft.txn.batch-id" -> batchId.toString)
+        }
 
       val root = M.createObjectNode()
       root.put("format-version", prior.flatMap(m =>
         Option(m.get("format-version"))).map(_.asInt()).getOrElse(createFv))
-      // row lineage: the table's next free row id advances past this
-      // snapshot's claim
-      if (fv3) root.put("next-row-id",
-        rowIdBase + adopted.map(_._3).sum)
       root.put("table-uuid", prior.flatMap(m => Option(m.get("table-uuid")))
         .map(_.asText()).getOrElse(java.util.UUID.nameUUIDFromBytes(
           ("iceberg:" + tablePath).getBytes("UTF-8")).toString))
       root.put("location", fs.makeQualified(dst).toString)
-      root.put("last-sequence-number", seq)
-      root.put("last-updated-ms", now)
       root.put("last-column-id", math.max(idCounter,
         prior.flatMap(m => Option(m.get("last-column-id")))
           .map(_.asInt()).getOrElse(0)))
@@ -6659,11 +6296,6 @@ object IcebergTable {
           root.putArray("sort-orders").addObject()
             .put("order-id", 0).putArray("fields")
       }
-      root.put("current-snapshot-id",
-        if (wapId.isDefined || toBranch.isDefined) priorCur.getOrElse(-1L)
-        else snapId)
-      root.set[JsonNode]("snapshots", snapsArr)
-      root.set[JsonNode]("snapshot-log", logArr)
       root.putArray("metadata-log")
       // table PROPERTIES survive writes (a rebuilt root that dropped
       // them would silently strip SET TBLPROPERTIES on every append)
@@ -6676,12 +6308,15 @@ object IcebergTable {
       prior.flatMap(m => Option(m.get("refs"))).foreach(r =>
         root.set[JsonNode]("refs", r.deepCopy()))
       toBranch.foreach { b =>
-        val refsNode = root.withObject("/refs")
-        val e = refsNode.putObject(b)
-        e.put("snapshot-id", snapId)
+        val e = root.withObject("/refs").putObject(b)
+        e.put("snapshot-id", ns.id)
         e.put("type", "branch")
       }
-      (root, snapId)
+      putSnapshot(spark, tablePath, root, prior, ns, carried :+ newManifest,
+        summary, claimed = Some(staged.files.map(_._3).sum),
+        branchHead = branchHead,
+        current = wapId.isEmpty && toBranch.isEmpty)
+      (root, ns.id)
     }
   }
 }

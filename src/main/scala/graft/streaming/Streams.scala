@@ -428,11 +428,9 @@ object Streams {
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val spark = batch.sparkSession
         val txn = Some(appId -> batchId)
-        val snap =
-          try Some(DeltaLog.snapshot(spark, table))
-          catch { case _: IllegalArgumentException => None } // not created yet
         val src = prepare(batch.toDF())
-        snap match {
+        // None: no table, or an empty `_delta_log` — create it at v0
+        DeltaLog.latestSnapshot(spark, table) match {
           case None => DeltaLog.write(spark, src, table, txn = txn)
           case Some(s) if s.txns.getOrElse(appId, -1L) >= batchId => // replay
           case Some(_) =>

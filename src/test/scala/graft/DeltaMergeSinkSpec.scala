@@ -97,4 +97,43 @@ class DeltaMergeSinkSpec extends SparkSpec {
     assert(DeltaLog.snapshot(spark, t).version === 2L)
     assert(DeltaLog.read(spark, t).as[(Long, Long)].collect().toSet === expected)
   }
+
+  /** What a first commit that failed after making `_delta_log`
+    * leaves: a log with no commit. */
+  private def emptyLog(dir: String): String = {
+    val t = s"$dir/t"
+    Files.createDirectories(Paths.get(t, "_delta_log"))
+    assert(DeltaLog.lastCommittedBatch(spark, t, "any") === -1L)
+    t
+  }
+
+  private def assertCreatedAtV0(t: String, appId: String): Unit = {
+    assert(DeltaLog.snapshot(spark, t).version === 0L)
+    assert(DeltaLog.lastCommittedBatch(spark, t, appId) === 0L)
+    assert(DeltaLog.read(spark, t).select("id", "s").as[(Long, String)]
+      .collect().toSet === Set((1L, "a"), (2L, "b")))
+  }
+
+  test("the MERGE stream creates the table at v0 over an empty _delta_log") {
+    val dir = tmp("graft-msink-empty")
+    land(s"$dir/src", "f1",
+      Seq((1L, "a", 1L), (2L, "b", 1L)).toDF("id", "s", "ver"))
+    val t = emptyLog(dir)
+    mergeRun(s"$dir/src", t, s"$dir/ckpt")
+    assertCreatedAtV0(t, s"graft-delta-merge:$dir/ckpt")
+  }
+
+  test("the graft-delta sink creates the table at v0 over an empty _delta_log") {
+    val dir = tmp("graft-sink-empty")
+    land(s"$dir/src", "f1",
+      Seq((1L, "a", 1L), (2L, "b", 1L)).toDF("id", "s", "ver"))
+    val t = emptyLog(dir)
+    assert(DeltaLog.lastCommittedBatch(spark, s"$dir/absent", "any") === -1L)
+    stream(s"$dir/src", Seq((0L, "", 0L)).toDF("id", "s", "ver")).writeStream
+      .format("graft-delta")
+      .option("checkpointLocation", s"$dir/ckpt")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start(t).awaitTermination()
+    assertCreatedAtV0(t, s"graft-delta-sink:$dir/ckpt")
+  }
 }

@@ -124,6 +124,24 @@ class DeltaCommitPathSpec extends graft.SparkSpec {
     assert(DeltaLog.read(spark, t).orderBy("id").collect().toSeq === expected)
   }
 
+  test("a MERGE that deletes every match adds no 0-row file") {
+    // unpartitioned: an empty partitioned write stages no part at all,
+    // an unpartitioned one stages one empty part
+    val t = tmp()
+    DeltaLog.write(spark, rows(1 to 30, "w"), t)
+    val v = DeltaLog.mergeFlexible(spark, t, rows(1 to 3, "g"), Seq("id"),
+      matched = Seq(
+        MergeSpec.Matched(Some(col("id") < 100), delete = true),
+        MergeSpec.Matched(None, delete = false,
+          Seq("s" -> col(MergeSpec.SrcPrefix + "s")))),
+      notMatched = Nil)
+    val acts = actions(t, v)
+    assert(acts.exists(_.has("remove")))
+    acts.flatMap(n => Option(n.get("add"))).foreach(a =>
+      assert(numRecords(a) > 0L, s"0-row add ${a.get("path").asText()}"))
+    assert(DeltaLog.read(spark, t).count() === 27L)
+  }
+
   test("MERGE and OPTIMIZE commit the same per-file stats on both legs of the footer gate") {
     def run(gate: Option[String]): Seq[Seq[(String, String)]] = {
       val t = tmp()
