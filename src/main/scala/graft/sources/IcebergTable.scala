@@ -2052,8 +2052,6 @@ object IcebergTable {
     require(snap.snapshotId != -1L, s"cannot merge into empty table $tablePath")
     keyCols.foreach(c => require(snap.schema.fieldNames.contains(c),
       s"unknown merge key $c"))
-    def shape(s: StructType): Seq[(String, DataType)] =
-      s.fields.toSeq.map(f => (f.name, f.dataType))
     require(snap.schema.fieldNames.toSet == source.columns.toSet &&
       shape(StructType(snap.schema.fieldNames.map(n =>
         source.schema(n)))).map(_._2) == shape(snap.schema).map(_._2),
@@ -2705,6 +2703,44 @@ object IcebergTable {
         schema.find(_.name == n)
           .map(f => n -> ((fn.get("id").asInt(), f.dataType)))
       }.toMap
+
+  /** The schema registry step of a commit that writes `schema`
+    * ([[write]], [[mirrorFromDelta]]): a prior schema of the same
+    * loose shape (names + types; nullability is a presentation detail
+    * the append gate ignores — an INSERT of non-null literals must never
+    * mint a new all-required schema) is reused, node and id, the
+    * table's current one first; else `schema` joins the list under a
+    * fresh id — old snapshots keep reading with the schema they were
+    * written under. Returns the schema node (its `schema-id` set), the
+    * schemas list and the table's `last-column-id`. */
+  private def registerSchema(prior: Option[JsonNode], schema: StructType)
+  : (ObjectNode, Seq[JsonNode], Int) = {
+    val priorSchemas: Seq[JsonNode] = prior.toSeq.flatMap { m =>
+      if (m.has("schemas")) m.get("schemas").elements().asScala.toSeq
+      else Option(m.get("schema")).toSeq
+    }
+    val lastColumnId = prior.flatMap(m => Option(m.get("last-column-id")))
+      .map(_.asInt()).getOrElse(0)
+    val curSchemaId = prior.flatMap(m =>
+      Option(m.get("current-schema-id")).map(_.asInt()))
+    def shapeEq(n: JsonNode): Boolean =
+      looseType(icebergTypeToSpark(n)) == looseType(schema)
+    priorSchemas.find(n => n.has("schema-id") &&
+        curSchemaId.contains(n.get("schema-id").asInt()) && shapeEq(n))
+      .orElse(priorSchemas.find(n => n.has("schema-id") && shapeEq(n))) match {
+      case Some(n) =>
+        (n.deepCopy[JsonNode]().asInstanceOf[ObjectNode], priorSchemas,
+          lastColumnId)
+      case None =>
+        var idCounter = 0
+        val o = sparkTypeToIceberg(schema, () => { idCounter += 1; idCounter })
+          .asInstanceOf[ObjectNode]
+        o.put("schema-id", priorSchemas
+          .flatMap(n => Option(n.get("schema-id")).map(_.asInt()))
+          .foldLeft(-1)(math.max) + 1)
+        (o, priorSchemas :+ o, math.max(idCounter, lastColumnId))
+    }
+  }
 
   /** The snapshot a commit attempt creates: id and sequence number one
     * past the base's, an attempt token that keeps this attempt's
@@ -5027,29 +5063,8 @@ object IcebergTable {
     }
     val ns = nextSnapshot(prior)
 
-    // schema registry: shape-based reuse, same rule as [[write]]
-    val priorSchemas: Seq[JsonNode] = prior.toSeq.flatMap { m =>
-      if (m.has("schemas")) m.get("schemas").elements().asScala.toSeq
-      else Option(m.get("schema")).toSeq
-    }
-    val matching = priorSchemas.find(n => n.has("schema-id") &&
-      looseType(icebergTypeToSpark(n)) == looseType(dsnap.schema))
-    var idCounter = 0
-    val nextId = () => { idCounter += 1; idCounter }
-    val schemaObj = matching match {
-      case Some(n) =>
-        idCounter = prior.flatMap(m => Option(m.get("last-column-id")))
-          .map(_.asInt()).getOrElse(0)
-        n.deepCopy[JsonNode]().asInstanceOf[ObjectNode]
-      case None => sparkTypeToIceberg(dsnap.schema, nextId)
-        .asInstanceOf[ObjectNode]
-    }
-    val schemaId = matching.map(_.get("schema-id").asInt()).getOrElse(
-      priorSchemas.flatMap(n => Option(n.get("schema-id")).map(_.asInt()))
-        .foldLeft(-1)(math.max) + 1)
-    schemaObj.put("schema-id", schemaId)
-    val schemasOut: Seq[JsonNode] =
-      if (matching.isDefined) priorSchemas else priorSchemas :+ schemaObj
+    val (schemaObj, schemasOut, lastColumnId) =
+      registerSchema(prior, dsnap.schema)
 
     // adopt the live Delta files: record counts from the stats JSON
     // the Delta writer recorded, footer read only as fallback
@@ -5088,10 +5103,8 @@ object IcebergTable {
       .map(_.asText()).getOrElse(java.util.UUID.nameUUIDFromBytes(
         ("iceberg-mirror:" + icebergPath).getBytes("UTF-8")).toString))
     root.put("location", fs.makeQualified(dst).toString)
-    root.put("last-column-id", math.max(idCounter,
-      prior.flatMap(m => Option(m.get("last-column-id")))
-        .map(_.asInt()).getOrElse(0)))
-    root.put("current-schema-id", schemaId)
+    root.put("last-column-id", lastColumnId)
+    root.put("current-schema-id", schemaObj.get("schema-id").asInt())
     val schemasArr = root.putArray("schemas")
     schemasOut.foreach(schemasArr.add)
     val specsArr = root.putArray("partition-specs")
@@ -6121,18 +6134,6 @@ object IcebergTable {
         r.get("snapshot-id").asLong()
       }
 
-      // schema registry: reuse a SHAPE-equal prior schema's node+id
-      // (names + types; nullability is a presentation detail the append
-      // gate already ignores — an INSERT of non-null literals must
-      // never mint a new all-required schema), preferring the table's
-      // current schema; else append under a fresh id — old snapshots
-      // keep reading with the schema they were written under
-      val priorSchemas: Seq[JsonNode] = prior.toSeq.flatMap { m =>
-        if (m.has("schemas")) m.get("schemas").elements().asScala.toSeq
-        else Option(m.get("schema")).toSeq
-      }
-      val curSchemaId: Option[Int] = prior.flatMap(m =>
-        Option(m.get("current-schema-id")).map(_.asInt()))
       // rebase re-gate: a concurrent ALTER must refuse, a concurrent
       // append must not — checked against the SCANNED base, never the
       // version hint (which the winner updates only after its CAS)
@@ -6155,28 +6156,8 @@ object IcebergTable {
           throw new CommitConflictException("MetadataChanged",
             s"$tablePath: the partition spec changed under this append")
       }
-      def shapeEq(n: JsonNode): Boolean =
-        looseType(icebergTypeToSpark(n)) == looseType(df.schema)
-      val matching: Option[JsonNode] =
-        priorSchemas.find(n => n.has("schema-id") &&
-            curSchemaId.contains(n.get("schema-id").asInt()) && shapeEq(n))
-          .orElse(priorSchemas.find(n => n.has("schema-id") && shapeEq(n)))
-      var idCounter = 0
-      val nextId = () => { idCounter += 1; idCounter }
-      val schemaObj = matching match {
-        case Some(n) =>
-          idCounter = Option(prior.get.get("last-column-id")).map(_.asInt())
-            .getOrElse(0)
-          n.deepCopy[JsonNode]().asInstanceOf[ObjectNode]
-        case None =>
-          sparkTypeToIceberg(df.schema, nextId).asInstanceOf[ObjectNode]
-      }
-      val schemaId = matching.map(_.get("schema-id").asInt()).getOrElse(
-        priorSchemas.flatMap(n => Option(n.get("schema-id")).map(_.asInt()))
-          .foldLeft(-1)(math.max) + 1)
-      schemaObj.put("schema-id", schemaId)
-      val schemasOut: Seq[JsonNode] =
-        if (matching.isDefined) priorSchemas else priorSchemas :+ schemaObj
+      val (schemaObj, schemasOut, lastColumnId) = registerSchema(prior, df.schema)
+      val schemaId = schemaObj.get("schema-id").asInt()
       val schemaJson = M.writeValueAsString(schemaObj)
 
       // partition spec (identity AND transform fields): source ids from
@@ -6263,9 +6244,7 @@ object IcebergTable {
         .map(_.asText()).getOrElse(java.util.UUID.nameUUIDFromBytes(
           ("iceberg:" + tablePath).getBytes("UTF-8")).toString))
       root.put("location", fs.makeQualified(dst).toString)
-      root.put("last-column-id", math.max(idCounter,
-        prior.flatMap(m => Option(m.get("last-column-id")))
-          .map(_.asInt()).getOrElse(0)))
+      root.put("last-column-id", lastColumnId)
       root.put("current-schema-id", schemaId)
       val schemasArr = root.putArray("schemas")
       schemasOut.foreach(schemasArr.add)
