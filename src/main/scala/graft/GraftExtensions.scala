@@ -50,7 +50,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 object GraftGuardrails {
   def check(session: org.apache.spark.sql.SparkSession)
   : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan => Unit = plan => {
-    if (session.conf.getOption("spark.graft.failOnGlobalWindow").contains("true")) {
+    if (session.conf.get("spark.graft.failOnGlobalWindow", null) == "true") {
       plan.foreach {
         case w: org.apache.spark.sql.catalyst.plans.logical.Window
           if w.partitionSpec.isEmpty =>

@@ -1,7 +1,9 @@
 package graft.quality
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.StagingWrite
 
 /** Data-quality check framework.
   *
@@ -190,10 +192,19 @@ object QualityChecks {
     * means a per-check audit read prunes to one partition. */
   def routeViolations(df: DataFrame, checks: Seq[(String, Column)],
                       qualityPath: String,
-                      mode: org.apache.spark.sql.SaveMode =
-                        org.apache.spark.sql.SaveMode.Append): Unit =
-    tagViolations(df, checks).write.mode(mode)
-      .partitionBy("check_name").parquet(qualityPath)
+                      mode: SaveMode = SaveMode.Append): Unit = {
+    val p = new Path(qualityPath)
+    lazy val fs = p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    val write = mode match {
+      case SaveMode.Append => true
+      case SaveMode.Overwrite => fs.delete(p, true); true
+      case SaveMode.Ignore => !fs.exists(p)
+      case SaveMode.ErrorIfExists =>
+        require(!fs.exists(p), s"path $qualityPath already exists"); true
+    }
+    if (write)
+      StagingWrite.parquet(tagViolations(df, checks), qualityPath, Seq("check_name"))
+  }
 
   /** Streaming variant: route each micro-batch's violations to the
     * same partitioned quality table via foreachBatch (append — the

@@ -247,27 +247,13 @@ object AvroFiles {
     }
   }
 
-  /** Hadoop Configuration is not Serializable; the standard Writable
-    * round-trip wrapper ships it into tasks. */
-  private class SerConf(@transient var value: org.apache.hadoop.conf.Configuration)
-    extends Serializable {
-    private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-      out.defaultWriteObject(); value.write(out)
-    }
-    private def readObject(in: java.io.ObjectInputStream): Unit = {
-      in.defaultReadObject()
-      value = new org.apache.hadoop.conf.Configuration(false)
-      value.readFields(in)
-    }
-  }
-
   /** Write `df` as avro container files under `dir` — one file per
     * partition, written from the executors. Returns the file count. */
   def write(df: DataFrame, dir: String): Int = {
     val spark = df.sparkSession
     val schema = sparkTypeToAvro(df.schema, nullable = false, "topLevelRecord",
       "graft.avro").toString
-    val conf = new SerConf(spark.sparkContext.hadoopConfiguration)
+    val conf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
     val dirB = dir
     df.rdd.foreachPartition { it =>
       if (it.hasNext) {

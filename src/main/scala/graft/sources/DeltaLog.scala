@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.StagingWrite
 import org.apache.spark.sql.types._
 
 /** Native reader (and minimal writer) for the PUBLIC Delta Lake
@@ -908,8 +909,8 @@ object DeltaLog {
     if (cachedSnap != null) return cachedSnap
     def cachePut(s: Snapshot): Snapshot = { snapshotCache.put(segKey, s); s }
 
-    val driverMax = spark.conf.getOption(
-      "spark.sql.graft.delta.driverReplayMaxBytes")
+    val driverMax = Option(spark.conf.get(
+      "spark.sql.graft.delta.driverReplayMaxBytes", null))
       .flatMap(_.toLongOption).getOrElse(4L << 20)
     if (driverMax > 0 && (jsonPaths.nonEmpty || cp.isDefined)) {
       // checkpoint files live in the log dir, so the same listing
@@ -1700,8 +1701,8 @@ object DeltaLog {
                                   commits: Seq[(Long, Long)]): Tail = {
     val dir = logDir(tablePath)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val driverMax = spark.conf.getOption(
-      "spark.sql.graft.delta.driverReplayMaxBytes")
+    val driverMax = Option(spark.conf.get(
+      "spark.sql.graft.delta.driverReplayMaxBytes", null))
       .flatMap(_.toLongOption).getOrElse(4L << 20)
     val versions = commits.map(_._1)
     val jsonPaths = versions.map(v => new Path(dir, pad20(v) + ".json"))
@@ -1975,8 +1976,7 @@ object DeltaLog {
         throw new IllegalStateException(s"rename failed for $rel")
       (rel, pv, fs.getFileStatus(fin).getLen, fin)
     }
-    val gate = spark.conf
-      .getOption("spark.sql.graft.footerStatsDriverMaxFiles")
+    val gate = Option(spark.conf.get("spark.sql.graft.footerStatsDriverMaxFiles", null))
       .map(_.toInt).getOrElse(64)
     val stats: Seq[Option[String]] =
       if (renamed.size <= gate)
@@ -2012,8 +2012,7 @@ object DeltaLog {
                         dropEmpty: Boolean = false): Seq[Adopted] = {
     val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmp = new Path(dst, s".tmp-$tag-${java.util.UUID.randomUUID()}")
-    if (effParts.isEmpty) df.write.parquet(tmp.toString)
-    else df.write.partitionBy(effParts: _*).parquet(tmp.toString)
+    StagingWrite.parquet(df, tmp.toString, effParts)
     val tmpRoot = fs.makeQualified(tmp).toString
     val uniq = java.util.UUID.randomUUID().toString.take(8)
     val staged = stagedParts(fs, tmp).zipWithIndex.map { case (src, i) =>
@@ -2052,7 +2051,7 @@ object DeltaLog {
       new Path(dst, s".tmp-$tag-$gi-${java.util.UUID.randomUUID()}"))
     val staged = groups.zip(tmps).zipWithIndex.flatMap {
       case (((pv, fls), tmp), gi) =>
-        frameOf(pv, fls).write.parquet(tmp.toString)
+        StagingWrite.parquet(frameOf(pv, fls), tmp.toString)
         val dirs = pc.map(c =>
           s"${hiveEscape(c)}=${Option(pv.getOrElse(c, null))
             .map(hiveEscape).getOrElse("__HIVE_DEFAULT_PARTITION__")}")
@@ -3648,7 +3647,7 @@ object DeltaLog {
     // (`spark.graft.dv.maxDeleteRows`, default 50k) sends large
     // deletes to copy-on-write, where rewriting is the cheaper shape.
     val viaDv =
-      if (spark.conf.getOption("spark.graft.dv.enabled").contains("true"))
+      if (spark.conf.get("spark.graft.dv.enabled", null) == "true")
         dvDelete(spark, deltaPath, predicate, checkpointInterval)
       else None
     viaDv.getOrElse(
@@ -3688,7 +3687,7 @@ object DeltaLog {
     if (uniformEnabled(snap.configuration)) return None
     val candidates = prunedFiles(spark, snap, predicate)
     if (candidates.isEmpty) return Some(snap.version)
-    val maxRows = spark.conf.getOption("spark.graft.dv.maxDeleteRows")
+    val maxRows = Option(spark.conf.get("spark.graft.dv.maxDeleteRows", null))
       .map(_.toLong).getOrElse(50000L)
     val dataSchema = StructType(snap.schema.filterNot(
       f => snap.partitionColumns.contains(f.name)))
@@ -3845,7 +3844,7 @@ object DeltaLog {
     // rows become DV positions, their TRANSFORMED copies append as
     // fresh files — one commit, no file rewritten
     val viaDv =
-      if (spark.conf.getOption("spark.graft.dv.enabled").contains("true"))
+      if (spark.conf.get("spark.graft.dv.enabled", null) == "true")
         dvMutate(spark, deltaPath, predicate, checkpointInterval,
           Some { matched =>
             // ONE projection over the ORIGINAL columns (simultaneous

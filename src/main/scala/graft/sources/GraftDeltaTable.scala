@@ -16,6 +16,7 @@ import org.apache.spark.sql.execution.datasources.{FilePartition, FileStatusCach
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
 import org.apache.spark.sql.execution.streaming.Sink
 import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.graft.StagingWrite
 import org.apache.spark.sql.sources.{And => FAnd, DataSourceRegister, EqualNullSafe, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, InsertableRelation, IsNotNull, IsNull, LessThan, LessThanOrEqual, Not => FNot, Or => FOr, StreamSinkProvider, StringContains, StringEndsWith, StringStartsWith}
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types._
@@ -139,11 +140,14 @@ object GraftDelta {
     * appended as per-file constants, `filters` pushed to row-group
     * skipping. (ParquetScan builds the fully-configured factory —
     * reusing it keeps every conf key Spark's parquet read path needs;
-    * the empty file index is construction-only.) */
+    * the empty file index is construction-only.) The scan broadcasts
+    * its Hadoop conf, so it gets the compact snapshot (no per-key
+    * source records to gzip, see `StagingWrite.compactConf`). */
   def readerFactory(spark: SparkSession, dataSchema: StructType,
                     readDataSchema: StructType, readPartSchema: StructType,
                     filters: Array[Filter]): PartitionReaderFactory = {
-    val hc = spark.sessionState.newHadoopConfWithOptions(Map.empty)
+    val hc = StagingWrite.compactConf(
+      spark.sessionState.newHadoopConfWithOptions(Map.empty))
     val emptyIndex = new InMemoryFileIndex(spark, Nil, Map.empty,
       Some(dataSchema), FileStatusCache.getOrCreate(spark), None, None)
     new ParquetScan(spark, hc, emptyIndex, dataSchema, readDataSchema,

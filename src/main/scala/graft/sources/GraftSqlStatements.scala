@@ -486,7 +486,7 @@ object GraftSqlStatements {
           "catalog is a configured graft.sources.GraftCatalog, or pass " +
           "a quoted filesystem path: OPTIMIZE '/lake/t'")
       val cat = parts.head
-      val impl = spark.conf.getOption(s"spark.sql.catalog.$cat")
+      val impl = Option(spark.conf.get(s"spark.sql.catalog.$cat", null))
       require(impl.contains("graft.sources.GraftCatalog"),
         s"catalog '$cat' is not a configured graft.sources.GraftCatalog " +
           s"(spark.sql.catalog.$cat=${impl.getOrElse("<unset>")})")

@@ -9,6 +9,7 @@ import org.apache.avro.file.{DataFileStream, DataFileWriter}
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.StagingWrite
 import org.apache.spark.sql.types._
 
 /** Native reader (and minimal exporter) for the PUBLIC Apache Iceberg
@@ -2277,7 +2278,7 @@ object IcebergTable {
     val tok = java.util.UUID.randomUUID().toString.take(8)
     val tmp = new Path(tablePath,
       s".tmp-eq-$tok-${java.util.UUID.randomUUID()}")
-    keysDf.coalesce(1).write.parquet(tmp.toString)
+    StagingWrite.parquet(keysDf.coalesce(1), tmp.toString)
     val part = fs.listStatus(tmp).toSeq
       .find(_.getPath.getName.endsWith(".parquet"))
       .getOrElse(throw new IllegalStateException("no eq-delete file written"))
@@ -2414,7 +2415,7 @@ object IcebergTable {
                              op: String): Either[DataFrame, Seq[(String, Long)]] = {
     import org.apache.spark.sql.functions.col
     import spark.implicits._
-    val maxRows = spark.conf.getOption("spark.graft.mor.maxDeleteRows")
+    val maxRows = Option(spark.conf.get("spark.graft.mor.maxDeleteRows", null))
       .map(_.toLong).getOrElse(50000L)
     val cap = math.min(maxRows, Int.MaxValue - 2L).toInt
     val sel = matchedFrame.select(col("__path"), col("__ri"))
@@ -2593,8 +2594,7 @@ object IcebergTable {
       if (sortWithin.isEmpty) clustered
       else clustered.sortWithinPartitions(
         (gpCols.map(col(_).asc) ++ sortWithin): _*)
-    if (pfs.isEmpty) shaped.write.parquet(tmp.toString)
-    else shaped.write.partitionBy(gpCols: _*).parquet(tmp.toString)
+    StagingWrite.parquet(shaped, tmp.toString, gpCols)
     val tmpQ = fs.makeQualified(tmp).toString
     // keyed by the tmp-RELATIVE path, not the basename: one task
     // writing rows of several partition dirs reuses the same
@@ -2780,12 +2780,14 @@ object IcebergTable {
     * place. The entry records id, sequence number, timestamp, manifest
     * list, schema id (`schemaId`, else the root's current schema),
     * `parent-snapshot-id` (the branch head for branch writes, else the
-    * base's current snapshot, when there is one), `first-row-id` when
-    * the commit claims row ids on a v3 table, and `summary`. Unless
-    * `current` is false (a branch or WAP-staged write) the table points
-    * at it and the snapshot-log gains it. `claimed`: the rows that took
-    * fresh ids from `next-row-id`; None for commits that assign no row
-    * ids (maintenance, mirrors), which carry the counter unchanged. */
+    * base's current snapshot, when there is one), on a v3 table
+    * `first-row-id` (the base's `next-row-id`) and `added-rows` (the
+    * row ids `claimed`, 0 for a commit that claims none), and
+    * `summary`. Unless `current` is false (a branch or WAP-staged
+    * write) the table points at it and the snapshot-log gains it.
+    * `claimed`: the rows that took fresh ids from `next-row-id`; None
+    * for commits that assign no row ids (maintenance, mirrors), which
+    * carry the counter unchanged. */
   private def putSnapshot(spark: SparkSession, tablePath: String,
                           root: ObjectNode, base: Option[JsonNode],
                           ns: NextSnapshot, manifests: Seq[GenericRecord],
@@ -2814,8 +2816,10 @@ object IcebergTable {
         .flatMap(n => Option(n.get("schema-id"))).map(_.asInt()))
       .foreach(sn.put("schema-id", _))
     parent.foreach(sn.put("parent-snapshot-id", _))
-    val rowIdBase = ns.rowIdBase.filter(_ => claimed.isDefined)
-    rowIdBase.foreach(sn.put("first-row-id", _))
+    ns.rowIdBase.foreach { b =>
+      sn.put("first-row-id", b)
+      sn.put("added-rows", claimed.getOrElse(0L))
+    }
     val su = sn.putObject("summary")
     summary.foreach { case (k, v) => su.put(k, v) }
     val log = M.createArrayNode()
@@ -2832,8 +2836,8 @@ object IcebergTable {
     root.put("last-updated-ms", ns.now)
     root.put("current-snapshot-id",
       if (current) ns.id else baseCur.getOrElse(-1L))
-    rowIdBase match {
-      case Some(b) => root.put("next-row-id", b + claimed.get)
+    ns.rowIdBase match {
+      case Some(b) => root.put("next-row-id", b + claimed.getOrElse(0L))
       case None => base.flatMap(m => Option(m.get("next-row-id")))
         .foreach(n => root.put("next-row-id", n.asLong()))
     }
@@ -3695,7 +3699,7 @@ object IcebergTable {
     val pileRows = posFiles.map(_.records).sum
     val nOut = math.max(1L, (posFiles.map(_.sizeBytes).sum +
       targetFileBytes - 1) / targetFileBytes).toInt
-    val morGate = spark.conf.getOption("spark.graft.mor.maxDeleteRows")
+    val morGate = Option(spark.conf.get("spark.graft.mor.maxDeleteRows", null))
       .map(_.toLong).getOrElse(50000L)
     val driverMerged: Option[Seq[(String, Long)]] =
       if (posFiles.isEmpty || nOut != 1 || pileRows > morGate) None
@@ -3751,7 +3755,7 @@ object IcebergTable {
             .sortWithinPartitions("file_path", "pos")
           else kept.repartitionByRange(nOut, col("file_path"), col("pos"))
             .sortWithinPartitions("file_path", "pos")
-        shaped.write.parquet(tmp.toString)
+        StagingWrite.parquet(shaped, tmp.toString)
         // per staged part: row count + file_path bounds (tight bounds
         // keep the planner's interval sweep attaching each compacted
         // file only to the data files it names)
@@ -5491,7 +5495,7 @@ object IcebergTable {
     * serialize O(files) ranged I/O on the driver, while a 3-file
     * commit must not pay a job's scheduling latency. */
   private def driverFooterGate(spark: SparkSession): Int =
-    spark.conf.getOption("spark.sql.graft.footerStatsDriverMaxFiles")
+    Option(spark.conf.get("spark.sql.graft.footerStatsDriverMaxFiles", null))
       .map(_.toInt).getOrElse(64)
 
   /** Test hook: how many files have been footer-read ON THE DRIVER
@@ -5720,7 +5724,7 @@ object IcebergTable {
     * commit must not pay a job's scheduling latency. Same
     * gate-then-distribute pattern as `footerStatsDriverMaxFiles`. */
   private def manifestDriverGate(spark: SparkSession): Int =
-    spark.conf.getOption("spark.sql.graft.manifestDriverMaxEntries")
+    Option(spark.conf.get("spark.sql.graft.manifestDriverMaxEntries", null))
       .map(_.toInt).getOrElse(1024)
 
   /** Test hook: how many manifest files have been Avro-encoded ON THE

@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
 import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
+import org.apache.spark.sql.graft.StagingWrite
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** EXECUTOR-SIDE merge-on-read serving for the DSv2 scans.
@@ -25,45 +26,27 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * write/readFields envelope) — ships the driver's FS settings to the
   * executors with the reader factory.
   *
-  * The wrapper copies `value` when it is built and serializes THAT
-  * copy, once. A session's Hadoop conf is ~100 KB over ~1000 entries,
-  * and each stage whose task binary carries a factory serializes it ON
-  * THE DAG-SCHEDULER EVENT LOOP (driver stack sampling: Configuration
-  * write/deflate frames dominating `dag-scheduler-event-loop` during
-  * commit-path queries), where re-writing it would delay every task-set
-  * launch. The copy is private, so no caller can mutate what ships: a
-  * conf changed after one wrapper was built reaches the executors
-  * through the next wrapper built from it. */
+  * What ships is `StagingWrite.compactConf(value)`, taken when the
+  * wrapper is built: the same keys and values with no per-key source
+  * records, so `Configuration.write` opens no gzip stream per key and
+  * `readFields` throws no `EOFException` per key. Sources are read
+  * only by `getPropertySources` / `dumpConfiguration`, which graft
+  * never calls. The snapshot is private, so no caller can mutate what
+  * ships: a conf changed after one wrapper was built reaches the
+  * executors through the next wrapper built from it. */
 private[sources] class SerializableHadoopConf(@transient var value: Configuration)
   extends Serializable {
-  @transient private[this] var snapshot: Configuration = new Configuration(value)
-  @transient private[this] var bytes: Array[Byte] = _
+  @transient private[this] var snapshot = StagingWrite.compactConf(value)
 
-  private def serialized: Array[Byte] = synchronized {
-    if (bytes == null) {
-      val bos = new java.io.ByteArrayOutputStream(64 << 10)
-      val dos = new java.io.DataOutputStream(bos)
-      snapshot.write(dos)
-      dos.flush()
-      bytes = bos.toByteArray
-      snapshot = null
-    }
-    bytes
-  }
   private def writeObject(out: java.io.ObjectOutputStream): Unit = {
     out.defaultWriteObject()
-    val b = serialized
-    out.writeInt(b.length)
-    out.write(b)
+    snapshot.write(out)
   }
   private def readObject(in: java.io.ObjectInputStream): Unit = {
     in.defaultReadObject()
-    val n = in.readInt()
-    bytes = new Array[Byte](n)
-    in.readFully(bytes)
     value = new Configuration(false)
-    value.readFields(new java.io.DataInputStream(
-      new java.io.ByteArrayInputStream(bytes)))
+    value.readFields(in)
+    snapshot = value
   }
 }
 

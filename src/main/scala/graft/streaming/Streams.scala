@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.StagingWrite
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 
 /** Structured-Streaming pipeline pieces.
@@ -363,7 +364,7 @@ object Streams {
           if (fs.exists(target)) spark.read.parquet(targetPath).unionByName(batch.toDF())
           else batch.toDF()
         val merged = graft.operators.Dedup.keepLatest(all, keys, versionCol)
-        merged.write.mode("overwrite").parquet(tmp.toString)
+        StagingWrite.parquet(merged, tmp.toString)
         if (fs.exists(old)) fs.delete(old, true)
         if (fs.exists(target)) fs.rename(target, old)
         fs.rename(tmp, target)
@@ -475,7 +476,7 @@ object Streams {
               .join(b.select(keys.map(col): _*).distinct(), keys, "left_anti")
               .unionByName(b)
           else b
-        merged.write.mode("overwrite").parquet(tmp.toString)
+        StagingWrite.parquet(merged, tmp.toString)
         if (fs.exists(old)) fs.delete(old, true)
         if (fs.exists(target)) fs.rename(target, old)
         fs.rename(tmp, target)

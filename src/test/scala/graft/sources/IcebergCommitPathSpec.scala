@@ -82,9 +82,10 @@ class IcebergCommitPathSpec extends graft.SparkSpec {
     }
     // fresh row ids: the files this snapshot added with a first_row_id
     // cover [first-row-id, next-row-id) without gap or overlap; a
-    // commit that claims no ids (maintenance) leaves the counter
+    // commit that claims no ids (maintenance) leaves the counter. Every
+    // v3 snapshot names its first-row-id and added-rows.
     prior("next-row-id").foreach { next0 =>
-      assert(long(sn, "first-row-id").forall(_ == next0), s"$what first-row-id")
+      assert(long(sn, "first-row-id") === Some(next0), s"$what first-row-id")
       val fresh = IcebergTable.snapshot(spark, t, snapshotIdAsOf = Some(id))
         .files.filter(f => f.addedSnapshotId == id && f.firstRowId.isDefined)
         .sortBy(_.firstRowId.get)
@@ -93,6 +94,7 @@ class IcebergCommitPathSpec extends graft.SparkSpec {
         next + f.records
       }
       assert(long(after, "next-row-id") === Some(end), s"$what next-row-id")
+      assert(long(sn, "added-rows") === Some(end - next0), s"$what added-rows")
     }
     id
   }
