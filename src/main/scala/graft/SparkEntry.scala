@@ -1784,7 +1784,7 @@ object SparkEntry {
         .select(col("event_id"), col("user_id"), unix_millis(col("ts")).as("ts_ms"),
           col("event_type"))
         .write.mode("overwrite").partitionBy("event_type").parquet(out)
-      s.read.parquet(out)
+      Tables.parquet(s, out)
         .filter(col("event_type") === "click")
         .select(col("event_id"), col("user_id"), col("ts_ms"), col("event_type"))
         .orderBy("event_id")
@@ -5714,7 +5714,7 @@ object SparkEntry {
         .agg(min(col("l_linestatus")).as("tag"))
         .write.mode("overwrite").parquet(dimPath)
       val fact = s.read.format("graft-delta").load(t)
-      val dim = s.read.parquet(dimPath).where(col("tag") === "F")
+      val dim = Tables.parquet(s, dimPath).where(col("tag") === "F")
       fact.join(dim, fact("l_returnflag") === dim("flag"))
         .groupBy(col("flag"))
         .agg(count(lit(1)).as("n"), sumD(col("l_quantity")).as("qty"))
@@ -6110,7 +6110,7 @@ object SparkEntry {
         val dv =
           if (p != 0L) ""
           else { // kill key % 7 == 0 rows at their PHYSICAL positions
-            val pos = s.read.parquet(s"$t/p$p.parquet")
+            val pos = Tables.parquet(s, s"$t/p$p.parquet")
               .select(col("`col-1`"),
                 col("_metadata.row_index").as("ri"))
               .where(col("`col-1`") % 7 === 0)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
+import graft.sources.Tables
 import graft.streaming.Streams
 
 /** Bench-only streaming micro-benchmarks — one timed key per
@@ -43,7 +44,7 @@ object StreamBench {
     val path = s"$d/events.parquet"
     // the file-stream source requires a DIRECTORY basePath — stream
     // the sf dir with a name filter selecting just the events file
-    val raw = s.readStream.schema(s.read.parquet(path).schema)
+    val raw = s.readStream.schema(Tables.parquet(s, path).schema)
       .option("pathGlobFilter", "events.parquet").parquet(d)
     if (raw.schema("ts").dataType == LongType)
       raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
@@ -108,7 +109,7 @@ object StreamBench {
       val dir = freshDir()
       Streams.runUpsertOnce(eventStream(s, d), Seq("event_id"), "ts",
         s"$dir/target", s"$dir/ckpt")
-      s.read.parquet(s"$dir/target")
+      Tables.parquet(s, s"$dir/target")
     }),
 
     // Delta CDC streaming-source family: build a 2-commit table from

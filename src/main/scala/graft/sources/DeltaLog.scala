@@ -643,10 +643,10 @@ object DeltaLog {
         lit(ref.version).as("__v"))
     }
     ref.format match {
-      case "classic" | "multipart" => norm(spark.read.parquet(ref.paths: _*))
+      case "classic" | "multipart" => norm(Tables.parquet(spark, ref.paths: _*))
       case v2 =>
         val top =
-          if (v2 == "v2parquet") spark.read.parquet(ref.paths.head)
+          if (v2 == "v2parquet") Tables.parquet(spark, ref.paths.head)
           else spark.read.text(ref.paths.head)
             .select(from_json(col("value"), V2CheckpointJsonSchema).as("a"))
             .select("a.*")
@@ -660,7 +660,7 @@ object DeltaLog {
         }
         val topNorm = norm(top)
         if (resolved.isEmpty) topNorm
-        else topNorm.unionByName(norm(spark.read.parquet(resolved: _*)))
+        else topNorm.unionByName(norm(Tables.parquet(spark, resolved: _*)))
     }
   }
 
@@ -2687,7 +2687,7 @@ object DeltaLog {
     // schema: Spark's parquet inference over the directory — the same
     // schema any reader of the raw directory already saw; partition
     // columns come from the directory keys
-    val df = spark.read.parquet(path)
+    val df = Tables.parquet(spark, path)
     val schema = df.schema
     partitionBy.foreach(c => require(schema.fieldNames.contains(c),
       s"partition column $c not found in the inferred schema " +

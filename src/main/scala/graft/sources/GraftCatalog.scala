@@ -299,7 +299,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       case Some(IcebergFlavor) => IcebergTable.addColumns(spark, dir.toString, adds)
       case None =>
         val cur = sidecarSchema(dir).getOrElse(
-          spark.read.parquet(dir.toString).schema)
+          Tables.parquet(spark, dir.toString).schema)
         adds.foreach(f => require(!cur.fieldNames.contains(f.name),
           s"column ${f.name} already exists on $ident"))
         val widened = StructType(cur.fields ++ adds)

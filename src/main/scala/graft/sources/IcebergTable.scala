@@ -1625,7 +1625,7 @@ object IcebergTable {
       eqs.groupBy(_.equalityIds.sorted).toSeq.sortBy(_._1.mkString(","))
         .map { case (eids, dfs) =>
           val cols = eids.map(s.fieldNames)
-          cols -> dfs.map(d => spark.read.parquet(d.path)
+          cols -> dfs.map(d => Tables.parquet(spark, d.path)
             .select(cols.map(c => col(c).as(s"__eq_$c")): _*)
             .withColumn("__eseq", lit(d.seq)))
             .reduce(_.unionByName(_))
@@ -2393,7 +2393,7 @@ object IcebergTable {
     snap.deletes.filter(_.content == 2).groupBy(_.equalityIds.sorted)
       .toSeq.sortBy(_._1.mkString(",")).foreach { case (ids, dfs) =>
         val cols = ids.map(snap.fieldNames)
-        val eq = dfs.map(d => spark.read.parquet(d.path)
+        val eq = dfs.map(d => Tables.parquet(spark, d.path)
           .select(cols.map(c => col(c).as(s"__eq_$c")): _*)
           .withColumn("__dseq", lit(d.seq)))
           .reduce(_.unionByName(_))

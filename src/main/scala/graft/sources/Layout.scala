@@ -101,7 +101,7 @@ object Layout {
     * Uses coalesce: no shuffle, just fewer, larger output files. */
   def compact(spark: SparkSession, inPath: String, outPath: String,
               nFiles: Int): Unit =
-    spark.read.parquet(inPath).coalesce(nFiles)
+    Tables.parquet(spark, inPath).coalesce(nFiles)
       .write.mode(SaveMode.Overwrite).parquet(outPath)
 
   /** Schema-evolution read: merge the schemas of parquet files

@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.StagingWrite
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 
+import graft.sources.Tables
+
 /** Structured-Streaming pipeline pieces.
   *
   * The reference runs every layer as a stream with
@@ -361,7 +363,7 @@ object Streams {
         if (!fs.exists(target) && fs.exists(old)) fs.rename(old, target)
         if (fs.exists(tmp)) fs.delete(tmp, true) // incomplete write
         val all =
-          if (fs.exists(target)) spark.read.parquet(targetPath).unionByName(batch.toDF())
+          if (fs.exists(target)) Tables.parquet(spark, targetPath).unionByName(batch.toDF())
           else batch.toDF()
         val merged = graft.operators.Dedup.keepLatest(all, keys, versionCol)
         StagingWrite.parquet(merged, tmp.toString)
@@ -472,7 +474,7 @@ object Streams {
         val b = batch.toDF()
         val merged =
           if (fs.exists(target))
-            spark.read.parquet(outPath)
+            Tables.parquet(spark, outPath)
               .join(b.select(keys.map(col): _*).distinct(), keys, "left_anti")
               .unionByName(b)
           else b
