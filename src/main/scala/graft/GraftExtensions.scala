@@ -30,6 +30,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // heap-based two-phase top-k operator (see graft.plans.TopKPerGroup)
     ext.injectOptimizerRule(_ => graft.plans.RewriteTopKPerGroup)
     ext.injectPlannerStrategy(_ => graft.plans.TopKPerGroupStrategy)
+    // EXCEPT ALL / INTERSECT ALL over a dropDuplicates frame: replace
+    // the dedup before Spark's optimizer loses a column id under it
+    ext.injectPlanNormalizationRule(_ => graft.plans.DedupBeforeExceptAll)
     // maintenance statements Spark's grammar lacks (OPTIMIZE/VACUUM,
     // the reference's literal gold-layer calls) + row-level SQL DML
     // (UPDATE / MERGE INTO) routed to the copy-on-write Delta library

@@ -3,7 +3,11 @@ package graft.sources
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.plans.logical.Project
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.graft.StagingWrite
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.types._
 
 /** Native reader (and minimal writer) for the PUBLIC Delta Lake
@@ -289,7 +293,7 @@ object DeltaLog {
     * is the Delta per-file stats JSON (numRecords/minValues/
     * maxValues/nullCount) when the writer recorded it; `dv` the
     * deletion-vector descriptor when rows of the file are logically
-    * deleted (merge-on-read — applied by [[readSnapshot]]). */
+    * deleted (merge-on-read — applied by the scan's reader). */
   final case class AddFile(path: String,
                            partitionValues: Map[String, String],
                            size: Long, modificationTime: Long,
@@ -995,7 +999,7 @@ object DeltaLog {
       .map(_.toMap).getOrElse(Map.empty[String, String])
     // column mapping: `name` mode resolves at read time through the
     // schema's physicalName metadata, `id` mode through parquet
-    // FIELD-ID resolution ([[readSnapshotAll]]); unknown future modes
+    // FIELD-ID resolution ([[physicalSnapshot]]); unknown future modes
     // stay loud, never wrong
     val cmMode = conf.getOrElse("delta.columnMapping.mode", "none")
     if (cmMode != "none" && cmMode != "name" && cmMode != "id")
@@ -1219,34 +1223,25 @@ object DeltaLog {
       txns.toMap, proto, doms)
   }
 
-  /** Read a snapshot as a DataFrame. Partition-column values live in
-    * the LOG (add.partitionValues), not in the data files — they are
-    * re-attached per file via an `input_file_name()` lookup against a
-    * broadcast path→values map (scale-safe: the map is the file
-    * list, and data files stream through untouched; no per-partition
-    * plan explosion). */
+  /** Read the table at its latest version, or at `versionAsOf` /
+    * `timestampAsOf`, as a DataFrame: [[readSnapshot]] of the snapshot
+    * this call resolves, so the frame stays pinned to it while later
+    * commits land. */
   def read(spark: SparkSession, tablePath: String,
            versionAsOf: Option[Long] = None,
-           timestampAsOf: Option[Long] = None): DataFrame = {
-    val snap = snapshot(spark, tablePath, versionAsOf, timestampAsOf)
-    readSnapshot(spark, snap)
-  }
+           timestampAsOf: Option[Long] = None): DataFrame =
+    readSnapshot(spark, snapshot(spark, tablePath, versionAsOf, timestampAsOf))
 
-  /** Read with a predicate, pruning partitions BEFORE the scan: files
-    * whose log-side `partitionValues` cannot satisfy `predicate` are
-    * dropped from the planned file list (the 100×-scale behavior a
-    * partitioned layout exists for — a date-partitioned 100 TB table
-    * reads one partition's files, not all of them), then the full
-    * predicate applies as a normal residual filter so non-partition
-    * conjuncts behave identically. Result rows are exactly
-    * `read(...).where(predicate)`. */
+  /** `read(...).where(predicate)`. The scan takes the predicate's
+    * pushed conjuncts and plans only the files whose log-side
+    * partition values and stats can satisfy them ([[prunedFiles]]):
+    * a date-predicate read of a 100 TB partitioned table plans one
+    * partition's files, not all of them. */
   def readWhere(spark: SparkSession, tablePath: String,
                 predicate: org.apache.spark.sql.Column,
                 versionAsOf: Option[Long] = None,
-                timestampAsOf: Option[Long] = None): DataFrame = {
-    val snap = snapshot(spark, tablePath, versionAsOf, timestampAsOf)
-    readSnapshot(spark, snap, Some(predicate)).where(predicate)
-  }
+                timestampAsOf: Option[Long] = None): DataFrame =
+    read(spark, tablePath, versionAsOf, timestampAsOf).where(predicate)
 
   /** The AND-conjuncts of a Catalyst condition, shared by every
     * pruning and MERGE-condition split of both table stacks. */
@@ -1433,16 +1428,22 @@ object DeltaLog {
     snap.files.zipWithIndex.collect { case (f, i) if keep(i) => f }
   }
 
-  /** Materialize a [[Snapshot]], optionally pruning the file list
-    * on a partition predicate first (see [[prunedFiles]] — sound for
-    * any predicate; prunes when it references partition columns). */
-  def readSnapshot(spark: SparkSession, snap: Snapshot,
-                   partitionFilter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    val pruned = partitionFilter match {
-      case Some(p) => snap.copy(files = prunedFiles(spark, snap, p))
-      case None => snap
-    }
-    readSnapshotAll(spark, pruned)
+  /** Read exactly the files of `snap` as a DataFrame: a
+    * `DataSourceV2Relation` over a [[GraftDeltaTable]] pinned to
+    * `snap`, so the scan plans `PartitionedFile`s straight from its
+    * file list with no listing job. Partition values ride in as
+    * per-file constants, pushed filters prune by partition values and
+    * stats, deletion vectors apply on the executors, and column-mapped
+    * tables read through [[physicalSnapshot]]. The columns come back
+    * in `snap.schema` order (the scan serves partition columns last),
+    * every field nullable, as file sources serve them. */
+  def readSnapshot(spark: SparkSession, snap: Snapshot): DataFrame = {
+    val nullable = snap.copy(schema = ColumnBridge.asNullable(snap.schema))
+    val rel = DataSourceV2Relation.create(
+      new GraftDeltaTable(spark, snap.tablePath, pinned = Some(nullable)),
+      None, None, CaseInsensitiveStringMap.empty())
+    val byName = rel.output.map(a => a.name -> a).toMap
+    ColumnBridge.ofRows(spark, Project(snap.schema.fieldNames.map(byName).toSeq, rel))
   }
 
   private val PhysNameKey = "delta.columnMapping.physicalName"
@@ -1483,7 +1484,7 @@ object DeltaLog {
     * stats JSON all speak physical names — readers run over this view
     * and alias the output back to logical names (a plain projection,
     * so pushdown and codegen survive). Nested physical renames are
-    * loud. Shared by [[read]] and the DSv2 catalog scan. */
+    * loud. [[GraftDeltaTable]]'s scan runs over this view. */
   private[sources] def physicalSnapshot(spark: SparkSession,
                                         snap: Snapshot): Snapshot = {
     val cmMode = snap.configuration.getOrElse("delta.columnMapping.mode", "none")
@@ -1509,85 +1510,6 @@ object DeltaLog {
       partitionColumns = snap.partitionColumns.map(c =>
         physName(snap.schema(c))),
       configuration = snap.configuration - "delta.columnMapping.mode")
-  }
-
-  private def readSnapshotAll(spark: SparkSession, snap: Snapshot): DataFrame = {
-    import spark.implicits._
-    // column mapping: the parquet files store PHYSICAL names; read
-    // through a physical-named snapshot (partitionValues keys are
-    // physical in the log already), then alias every column back to
-    // its logical name — a plain projection, so pushdown and codegen
-    // survive. In `id` mode the physical fields ALSO carry the
-    // spec's column id as `parquet.field.id`, and Spark's own
-    // field-id resolution (spark.sql.parquet.fieldId.read.enabled,
-    // set in GraftSession) matches them by ID — the parquet column
-    // NAME is free to differ, which is the whole point of id mode.
-    // Nested physical renames would need a recursive struct rebuild —
-    // loud until someone needs them.
-    val cmMode = snap.configuration.getOrElse("delta.columnMapping.mode", "none")
-    if (isColumnMapped(snap.schema) || cmMode != "none")
-      return readSnapshotAll(spark, physicalSnapshot(spark, snap)).select(
-        snap.schema.fields.map(f => col(physName(f)).as(f.name)).toSeq: _*)
-    val dataSchema = StructType(snap.schema.filterNot(
-      f => snap.partitionColumns.contains(f.name)))
-    if (snap.files.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], snap.schema)
-    // input_file_name() reports SparkPath's URL-encoded form (space
-    // as %20) — fileKeyOf encodes the file list the same way, then
-    // both sides normalize to the scheme-less absolute path
-    def scanWithPath(files: Seq[AddFile]) =
-      spark.read.schema(dataSchema).parquet(files.map(_.path): _*)
-        .withColumn("__path",
-          regexp_replace(input_file_name(), "^[a-zA-Z0-9]+:(//)?", ""))
-
-    // deletion vectors: files with a DV read with their physical row
-    // index and anti-join the deleted-position set. Bytes are fetched
-    // once per sidecar (KB–MB, bounded by the descriptors' recorded
-    // sizeInBytes); EXPANSION to positions happens on executors. The
-    // join side broadcasts only when total cardinality is small.
-    val (dvFiles, plainFiles) = snap.files.partition(_.dv.exists(_.cardinality != 0L))
-    val plain = if (plainFiles.nonEmpty) Some(scanWithPath(plainFiles)) else None
-    val dvScan = if (dvFiles.isEmpty) None else {
-      val conf = spark.sparkContext.hadoopConfiguration
-      val dvData: Seq[(String, Array[Byte])] = dvFiles.map(f =>
-        (fileKeyOf(f.path),
-          DeletionVectors.loadData(conf, snap.tablePath, f.dv.get)))
-      val posDf = spark.createDataset(dvData).flatMap { case (p, bytes) =>
-        DeletionVectors.deletedRows(bytes).map(r => (p, r))
-      }.toDF("__path", "__ri")
-      val totalCard = dvFiles.flatMap(_.dv).map(_.cardinality).sum
-      val posSide = if (totalCard <= 5000000L) broadcast(posDf) else posDf
-      val scanned = spark.read.schema(dataSchema)
-        .parquet(dvFiles.map(_.path): _*)
-        .select(col("*"),
-          col("_metadata.row_index").as("__ri"))
-        .withColumn("__path",
-          regexp_replace(input_file_name(), "^[a-zA-Z0-9]+:(//)?", ""))
-      Some(scanned.join(posSide, Seq("__path", "__ri"), "left_anti").drop("__ri"))
-    }
-    val base = (plain.toSeq ++ dvScan.toSeq).reduce(_.unionByName(_))
-
-    if (snap.partitionColumns.isEmpty)
-      base.select(dataSchema.fieldNames.map(col): _*)
-    else {
-      val pvRows = snap.files.map(f =>
-        (fileKeyOf(f.path),
-          snap.partitionColumns.map(c => f.partitionValues.getOrElse(c, null))))
-      val pvDf = broadcast(pvRows.toDF("__path", "__pv"))
-      val joined = base.join(pvDf, Seq("__path"), "left")
-      // cast partition strings to their declared types; Delta's
-      // partitionValues serialization for primitives is the plain
-      // string form, which Spark's cast parses
-      val partCols = snap.partitionColumns.zipWithIndex.map { case (c, i) =>
-        element_at(col("__pv"), i + 1)
-          .cast(snap.schema(c).dataType).as(c)
-      }
-      joined.select(snap.schema.map(f =>
-        if (snap.partitionColumns.contains(f.name))
-          partCols(snap.partitionColumns.indexOf(f.name))
-        else col(f.name)): _*)
-    }
   }
 
   /** The scan key of a snapshot file: `input_file_name()`'s
@@ -1633,6 +1555,34 @@ object DeltaLog {
       parts += (if (keepRowIndex) filtered else filtered.drop("__ri"))
     }
     parts.result().reduce(_.unionByName(_))
+  }
+
+  /** [[scanLive]] of `files` with their log-side partition values
+    * attached: `__path`, `__ri` (with `keepRowIndex`), then
+    * `snap.schema`'s columns in log order — the row view a DML matcher
+    * evaluates its predicate or keys over. */
+  private def scanLiveRows(spark: SparkSession, snap: Snapshot, files: Seq[AddFile],
+                           keepRowIndex: Boolean = false): DataFrame = {
+    import spark.implicits._
+    val pc = snap.partitionColumns
+    val keys = col("__path") +: (if (keepRowIndex) Seq(col("__ri")) else Nil)
+    if (files.isEmpty)
+      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        StructType(StructField("__path", StringType) +:
+          (if (keepRowIndex) Seq(StructField("__ri", LongType)) else Nil) ++:
+          snap.schema.fields))
+    val dataSchema = StructType(snap.schema.filterNot(f => pc.contains(f.name)))
+    val base = scanLive(spark, snap.tablePath, dataSchema, files, keepRowIndex)
+    if (pc.isEmpty) base.select(keys ++ snap.schema.fieldNames.map(col): _*)
+    else {
+      val pvDf = broadcast(files.map(f =>
+        (fileKeyOf(f.path), pc.map(c => f.partitionValues.getOrElse(c, null))))
+        .toDF("__path", "__pv"))
+      base.join(pvDf, Seq("__path"), "left").select(keys ++ snap.schema.map(f =>
+        if (pc.contains(f.name))
+          element_at(col("__pv"), pc.indexOf(f.name) + 1).cast(f.dataType).as(f.name)
+        else col(f.name)): _*)
+    }
   }
 
   /** `(version, timestamp_ms, operation)` per commit — operations
@@ -2815,7 +2765,7 @@ object DeltaLog {
     * per partition column) with REAL `partitionValues` in the add
     * actions — partition columns are dropped from the data files per
     * the Delta spec (values live only in the log), and
-    * [[readSnapshot]] prunes on them before the scan. Appends to a
+    * [[readWhere]] prunes on them before the scan. Appends to a
     * partitioned table inherit its partitioning; passing a DIFFERENT
     * `partitionBy` on append is a loud error, never a silently
     * forked layout.
@@ -3689,24 +3639,7 @@ object DeltaLog {
     if (candidates.isEmpty) return Some(snap.version)
     val maxRows = Option(spark.conf.get("spark.graft.dv.maxDeleteRows", null))
       .map(_.toLong).getOrElse(50000L)
-    val dataSchema = StructType(snap.schema.filterNot(
-      f => snap.partitionColumns.contains(f.name)))
-    val pc = snap.partitionColumns
-    val base = scanLive(spark, deltaPath, dataSchema, candidates,
-      keepRowIndex = true)
-    val withPv =
-      if (pc.isEmpty) base
-      else {
-        val pvDf = broadcast(candidates.map(f =>
-          (fileKeyOf(f.path), pc.map(c => f.partitionValues.getOrElse(c, null))))
-          .toDF("__path", "__pv"))
-        base.join(pvDf, Seq("__path"), "left")
-          .select(col("__path") +: col("__ri") +: snap.schema.map(f =>
-            if (pc.contains(f.name))
-              element_at(col("__pv"), pc.indexOf(f.name) + 1)
-                .cast(f.dataType).as(f.name)
-            else col(f.name)): _*)
-      }
+    val withPv = scanLiveRows(spark, snap, candidates, keepRowIndex = true)
     // A plain DELETE with no change feed needs only the matched
     // POSITIONS: one bounded take (the gatedPositions pattern —
     // executeTake stays under the gate on the driver, cap+1 rows back
@@ -3950,21 +3883,7 @@ object DeltaLog {
       else {
         // existing DVs applied: a merge-on-read-deleted row is not
         // a live key and must not trigger a file rewrite
-        val base = scanLive(spark, deltaPath, dataSchema, snap.files)
-        val withPv =
-          if (pc.isEmpty) base
-          else {
-            val pvDf = broadcast(snap.files.map(f =>
-              (fileKeyOf(f.path), pc.map(c => f.partitionValues.getOrElse(c, null))))
-              .toDF("__path", "__pv"))
-            base.join(pvDf, Seq("__path"), "left")
-              .select(col("__path") +: snap.schema.map(f =>
-                if (pc.contains(f.name))
-                  element_at(col("__pv"), pc.indexOf(f.name) + 1)
-                    .cast(f.dataType).as(f.name)
-                else col(f.name)): _*)
-          }
-        withPv.join(srcKeys, keyCols, "left_semi")
+        scanLiveRows(spark, snap, snap.files).join(srcKeys, keyCols, "left_semi")
           .select("__path").distinct().as[String].collect().toSet
       }
     val toRewrite = snap.files.filter(f => matched(fileKeyOf(f.path)))
@@ -3998,21 +3917,7 @@ object DeltaLog {
         val pre: Option[DataFrame] =
           if (toRewrite.isEmpty) None
           else {
-            val grp = scanLive(spark, deltaPath, dataSchema, toRewrite)
-            val full =
-              if (pc.isEmpty) grp.drop("__path")
-              else {
-                val pvDf = broadcast(toRewrite.map(f =>
-                  (fileKeyOf(f.path),
-                    pc.map(c => f.partitionValues.getOrElse(c, null))))
-                  .toDF("__path", "__pv"))
-                grp.join(pvDf, Seq("__path"), "left")
-                  .select(snap.schema.map(f =>
-                    if (pc.contains(f.name))
-                      element_at(col("__pv"), pc.indexOf(f.name) + 1)
-                        .cast(f.dataType).as(f.name)
-                    else col(f.name)): _*)
-              }
+            val full = scanLiveRows(spark, snap, toRewrite).drop("__path")
             Some(graft.Caches.tracked(
               full.join(srcKeys, keyCols, "left_semi")))
           }
@@ -4103,28 +4008,7 @@ object DeltaLog {
     // target live rows (DVs applied) with partition values, __path
     // and the physical row index — the exact row identity the
     // affected-row bookkeeping keys on
-    val target: DataFrame =
-      if (snap.files.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(StructField("__path", StringType) +:
-            StructField("__ri", LongType) +: snap.schema.fields))
-      else {
-        val base = scanLive(spark, deltaPath, dataSchema, snap.files,
-          keepRowIndex = true)
-        if (pc.isEmpty) base
-        else {
-          val pvDf = broadcast(snap.files.map(f =>
-            (fileKeyOf(f.path), pc.map(c => f.partitionValues.getOrElse(c, null))))
-            .toDF("__path", "__pv"))
-          base.join(pvDf, Seq("__path"), "left")
-            .select(col("__path") +: col("__ri") +: snap.schema.map(f =>
-              if (pc.contains(f.name))
-                element_at(col("__pv"), pc.indexOf(f.name) + 1)
-                  .cast(f.dataType).as(f.name)
-              else col(f.name)): _*)
-        }
-      }
+    val target = scanLiveRows(spark, snap, snap.files, keepRowIndex = true)
     val srcRen = src.select(src.columns.toSeq.map(c =>
       col(c).as(SrcPrefix + c)): _*)
     // NON-EQUI residual ON conjuncts ride the equality join — a row
@@ -4294,20 +4178,7 @@ object DeltaLog {
     // hold at least one matching row (existing DVs applied — a row
     // already deleted merge-on-read must neither match nor resurrect)
     val pc = snap.partitionColumns
-    val base = scanLive(spark, deltaPath, dataSchema, candidates)
-    val withPv =
-      if (pc.isEmpty) base
-      else {
-        val pvDf = broadcast(candidates.map(f =>
-          (fileKeyOf(f.path), pc.map(c => f.partitionValues.getOrElse(c, null))))
-          .toDF("__path", "__pv"))
-        val joined = base.join(pvDf, Seq("__path"), "left")
-        joined.select(col("__path") +: snap.schema.map(f =>
-          if (pc.contains(f.name))
-            element_at(col("__pv"), pc.indexOf(f.name) + 1)
-              .cast(f.dataType).as(f.name)
-          else col(f.name)): _*)
-      }
+    val withPv = scanLiveRows(spark, snap, candidates)
     val matched = withPv.where(predicate)
       .select("__path").distinct().as[String].collect().toSet
     if (matched.isEmpty) return snap.version

@@ -28,7 +28,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * machinery instead of only behind [[DeltaLog]]'s Scala API:
   *
   *  - **Batch reads** (`spark.read.format("graft-delta").load(path)`,
-  *    or `spark.table("graft.ns.t")` through [[GraftCatalog]]):
+  *    `spark.table("graft.ns.t")` through [[GraftCatalog]], and every
+  *    [[DeltaLog.read]] / `graft_delta(...)`):
   *    the scan's file list comes from the log replay, pushed filters
   *    prune it FILE-level first (partition values + per-file stats,
   *    [[DeltaLog.prunedFiles]]) and then row-group-level inside the
@@ -474,18 +475,21 @@ private class DeltaCdfReaderFactory(base: PartitionReaderFactory,
 
 /** The DSv2 Table. `cdf = true` appends `_change_type` /
   * `_commit_version` to the schema and switches both batch and
-  * streaming scans to the change feed. */
+  * streaming scans to the change feed. `pinned` serves a snapshot the
+  * caller already resolved (the [[DeltaLog.readSnapshot]] frames)
+  * instead of resolving one from the log. */
 class GraftDeltaTable(spark: SparkSession, val tablePath: String,
                       versionAsOf: Option[Long] = None,
                       timestampAsOf: Option[Long] = None,
                       val cdf: Boolean = false,
-                      nameOverride: String = null)
+                      nameOverride: String = null,
+                      pinned: Option[DeltaLog.Snapshot] = None)
   extends Table with SupportsRead with SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsDelete {
   import GraftDelta._
 
-  lazy val snap: DeltaLog.Snapshot =
-    DeltaLog.snapshot(spark, tablePath, versionAsOf, timestampAsOf)
+  lazy val snap: DeltaLog.Snapshot = pinned.getOrElse(
+    DeltaLog.snapshot(spark, tablePath, versionAsOf, timestampAsOf))
   lazy val dataSchema: StructType = StructType(
     snap.schema.filterNot(f => snap.partitionColumns.contains(f.name)))
 

@@ -33,6 +33,12 @@ object ColumnBridge {
   : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.queryExecution.logical
 
+  /** `schema` with every field, nested ones included, nullable — what
+    * file sources report for the files they read
+    * (`StructType.asNullable` is private[spark]). */
+  def asNullable(schema: org.apache.spark.sql.types.StructType)
+  : org.apache.spark.sql.types.StructType = schema.asNullable
+
   /** DataFrame over a logical plan (`Dataset.ofRows` is
     * private[sql]) — for commands that carry an analyzed source plan
     * into execution, e.g. the routed MERGE INTO. */
