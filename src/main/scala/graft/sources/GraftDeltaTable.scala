@@ -654,9 +654,12 @@ private class GraftDeltaScan(spark: SparkSession, table: GraftDeltaTable,
     * (same types, same order), names resolved through the mapping, so
     * `readSchema()` stays logical while the parquet readers and the
     * log's partitionValues lookups speak physical. Identity when the
-    * table is unmapped. */
+    * table is unmapped. A data field keeps the requested type, which
+    * nested-column pruning may have cut down to the leaves a query
+    * reads (nested names are never mapped). */
   private val physReadData: StructType = StructType(
-    readData.fields.map(f => table.physDataSchema(table.toPhys(f.name))))
+    readData.fields.map(f =>
+      table.physDataSchema(table.toPhys(f.name)).copy(dataType = f.dataType)))
   private val physReadPart: StructType = StructType(
     readPart.fields.map(f =>
       if (f.name == ChangeTypeCol || f.name == CommitVersionCol) f

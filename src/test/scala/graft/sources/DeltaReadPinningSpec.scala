@@ -139,6 +139,20 @@ class DeltaReadPinningSpec extends SparkSpec {
     assert(rows(byId) === Seq("[7,ok]", "[8,go]"))
   }
 
+  test("a nested column pruned to one leaf reads the same rows as the files") {
+    val t = tmp()
+    DeltaLog.write(spark, spark.range(10).select(struct(col("id").as("order_id"),
+      struct(col("id").as("cid"), lit("n").as("name")).as("customer"),
+      array(struct(lit(1).as("line"), lit(2.0).as("q")),
+        struct(lit(2).as("line"), lit(3.0).as("q"))).as("items")).as("payload")), t)
+    val files = spark.read.parquet(DeltaLog.snapshot(spark, t).files.map(_.path): _*)
+    Seq(DeltaLog.read(spark, t), spark.read.format("graft-delta").load(t)).foreach { df =>
+      assert(df.select(explode(col("payload.items"))).count() === 20L)
+      assert(rows(df.select(col("payload.items.line"), col("payload.customer.cid"))) ===
+        rows(files.select(col("payload.items.line"), col("payload.customer.cid"))))
+    }
+  }
+
   test("deletion vectors, an empty table and time travel: the log's schema, nullable") {
     val t = tmp()
     DeltaLog.write(spark, (0L until 10L).map(i => (i, s"v$i")).toDF("k", "v").coalesce(1), t)
