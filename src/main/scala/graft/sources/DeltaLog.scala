@@ -1310,7 +1310,7 @@ object DeltaLog {
     // independent of the Column API's internal node representation
     val cond: Expression = {
       val dummy = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
       dummy.where(predicate).queryExecution.analyzed.collectFirst {
         case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
       }.getOrElse(return Seq.empty)
@@ -1398,7 +1398,7 @@ object DeltaLog {
     val pc = snap.partitionColumns
     val cond: Expression = {
       val dummy = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], snap.schema)
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](), snap.schema)
       dummy.where(predicate).queryExecution.analyzed.collectFirst {
         case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
       }.getOrElse(return snap.files)

@@ -677,7 +677,10 @@ private class GraftDeltaScan(spark: SparkSession, table: GraftDeltaTable,
     physPushed.filter(_.references.forall(dataNames.contains))
   }
 
-  private def factory: PartitionReaderFactory =
+  /** The reader factories are built once per scan: `BatchScanExec`
+    * asks for one while planning, and every copy of the exec node the
+    * planner makes would otherwise build (and broadcast) another. */
+  private lazy val factory: PartitionReaderFactory =
     readerFactory(spark, table.physDataSchema, physReadData, physReadPart,
       dataFilters)
 
@@ -688,12 +691,24 @@ private class GraftDeltaScan(spark: SparkSession, table: GraftDeltaTable,
   private def prunedFiles: Seq[DeltaLog.AddFile] = {
     if (runtimeEmpty) return Seq.empty
     if (prunedCache == null)
-      prunedCache = (physPushed ++ runtime).flatMap(f => filterToColumn(f))
-        .reduceOption(_ && _) match {
+      prunedCache = (physPushed ++ runtime).filter(canPrune)
+        .flatMap(f => filterToColumn(f)).reduceOption(_ && _) match {
         case Some(pred) => DeltaLog.prunedFiles(spark, table.physSnap, pred)
         case None => table.physSnap.files
       }
     prunedCache
+  }
+
+  /** Whether log-side pruning can use `f`: a comparison (per-file
+    * stats, [[DeltaLog.statsPrunedFiles]]) or any filter over a
+    * partition column. The others, such as the `IsNotNull` Spark infers
+    * for every join key, never prune a file, and translating them costs
+    * a Catalyst analysis per scan. */
+  private def canPrune(f: Filter): Boolean = f match {
+    case _: EqualTo | _: GreaterThan | _: GreaterThanOrEqual | _: LessThan |
+         _: LessThanOrEqual => true
+    case FAnd(l, r) => canPrune(l) || canPrune(r)
+    case _ => f.references.exists(table.physSnap.partitionColumns.contains)
   }
 
   /** Real size/row statistics from the log — what keeps a small Delta
@@ -778,7 +793,7 @@ private class GraftDeltaScan(spark: SparkSession, table: GraftDeltaTable,
       else factory
   }
 
-  private def dvAwareFactory: PartitionReaderFactory =
+  private lazy val dvAwareFactory: PartitionReaderFactory =
     new MorReaderFactory(factory,
       readerFactory(spark, table.physDataSchema, physReadData, physReadPart,
         Array.empty),
@@ -790,7 +805,7 @@ private class GraftDeltaScan(spark: SparkSession, table: GraftDeltaTable,
     * `_change_data` file reads `_change_type` (when requested) as a
     * data column after the requested data columns, then reorders it
     * into the scan's layout. */
-  private def cdfFactory: PartitionReaderFactory = {
+  private lazy val cdfFactory: PartitionReaderFactory = {
     val ct = StructField(ChangeTypeCol, StringType)
     val cdcData =
       if (physReadPart.fieldNames.contains(ChangeTypeCol))
