@@ -678,8 +678,9 @@ private class GraftDeltaScan(spark: SparkSession, table: GraftDeltaTable,
   }
 
   /** The reader factories are built once per scan: `BatchScanExec`
-    * asks for one while planning, and every copy of the exec node the
-    * planner makes would otherwise build (and broadcast) another. */
+    * asks for one while planning, and adaptive execution plans new
+    * exec nodes over the same scan after each stage it materializes;
+    * each factory copies the conf and broadcasts it. */
   private lazy val factory: PartitionReaderFactory =
     readerFactory(spark, table.physDataSchema, physReadData, physReadPart,
       dataFilters)
